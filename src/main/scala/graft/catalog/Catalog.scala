@@ -70,6 +70,13 @@ final case class ConnectionDef(
     properties: Map[String, String] = Map.empty,
     active: Boolean = false)
 
+/** One store of a commit manifest ([[graft.engine.StagedCommit]]): the
+  * def the commit puts, whether a staged directory flips into place
+  * first, and the store's write epoch when the commit was logged (a
+  * replay puts the def only while the store is still at that epoch or
+  * already at the target's). */
+final case class CommitEntry(target: StreamDef, staged: Boolean, fromEpoch: Long)
+
 /** File-backed stream registry: `<root>/_catalog/<name>.json` beside the
   * stream data dirs `<root>/<name>`. The namespace is flat (reference
   * create/drop/list_schemas are no-ops, impl.py:178-189) with an optional
@@ -100,17 +107,28 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
     scala.util.Using.resource(Files.list(catalogDir)) { s =>
       s.iterator().asScala
         .filter(_.toString.endsWith(".json"))
-        .map(p => read(new String(Files.readAllBytes(p), "UTF-8")))
+        .map(p => fromNode(mapper.readTree(Files.readAllBytes(p))))
         .toSeq
     }.sortBy(_.name)
 
   def get(name: String): Option[StreamDef] =
     if (!exists(name)) None
-    else Some(read(new String(Files.readAllBytes(defPath(name)), "UTF-8")))
+    else Some(fromNode(mapper.readTree(Files.readAllBytes(defPath(name)))))
 
   def put(d: StreamDef): Unit = {
     val qualified = d.copy(name = qualify(d.name))
-    Files.write(defPath(qualified.name), write(qualified).getBytes("UTF-8"))
+    writeAtomically(defPath(qualified.name),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(toNode(qualified)))
+  }
+
+  /** Replace `p`'s content all-or-nothing: write a sibling temp file, then
+    * ATOMIC_MOVE it over `p`. A crash mid-write leaves the previous
+    * content, never a truncated file; the temp name
+    * (`.<file>.<uuid>.tmp`) never matches the `.json` listings. */
+  private[graft] def writeAtomically(p: Path, content: String): Unit = {
+    val tmp = p.resolveSibling(s".${p.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    Files.write(tmp, content.getBytes("UTF-8"))
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
   }
 
   def delete(name: String): Unit = {
@@ -164,8 +182,8 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
     val props = node.putObject("properties")
     q.properties.toSeq.sortBy(_._1).foreach { case (k, v) => props.put(k, v) }
     node.put("active", q.active)
-    Files.write(connPath(q.name),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node).getBytes("UTF-8"))
+    writeAtomically(connPath(q.name),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
   }
 
   def getConnection(name: String): Option[ConnectionDef] =
@@ -201,9 +219,44 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
     listConnections().filter(_.stream == q)
   }
 
+  // --- commit manifests (graft.engine.StagedCommit): one JSON file per
+  // logged, not yet fully applied commit, in `_catalog/_commits/` ---
+
+  private def commitDir: Path = catalogDir.resolve("_commits")
+
+  private[graft] def putManifest(id: String, entries: Seq[CommitEntry]): Unit = {
+    val node = mapper.createObjectNode()
+    val stores = node.putArray("stores")
+    entries.foreach { e =>
+      val s = stores.addObject()
+      s.set[ObjectNode]("def", toNode(e.target))
+      s.put("staged", e.staged)
+      s.put("from_epoch", e.fromEpoch)
+    }
+    Files.createDirectories(commitDir)
+    writeAtomically(commitDir.resolve(s"$id.json"), mapper.writeValueAsString(node))
+  }
+
+  /** Every logged commit as (id, entries), oldest first (ids sort by
+    * creation time). */
+  private[graft] def manifests(): Seq[(String, Seq[CommitEntry])] =
+    if (!Files.isDirectory(commitDir)) Nil
+    else scala.util.Using.resource(Files.list(commitDir)) { s =>
+      s.iterator().asScala.filter(_.toString.endsWith(".json")).toSeq
+    }.sortBy(_.getFileName.toString).map { p =>
+      val n = mapper.readTree(Files.readAllBytes(p))
+      p.getFileName.toString.stripSuffix(".json") ->
+        n.get("stores").elements().asScala.map(s => CommitEntry(
+          fromNode(s.get("def")), s.get("staged").asBoolean(),
+          s.get("from_epoch").asLong())).toSeq
+    }
+
+  private[graft] def deleteManifest(id: String): Unit =
+    Files.deleteIfExists(commitDir.resolve(s"$id.json"))
+
   // --- JSON (de)serialization via jackson tree model (on Spark's classpath) ---
 
-  private def write(d: StreamDef): String = {
+  private def toNode(d: StreamDef): ObjectNode = {
     val node = mapper.createObjectNode()
     node.put("name", d.name)
     node.set[ObjectNode]("schema", mapper.readTree(d.schema.canonicalJson).asInstanceOf[ObjectNode])
@@ -213,11 +266,10 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
     val props = node.putObject("properties")
     d.properties.toSeq.sortBy(_._1).foreach { case (k, v) => props.put(k, v) }
     node.put("write_epoch", d.writeEpoch)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
+    node
   }
 
-  private def read(json: String): StreamDef = {
-    val n = mapper.readTree(json)
+  private def fromNode(n: JsonNode): StreamDef = {
     val schemaNode = n.get("schema")
     val fields = schemaNode.get("fields").elements().asScala.map { f =>
       f.get("kind").asText() match {

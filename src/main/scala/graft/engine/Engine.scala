@@ -100,6 +100,8 @@ final class Engine(
     val previewTimeoutMs: Long = 60000L) {
 
   val catalog = new Catalog(root, namespace)
+  /** Every store rewrite and its crash repair ([[StagedCommit]]). */
+  private[graft] val commits = new StagedCommit(this)
   GraftFunctions.register(spark)
   Engine.registry.put(root, this) // engine-bound TVF resolution
 
@@ -141,10 +143,10 @@ final class Engine(
   /** Raw stored rows incl. the ingest-sequence column. A declared stream
     * with no data yet reads as empty (its first write creates the dir;
     * the def can exist first, e.g. mid-createModel). Repairs any
-    * interrupted [[rewriteStorage]] first, so a crash mid-OPTIMIZE can
-    * never surface a partial store ([[repairInterruptedRewrite]]). */
+    * interrupted store rewrite first, so a crash mid-commit can never
+    * surface a partial store ([[StagedCommit.repair]]). */
   private def readRaw(d: StreamDef): DataFrame = {
-    repairInterruptedRewrite(d)
+    commits.repair(d.name)
     if (bucketSpec(d).nonEmpty && spark.catalog.tableExists(bucketTableName(d.name)))
       // table read carries the bucket spec into the scan — the whole
       // point of bucketed storage (a path read would re-shuffle)
@@ -935,11 +937,6 @@ final class Engine(
   private val annBuilds = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.CountDownLatch]()
 
-  /** Test/ops hook: invoked after an ANN rebuild finished STAGING (all
-    * corpus-linear work done; commit lock not yet taken). Specs pin the
-    * build-aside window with it deterministically. */
-  @volatile private[graft] var annStageHook: () => Unit = () => ()
-
   /** The [[ensureAnnIndex]] fast-path predicate: pinned config + column
     * + epoch match, within the AUTO-codebook growth cap. */
   private def annIndexLive(name: String, idCol: String, vecCol: String,
@@ -1092,20 +1089,20 @@ final class Engine(
     *
     * BUILD-ASIDE-THEN-SWAP (round 11 — VERDICT r10 item 3): the
     * corpus-linear train + assign + encode runs OUTSIDE the stream's
-    * ingest lock, staging the next generation into the siblings'
-    * `.rewrite` directories (registered in [[liveRewrites]] so a
-    * concurrent reader's crash repair cannot replay a live stage); the
-    * lock is then taken only to re-validate the epoch snapshot and flip
-    * directories + catalog pins — metadata-scale. Concurrent searches
-    * serve the OLD generation throughout ([[annTopKIndexed]] does not
-    * even wait); a concurrent ingest landing mid-stage moves the epochs,
-    * the commit aborts, and the build retries against the new corpus —
-    * bounded at 2 staged attempts, then it degrades to the in-lock
-    * rebuild for guaranteed progress. A caller already holding the
-    * ingest lock (the managed ingest paths) builds in-lock directly:
-    * ingest is serialized by design, and waiting on another thread's
-    * staged build while holding the lock its commit needs would
-    * deadlock. Concurrent ensures deduplicate on [[annBuilds]]: the
+    * ingest lock and stages the next generation beside the siblings
+    * ([[StagedCommit]]); the lock is then taken only to re-validate the
+    * epoch snapshot and commit — directory flips + catalog pins,
+    * metadata-scale. Concurrent searches serve the OLD generation
+    * throughout ([[annTopKIndexed]] does not even wait); a concurrent
+    * ingest landing mid-stage moves the epochs, the commit aborts, and
+    * the build retries against the new corpus — bounded at 2 staged
+    * attempts, then it builds with the lock held for guaranteed
+    * progress. A caller already holding the ingest lock (the managed
+    * ingest paths) builds the same way with the lock held; if another
+    * thread's staged build is in flight it leaves the rebuild to that
+    * build (waiting on it while holding the lock its commit needs would
+    * deadlock; its commit sees this caller's writes, aborts and retries
+    * against them). Concurrent ensures deduplicate on [[annBuilds]]: the
     * second caller waits for the first build and re-checks liveness.
     *
     * @return true when the index was (re)built, false when live */
@@ -1113,190 +1110,76 @@ final class Engine(
                      nCentroids: Int = 0, m: Int = 8, ksub: Int = 16): Boolean = {
     val key = catalog.qualify(name)
     val lock = streamLock(name)
-    val idxName = annIndexName(name)
-    val centName = annCentroidsName(name)
     val callerHeld = Thread.holdsLock(lock)
     var attempts = 0
     while (true) {
       var waitFor: java.util.concurrent.CountDownLatch = null
-      var snap: (Long, Long, Long) = null
-      var builtInLock = false
-      val liveNow = lock.synchronized {
-        if (annIndexLive(name, idCol, vecCol, nCentroids, m, ksub)) true
-        else {
-          val inFlight = annBuilds.get(key)
-          if ((inFlight != null && callerHeld) ||
-              (inFlight == null && (callerHeld || attempts >= 2))) {
-            // in-lock build: either we already hold the ingest lock (a
-            // managed ingest path — waiting on a stager's latch here
-            // would deadlock its commit; our truncate+build moves the
-            // sibling epochs, so that stager discards its stage), or
-            // the staged path lost 2 epoch races and progress wins
-            buildAnnIndexLocked(name, idCol, vecCol, nCentroids, m, ksub)
-            builtInLock = true
-            false
-          } else if (inFlight != null) {
-            waitFor = inFlight; false
-          } else {
+      var registered = false
+      val done: Option[Boolean] = lock.synchronized {
+        if (annIndexLive(name, idCol, vecCol, nCentroids, m, ksub)) Some(false)
+        else annBuilds.get(key) match {
+          case null if callerHeld || attempts >= 2 =>
+            if (buildAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)) Some(true)
+            else None
+          case null =>
             annBuilds.put(key, new java.util.concurrent.CountDownLatch(1))
-            ensureAnnSiblingDefs(name, readStream(name).schema(idCol).dataType)
-            snap = (catalog.get(name).get.writeEpoch,
-              catalog.get(idxName).get.writeEpoch,
-              catalog.get(centName).get.writeEpoch)
-            false
-          }
+            registered = true; None
+          case inFlight =>
+            if (callerHeld) Some(false) else { waitFor = inFlight; None }
         }
       }
-      if (liveNow) return false
-      if (builtInLock) return true
-      if (waitFor != null) { waitFor.await() } // then loop: re-check live
-      else {
-        // ---- staged build: corpus-linear work, NO lock held ----
-        val idxD = catalog.get(idxName).get
-        val centD = catalog.get(centName).get
-        var committed = false
+      if (done.nonEmpty) return done.get
+      if (waitFor != null) waitFor.await() // then loop: re-check live
+      else if (registered) {
         try {
-          liveRewrites.add(idxD.name); liveRewrites.add(centD.name)
-          val (centRows, idxRows, n, kind, k2, dims) =
-            annIndexContents(name, idCol, vecCol, nCentroids, m, ksub)
-          // the two sibling stages are independent writes — centroids
-          // are a LocalRelation (codebooks collected during training),
-          // the index the corpus encode pass — so they overlap as
-          // concurrent jobs (optimization round 12, guide §2.6): the
-          // single-file centroid write rides the encode's idle cores
-          // instead of adding its fixed job latency after it
-          locally {
-            import scala.concurrent.{Await, Future, ExecutionContext}
-            import scala.concurrent.duration.Duration
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-            implicit val ec: ExecutionContext =
-              ExecutionContext.fromExecutorService(pool)
-            try {
-              val centF = Future(stageSibling(centD, centRows, snap._3 + 1))
-              val idxF = Future(stageSibling(idxD, idxRows, snap._2 + 1))
-              Await.result(centF, Duration.Inf)
-              Await.result(idxF, Duration.Inf)
-            } finally pool.shutdown()
-          }
-          annStageHook()
-          // ---- commit: locked, metadata-only (epoch check + two
-          // directory flips + catalog pins) ----
-          committed = lock.synchronized {
-            val unmoved =
-              catalog.get(name).exists(_.writeEpoch == snap._1) &&
-                catalog.get(idxName).exists(_.writeEpoch == snap._2) &&
-                catalog.get(centName).exists(_.writeEpoch == snap._3)
-            if (unmoved) {
-              commitStagedSwap(centD); commitStagedSwap(idxD)
-              catalog.put(catalog.get(centName).get
-                .copy(writeEpoch = snap._3 + 1))
-              val dIdx = catalog.get(idxName).get
-              // a rebuild invalidates any pinned probe-width tuning:
-              // new codebooks mean the measured recall no longer applies
-              catalog.put(dIdx.copy(writeEpoch = snap._2 + 1,
-                properties = (dIdx.properties -- annPinKeys) ++ annProps(
-                  idCol, vecCol, nCentroids, m, ksub, n, kind, k2, dims,
-                  mainEpoch = snap._1, idxEpoch = snap._2 + 1,
-                  centEpoch = snap._3 + 1)))
-              true
-            } else false
-          }
-        } finally {
-          // discard an uncommitted stage BEFORE dropping the
-          // liveRewrites guard — otherwise a reader's repair could
-          // replay the completed stage in the gap
-          if (!committed) { dropStagedSwap(idxD); dropStagedSwap(centD) }
-          liveRewrites.remove(idxD.name); liveRewrites.remove(centD.name)
-          val l = annBuilds.remove(key)
-          if (l != null) l.countDown()
-        }
-        if (committed) return true
+          if (buildAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)) return true
+        } finally annBuilds.remove(key).countDown()
         attempts += 1 // epoch moved mid-stage: retry against the new corpus
       }
     }
     false // unreachable
   }
 
-  /** The pre-round-11 whole-build-under-the-lock path — retained as the
-    * managed-ingest route (those callers already hold the lock) and the
-    * staged path's bounded-retry fallback. */
-  private def buildAnnIndexLocked(name: String, idCol: String,
-                                  vecCol: String, nCentroids: Int,
-                                  m: Int, ksub: Int): Unit = {
-    val idxName = annIndexName(name)
-    val centName = annCentroidsName(name)
-    val mainEpoch = catalog.get(name).get.writeEpoch
-    ensureAnnSiblingDefs(name, readStream(name).schema(idCol).dataType)
-    truncate(centName); truncate(idxName)
+  /** One staged ANN rebuild against the current corpus: train, assign
+    * and encode (corpus-linear), stage both siblings, then — under the
+    * stream lock — commit only if no epoch moved since the snapshot. The
+    * caller may or may not hold the lock. @return whether it committed */
+  private def buildAnnIndex(name: String, idCol: String, vecCol: String,
+                            nCentroids: Int, m: Int, ksub: Int): Boolean = {
+    val lock = streamLock(name)
+    val (idxName, centName) = (annIndexName(name), annCentroidsName(name))
+    val (mainEpoch, idxD, centD) = lock.synchronized {
+      ensureAnnSiblingDefs(name, readStream(name).schema(idCol).dataType)
+      (catalog.get(name).get.writeEpoch, catalog.get(idxName).get,
+        catalog.get(centName).get)
+    }
     val (centRows, idxRows, n, kind, k2, dims) =
       annIndexContents(name, idCol, vecCol, nCentroids, m, ksub)
-    appendRows(centName, centRows)
-    appendRows(idxName, idxRows)
-    val dIdx = catalog.get(idxName).get
-    // rebuild invalidates any pinned probe-width tuning (see the staged
-    // commit path): new codebooks, new recall geometry
-    catalog.put(dIdx.copy(properties = (dIdx.properties -- annPinKeys) ++
-      annProps(idCol, vecCol, nCentroids, m, ksub, n, kind, k2, dims,
-        mainEpoch = mainEpoch, idxEpoch = dIdx.writeEpoch,
-        centEpoch = catalog.get(centName).get.writeEpoch)))
-  }
-
-  /** Stage one sibling's next-generation contents into its
-    * `<data>.rewrite` directory (the [[rewriteStorage]] stage protocol,
-    * `_SUCCESS` as commit record, so existing crash repair covers every
-    * interruption). Bucketed siblings stage through a transient
-    * metastore table so the files carry bucket ids in their NAMES —
-    * after the directory flip the live table reads them with the bucket
-    * spec intact, no rewrite needed. */
-  private def stageSibling(d: StreamDef, rows: DataFrame,
-                           epoch: Long): Unit =
-    stageRewrite(d, stampRows(d, rows, epoch))
-
-  /** Stage already-stamped rows (a rewrite keeps stored rows verbatim)
-    * into `d`'s `.rewrite` directory, bucket layout included —
-    * committed by [[commitStagedSwap]], discarded by
-    * [[dropStagedSwap]]. The corpus-linear half of a rewrite, safe to
-    * run OUTSIDE any lock (and concurrently with other streams'
-    * stages) as long as `d.name` sits in [[liveRewrites]] so a
-    * reader's crash repair cannot replay the live stage. */
-  private def stageRewrite(d: StreamDef, rows: DataFrame): Unit = {
-    val tmp = catalog.dataPath(d.name) + ".rewrite"
-    bucketSpec(d) match {
-      case Some((nb, cols)) =>
-        val stageTable = bucketTableName(d.name) + "_stage"
-        rows.write.mode(SaveMode.Overwrite)
-          .bucketBy(nb, cols.head, cols.tail: _*)
-          .sortBy(cols.head, cols.tail: _*)
-          .option("path", tmp)
-          .format("parquet")
-          .saveAsTable(stageTable)
-        // external table: dropping the staging entry keeps the files
-        spark.sql(s"DROP TABLE IF EXISTS `$stageTable`")
-      case None =>
-        rows.write.mode(SaveMode.Overwrite).parquet(tmp)
+    val (idxEpoch, centEpoch) = (idxD.writeEpoch + 1, centD.writeEpoch + 1)
+    // the two sibling stages are independent writes — centroids are a
+    // LocalRelation (codebooks collected during training), the index the
+    // corpus encode pass — so they overlap as concurrent jobs
+    // (optimization round 12, guide §2.6): the single-file centroid
+    // write rides the encode's idle cores instead of adding its fixed
+    // job latency after it
+    commits.run(lock, Seq(centD.name, idxD.name))(Seq(
+      () => commits.stage(centD, stampRows(centD, centRows, centEpoch)),
+      () => commits.stage(idxD, stampRows(idxD, idxRows, idxEpoch)))) { _ =>
+      val unmoved = catalog.get(name).exists(_.writeEpoch == mainEpoch) &&
+        catalog.get(idxName).exists(_.writeEpoch == idxD.writeEpoch) &&
+        catalog.get(centName).exists(_.writeEpoch == centD.writeEpoch)
+      Option.when(unmoved) {
+        val dIdx = catalog.get(idxName).get
+        // a rebuild invalidates any pinned probe-width tuning: new
+        // codebooks mean the measured recall no longer applies
+        Seq(catalog.get(centName).get.copy(writeEpoch = centEpoch),
+          dIdx.copy(writeEpoch = idxEpoch,
+            properties = (dIdx.properties -- annPinKeys) ++ annProps(
+              idCol, vecCol, nCentroids, m, ksub, n, kind, k2, dims,
+              mainEpoch = mainEpoch, idxEpoch = idxEpoch,
+              centEpoch = centEpoch)))
+      }
     }
-  }
-
-  /** The metadata-only half of the swap: two atomic directory moves, a
-    * table-cache refresh for bucketed siblings, backup cleanup. Caller
-    * holds the stream lock and has re-validated the epoch snapshot. */
-  private def commitStagedSwap(d: StreamDef): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dataDir = catalog.dataPath(d.name)
-    val old = Paths.get(dataDir + ".old")
-    if (Files.exists(Paths.get(dataDir)))
-      Files.move(Paths.get(dataDir), old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(dataDir + ".rewrite"), Paths.get(dataDir),
-      StandardCopyOption.ATOMIC_MOVE)
-    if (bucketSpec(d).nonEmpty &&
-        spark.catalog.tableExists(bucketTableName(d.name)))
-      spark.catalog.refreshTable(bucketTableName(d.name))
-    if (Files.exists(old)) catalog.deleteRecursively(old)
-  }
-
-  private def dropStagedSwap(d: StreamDef): Unit = {
-    val tmp = java.nio.file.Paths.get(catalog.dataPath(d.name) + ".rewrite")
-    if (java.nio.file.Files.exists(tmp)) dropStage(tmp)
   }
 
   /** Top-k ANN over stream `name` served FROM the persisted index:
@@ -1674,7 +1557,7 @@ final class Engine(
     * change-stream fold's arrival order) or both probe the pre-write
     * index and let cross-shard near-duplicates through. The engine
     * serializes both per stream. The catalog dir is single-writer by
-    * contract (see [[liveRewrites]]), so an in-process lock is the whole
+    * contract (see [[StagedCommit]]), so an in-process lock is the whole
     * story — cross-process ingest must route through one engine. */
   private val streamLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -1690,7 +1573,7 @@ final class Engine(
     // settle any interrupted rewrite BEFORE appending: otherwise rows
     // appended over a crashed-rewrite store would be clobbered when a
     // later read replays the (pre-append) stage
-    repairInterruptedRewrite(d)
+    commits.repair(d.name)
     val epoch = d.writeEpoch + 1
     val stamped = stampRows(d, df, epoch)
     bucketSpec(d) match {
@@ -1716,8 +1599,8 @@ final class Engine(
     * columns for write epoch `epoch`: column order/casts to the
     * declared schema, the tombstone marker carried through when present
     * ([[deleteKeys]]) and stamped false otherwise. Shared by [[write]]
-    * and the ANN build-aside stager ([[stageSibling]]), which writes
-    * the SAME stored shape into a swap directory outside the ingest
+    * and the ANN build-aside stager ([[buildAnnIndex]]), which writes
+    * the SAME stored shape into a stage directory outside the ingest
     * lock. */
   private def stampRows(d: StreamDef, df: DataFrame, epoch: Long): DataFrame = {
     val target = d.schema.toStruct
@@ -1744,7 +1627,7 @@ final class Engine(
     * the shuffle is paid once at write time, amortized over every
     * downstream join/aggregation on that key (PlanShapeSpec asserts the
     * exchange-free plan). */
-  private def bucketSpec(d: StreamDef): Option[(Int, Seq[String])] =
+  private[engine] def bucketSpec(d: StreamDef): Option[(Int, Seq[String])] =
     d.properties.get("bucket_by").map { cols =>
       (d.properties.getOrElse("bucket_count", "32").toInt,
         cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -1864,12 +1747,7 @@ final class Engine(
       spark.read.parquet(p)
     }
     try forgetRowsStaged(name, d, raw, hit, pkCols, preMain, materialize)
-    finally {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(tmpDir))
-        java.nio.file.Files.walk(tmpDir).iterator().asScala.toSeq
-          .reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    finally catalog.deleteRecursively(tmpDir)
   }
 
   private def forgetRowsStaged(name: String, d: StreamDef, raw: DataFrame,
@@ -1939,11 +1817,10 @@ final class Engine(
     // DISJOINT stores whose shared input (the victim frames) is already
     // materialized to the temp stage — submitted together, each job's
     // straggler tail back-fills the others' idle cores. NOTHING mutates
-    // until every stage has succeeded; the commit below is directory
-    // flips + catalog pins, run on this thread in the original order —
-    // so a mid-stage failure now aborts the whole forget with no store
-    // touched (the old sequential rewrite-as-you-go could fail with the
-    // main store already swapped).
+    // until every stage has succeeded, and the commit is one logged
+    // manifest over the main store and every sibling — so the forget is
+    // all-or-nothing: a stage failure aborts it with no store touched, a
+    // commit failure is rolled forward by the next read.
     val sibPlan: Seq[(String, String)] =
       (annD.map(id => annIdx -> id.properties.getOrElse("ann_id_col", "")).toSeq ++
         mhD.toSeq.flatMap { pd =>
@@ -1952,105 +1829,64 @@ final class Engine(
         } ++
         lshD.map(id => lshIdx -> id.properties.getOrElse("lsh_id_col", "")).toSeq)
         .filter { case (s, c) => catalog.exists(s) && vicIds.contains(c) }
-    val stagedNames = d.name +: sibPlan.map(_._1)
-    stagedNames.foreach(liveRewrites.add)
-    // prunedN per sibling; a sibling with no victims stages nothing
-    var pruned = Map.empty[String, Long]
-    var committed = false
-    try {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(4, 1 + sibPlan.size))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try {
-        val mainF = Future(stageRewrite(d, survivors(raw)))
-        val sibFs = sibPlan.map { case (sibName, idC) =>
-          Future {
-            val sd = catalog.get(sibName).get
-            val sibRaw = readRaw(sd)
-            val vic = vicIds(idC)
-            val n = sibRaw
-              .join(vic, col("ex_id") === col("__forget_id"), "left_semi")
-              .select("ex_id").distinct().count()
-            if (n > 0)
-              stageRewrite(sd, sibRaw.join(vic,
-                col("ex_id") === col("__forget_id"), "left_anti"))
-            sibName -> n
-          }
-        }
-        pruned = Await.result(Future.sequence(sibFs), Duration.Inf).toMap
-        Await.result(mainF, Duration.Inf)
-      } finally pool.shutdown()
-
-      // ---- commit: flips + epoch bumps + pins, sequential ----
-      // 1. main store + epoch bump (content changed: stale pins,
-      // out-of-band detection, and any staged commit must all see it)
-      commitStagedSwap(d)
-      val dMain = catalog.get(name).get
-      val newMain = dMain.writeEpoch + 1
-      catalog.put(dMain.copy(writeEpoch = newMain))
-
-      /** Commit one sibling's staged prune (if any); bumps its epoch. */
-      def commitPrune(sibName: String): Unit =
-        if (pruned.getOrElse(sibName, 0L) > 0) {
-          commitStagedSwap(catalog.get(sibName).get)
-          val sdNow = catalog.get(sibName).get
-          catalog.put(sdNow.copy(writeEpoch = sdNow.writeEpoch + 1))
-        }
-
-      // 2. ANN: prune even when stale (a stale index still SERVES its
-      // last epoch — it must not keep serving forgotten vectors); re-pin
-      // only when it was live
-      annD.foreach { _ =>
-        commitPrune(annIdx)
-        if (annLive) {
-          val dNow = catalog.get(annIdx).get
-          val annN = propLong(dNow.properties, "ann_n").getOrElse(0L)
-          catalog.put(dNow.copy(properties = dNow.properties ++ Map(
-            "ann_n" -> math.max(0L,
-              annN - pruned.getOrElse(annIdx, 0L)).toString,
-            "ann_main_epoch" -> newMain.toString,
-            "ann_idx_epoch" -> dNow.writeEpoch.toString,
-            "ann_cent_epoch" ->
-              catalog.get(annCent).get.writeEpoch.toString)))
-        }
+    // each task yields its pruned row count; a sibling with no victims
+    // stages nothing
+    val stages: Seq[() => Long] =
+      (() => { commits.stage(d, survivors(raw)); nVictims }) +:
+      sibPlan.map { case (sibName, idC) => () => {
+        val sd = catalog.get(sibName).get
+        val sibRaw = readRaw(sd)
+        val vic = vicIds(idC)
+        val n = sibRaw
+          .join(vic, col("ex_id") === col("__forget_id"), "left_semi")
+          .select("ex_id").distinct().count()
+        if (n > 0)
+          commits.stage(sd, sibRaw.join(vic,
+            col("ex_id") === col("__forget_id"), "left_anti"))
+        n
+      } }
+    val names = d.name +: sibPlan.map(s => catalog.qualify(s._1))
+    commits.run(streamLock(name), names)(stages) { counts =>
+      val pruned = sibPlan.map(_._1).zip(counts.tail).toMap
+      // the main store's content changed: stale pins, out-of-band
+      // detection and any staged commit must all see the epoch bump
+      val newMain = preMain + 1
+      /** A sibling's def after its prune (if any) bumped its epoch. */
+      def afterPrune(s: String): StreamDef = {
+        val sd = catalog.get(s).get
+        if (pruned.getOrElse(s, 0L) > 0) sd.copy(writeEpoch = sd.writeEpoch + 1)
+        else sd
       }
-      // 3. MinHash postings + signatures
-      mhD.foreach { _ =>
-        commitPrune(mhPost); commitPrune(mhSig)
-        if (mhLive) {
-          val dNow = catalog.get(mhPost).get
-          catalog.put(dNow.copy(properties = dNow.properties ++ Map(
-            "mh_main_epoch" -> newMain.toString,
-            "mh_post_epoch" -> dNow.writeEpoch.toString,
-            "mh_sig_epoch" -> catalog.get(mhSig).get.writeEpoch.toString)))
-        }
-      }
-      // 4. sign-LSH postings. lsh_n is deliberately NOT decremented: the
+      // ANN: prune even when stale (a stale index still SERVES its last
+      // epoch — it must not keep serving forgotten vectors); re-pin only
+      // when it was live
+      val ann = annD.map(_ => afterPrune(annIdx)).map(a => if (!annLive) a
+        else a.copy(properties = a.properties ++ Map(
+          "ann_n" -> math.max(0L, propLong(a.properties, "ann_n")
+            .getOrElse(0L) - pruned.getOrElse(annIdx, 0L)).toString,
+          "ann_main_epoch" -> newMain.toString,
+          "ann_idx_epoch" -> a.writeEpoch.toString,
+          "ann_cent_epoch" -> catalog.get(annCent).get.writeEpoch.toString)))
+      // MinHash postings + signatures
+      val sig = mhD.map(_ => afterPrune(mhSig))
+      val post = mhD.map(_ => afterPrune(mhPost)).map(p => if (!mhLive) p
+        else p.copy(properties = p.properties ++ Map(
+          "mh_main_epoch" -> newMain.toString,
+          "mh_post_epoch" -> p.writeEpoch.toString,
+          "mh_sig_epoch" -> sig.get.writeEpoch.toString)))
+      // sign-LSH postings. lsh_n is deliberately NOT decremented: the
       // live fast-path requires solve(lsh_n) == the pinned layout, so an
       // exact decrement could cross a solve() boundary and void the pin,
       // forcing a full corpus re-signature on the next ingest — the exact
       // rebuild forget exists to avoid. It stays the layout-ledger count
       // (an upper bound after forgets), which only delays the next
       // layout growth, never corrupts results.
-      lshD.foreach { _ =>
-        commitPrune(lshIdx)
-        if (lshLive) {
-          val dNow = catalog.get(lshIdx).get
-          catalog.put(dNow.copy(properties = dNow.properties ++ Map(
-            "lsh_main_epoch" -> newMain.toString,
-            "lsh_idx_epoch" -> dNow.writeEpoch.toString)))
-        }
-      }
-      committed = true
-    } finally {
-      // discard whatever did not commit BEFORE dropping the liveRewrites
-      // guards, so a reader's repair can never replay a dead stage
-      if (!committed)
-        stagedNames.foreach(n => catalog.get(n).foreach(dropStagedSwap))
-      stagedNames.foreach(liveRewrites.remove)
+      val lsh = lshD.map(_ => afterPrune(lshIdx)).map(l => if (!lshLive) l
+        else l.copy(properties = l.properties ++ Map(
+          "lsh_main_epoch" -> newMain.toString,
+          "lsh_idx_epoch" -> l.writeEpoch.toString)))
+      Some(d.copy(writeEpoch = newMain) +: (ann ++ post ++ sig ++ lsh).toSeq
+        .filterNot(t => catalog.get(t.name).contains(t)))
     }
     nVictims
   }
@@ -2410,6 +2246,13 @@ final class Engine(
     if (cascade && !keepConsumers)
       catalog.consumers(name).foreach(c => dropStream(c.name, cascade = true))
     spark.sql(s"DROP TABLE IF EXISTS ${bucketTableName(name)}")
+    deleteStore(name)
+  }
+
+  /** Delete a stream's def and data, settling an interrupted commit on it
+    * first: none may replay into a later stream of the same name. */
+  private def deleteStore(name: String): Unit = {
+    commits.repair(name)
     catalog.delete(name)
   }
 
@@ -2429,6 +2272,7 @@ final class Engine(
   private def renameStreamInternal(oldName: String, newName: String): Unit = {
     val qOld = catalog.qualify(oldName)
     val qNew = catalog.qualify(newName)
+    commits.repair(oldName) // an interrupted commit finishes under the old name
     // a bucketed stream's backing table points at the OLD data dir; drop
     // it (metadata only — external table) and let the next write
     // re-register it at the new path. Reads in between fall back to the
@@ -2477,13 +2321,12 @@ final class Engine(
     * of appends make scans metadata-bound). Pure physical rewrite: rows,
     * including their (epoch, seq, tombstone) stamps, are byte-identical,
     * so compacted reads AND time-travel reads are unchanged — ordering
-    * lives in data columns, never in file layout. Swap is
-    * move-directory atomic for this engine's single-writer stance. */
+    * lives in data columns, never in file layout. The swap is a
+    * [[StagedCommit]]: bucketed stores keep their bucket table, and a
+    * crash mid-swap rolls forward on the next read. */
   def compactStorage(name: String, targetFiles: Int = 1,
                      sortBy: Seq[String] = Nil,
                      zorderBy: Seq[String] = Nil): Unit = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
     require(targetFiles > 0, "targetFiles must be positive")
     require(sortBy.isEmpty || zorderBy.isEmpty,
       "sortBy and zorderBy are mutually exclusive")
@@ -2491,7 +2334,11 @@ final class Engine(
     // between the rewrite's scan and its directory swap would be wiped
     // by the swap (the appendRows concurrency contract covers EVERY
     // storage rewrite, not just writes)
-    streamLock(name).synchronized {
+    val lock = streamLock(name)
+    lock.synchronized {
+      // the def as of the lock: the commit puts it back verbatim
+      val d = catalog.get(name).getOrElse(
+        throw new IllegalArgumentException(s"stream '$name' not found"))
       // optional clustering: files then hold narrow value ranges, so
       // parquet min/max stats prune scans — sortBy for a single leading
       // dimension, zorderBy (Morton interleave) for multi-dimensional
@@ -2505,7 +2352,7 @@ final class Engine(
           rows.repartitionByRange(targetFiles, sortBy.map(col): _*)
             .sortWithinPartitions(sortBy.map(col): _*)
         else rows.repartition(targetFiles)
-      rewriteStorage(d, laid)
+      commits.rewrite(lock, d, laid)
     }
   }
 
@@ -2517,13 +2364,14 @@ final class Engine(
     * as-of reads BEFORE it lose history (that is the retention contract).
     */
   def vacuum(name: String, upToEpoch: Long): Unit = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
-    val pk = d.schema.primaryKeyColumns
-    require(pk.nonEmpty, s"stream '${d.name}' has no primary key — " +
-      "vacuum folds change-stream history")
+    val lock = streamLock(name)
     // same scan→swap race as compactStorage: hold the ingest lock
-    streamLock(name).synchronized {
+    lock.synchronized {
+      val d = catalog.get(name).getOrElse(
+        throw new IllegalArgumentException(s"stream '$name' not found"))
+      val pk = d.schema.primaryKeyColumns
+      require(pk.nonEmpty, s"stream '${d.name}' has no primary key — " +
+        "vacuum folds change-stream history")
       val raw = readRaw(d)
       val w = Window.partitionBy(pk.map(col): _*)
         .orderBy(col(EpochCol).desc, col(SeqCol).desc)
@@ -2531,7 +2379,7 @@ final class Engine(
         .withColumn("__graft_rn", row_number().over(w))
         .filter(col("__graft_rn") === 1 && !col(DeletedCol))
         .drop("__graft_rn")
-      rewriteStorage(d, liveAtEpoch.unionByName(
+      commits.rewrite(lock, d, liveAtEpoch.unionByName(
         raw.filter(col(EpochCol) > lit(upToEpoch))))
     }
   }
@@ -2555,100 +2403,6 @@ final class Engine(
       } else (0L, 0L)
     StreamStats(catalog.qualify(name), readRaw(d).count(),
       files, bytes, d.writeEpoch, d.sql.nonEmpty, d.active)
-  }
-
-  /** Streams with a [[rewriteStorage]] currently executing through THIS
-    * Engine instance. [[repairInterruptedRewrite]] skips them: the stage
-    * (and its `_SUCCESS` marker) legitimately exists for the whole
-    * table-rewrite window of a live OPTIMIZE/VACUUM, and a concurrent
-    * read must not mistake it for a crashed rewrite's commit record — it
-    * would double-run the table write and delete the stage out from
-    * under the live job. Crash recovery only applies to a dead process's
-    * leftovers, where this set is empty by construction. (An Engine's
-    * catalog dir is single-writer by contract — two live instances on
-    * one dir would race the store itself, not just this repair.) */
-  private val liveRewrites =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def rewriteStorage(d: StreamDef, rows: DataFrame): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dataDir = catalog.dataPath(d.name)
-    val tmp = dataDir + ".rewrite"
-    liveRewrites.add(d.name)
-    try bucketSpec(d) match {
-      case Some((n, cols)) =>
-        // a bucketed table can't be Overwrite-written while its own scan
-        // feeds the plan, and a directory swap would orphan the bucket
-        // file-name encoding — so stage the rewritten rows as plain
-        // parquet, then rewrite the table from the stage (bucket layout
-        // governs file placement; `targetFiles` intent is advisory
-        // here). The stage's `_SUCCESS` marker is the commit point: a
-        // crash during the table rewrite leaves a complete stage, and
-        // [[repairInterruptedRewrite]] replays it on the next read —
-        // the table write itself cannot be made atomic, but the data
-        // is never unrecoverable
-        rows.write.mode(SaveMode.Overwrite).parquet(tmp)
-        bucketTableFromStage(d, n, cols, tmp, dataDir)
-        dropStage(Paths.get(tmp))
-      case None =>
-        val old = dataDir + ".old"
-        rows.write.mode(SaveMode.Overwrite).parquet(tmp)
-        Files.move(Paths.get(dataDir), Paths.get(old),
-          StandardCopyOption.ATOMIC_MOVE)
-        Files.move(Paths.get(tmp), Paths.get(dataDir),
-          StandardCopyOption.ATOMIC_MOVE)
-        catalog.deleteRecursively(Paths.get(old))
-    } finally liveRewrites.remove(d.name)
-  }
-
-  /** Delete a rewrite stage commit-record-FIRST: `_SUCCESS` is what
-    * marks a stage replayable, so it must be the first thing to go —
-    * a crash mid-cleanup then leaves a dead partial stage (swept as
-    * garbage by the next repair) rather than a truncated stage that
-    * still looks committed, which a replay would overwrite good data
-    * with ([[catalog.Catalog.deleteRecursively]] walks in unspecified
-    * order, so part files can vanish before the marker otherwise). */
-  private def dropStage(stage: java.nio.file.Path): Unit = {
-    java.nio.file.Files.deleteIfExists(stage.resolve("_SUCCESS"))
-    catalog.deleteRecursively(stage)
-  }
-
-  private def bucketTableFromStage(d: StreamDef, n: Int, cols: Seq[String],
-                                   stage: String, dataDir: String): Unit =
-    spark.read.parquet(stage).write.mode(SaveMode.Overwrite)
-      .bucketBy(n, cols.head, cols.tail: _*)
-      .sortBy(cols.head, cols.tail: _*)
-      .option("path", dataDir)
-      .format("parquet")
-      .saveAsTable(bucketTableName(d.name))
-
-  /** Crash recovery for [[rewriteStorage]], run before every raw read: a
-    * completed stage (`.rewrite/_SUCCESS` present) is the rewrite's
-    * commit record. Non-bucketed: finish the interrupted two-move swap
-    * (stage → data dir) if the data dir is gone, else the rewrite never
-    * commenced — drop the stage. Bucketed: the table write may have died
-    * at any point, so always replay it from the stage (same rows —
-    * idempotent). A stage without `_SUCCESS` is a dead partial write;
-    * a leftover `.old` dir is post-swap garbage. Both are deleted. */
-  private def repairInterruptedRewrite(d: StreamDef): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    if (liveRewrites.contains(d.name)) return
-    val dataDir = catalog.dataPath(d.name)
-    val tmp = Paths.get(dataDir + ".rewrite")
-    val old = Paths.get(dataDir + ".old")
-    if (Files.exists(tmp)) {
-      val staged = Files.exists(tmp.resolve("_SUCCESS"))
-      bucketSpec(d) match {
-        case Some((n, cols)) if staged =>
-          bucketTableFromStage(d, n, cols, tmp.toString, dataDir)
-          dropStage(tmp)
-        case None if staged && !Files.exists(Paths.get(dataDir)) =>
-          Files.move(tmp, Paths.get(dataDir), StandardCopyOption.ATOMIC_MOVE)
-        case _ =>
-          dropStage(tmp)
-      }
-    }
-    if (Files.exists(old)) catalog.deleteRecursively(old)
   }
 
   /** Export a stream's compacted contents to files — the handoff step
@@ -2738,9 +2492,9 @@ final class Engine(
     * missing names are warnings, operations.sql:90-104). */
   def deleteStreams(names: Option[Seq[String]] = None, skipErrors: Boolean = true): Unit =
     names match {
-      case None => catalog.list().foreach(d => catalog.delete(d.name))
+      case None => catalog.list().foreach(d => deleteStore(d.name))
       case Some(ns) => ns.foreach { n =>
-        if (catalog.exists(n)) catalog.delete(n)
+        if (catalog.exists(n)) deleteStore(n)
         else if (!skipErrors)
           throw new IllegalArgumentException(s"stream '$n' not found")
       }
@@ -2754,7 +2508,7 @@ final class Engine(
   def cleanup(names: Option[Seq[String]] = None): Unit =
     targets(names).foreach { d =>
       catalog.connectionsOf(d.name).foreach(c => deleteConnection(c.name))
-      catalog.delete(d.name)
+      deleteStore(d.name)
     }
 
   /** Evict every frame the session's operators have persisted (round 6:

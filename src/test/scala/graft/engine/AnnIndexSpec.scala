@@ -537,8 +537,10 @@ class AnnIndexSpec extends SparkSpec {
     val stagedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
     val staged = new CountDownLatch(1)
     val release = new CountDownLatch(1)
-    e.annStageHook = () =>
-      if (stagedOnce.compareAndSet(false, true)) {
+    val idxStore = e.catalog.qualify(e.annIndexName("swp"))
+    e.commits.hook = (phase, store) =>
+      if (phase == StagedCommit.Staged && store == idxStore &&
+          stagedOnce.compareAndSet(false, true)) {
         staged.countDown()
         assert(release.await(60, TimeUnit.SECONDS), "spec release timeout")
       }
@@ -574,7 +576,7 @@ class AnnIndexSpec extends SparkSpec {
       assert(fresh.contains(1000L) && fresh.contains(1001L),
         "the committed generation must cover BOTH the out-of-band row " +
           "and the row ingested mid-stage")
-    } finally e.annStageHook = () => ()
+    } finally e.commits.hook = (_, _) => ()
   }
 
   test("concurrent ensures deduplicate on one builder (no duplicated corpus-linear work)") {

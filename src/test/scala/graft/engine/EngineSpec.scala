@@ -258,23 +258,31 @@ class EngineSpec extends SparkSpec {
   test("compactStorage: physical rewrite — fewer files, identical rows and time travel") {
     import spark.implicits._
     val e = newEngine()
-    e.createStream("cmp", StreamSchema(
-      Seq(PhysicalField("k", FString), PhysicalField("v", FInt))))
-    (1 to 8).foreach(i => e.appendRows("cmp", Seq((s"k$i", i)).toDF("k", "v")))
-    val dataDir = Paths.get(e.catalog.dataPath("cmp"))
-    locally { import scala.jdk.CollectionConverters._
-      val before = Files.walk(dataDir).iterator().asScala
-        .count(_.toString.endsWith(".parquet"))
-      assert(before >= 8, s"expected >=8 files from 8 appends, got $before")
-      val rawBefore = e.readStream("cmp", compact = false).collect().toSet
-      val asOf3Before = e.readStreamAsOf("cmp", 3L, compact = false).count()
-      e.compactStorage("cmp", targetFiles = 2)
-      val after = Files.walk(dataDir).iterator().asScala
-        .count(_.toString.endsWith(".parquet"))
-      assert(after <= 2, s"expected <=2 files after compaction, got $after")
-      assert(e.readStream("cmp", compact = false).collect().toSet == rawBefore)
-      assert(e.readStreamAsOf("cmp", 3L, compact = false).count() == asOf3Before)
+    // a plain and a bucketed store take the same staged commit
+    Seq("cmp" -> Map.empty[String, String],
+      "cmpb" -> Map("bucket_by" -> "k", "bucket_count" -> "2")).foreach {
+      case (s, props) =>
+        e.createStream(s, StreamSchema(
+          Seq(PhysicalField("k", FString), PhysicalField("v", FInt))), props)
+        (1 to 8).foreach(i => e.appendRows(s, Seq((s"k$i", i)).toDF("k", "v")))
+        val dataDir = Paths.get(e.catalog.dataPath(s))
+        def files = Using.resource(Files.walk(dataDir))(
+          _.iterator().asScala.count(_.toString.endsWith(".parquet")))
+        val before = files
+        assert(before >= 8, s"$s: expected >=8 files from 8 appends, got $before")
+        val rawBefore = e.readStream(s, compact = false).collect().toSet
+        val asOf3Before = e.readStreamAsOf(s, 3L, compact = false).count()
+        e.compactStorage(s, targetFiles = 2)
+        // a bucketed store writes at most one file per bucket per target file
+        val bound = if (props.isEmpty) 2 else 4
+        assert(files <= bound, s"$s: expected <=$bound files after compaction, got $files")
+        assert(e.readStream(s, compact = false).collect().toSet == rawBefore)
+        assert(e.readStreamAsOf(s, 3L, compact = false).count() == asOf3Before)
+        assert(!Files.exists(Paths.get(s"$dataDir.rewrite")) &&
+          !Files.exists(Paths.get(s"$dataDir.old")), s"$s: swap leftovers")
     }
+    assert(spark.catalog.tableExists(e.bucketTableName("cmpb")),
+      "the bucket table must stay registered across the swap")
   }
 
   test("sorted compaction clusters files for data-skipping; describeStream reports stats") {
@@ -762,50 +770,66 @@ class EngineSpec extends SparkSpec {
 
   test("interrupted OPTIMIZE rewrites repair on the next read (both storage layouts)") {
     import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.StandardCopyOption
     val e = newEngine()
-
-    // --- non-bucketed: crash simulated between the two atomic moves ---
-    e.createStream("plainst", StreamSchema.fromStruct(
-      new org.apache.spark.sql.types.StructType()
-        .add("k", "long", nullable = false).add("v", "string")))
-    e.appendRows("plainst", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    val dataDir = e.catalog.dataPath("plainst")
-    // stage = byte-identical raw store (internal columns included),
-    // exactly what rewriteStorage writes before the swap
-    spark.read.parquet(dataDir).write.parquet(dataDir + ".rewrite")
-    Files.move(Paths.get(dataDir), Paths.get(dataDir + ".old"),
-      StandardCopyOption.ATOMIC_MOVE) // crash: data dir gone, stage complete
-    assert(e.readStream("plainst").orderBy("k").as[(Long, String)]
-      .collect().toSeq == Seq((1L, "a"), (2L, "b")))
-    assert(!Files.exists(Paths.get(dataDir + ".rewrite")))
-    assert(!Files.exists(Paths.get(dataDir + ".old")))
-
-    // --- bucketed: crash simulated mid-saveAsTable (table truncated) ---
-    e.createStream("bucketst", StreamSchema.fromStruct(
-      new org.apache.spark.sql.types.StructType()
-        .add("k", "long", nullable = false).add("v", "string")),
-      Map("bucket_by" -> "k", "bucket_count" -> "2"))
-    e.appendRows("bucketst", Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("k", "v"))
-    val bDir = e.catalog.dataPath("bucketst")
-    spark.read.parquet(bDir).write.parquet(bDir + ".rewrite")
-    // the crash state: a complete stage next to a gutted table dir
-    Using.resource(Files.list(Paths.get(bDir))) { s =>
-      s.iterator().asScala.toSeq.filter(_.toString.contains("part-"))
-        .foreach(Files.delete)
+    val crash = new RuntimeException("simulated crash")
+    val all = Seq((1L, "a"), (2L, "b"), (3L, "c"))
+    /** An OPTIMIZE whose apply fails: the commit is logged, not applied. */
+    def failCommit(name: String): Unit = {
+      e.commits.hook = (phase, _) => if (phase == StagedCommit.Commit) throw crash
+      try assert(intercept[RuntimeException](e.compactStorage(name)) eq crash)
+      finally e.commits.hook = (_, _) => ()
     }
-    assert(e.readStream("bucketst").orderBy("k").as[(Long, String)]
-      .collect().toSeq == Seq((1L, "x"), (2L, "y"), (3L, "z")))
-    assert(!Files.exists(Paths.get(bDir + ".rewrite")))
-    // and the repaired store is still the bucketed table (no exchange lost)
-    assert(spark.catalog.tableExists(e.bucketTableName("bucketst")))
+    Seq("plainst" -> Map.empty[String, String],
+      "bucketst" -> Map("bucket_by" -> "k", "bucket_count" -> "2")).foreach {
+      case (name, props) =>
+        e.createStream(name, StreamSchema.fromStruct(
+          new org.apache.spark.sql.types.StructType()
+            .add("k", "long", nullable = false).add("v", "string")), props)
+        e.appendRows(name, all.toDF("k", "v"))
+        val dir = e.catalog.dataPath(name)
+        val epoch = e.catalog.get(name).get.writeEpoch
+        def rows = e.readStream(name).orderBy("k").as[(Long, String)].collect().toSeq
+        def clean = !Files.exists(Paths.get(dir + ".rewrite")) &&
+          !Files.exists(Paths.get(dir + ".old"))
 
-    // a stage WITHOUT _SUCCESS is a dead partial write: dropped, live
-    // data untouched
-    Files.createDirectories(Paths.get(bDir + ".rewrite"))
-    Files.writeString(Paths.get(bDir + ".rewrite", "part-junk"), "junk")
-    assert(e.readStream("bucketst").count() == 3)
-    assert(!Files.exists(Paths.get(bDir + ".rewrite")))
+        // --- a logged commit that crashed between the two moves rolls
+        // forward: fail the apply, then make the first move by hand ---
+        failCommit(name)
+        assert(e.catalog.manifests().size == 1, s"$name: the commit must be logged")
+        Files.move(Paths.get(dir), Paths.get(dir + ".old"),
+          StandardCopyOption.ATOMIC_MOVE) // crash: data dir gone, stage logged
+        assert(rows == all, s"$name: roll-forward lost rows")
+        assert(clean && e.catalog.manifests().isEmpty, s"$name: commit left over")
+        assert(e.catalog.get(name).get.writeEpoch == epoch)
+        if (props.nonEmpty)
+          assert(spark.catalog.tableExists(e.bucketTableName(name)),
+            "the repaired store is still the bucketed table")
+
+        // --- a complete stage no manifest lists never committed: dropped,
+        // the live rows untouched (it holds only k = 1) ---
+        e.commits.stage(e.catalog.get(name).get,
+          spark.read.parquet(dir).filter(col("k") === 1L))
+        assert(Files.exists(Paths.get(dir + ".rewrite", "_SUCCESS")))
+        assert(rows == all, s"$name: an unlogged stage was replayed")
+        assert(clean)
+
+        // --- a stage a crash cut short is dropped, live data untouched ---
+        Files.createDirectories(Paths.get(dir + ".rewrite"))
+        Files.writeString(Paths.get(dir + ".rewrite", "part-junk"), "junk")
+        assert(rows == all)
+        assert(clean)
+
+        // --- a logged commit still pending at a rename or a drop finishes
+        // first: nothing is left to replay into a later same-named store ---
+        val renamed = name + "_r"
+        failCommit(name)
+        e.renameStream(name, renamed)
+        failCommit(renamed)
+        e.dropStream(renamed)
+        assert(clean && e.catalog.manifests().isEmpty)
+        assert(!Files.exists(Paths.get(e.catalog.dataPath(renamed) + ".rewrite")))
+    }
   }
 
   test("close() evicts the registry binding; the registry cannot grow across create/close cycles") {

@@ -286,9 +286,11 @@ class ForgetRowsSpec extends SparkSpec {
     e.appendRows("swp", corpus(60))
     val stageEntered = Promise[Unit]()
     val releaseStage = new java.util.concurrent.CountDownLatch(1)
-    e.annStageHook = () => {
-      stageEntered.trySuccess(()); releaseStage.await()
-    }
+    val idxStore = e.catalog.qualify(e.annIndexName("swp"))
+    e.commits.hook = (phase, store) =>
+      if (phase == StagedCommit.Staged && store == idxStore) {
+        stageEntered.trySuccess(()); releaseStage.await()
+      }
     try {
       val build = Future(e.ensureAnnIndex("swp", "vec_id", "embedding"))
       Await.result(stageEntered.future, 120.seconds)
@@ -300,7 +302,7 @@ class ForgetRowsSpec extends SparkSpec {
       releaseStage.countDown()
       assert(Await.result(build, 120.seconds), "the build must commit")
       assert(Await.result(forget, 120.seconds) == 15L)
-    } finally { e.annStageHook = () => (); releaseStage.countDown() }
+    } finally { e.commits.hook = (_, _) => (); releaseStage.countDown() }
     // the committed (pre-forget) index was pruned right after
     assert(e.readStream(e.annIndexName("swp"))
       .filter(col("ex_id") % 4 === 0).count() == 0L)

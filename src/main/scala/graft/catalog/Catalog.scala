@@ -111,6 +111,14 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
         .toSeq
     }.sortBy(_.name)
 
+  /** Every stream's qualified name, from the def file names alone (no
+    * def is parsed). */
+  def names(): Seq[String] =
+    scala.util.Using.resource(Files.list(catalogDir)) { s =>
+      s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".json")).map(_.stripSuffix(".json")).toSeq
+    }.sorted
+
   def get(name: String): Option[StreamDef] =
     if (!exists(name)) None
     else Some(fromNode(mapper.readTree(Files.readAllBytes(defPath(name)))))

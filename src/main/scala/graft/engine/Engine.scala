@@ -1,7 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith, View}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,9 +55,10 @@ case object Unchanged extends ApplyResult
 
 object Engine {
   /** Session conf key naming the engine root whose streams back the
-    * engine-bound SQL table functions (`ann_indexed_topk`): set by
-    * [[Engine.registerViews]] — i.e. by the engine actively driving a
-    * SQL statement — and read by the TVF builders at analysis time. */
+    * engine-bound SQL table functions (`ann_indexed_topk`): set whenever
+    * the engine binds stream views — before every engine-driven SQL
+    * statement, and by [[Engine.registerViews]] — and read by the TVF
+    * builders at analysis time. */
   val RootConfKey = "spark.graft.engine.root"
 
   /** Live engines by root, for the engine-bound TVFs: the TVF must
@@ -210,31 +212,129 @@ final class Engine(
       .drop(SeqCol, EpochCol, DeletedCol)
   }
 
-  /** Register every catalog stream as a temp view (compacted read).
-    * Also binds THIS engine as the session's engine-backed-TVF target
-    * ([[Engine.RootConfKey]]): registerViews runs immediately before
-    * every engine-driven `spark.sql`, so an `ann_indexed_topk(...)` in
-    * model/test SQL resolves against this engine's persisted index. */
-  /** Serializes temp-view registration + SQL ANALYSIS on the shared
+  /** Serializes temp-view binding + SQL ANALYSIS on the shared
     * session: a TVF model's micro-batch sink re-runs [[runPipeline]]
-    * from a streaming thread, and its batch `registerViews` must not
+    * from a streaming thread, and its batch view binding must not
     * interleave with [[graft.streaming.StreamingEngine.continuousPlan]]
     * registering STREAMING views for another model's activation (the
     * loser would resolve against the wrong view kind). Held only
     * through analysis — materialization runs outside it. */
   private[graft] val viewLock = new Object
 
+  /** Register every catalog stream as a temp view (compacted read) and
+    * bind THIS engine as the session's engine-backed-TVF target
+    * ([[Engine.RootConfKey]]) — for SQL run outside the engine, e.g. an
+    * `ann_indexed_topk(...)` over this engine's persisted index. The
+    * engine's own statements bind only the streams they read
+    * ([[analyzed]]). */
   def registerViews(): Unit = viewLock.synchronized {
+    bindViews(catalog.names())
+  }
+
+  /** A stream's view names: its qualified name and, inside a namespace,
+    * its short name. */
+  private def viewAliases(stream: String): Seq[String] =
+    (stream +: namespace.map(ns => stream.stripPrefix(s"${ns}__")).toSeq).distinct
+
+  /** Every stream's view names, lower-cased → its qualified name. */
+  private def viewNames(): Map[String, String] =
+    catalog.names().flatMap(n => viewAliases(n).map(_.toLowerCase -> n)).toMap
+
+  /** Fresh compacted views of `streams` (qualified names) under each of
+    * their view names, plus this engine's [[Engine.RootConfKey]]. */
+  private def bindViews(streams: Iterable[String]): Unit = {
     spark.conf.set(Engine.RootConfKey, root)
-    catalog.list().foreach { d =>
-      readStream(d.name).createOrReplaceTempView(d.name)
-      namespace.foreach { ns =>
-        // also expose the short name inside the namespace
-        val short = d.name.stripPrefix(s"${ns}__")
-        if (short != d.name) readStream(d.name).createOrReplaceTempView(short)
-      }
+    streams.foreach { n =>
+      val df = readStream(n)
+      viewAliases(n).foreach(df.createOrReplaceTempView)
     }
   }
+
+  /** `sql` analyzed over fresh views of the streams it reads. The
+    * parse-level read set ([[tableReads]]) is bound first; if analysis
+    * then resolved a stream view this statement did not bind (a name the
+    * parser cannot see: `IDENTIFIER('x')`, a computed TVF table argument)
+    * that view is rebound and the statement analyzed again, so no
+    * statement reads a view left behind by an earlier one. A statement
+    * that fails to analyze is retried once over every stream. */
+  private def analyzed(sql: String): DataFrame = viewLock.synchronized {
+    val views = viewNames()
+    val bound = scala.collection.mutable.Set.empty[String]
+    def bind(streams: Iterable[String]): Unit = {
+      val fresh = streams.filterNot(bound).toSeq.distinct
+      bindViews(fresh)
+      bound ++= fresh
+    }
+    def analyze(): DataFrame = {
+      val df = spark.sql(sql)
+      val stale = viewReads(df.queryExecution.analyzed)
+        .flatMap(v => views.get(v.toLowerCase)).filterNot(bound)
+      if (stale.isEmpty) df else { bind(stale); analyze() }
+    }
+    bind(readsOf(sql, views))
+    try analyze()
+    catch {
+      case scala.util.control.NonFatal(_) if views.values.exists(!bound(_)) =>
+        bind(views.values)
+        analyze()
+    }
+  }
+
+  /** Streams `sql` reads by name (qualified), per [[tableReads]]:
+    * spellings match stream and short names case-insensitively. */
+  private def readsOf(sql: String, views: Map[String, String]): Seq[String] =
+    tableReads(spark.sessionState.sqlParser.parsePlan(sql))
+      .flatMap(n => views.get(n.toLowerCase)).distinct
+
+  /** A plan's direct sub-plans: children, inner children (a WITH's CTE
+    * definitions) and the plans of subquery expressions (IN, EXISTS,
+    * scalar). `collect` alone sees only the first. */
+  private def subPlans(p: LogicalPlan): Seq[LogicalPlan] =
+    p.children ++ p.innerChildren.collect { case c: LogicalPlan => c } ++ p.subqueries
+
+  /** Table names a parsed plan reads: relations anywhere in it (CTE
+    * bodies and subqueries included) except references to an enclosing
+    * CTE, plus the table-name literals of graft table functions. */
+  private def tableReads(p: LogicalPlan, ctes: Set[String] = Set.empty): Seq[String] =
+    p match {
+      case w: UnresolvedWith =>
+        // a CTE sees the ones before it (and itself, if recursive); the
+        // main query sees them all
+        val scopes = w.cteRelations.scanLeft(ctes)(_ + _._1.toLowerCase)
+        w.cteRelations.zip(scopes.tail).flatMap { case ((name, body, _), scope) =>
+          tableReads(body, if (w.allowRecursion) scope else scope - name.toLowerCase)
+        } ++ tableReads(w.child, scopes.last)
+      case _ =>
+        val own = p match {
+          case r: UnresolvedRelation
+              if !(r.multipartIdentifier.size == 1 &&
+                ctes(r.multipartIdentifier.head.toLowerCase)) =>
+            Seq(r.multipartIdentifier.last)
+          // graft table functions take their source TABLE(s) as
+          // string-literal arguments (position 0, plus extras per
+          // GraftTableFunctions.tableArgPositions — decontaminate reads
+          // two tables) — track them so rename/cascade see through a
+          // TVF-shaped pipeline stage (round 10; round 11 multi-table)
+          case f: UnresolvedTableValuedFunction
+              if graft.functions.GraftTableFunctions.names
+                .contains(f.name.last.toLowerCase) =>
+            graft.functions.GraftTableFunctions.tableArgPositions
+              .getOrElse(f.name.last.toLowerCase, Seq(0))
+              .flatMap(i => f.functionArgs.lift(i).collect {
+                case org.apache.spark.sql.catalyst.expressions.Literal(s, _)
+                    if s != null => s.toString
+              })
+          case _ => Nil
+        }
+        own ++ subPlans(p).flatMap(tableReads(_, ctes))
+    }
+
+  /** Temp views an analyzed plan resolved, by view name. */
+  private def viewReads(p: LogicalPlan): Seq[String] =
+    (p match {
+      case v: View if v.isTempView => Seq(v.desc.identifier.table)
+      case _ => Nil
+    }) ++ subPlans(p).flatMap(viewReads)
 
   // ------------------------------------------------------------------
   // Schema inference (S7) and change detection (L2)
@@ -242,37 +342,15 @@ final class Engine(
 
   /** Streams referenced by a SQL statement — via Spark's parser, not string
     * matching (the reference's crude `FROM old` replace, impl.py:698-701,
-    * done properly as SURVEY §2.6 L4 recommends). */
-  def sourcesOf(sql: String): Seq[String] = {
-    val plan = spark.sessionState.sqlParser.parsePlan(SqlDialect.rewrite(sql))
-    val relations = plan.collect {
-      case r: UnresolvedRelation => Seq(r.multipartIdentifier.last)
-      // graft table functions take their source TABLE(s) as
-      // string-literal arguments (position 0, plus extras per
-      // GraftTableFunctions.tableArgPositions — decontaminate reads
-      // two tables) — track them so rename/cascade see through a
-      // TVF-shaped pipeline stage (round 10; round 11 multi-table)
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedTableValuedFunction
-          if graft.functions.GraftTableFunctions.names
-            .contains(f.name.last.toLowerCase) =>
-        graft.functions.GraftTableFunctions.tableArgPositions
-          .getOrElse(f.name.last.toLowerCase, Seq(0))
-          .flatMap(i => f.functionArgs.lift(i).collect {
-            case org.apache.spark.sql.catalyst.expressions.Literal(s, _)
-                if s != null => s.toString
-          })
-    }.flatten
-    relations.distinct
-      .map(catalog.qualify)
-      .filter(catalog.exists)
-  }
+    * done properly as SURVEY §2.6 L4 recommends). Reads inside CTEs and
+    * subqueries count; names match case-insensitively. */
+  def sourcesOf(sql: String): Seq[String] = readsOf(SqlDialect.rewrite(sql), viewNames())
 
   /** Analysis-only schema inference: `spark.sql(select).schema` runs the
     * analyzer without a job (reference POST /pipelines/outputStream,
     * client.py:292-297). Errors on empty schema like impl.py:496-499. */
   def inferSchema(sql: String): StreamSchema = {
-    registerViews()
-    val st = spark.sql(SqlDialect.rewrite(sql)).schema
+    val st = analyzed(SqlDialect.rewrite(sql)).schema
     if (st.isEmpty)
       throw new IllegalStateException(
         s"Could not infer schema for SQL: $sql — analyzer returned no fields")
@@ -326,10 +404,13 @@ final class Engine(
   def createModel(name: String, sql: String, cfg: ModelConfig = ModelConfig(),
                   fullRefresh: Boolean = false): ApplyResult = {
     requireUserName(name, "materialize model")
-    val existed = catalog.exists(name)
-    if (existed && !fullRefresh && !hasChanged(name, sql, cfg)) return Unchanged
+    val existing = catalog.get(name)
+    val existed = existing.nonEmpty
+    // the diff's candidate is the def a changed model rebuilds with
+    val diffed = if (fullRefresh) None else existing.map(_ => candidateDef(name, sql, cfg))
+    if (diffed.exists(c => existing.exists(_.specHash == c.specHash))) return Unchanged
     if (existed) dropStream(name, cascade = false, keepConsumers = true)
-    val d = candidateDef(name, sql, cfg)
+    val d = diffed.getOrElse(candidateDef(name, sql, cfg))
     catalog.put(d)
     if (cfg.active) runPipeline(name) else writeEmpty(d)
     if (existed) Updated else Created
@@ -342,16 +423,9 @@ final class Engine(
       throw new IllegalArgumentException(s"stream '$name' not found"))
     val sql = d.sql.getOrElse(
       throw new IllegalStateException(s"stream '${d.name}' has no pipeline"))
-    // register + analyze under the view lock (see [[viewLock]]); the
-    // analyzed plan holds resolved relations, so the materialization
+    // the analyzed plan holds resolved relations, so the materialization
     // below is immune to later view replacement
-    val df = viewLock.synchronized {
-      registerViews()
-      val x = spark.sql(sql)
-      x.queryExecution.analyzed
-      x
-    }
-    write(d, df, SaveMode.Overwrite)
+    write(d, analyzed(sql), SaveMode.Overwrite)
   }
 
   /** Append the result of `sql` to an existing stream (incremental INSERT
@@ -359,13 +433,7 @@ final class Engine(
   def insertInto(name: String, sql: String): Unit = {
     val d = catalog.get(name).getOrElse(
       throw new IllegalArgumentException(s"stream '$name' not found"))
-    val df = viewLock.synchronized {
-      registerViews()
-      val x = spark.sql(SqlDialect.rewrite(sql))
-      x.queryExecution.analyzed
-      x
-    }
-    write(d, df, SaveMode.Append)
+    write(d, analyzed(SqlDialect.rewrite(sql)), SaveMode.Append)
   }
 
   /** Append rows directly (the analog of POSTing events to a REST source
@@ -2105,13 +2173,19 @@ final class Engine(
     * applied by the compacted temp views. The timeout mirrors the
     * accumulated poll budget (default 60 s, connections.py:46). */
   def preview(sql: String, limit: Int = 100): Seq[Row] = {
-    registerViews()
-    val df = spark.sql(SqlDialect.rewrite(sql))
-    val action = java.util.concurrent.CompletableFuture.supplyAsync(() => df.take(limit))
+    val df = analyzed(SqlDialect.rewrite(sql))
+    // its own job group: a timeout cancels this preview's jobs only,
+    // never an active pipeline's micro-batch or another caller's work
+    val group = s"graft-preview-${java.util.UUID.randomUUID()}"
+    val sc = spark.sparkContext
+    val action = java.util.concurrent.CompletableFuture.supplyAsync { () =>
+      sc.setJobGroup(group, "graft preview", interruptOnCancel = true)
+      try df.take(limit) finally sc.clearJobGroup()
+    }
     try action.get(previewTimeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS).toSeq
     catch {
       case _: java.util.concurrent.TimeoutException =>
-        spark.sparkContext.cancelAllJobs()
+        sc.cancelJobGroup(group)
         throw new RuntimeException(s"preview timed out after ${previewTimeoutMs}ms")
     }
   }
@@ -2131,8 +2205,7 @@ final class Engine(
   def previewPolled(sql: String, limit: Int = 100,
       rng: java.util.Random = new java.util.Random(),
       sleep: Double => Unit = s => Thread.sleep((s * 1000).toLong)): PreviewCursor.Result = {
-    registerViews()
-    val df = spark.sql(SqlDialect.rewrite(sql)).limit(limit)
+    val df = analyzed(SqlDialect.rewrite(sql)).limit(limit)
     val cols = df.columns.toSeq
     val group = s"graft-preview-${java.util.UUID.randomUUID()}"
     val queue = new java.util.concurrent.ConcurrentLinkedQueue[Row]()

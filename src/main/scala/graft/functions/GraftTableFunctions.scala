@@ -26,8 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   SELECT * FROM decontaminate('docs', 'doc_id', 'text',
   *                               'bench', 'text', 4)
   *
-  * over any resolvable table/temp view — engine streams included
-  * (`Engine.registerViews` exposes every stream as a view). Each QUERY
+  * over any resolvable table/temp view — engine streams included (an
+  * engine statement binds the streams it names, table arguments too;
+  * `Engine.registerViews` exposes every stream as a view). Each QUERY
   * builder resolves its table through `SparkSession.active` at ANALYSIS
   * time and returns the operator's analyzed plan, so the SQL user gets
   * the exact distributed plan the Scala API builds — banding

@@ -217,6 +217,14 @@ final class StreamingEngine(val engine: Engine) {
     * the ingest-sequence stamping (and therefore PK compaction) matches
     * batch writes exactly. */
   def activate(name: String, trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
+    val q = run(name, trigger)
+    engine.catalog.get(name).foreach(d => engine.catalog.put(d.copy(active = true)))
+    q
+  }
+
+  /** Start the model's pipeline query under `trigger`, leaving its
+    * stored target state (`active`) as it is. */
+  private def run(name: String, trigger: Trigger): StreamingQuery = {
     require(!active.contains(name), s"pipeline '$name' already active")
     fastForwardIfLatest(name)
     val sink: (DataFrame, Long) => Unit =
@@ -232,14 +240,15 @@ final class StreamingEngine(val engine: Engine) {
     // reads (and its sink appends) must block forget/rewrite ops
     registeredSources.put(name, d.sources)
     engine.registerContinuous(name, d.sources)
-    engine.catalog.put(d.copy(active = true))
     q
   }
 
   /** Bounded run: process everything currently available, then stop
-    * (ST4 preview semantics / catch-up activation). */
+    * (ST4 preview semantics / catch-up activation). A bounded run is not
+    * an activation: the pipeline's stored `active` flag, and so its spec
+    * hash, stay as they were. */
   def refreshAvailable(name: String, timeoutMs: Long = 120000L): Unit = {
-    val q = activate(name, Trigger.AvailableNow())
+    val q = run(name, Trigger.AvailableNow())
     try {
       if (!q.awaitTermination(timeoutMs))
         throw new RuntimeException(s"availableNow run of '$name' timed out after ${timeoutMs}ms")

@@ -199,4 +199,34 @@ class StreamingEngineSpec extends SparkSpec {
     assert(err.getMessage.contains("minhash_pairs") &&
       err.getMessage.contains("activate"), err.getMessage)
   }
+
+  test("a bounded refresh leaves the pipeline's stored active flag, so a no-change rebuild keeps its rows") {
+    import spark.implicits._
+    val e = newEngine()
+    val se = new StreamingEngine(e)
+    e.createStream("flag_src", StreamSchema(Seq(PhysicalField("x", FBigInt))))
+    e.appendRows("flag_src", Seq(1L, 2L).toDF("x"))
+    val sql = "SELECT x * 2 AS y FROM flag_src"
+    val cfg = ModelConfig(active = false)
+    e.createModel("flag_m", sql, cfg)
+    se.refreshAvailable("flag_m")
+    assert(!e.catalog.get("flag_m").get.active)
+    assert(!e.hasChanged("flag_m", sql, cfg))
+    assert(e.createModel("flag_m", sql, cfg) == graft.engine.Unchanged)
+    assert(e.readStream("flag_m").count() == 2L)
+
+    // the same through a project: an inactive model caught up by a
+    // bounded refresh survives a no-change `run`
+    val proj = tmpDir("graft-flag-proj")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$proj/flag_pm.sql"),
+      "{{ config(pipeline={'execution': {'active': false}}) }}\n" +
+        "SELECT x + 1 AS z FROM flag_src")
+    val runner = new graft.engine.ProjectRunner(e)
+    assert(runner.run(proj)("flag_pm") == graft.engine.Created)
+    se.refreshAvailable("flag_pm")
+    assert(e.readStream("flag_pm").count() == 2L)
+    assert(runner.run(proj)("flag_pm") == graft.engine.Unchanged)
+    assert(!e.catalog.get("flag_pm").get.active)
+    assert(e.readStream("flag_pm").count() == 2L)
+  }
 }

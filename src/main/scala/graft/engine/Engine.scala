@@ -10,6 +10,7 @@ import graft.catalog.{Catalog, ConnectionDef, StreamDef}
 import graft.functions.GraftFunctions
 import graft.schema._
 import graft.types.FlinkType
+import SiblingIndex.{Ann, Families, Lsh, MinHash}
 
 /** Per-model configuration — the engine analog of the reference's dbt model
   * config block (pipeline + output-stream specs,
@@ -233,7 +234,7 @@ final class Engine(
 
   /** A stream's view names: its qualified name and, inside a namespace,
     * its short name. */
-  private def viewAliases(stream: String): Seq[String] =
+  private[graft] def viewAliases(stream: String): Seq[String] =
     (stream +: namespace.map(ns => stream.stripPrefix(s"${ns}__")).toSeq).distinct
 
   /** Every stream's view names, lower-cased → its qualified name. */
@@ -477,73 +478,23 @@ final class Engine(
                         textCol: String, threshold: Double = 0.5): Long =
     streamLock(name).synchronized {
     val existing = readStream(name).select(col(idCol), col(textCol))
-    val postName = mhPostingsName(name)
-    val sigName = mhSignaturesName(name)
     val (shingleN, numHashes, bands) = (2, 128, 32)
-    // the MAIN stream's write epoch, pinned into the index per ingest:
-    // an out-of-band write (plain appendRows / truncate / deleteKeys)
-    // bumps it, so the next deduped ingest sees the mismatch and
-    // rebuilds instead of probing a silently-stale index
-    val mainEpoch = catalog.get(name).map(_.writeEpoch).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
-    def postProps: Map[String, String] = Map(
-      "bucket_by" -> "band,bkey", "bucket_count" -> "32",
+    val mainEpoch = epochOf(name)
+    // the indexed columns are pinned too, so other managed ingest paths
+    // can maintain this index for their rows ([[maintainFamily]])
+    val config = Map(
       "mh_shingle_n" -> shingleN.toString,
       "mh_num_hashes" -> numHashes.toString, "mh_bands" -> bands.toString,
-      // round 11: the indexed columns are pinned so OTHER managed
-      // ingest paths ([[appendRowsAnnIndexed]], the embedding dedup)
-      // can maintain this sibling for their survivors — see
-      // [[maintainSiblingIndexes]]
-      "mh_id_col" -> idCol, "mh_text_col" -> textCol)
-    // the index has no layout solver (parameters are fixed and the
-    // verify threshold is not baked in) — rebuild when the pinned
-    // parameters disagree, a sibling is missing, the main stream was
-    // written outside this path since the last ingest, OR a sibling
-    // ITSELF was written out of band (round 10 — ADVICE r9 item 2: the
-    // siblings' own write epochs are pinned too, so a direct
-    // appendRows/truncate to `__mhpost`/`__mhsig` forces a rebuild
-    // instead of probing a silently-corrupted index)
-    val live = catalog.get(postName).exists { d =>
-      d.properties.get("mh_shingle_n").contains(shingleN.toString) &&
-        d.properties.get("mh_num_hashes").contains(numHashes.toString) &&
-        d.properties.get("mh_bands").contains(bands.toString) &&
-        d.properties.get("mh_id_col").contains(idCol) &&
-        d.properties.get("mh_text_col").contains(textCol) &&
-        d.properties.get("mh_main_epoch").contains(mainEpoch.toString) &&
-        d.properties.get("mh_post_epoch").contains(d.writeEpoch.toString) &&
-        catalog.get(sigName).exists(sd =>
-          d.properties.get("mh_sig_epoch").contains(sd.writeEpoch.toString))
-    }
+      MinHash.idColKey -> idCol, "mh_text_col" -> textCol)
+    // no layout solver (parameters are fixed and the verify threshold is
+    // not baked in): rebuild when the config or an epoch pin disagrees
+    val live = MinHash.live(catalog, name, mainEpoch, _ == idCol)
+      .exists(d => config.forall { case (k, v) => d.properties.get(k).contains(v) })
     if (!live) {
       // bootstrap/rebuild: ONE shingle+minhash pass over the corpus
-      val idType = existing.schema(idCol).dataType
-      if (catalog.get(postName).isEmpty) {
-        val st = new org.apache.spark.sql.types.StructType()
-          .add("ex_id", idType, nullable = true)
-          .add("band", org.apache.spark.sql.types.IntegerType, nullable = false)
-          .add("bkey", org.apache.spark.sql.types.LongType, nullable = false)
-        val d = StreamDef(catalog.qualify(postName), StreamSchema.fromStruct(st),
-          sources = Seq(catalog.qualify(name)), properties = postProps)
-        catalog.put(d); writeEmpty(d)
-      } else truncate(postName)
-      if (catalog.get(sigName).isEmpty) {
-        val st = new org.apache.spark.sql.types.StructType()
-          .add("ex_id", idType, nullable = true)
-          .add("hs", org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType), nullable = true)
-        val d = StreamDef(catalog.qualify(sigName), StreamSchema.fromStruct(st),
-          sources = Seq(catalog.qualify(name)))
-        catalog.put(d); writeEmpty(d)
-      } else truncate(sigName)
-      val (post, sigs, cleanupIdx) = graft.operators.Dedup.minhashIndexFrames(
-        existing, idCol, textCol, shingleN, numHashes, bands)
-      try { appendRows(postName, post); appendRows(sigName, sigs) }
-      finally cleanupIdx()
-      val dNow = catalog.get(postName).get
-      catalog.put(dNow.copy(properties =
-        postProps + ("mh_main_epoch" -> mainEpoch.toString)
-          + ("mh_post_epoch" -> dNow.writeEpoch.toString)
-          + ("mh_sig_epoch" -> catalog.get(sigName).get.writeEpoch.toString)))
+      resetFamily(MinHash, name, existing.schema(idCol).dataType)
+      mhAppend(name, existing, idCol, textCol, shingleN, numHashes, bands)
+      repin(MinHash, name, config)
     }
     // the shard feeds three jobs (index probe, drop count, anti-join
     // append) — persist it for the call so an expensive upstream plan
@@ -551,8 +502,8 @@ final class Engine(
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val (pairs, cleanup) = graft.operators.Dedup.incrementalNearDupsIndexed(
-        readStream(postName), readStream(sigName), df, idCol, textCol,
-        shingleN, numHashes, bands, threshold)
+        readStream(mhPostingsName(name)), readStream(mhSignaturesName(name)),
+        df, idCol, textCol, shingleN, numHashes, bands, threshold)
       val flagged = pairs
         .select(col("in_id").as(idCol)).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -568,40 +519,37 @@ final class Engine(
         // `survivors` plan (see [[rowsAtEpoch]] — the first sibling
         // append invalidates `flagged`'s cache, after which a
         // re-evaluated `survivors` self-flags and evaluates empty)
-        val survivorRows = rowsAtEpoch(name, catalog.get(name).get.writeEpoch)
+        val survivorRows = rowsAtEpoch(name, epochOf(name))
         // the index ingests the survivors' rows — shard-sized, no
         // corpus work
-        val (sPost, sSigs, cleanupS) = graft.operators.Dedup.minhashIndexFrames(
-          survivorRows.select(col(idCol), col(textCol)), idCol, textCol,
-          shingleN, numHashes, bands)
-        try { appendRows(postName, sPost); appendRows(sigName, sSigs) }
-        finally cleanupS()
-        // re-pin the main epoch AFTER our own survivor append bumped it,
-        // and the siblings' own epochs after THEIR appends (out-of-band
-        // sibling-write detection — see the live check above)
-        val dPost = catalog.get(postName).get
-        catalog.put(dPost.copy(properties = dPost.properties +
-          ("mh_main_epoch" -> catalog.get(name).get.writeEpoch.toString) +
-          ("mh_post_epoch" -> dPost.writeEpoch.toString) +
-          ("mh_sig_epoch" -> catalog.get(sigName).get.writeEpoch.toString)))
-        maybeCompactIndex(postName); maybeCompactIndex(sigName)
-        // round 11 (VERDICT r10 item 1): the survivors also feed any
-        // OTHER live sibling index on this stream — without this, a
-        // stream carrying both a dedup index and an ANN index paid a
-        // corpus-linear ANN rebuild after every deduped ingest (the
-        // survivor append advanced the main epoch, so the next
-        // ensureAnnIndex saw a stale pin and retrained)
-        maintainSiblingIndexes(name, survivorRows, mainEpoch, skip = Set("mh"))
+        mhAppend(name, survivorRows, idCol, textCol, shingleN, numHashes, bands)
+        repin(MinHash, name)
+        compactFamily(MinHash, name)
+        maintainOtherFamilies(name, survivorRows, mainEpoch, MinHash)
         dropped
       } finally { flagged.unpersist(); cleanup() }
     } finally df.unpersist()
     }
 
+  /** Append `rows`' band postings and signatures to `name`'s MinHash
+    * stores. */
+  private def mhAppend(name: String, rows: DataFrame, idCol: String,
+                       textCol: String, shingleN: Int, numHashes: Int,
+                       bands: Int): Unit = {
+    val (post, sigs, cleanup) = graft.operators.Dedup.minhashIndexFrames(
+      rows.select(col(idCol), col(textCol)), idCol, textCol, shingleN,
+      numHashes, bands)
+    try {
+      appendRows(mhPostingsName(name), post)
+      appendRows(mhSignaturesName(name), sigs)
+    } finally cleanup()
+  }
+
   /** The managed MinHash-index sibling streams backing
     * [[appendRowsDeduped]] for `name` — public for operational
     * tooling, like [[lshIndexName]]. */
-  def mhPostingsName(name: String): String = name + "__mhpost"
-  def mhSignaturesName(name: String): String = name + "__mhsig"
+  def mhPostingsName(name: String): String = name + SiblingIndex.MhPost.suffix
+  def mhSignaturesName(name: String): String = name + SiblingIndex.MhSig.suffix
 
   /** Suffixes RESERVED for engine-managed index sibling streams
     * (round 10 — ADVICE r9 item 1): a user stream named e.g.
@@ -610,9 +558,8 @@ final class Engine(
     * it, and [[renameStream]] would blindly carry it. Creation paths
     * reject these names, so any existing suffixed stream IS
     * engine-managed and the sibling lifecycle (rename carry, rebuild,
-    * compaction) can treat it as its own. */
-  val ManagedSuffixes: Seq[String] =
-    Seq("__mhpost", "__mhsig", "__lshidx", "__annidx", "__anncent")
+    * compaction, drop) can treat it as its own. */
+  val ManagedSuffixes: Seq[String] = Families.flatMap(_.stores.map(_.suffix))
   private def requireUserName(name: String, what: String): Unit =
     ManagedSuffixes.find(name.endsWith).foreach { suf =>
       throw new IllegalArgumentException(
@@ -673,65 +620,36 @@ final class Engine(
     streamLock(name).synchronized {
     val existing = readStream(name).select(col(idCol), col(vecCol))
     val idxName = lshIndexName(name)
-    // out-of-band-write detector, as in [[appendRowsDeduped]]: the main
-    // stream's epoch is pinned into the index per ingest, so a plain
-    // appendRows/truncate/deleteKeys forces a rebuild instead of a
-    // probe against a silently-stale index
-    val mainEpoch = catalog.get(name).map(_.writeEpoch).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
-    def solve(n: Long): (Int, Int, Int) = lshSolve(n, threshold)
-    def metaProps(p: Int, t: Int, r: Int, n: Long): Map[String, String] = Map(
-      "bucket_by" -> "tbl,bucket", "bucket_count" -> "32",
-      "lsh_planes" -> p.toString, "lsh_tables" -> t.toString,
-      "lsh_radius" -> r.toString, "lsh_n" -> n.toString,
-      "lsh_threshold" -> threshold.toString, "lsh_dims" -> dims.toString,
-      // round 11: pinned for cross-family maintenance, as in
-      // [[appendRowsDeduped]]'s postProps
-      "lsh_id_col" -> idCol, "lsh_vec_col" -> vecCol)
+    val mainEpoch = epochOf(name)
+    // pinned with the solver layout; the indexed columns let other
+    // managed ingest paths maintain this index ([[maintainFamily]])
+    val config = Map("lsh_threshold" -> threshold.toString,
+      "lsh_dims" -> dims.toString, Lsh.idColKey -> idCol, "lsh_vec_col" -> vecCol)
     // fast path: a live index whose pinned layout still matches the
     // solver at the ledger count (and this call's config). Non-numeric
     // pinned values (hand-edited catalog) fall through to a rebuild
     // rather than throwing.
-    def num(v: Option[String]): Option[Long] =
-      v.flatMap(s => scala.util.Try(s.toLong).toOption)
-    val live = catalog.get(idxName).flatMap { d =>
+    val live = Lsh.live(catalog, name, mainEpoch, _ == idCol).flatMap { d =>
+      val p = d.properties
       for {
-        p <- num(d.properties.get("lsh_planes")).map(_.toInt)
-        t <- num(d.properties.get("lsh_tables")).map(_.toInt)
-        r <- num(d.properties.get("lsh_radius")).map(_.toInt)
-        n <- num(d.properties.get("lsh_n"))
-        if d.properties.get("lsh_threshold").contains(threshold.toString)
-        if d.properties.get("lsh_dims").contains(dims.toString)
-        if d.properties.get("lsh_id_col").contains(idCol)
-        if d.properties.get("lsh_vec_col").contains(vecCol)
-        if d.properties.get("lsh_main_epoch").contains(mainEpoch.toString)
-        // the index's OWN pinned epoch: a direct out-of-band write to
-        // the `__lshidx` sibling forces a rebuild (round 10 — ADVICE r9)
-        if d.properties.get("lsh_idx_epoch").contains(d.writeEpoch.toString)
-        if solve(n) == ((p, t, r))
-      } yield (p, t, r, n)
+        planes <- propLong(p, "lsh_planes").map(_.toInt)
+        tables <- propLong(p, "lsh_tables").map(_.toInt)
+        radius <- propLong(p, "lsh_radius").map(_.toInt)
+        n <- propLong(p, "lsh_n")
+        if config.forall { case (k, v) => p.get(k).contains(v) }
+        if lshSolve(n, threshold) == ((planes, tables, radius))
+      } yield (planes, tables, radius, n)
     }
     val (planes, tables, radius, n0) = live.getOrElse {
       // bootstrap or layout-epoch rebuild: one signature pass over the
       // standing corpus under the new layout
       val n = existing.count()
-      val (p, t, r) = solve(n)
-      if (catalog.get(idxName).isEmpty) {
-        val st = new org.apache.spark.sql.types.StructType()
-          .add("ex_id", existing.schema(idCol).dataType, nullable = true)
-          .add("tbl", org.apache.spark.sql.types.IntegerType, nullable = false)
-          .add("bucket", org.apache.spark.sql.types.LongType, nullable = false)
-        val d = StreamDef(catalog.qualify(idxName), StreamSchema.fromStruct(st),
-          sources = Seq(catalog.qualify(name)), properties = metaProps(p, t, r, n))
-        catalog.put(d)
-        writeEmpty(d)
-      } else truncate(idxName)
+      val (p, t, r) = lshSolve(n, threshold)
+      resetFamily(Lsh, name, existing.schema(idCol).dataType)
       appendRows(idxName,
         graft.operators.Dedup.embeddingPostings(existing, idCol, vecCol, p, t, dims))
-      val dNow = catalog.get(idxName).get
-      catalog.put(dNow.copy(properties =
-        metaProps(p, t, r, n) + ("lsh_main_epoch" -> mainEpoch.toString)
-          + ("lsh_idx_epoch" -> dNow.writeEpoch.toString)))
+      repin(Lsh, name, config ++ Map("lsh_planes" -> p.toString,
+        "lsh_tables" -> t.toString, "lsh_radius" -> r.toString, "lsh_n" -> n.toString))
       (p, t, r, n)
     }
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -749,21 +667,16 @@ final class Engine(
         appendRows(name, survivors)
         // committed survivor rows, re-read by epoch (see [[rowsAtEpoch]]
         // — the postings append below invalidates `flagged`'s cache)
-        val survivorRows = rowsAtEpoch(name, catalog.get(name).get.writeEpoch)
+        val survivorRows = rowsAtEpoch(name, epochOf(name))
         // the index ingests the survivors' postings under the SAME epoch
         // layout the probe used — shard-sized, no corpus work
         appendRows(idxName, graft.operators.Dedup.embeddingPostings(
           survivorRows.select(col(idCol), col(vecCol)), idCol, vecCol,
           planes, tables, dims))
         val ingested = df.count() - dropped
-        val dNow = catalog.get(idxName).get
-        catalog.put(dNow.copy(properties = dNow.properties +
-          ("lsh_n" -> (n0 + ingested).toString) +
-          ("lsh_main_epoch" -> catalog.get(name).get.writeEpoch.toString) +
-          ("lsh_idx_epoch" -> dNow.writeEpoch.toString)))
-        maybeCompactIndex(idxName)
-        // cross-family maintenance (round 11) — see [[appendRowsDeduped]]
-        maintainSiblingIndexes(name, survivorRows, mainEpoch, skip = Set("lsh"))
+        repin(Lsh, name, Map("lsh_n" -> (n0 + ingested).toString))
+        compactFamily(Lsh, name)
+        maintainOtherFamilies(name, survivorRows, mainEpoch, Lsh)
         dropped
       } finally { flagged.unpersist(); cleanup() }
     } finally df.unpersist()
@@ -773,193 +686,183 @@ final class Engine(
     * [[appendRowsDedupedEmbedding]] for `name` — public so operational
     * tooling can inspect/DROP it; its layout epoch lives in the stream
     * properties (`lsh_planes`/`lsh_tables`/`lsh_radius`/`lsh_n`). */
-  def lshIndexName(name: String): String = name + "__lshidx"
+  def lshIndexName(name: String): String = name + SiblingIndex.LshIdx.suffix
 
   /** The ONE place the embedding-LSH layout solver's occupancy/miss
     * parameters live: both [[appendRowsDedupedEmbedding]]'s live check
-    * and [[maintainSiblingIndexes]]'s layout-epoch check call this —
-    * a drifted duplicate would make the two paths disagree on when a
-    * layout epoch ends. */
+    * and [[maintainLsh]]'s layout-epoch check call this — a drifted
+    * duplicate would make the two paths disagree on when a layout epoch
+    * ends. */
   private def lshSolve(n: Long, threshold: Double): (Int, Int, Int) =
     graft.operators.Dedup.lshLayout(math.max(1L, n), threshold,
       targetOccupancy = 16, missTarget = 1e-6, probeRadius = 2,
       maxTables = 512)
 
   // ------------------------------------------------------------------
-  // Cross-family sibling-index maintenance (round 11 — VERDICT r10
-  // item 1). A stream can carry up to three managed index families at
-  // once (MinHash text dedup, sign-LSH embedding dedup, the ANN
-  // retrieval index). Before this section, each managed ingest path
-  // maintained only ITS OWN siblings — the survivor append advanced the
-  // main write epoch, so every OTHER family's pinned `*_main_epoch`
-  // went stale and its next use paid a corpus-linear rebuild at ingest
-  // cadence. Now every managed ingest routes its appended rows through
-  // the other families' standing layouts too (shard-sized encode /
-  // posting passes — the same work those families' own ingest paths
-  // do), then re-pins epochs, so ALL live indexes stay live across any
+  // Index families ([[SiblingIndex]]): the MinHash text dedup, sign-LSH
+  // embedding dedup and ANN retrieval indexes share one lifecycle here —
+  // store creation, epoch pins, compaction, cross-family maintenance,
+  // forget pruning and drop. A stream can carry all three at once, so
+  // every managed ingest also routes its appended rows through the
+  // OTHER live families' standing layouts (shard-sized encode/posting
+  // passes), then re-pins them: all live indexes stay live across any
   // managed ingest. Out-of-band writes (plain appendRows / truncate /
-  // deleteKeys) still invalidate everything — that contract is the
-  // correctness backstop, unchanged.
+  // deleteKeys) still invalidate everything — the epoch pins are the
+  // correctness backstop, maintenance is purely the fast path.
   // ------------------------------------------------------------------
 
   private def propLong(p: Map[String, String], k: String): Option[Long] =
     p.get(k).flatMap(s => scala.util.Try(s.toLong).toOption)
 
-  /** Maintain every OTHER live sibling index after a managed ingest
-    * appended `appended` to `name`. `preEpoch` is the main stream's
-    * write epoch BEFORE the caller's append — a sibling is maintained
-    * only when its pinned main epoch equals it (i.e. the sibling was
-    * live w.r.t. exactly the corpus this ingest extended); anything
-    * else is left stale for its own rebuild machinery (correctness is
-    * the epoch pins' job, maintenance is purely the fast path). `skip`
-    * names the family the caller already maintains itself
-    * ("mh" | "lsh" | "ann"). Caller holds streamLock(name). */
-  private def maintainSiblingIndexes(name: String, appended: DataFrame,
-                                     preEpoch: Long,
-                                     skip: Set[String]): Unit = {
-    if (!skip("mh")) maintainMhSiblings(name, appended, preEpoch)
-    if (!skip("lsh")) maintainLshSibling(name, appended, preEpoch)
-    if (!skip("ann")) maintainAnnSiblings(name, appended, preEpoch)
-  }
+  /** `name`'s write epoch. */
+  private def epochOf(name: String): Long =
+    catalog.get(name).map(_.writeEpoch).getOrElse(
+      throw new IllegalArgumentException(s"stream '$name' not found"))
 
-  /** MinHash postings/signatures twin of [[maintainAnnSiblings]]: the
-    * appended rows' postings enter the standing band layout (parameters
-    * are pinned and fixed, so there is no layout-epoch case here). */
-  private def maintainMhSiblings(name: String, appended: DataFrame,
-                                 preEpoch: Long): Unit = {
-    val postName = mhPostingsName(name)
-    val sigName = mhSignaturesName(name)
-    catalog.get(postName).foreach { d =>
-      val p = d.properties
-      val ok = for {
-        sn <- propLong(p, "mh_shingle_n").map(_.toInt)
-        nh <- propLong(p, "mh_num_hashes").map(_.toInt)
-        nb <- propLong(p, "mh_bands").map(_.toInt)
-        idC <- p.get("mh_id_col") if appended.columns.contains(idC)
-        txtC <- p.get("mh_text_col") if appended.columns.contains(txtC)
-        if p.get("mh_main_epoch").contains(preEpoch.toString)
-        if p.get("mh_post_epoch").contains(d.writeEpoch.toString)
-        if catalog.get(sigName).exists(sd =>
-          p.get("mh_sig_epoch").contains(sd.writeEpoch.toString))
-      } yield (sn, nh, nb, idC, txtC)
-      ok.foreach { case (sn, nh, nb, idC, txtC) =>
-        val (post, sigs, cleanup) = graft.operators.Dedup.minhashIndexFrames(
-          appended.select(col(idC), col(txtC)), idC, txtC, sn, nh, nb)
-        try { appendRows(postName, post); appendRows(sigName, sigs) }
-        finally cleanup()
-        val dNow = catalog.get(postName).get
-        catalog.put(dNow.copy(properties = dNow.properties +
-          ("mh_main_epoch" -> catalog.get(name).get.writeEpoch.toString) +
-          ("mh_post_epoch" -> dNow.writeEpoch.toString) +
-          ("mh_sig_epoch" -> catalog.get(sigName).get.writeEpoch.toString)))
-        maybeCompactIndex(postName); maybeCompactIndex(sigName)
-      }
+  /** Create `f`'s missing stores for stream `name`, empty, with their
+    * schema and bucket layout (`idType`: the indexed id column's type);
+    * unless `keepExisting`, empty the stores that exist. */
+  private def resetFamily(f: SiblingFamily, name: String,
+                          idType: org.apache.spark.sql.types.DataType,
+                          keepExisting: Boolean = false): Unit =
+    f.stores.foreach { s =>
+      val store = name + s.suffix
+      if (!catalog.exists(store)) {
+        val d = StreamDef(catalog.qualify(store),
+          StreamSchema.fromStruct(s.schema(idType)),
+          sources = Seq(catalog.qualify(name)), properties = s.layout)
+        catalog.put(d); writeEmpty(d)
+      } else if (!keepExisting) truncate(store)
     }
+
+  /** Pin `f`'s index on `name` at the current epochs, merging `props`
+    * into its properties. */
+  private def repin(f: SiblingFamily, name: String,
+                    props: Map[String, String] = Map.empty): Unit = {
+    val d = catalog.get(f.home(name)).get
+    catalog.put(d.copy(properties =
+      d.properties ++ props ++ f.pins(name, epochOf(name), epochOf)))
   }
 
-  /** Sign-LSH postings twin: appended rows' postings enter the standing
-    * (planes, tables) layout UNLESS their count crosses a solver layout
-    * breakpoint — then the sibling is left stale and the next embedding
-    * ingest rebuilds under the new layout (geometric epochs, amortized
-    * O(1)/row, exactly the owning path's own policy). */
-  private def maintainLshSibling(name: String, appended: DataFrame,
-                                 preEpoch: Long): Unit = {
-    val idxName = lshIndexName(name)
-    catalog.get(idxName).foreach { d =>
-      val p = d.properties
-      val ok = for {
-        planes <- propLong(p, "lsh_planes").map(_.toInt)
-        tables <- propLong(p, "lsh_tables").map(_.toInt)
-        radius <- propLong(p, "lsh_radius").map(_.toInt)
-        n <- propLong(p, "lsh_n")
-        dims <- propLong(p, "lsh_dims").map(_.toInt)
-        thr <- p.get("lsh_threshold")
-          .flatMap(s => scala.util.Try(s.toDouble).toOption)
-        idC <- p.get("lsh_id_col") if appended.columns.contains(idC)
-        vC <- p.get("lsh_vec_col") if appended.columns.contains(vC)
-        if p.get("lsh_main_epoch").contains(preEpoch.toString)
-        if p.get("lsh_idx_epoch").contains(d.writeEpoch.toString)
-      } yield (planes, tables, radius, n, dims, thr, idC, vC)
-      ok.foreach { case (planes, tables, radius, n, dims, thr, idC, vC) =>
-        val shard = appended.select(col(idC), col(vC))
-        val shardN = shard.count()
-        val newN = n + shardN
-        if (lshSolve(newN, thr) == ((planes, tables, radius))) {
-          if (shardN > 0)
-            appendRows(idxName, graft.operators.Dedup.embeddingPostings(
-              shard, idC, vC, planes, tables, dims))
-          val dNow = catalog.get(idxName).get
-          catalog.put(dNow.copy(properties = dNow.properties +
-            ("lsh_n" -> newN.toString) +
-            ("lsh_main_epoch" -> catalog.get(name).get.writeEpoch.toString) +
-            ("lsh_idx_epoch" -> dNow.writeEpoch.toString)))
-          maybeCompactIndex(idxName)
-        }
-      }
-    }
-  }
+  /** Compact `f`'s per-row stores on the [[maybeCompactIndex]] cadence. */
+  private def compactFamily(f: SiblingFamily, name: String): Unit =
+    f.stores.filter(_.keyed).foreach(s => maybeCompactIndex(name + s.suffix))
 
-  /** ANN-index twin — the round-11 headline case: deduped-ingest
-    * SURVIVORS encode into the standing `__annidx` under the FROZEN
-    * codebooks (the [[appendRowsAnnIndexed]] shard path), instead of
-    * leaving the index stale and forcing a corpus-linear retrain at the
-    * next search. Skips (leaves stale) when the standing index is
-    * empty, or when an AUTO codebook would cross [[annGrowthCap]] — in
-    * both cases the next ensure's rebuild IS the right move and
-    * encoding first would be wasted work.
+  /** Maintain every family but `owner` (whose managed ingest appended
+    * `appended` to `name`) — see [[maintainFamily]]. Caller holds
+    * streamLock(name). */
+  private def maintainOtherFamilies(name: String, appended: DataFrame,
+                                    preEpoch: Long, owner: SiblingFamily): Unit =
+    Families.filterNot(_ == owner).foreach(maintainFamily(_, name, appended, preEpoch))
+
+  /** Ingest `appended` (rows a managed ingest just wrote to `name`) into
+    * `f`'s index, when it was live over exactly the corpus the ingest
+    * extended: its main-epoch pin equals `preEpoch`, the write epoch
+    * before the append. Anything else is left stale for its own rebuild.
     *
     * @return true when the index is live after this call (maintained or
     *         trivially re-pinned); false when it was left stale */
-  private def maintainAnnSiblings(name: String, appended: DataFrame,
-                                  preEpoch: Long): Boolean = {
-    import graft.operators.Similarity
-    val idxName = annIndexName(name)
-    val centName = annCentroidsName(name)
-    val ok = catalog.get(idxName).flatMap { d =>
+  private def maintainFamily(f: SiblingFamily, name: String, appended: DataFrame,
+                             preEpoch: Long): Boolean =
+    f.live(catalog, name, preEpoch, appended.columns.contains).exists { d =>
       val p = d.properties
-      for {
-        m <- propLong(p, "ann_m").map(_.toInt)
-        ksub <- propLong(p, "ann_ksub").map(_.toInt)
-        annN <- propLong(p, "ann_n") if annN > 0
-        trained <- propLong(p, "ann_trained_n")
-        kind <- p.get("ann_kind")
-        idC <- p.get("ann_id_col") if appended.columns.contains(idC)
-        vC <- p.get("ann_vec_col") if appended.columns.contains(vC)
-        if p.get("ann_main_epoch").contains(preEpoch.toString)
-        if p.get("ann_idx_epoch").contains(d.writeEpoch.toString)
-        if catalog.get(centName).exists(cd =>
-          p.get("ann_cent_epoch").contains(cd.writeEpoch.toString))
-      } yield (p, m, ksub, annN, trained, kind, idC, vC)
-    }
-    ok.exists { case (p, m, ksub, annN, trained, kind, idC, vC) =>
-      val shard = appended.select(col(idC).as("n_id"), col(vC).as("v"))
-      val shardN = shard.count()
-      val auto = p.get("ann_ncentroids").contains("0")
-      if (auto && annN + shardN > math.max(1L, trained) * annGrowthCap)
-        false // past the drift cap: stale → next ensure retrains
-      else {
-        if (shardN > 0) {
-          val centRows = readStream(centName)
-          val hierK2 =
-            if (kind == "hier") propLong(p, "ann_k2").map(_.toInt) else None
-          val quant = Similarity.quantizerFromRows(centRows, hierK2)
-          val books = Similarity.booksFromRows(centRows, m, ksub)
-          appendRows(idxName, Similarity.pqEncode(quant.assign(shard), books)
-            .select(col("n_id").as("ex_id"), col("cell"),
-              col("v_n").as("v"), col("codes"), col("eps"), col("norm_x")))
-        }
-        // zero survivors still re-pin: the caller's (empty) append
-        // advanced the main epoch, and a no-op ingest must not cost the
-        // next search a rebuild
-        val dIdx = catalog.get(idxName).get
-        catalog.put(dIdx.copy(properties = dIdx.properties ++ Map(
-          "ann_n" -> (annN + shardN).toString,
-          "ann_main_epoch" -> catalog.get(name).get.writeEpoch.toString,
-          "ann_idx_epoch" -> dIdx.writeEpoch.toString,
-          "ann_cent_epoch" -> catalog.get(centName).get.writeEpoch.toString)))
-        maybeCompactIndex(idxName)
-        true
+      (f: @unchecked) match {
+        case MinHash => maintainMh(name, appended, p)
+        case Lsh => maintainLsh(name, appended, p)
+        case Ann => maintainAnn(name, appended, p)
       }
+    }
+
+  /** MinHash: the appended rows' postings enter the standing band layout
+    * (parameters are pinned and fixed, so there is no layout epoch). */
+  private def maintainMh(name: String, appended: DataFrame,
+                         p: Map[String, String]): Boolean =
+    (for {
+      sn <- propLong(p, "mh_shingle_n").map(_.toInt)
+      nh <- propLong(p, "mh_num_hashes").map(_.toInt)
+      nb <- propLong(p, "mh_bands").map(_.toInt)
+      txtC <- p.get("mh_text_col") if appended.columns.contains(txtC)
+    } yield (sn, nh, nb, txtC)).exists { case (sn, nh, nb, txtC) =>
+      mhAppend(name, appended, p(MinHash.idColKey), txtC, sn, nh, nb)
+      repin(MinHash, name)
+      compactFamily(MinHash, name)
+      true
+    }
+
+  /** Sign-LSH: the appended rows' postings enter the standing (planes,
+    * tables) layout UNLESS their count crosses a solver layout
+    * breakpoint — then the index is left stale and the next embedding
+    * ingest rebuilds under the new layout (geometric epochs, amortized
+    * O(1)/row, exactly the owning path's own policy). */
+  private def maintainLsh(name: String, appended: DataFrame,
+                          p: Map[String, String]): Boolean =
+    (for {
+      planes <- propLong(p, "lsh_planes").map(_.toInt)
+      tables <- propLong(p, "lsh_tables").map(_.toInt)
+      radius <- propLong(p, "lsh_radius").map(_.toInt)
+      n <- propLong(p, "lsh_n")
+      dims <- propLong(p, "lsh_dims").map(_.toInt)
+      thr <- p.get("lsh_threshold")
+        .flatMap(s => scala.util.Try(s.toDouble).toOption)
+      vC <- p.get("lsh_vec_col") if appended.columns.contains(vC)
+    } yield (planes, tables, radius, n, dims, thr, vC)).exists {
+      case (planes, tables, radius, n, dims, thr, vC) =>
+        val idC = p(Lsh.idColKey)
+        val shard = appended.select(col(idC), col(vC))
+        val shardN = shard.count()
+        val newN = n + shardN
+        lshSolve(newN, thr) == ((planes, tables, radius)) && {
+          if (shardN > 0)
+            appendRows(lshIndexName(name), graft.operators.Dedup.embeddingPostings(
+              shard, idC, vC, planes, tables, dims))
+          repin(Lsh, name, Map("lsh_n" -> newN.toString))
+          compactFamily(Lsh, name)
+          true
+        }
+    }
+
+  /** ANN — the round-11 headline case: deduped-ingest SURVIVORS encode
+    * into the standing `__annidx` under the FROZEN codebooks (the
+    * [[appendRowsAnnIndexed]] shard path), instead of leaving the index
+    * stale and forcing a corpus-linear retrain at the next search.
+    * Skips (leaves stale) when the standing index is empty, or when an
+    * AUTO codebook would cross [[annGrowthCap]] — in both cases the next
+    * ensure's rebuild IS the right move and encoding first would be
+    * wasted work. */
+  private def maintainAnn(name: String, appended: DataFrame,
+                          p: Map[String, String]): Boolean = {
+    import graft.operators.Similarity
+    (for {
+      m <- propLong(p, "ann_m").map(_.toInt)
+      ksub <- propLong(p, "ann_ksub").map(_.toInt)
+      annN <- propLong(p, "ann_n") if annN > 0
+      trained <- propLong(p, "ann_trained_n")
+      kind <- p.get("ann_kind")
+      vC <- p.get("ann_vec_col") if appended.columns.contains(vC)
+    } yield (m, ksub, annN, trained, kind, vC)).exists {
+      case (m, ksub, annN, trained, kind, vC) =>
+        val shard = appended.select(col(p(Ann.idColKey)).as("n_id"), col(vC).as("v"))
+        val shardN = shard.count()
+        val auto = p.get("ann_ncentroids").contains("0")
+        // past the drift cap: stale → next ensure retrains
+        !(auto && annN + shardN > math.max(1L, trained) * annGrowthCap) && {
+          if (shardN > 0) {
+            val centRows = readStream(annCentroidsName(name))
+            val hierK2 =
+              if (kind == "hier") propLong(p, "ann_k2").map(_.toInt) else None
+            val quant = Similarity.quantizerFromRows(centRows, hierK2)
+            val books = Similarity.booksFromRows(centRows, m, ksub)
+            appendRows(annIndexName(name), Similarity.pqEncode(quant.assign(shard), books)
+              .select(col("n_id").as("ex_id"), col("cell"),
+                col("v_n").as("v"), col("codes"), col("eps"), col("norm_x")))
+          }
+          // zero survivors still re-pin: the caller's (empty) append
+          // advanced the main epoch, and a no-op ingest must not cost the
+          // next search a rebuild
+          repin(Ann, name, Map("ann_n" -> (annN + shardN).toString))
+          compactFamily(Ann, name)
+          true
+        }
     }
   }
 
@@ -984,8 +887,8 @@ final class Engine(
   // [[maybeCompactIndex]] cadence.
   // ------------------------------------------------------------------
 
-  def annIndexName(name: String): String = name + "__annidx"
-  def annCentroidsName(name: String): String = name + "__anncent"
+  def annIndexName(name: String): String = name + SiblingIndex.AnnIdx.suffix
+  def annCentroidsName(name: String): String = name + SiblingIndex.AnnCent.suffix
 
   /** AUTO-codebook staleness bound for [[ensureAnnIndex]]: a corpus
     * grown past this factor of the size its codebook was trained at
@@ -1005,27 +908,17 @@ final class Engine(
   private val annBuilds = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.CountDownLatch]()
 
-  /** The [[ensureAnnIndex]] fast-path predicate: pinned config + column
-    * + epoch match, within the AUTO-codebook growth cap. */
+  /** The [[ensureAnnIndex]] fast-path predicate: pinned config + epoch
+    * match, within the AUTO-codebook growth cap. */
   private def annIndexLive(name: String, idCol: String, vecCol: String,
-                           nCentroids: Int, m: Int, ksub: Int): Boolean = {
-    val idxName = annIndexName(name)
-    val centName = annCentroidsName(name)
-    val mainEpoch = catalog.get(name).map(_.writeEpoch).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
-    catalog.get(idxName).exists { d =>
-      d.properties.get("ann_ncentroids").contains(nCentroids.toString) &&
-        d.properties.get("ann_m").contains(m.toString) &&
-        d.properties.get("ann_ksub").contains(ksub.toString) &&
-        // round 11: the indexed COLUMNS are part of the config — an
-        // ensure over a different vector column must rebuild, not
-        // silently serve the other column's index
-        d.properties.get("ann_id_col").contains(idCol) &&
-        d.properties.get("ann_vec_col").contains(vecCol) &&
-        d.properties.get("ann_main_epoch").contains(mainEpoch.toString) &&
-        d.properties.get("ann_idx_epoch").contains(d.writeEpoch.toString) &&
-        catalog.get(centName).exists(cd =>
-          d.properties.get("ann_cent_epoch").contains(cd.writeEpoch.toString)) &&
+                           nCentroids: Int, m: Int, ksub: Int): Boolean =
+    Ann.live(catalog, name, epochOf(name), _ == idCol).exists { d =>
+      val p = d.properties
+      // the indexed COLUMNS are part of the config — an ensure over a
+      // different vector column must rebuild, not silently serve the
+      // other column's index
+      annConfig(idCol, vecCol, nCentroids, m, ksub).forall { case (k, v) =>
+        p.get(k).contains(v) } &&
         // codebook-drift bound: [[appendRowsAnnIndexed]] grows the corpus
         // under FROZEN codebooks, so per-cell occupancy drifts off the
         // √n-ideal linearly with growth. Past `annGrowthCap`× the corpus
@@ -1033,48 +926,15 @@ final class Engine(
         // ensure retrains — the geometric-epoch amortization argument of
         // the LSH layout solver (rebuild cost O(1)/row amortized).
         (nCentroids > 0 || { // explicit codebooks are the caller's choice
-          propLong(d.properties, "ann_trained_n")
-            .zip(propLong(d.properties, "ann_n")).exists { case (t, c) =>
-              c <= math.max(1L, t) * annGrowthCap }
+          propLong(p, "ann_trained_n").zip(propLong(p, "ann_n")).exists {
+            case (t, c) => c <= math.max(1L, t) * annGrowthCap }
         })
     }
-  }
 
-  /** Create-if-missing for the two ANN sibling defs (never truncates a
-    * live index — the staged rebuild swaps content without ever
-    * exposing an empty generation). */
-  private def ensureAnnSiblingDefs(name: String,
-                                   idType: org.apache.spark.sql.types.DataType): Unit = {
-    val idxName = annIndexName(name)
-    val centName = annCentroidsName(name)
-    if (catalog.get(centName).isEmpty) {
-      val st = new org.apache.spark.sql.types.StructType()
-        .add("kind", "int", nullable = false)
-        .add("j", "int", nullable = false)
-        .add("cid", "int", nullable = false)
-        .add("centroid", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType), nullable = true)
-      val d = StreamDef(catalog.qualify(centName), StreamSchema.fromStruct(st),
-        sources = Seq(catalog.qualify(name)))
-      catalog.put(d); writeEmpty(d)
-    }
-    if (catalog.get(idxName).isEmpty) {
-      val st = new org.apache.spark.sql.types.StructType()
-        .add("ex_id", idType, nullable = true)
-        .add("cell", "int", nullable = true)
-        .add("v", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType), nullable = true)
-        .add("codes", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType), nullable = true)
-        .add("eps", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType), nullable = true)
-        .add("norm_x", "double", nullable = true)
-      val d = StreamDef(catalog.qualify(idxName), StreamSchema.fromStruct(st),
-        sources = Seq(catalog.qualify(name)),
-        properties = Map("bucket_by" -> "cell", "bucket_count" -> "32"))
-      catalog.put(d); writeEmpty(d)
-    }
-  }
+  private def annConfig(idCol: String, vecCol: String, nCentroids: Int,
+                        m: Int, ksub: Int): Map[String, String] = Map(
+    "ann_ncentroids" -> nCentroids.toString, "ann_m" -> m.toString,
+    "ann_ksub" -> ksub.toString, Ann.idColKey -> idCol, "ann_vec_col" -> vecCol)
 
   /** The full next-generation index CONTENT for the current corpus:
     * (codebook rows, encoded rows, n, kind, k2, dims). Corpus-linear —
@@ -1099,23 +959,10 @@ final class Engine(
         ("flat", 0, if (f.isEmpty) 0 else f.dims)
     }
     if (quant.isEmpty) {
-      val centSt = new org.apache.spark.sql.types.StructType()
-        .add("kind", "int").add("j", "int").add("cid", "int")
-        .add("centroid", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))
-      val idxSt = new org.apache.spark.sql.types.StructType()
-        .add("ex_id", existing.schema(idCol).dataType)
-        .add("cell", "int")
-        .add("v", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))
-        .add("codes", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType))
-        .add("eps", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType))
-        .add("norm_x", "double")
-      (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], centSt),
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], idxSt),
-        n, kind, k2, dims)
+      val idType = existing.schema(idCol).dataType
+      def empty(st: SiblingStore) =
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st.schema(idType))
+      (empty(SiblingIndex.AnnCent), empty(SiblingIndex.AnnIdx), n, kind, k2, dims)
     } else {
       val books = booksOpt.get
       (Similarity.quantizerRows(quant, spark)
@@ -1132,19 +979,6 @@ final class Engine(
     * valid within the drift bound), stripped by any REBUILD (new
     * codebooks, new recall geometry). */
   private val annPinKeys = Set("ann_nprobe", "ann_nprobe_recall")
-
-  private def annProps(idCol: String, vecCol: String, nCentroids: Int,
-                       m: Int, ksub: Int, n: Long, kind: String, k2: Int,
-                       dims: Int, mainEpoch: Long, idxEpoch: Long,
-                       centEpoch: Long): Map[String, String] = Map(
-    "ann_ncentroids" -> nCentroids.toString, "ann_m" -> m.toString,
-    "ann_ksub" -> ksub.toString, "ann_kind" -> kind,
-    "ann_k2" -> k2.toString, "ann_dims" -> dims.toString,
-    "ann_id_col" -> idCol, "ann_vec_col" -> vecCol,
-    "ann_n" -> n.toString, "ann_trained_n" -> n.toString,
-    "ann_main_epoch" -> mainEpoch.toString,
-    "ann_idx_epoch" -> idxEpoch.toString,
-    "ann_cent_epoch" -> centEpoch.toString)
 
   /** Ensure a live ANN index over stream `name`'s (idCol, vecCol):
     * no-op when the pinned config + epochs match; otherwise ONE
@@ -1217,9 +1051,9 @@ final class Engine(
     val lock = streamLock(name)
     val (idxName, centName) = (annIndexName(name), annCentroidsName(name))
     val (mainEpoch, idxD, centD) = lock.synchronized {
-      ensureAnnSiblingDefs(name, readStream(name).schema(idCol).dataType)
-      (catalog.get(name).get.writeEpoch, catalog.get(idxName).get,
-        catalog.get(centName).get)
+      resetFamily(Ann, name, readStream(name).schema(idCol).dataType,
+        keepExisting = true)
+      (epochOf(name), catalog.get(idxName).get, catalog.get(centName).get)
     }
     val (centRows, idxRows, n, kind, k2, dims) =
       annIndexContents(name, idCol, vecCol, nCentroids, m, ksub)
@@ -1242,10 +1076,12 @@ final class Engine(
         // codebooks mean the measured recall no longer applies
         Seq(catalog.get(centName).get.copy(writeEpoch = centEpoch),
           dIdx.copy(writeEpoch = idxEpoch,
-            properties = (dIdx.properties -- annPinKeys) ++ annProps(
-              idCol, vecCol, nCentroids, m, ksub, n, kind, k2, dims,
-              mainEpoch = mainEpoch, idxEpoch = idxEpoch,
-              centEpoch = centEpoch)))
+            properties = (dIdx.properties -- annPinKeys) ++
+              annConfig(idCol, vecCol, nCentroids, m, ksub) ++ Map(
+                "ann_kind" -> kind, "ann_k2" -> k2.toString,
+                "ann_dims" -> dims.toString, "ann_n" -> n.toString,
+                "ann_trained_n" -> n.toString) ++
+              Ann.pins(name, mainEpoch, Map(idxName -> idxEpoch, centName -> centEpoch))))
       }
     }
   }
@@ -1274,7 +1110,7 @@ final class Engine(
     // builder when one is registered).
     val inFlight = annBuilds.containsKey(catalog.qualify(name))
     val servable = catalog.get(annIndexName(name)).exists { d =>
-      d.properties.get("ann_id_col").contains(idCol) &&
+      d.properties.get(Ann.idColKey).contains(idCol) &&
         d.properties.get("ann_vec_col").contains(vecCol) &&
         propLong(d.properties, "ann_n").nonEmpty
     }
@@ -1320,16 +1156,12 @@ final class Engine(
     require(nProbe >= 0,
       s"nProbe must be >= 0 (0 = AUTO: the pinned tuned width, else 2), " +
         s"got $nProbe")
-    val props = catalog.get(annIndexName(name)).map(_.properties).getOrElse(
-      throw new IllegalStateException(
-        s"no persisted ANN index for stream '$name' — build one with " +
-          s"ann_index_rebuild('$name', '$idCol', '$vecCol') or " +
-          "Engine.ensureAnnIndex"))
-    if (!props.get("ann_id_col").contains(idCol) ||
+    val props = annIndexProps(name, idCol, vecCol)
+    if (!props.get(Ann.idColKey).contains(idCol) ||
         !props.get("ann_vec_col").contains(vecCol))
       throw new IllegalStateException(
         s"the persisted ANN index for stream '$name' covers columns " +
-          s"(${props.getOrElse("ann_id_col", "?")}, " +
+          s"(${props.getOrElse(Ann.idColKey, "?")}, " +
           s"${props.getOrElse("ann_vec_col", "?")}), not ($idCol, " +
           s"$vecCol) — rebuild with ann_index_rebuild('$name', " +
           s"'$idCol', '$vecCol')")
@@ -1435,17 +1267,13 @@ final class Engine(
                            None): (Int, Double) = {
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall must be in (0, 1], got $targetRecall")
-    val props = catalog.get(annIndexName(name)).map(_.properties).getOrElse(
-      throw new IllegalStateException(
-        s"no persisted ANN index for stream '$name' — build one with " +
-          s"ann_index_rebuild('$name', '$idCol', '$vecCol') or " +
-          "Engine.ensureAnnIndex"))
+    val props = annIndexProps(name, idCol, vecCol)
     if (props("ann_n").toLong == 0L) return (1, 1.0) // vacuous on empty
     // the index generation the sweep below measures — a pin is only
     // valid for THIS generation (a rebuild retrains the codebooks and
     // deliberately strips pins; writing a measurement taken against the
     // old codebooks onto the new index would be a stale promise)
-    val measuredGen = (props.get("ann_idx_epoch"), props.get("ann_cent_epoch"))
+    val measuredGen = Ann.generation(props)
     val quant = graft.operators.Similarity.quantizerFromRows(
       readStream(annCentroidsName(name)),
       if (props("ann_kind") == "hier") Some(props("ann_k2").toInt) else None)
@@ -1476,9 +1304,7 @@ final class Engine(
         // the (lock-free) sweep ran, the tuned width still returns but
         // is NOT pinned (the new codebooks void the measurement)
         catalog.get(annIndexName(name)).foreach { d =>
-          val gen = (d.properties.get("ann_idx_epoch"),
-            d.properties.get("ann_cent_epoch"))
-          if (gen == measuredGen)
+          if (Ann.generation(d.properties) == measuredGen)
             catalog.put(d.copy(properties = d.properties +
               ("ann_nprobe" -> nProbe.toString) +
               ("ann_nprobe_recall" -> recall.toString)))
@@ -1487,6 +1313,16 @@ final class Engine(
       (nProbe, recall)
     } finally truth.unpersist()
   }
+
+  /** The persisted ANN index's properties; a missing index is a loud
+    * error naming the lifecycle ops that build one. */
+  private def annIndexProps(name: String, idCol: String,
+                            vecCol: String): Map[String, String] =
+    catalog.get(annIndexName(name)).map(_.properties).getOrElse(
+      throw new IllegalStateException(
+        s"no persisted ANN index for stream '$name' — build one with " +
+          s"ann_index_rebuild('$name', '$idCol', '$vecCol') or " +
+          "Engine.ensureAnnIndex"))
 
   /** Deterministic ~`sampleQueries`-row query sample: hash-mod over the
     * id column, so the sample is stable across calls and engines. */
@@ -1542,12 +1378,9 @@ final class Engine(
     * when an index existed. */
   def dropAnnIndex(name: String): Boolean =
     streamLock(name).synchronized {
-      val had = catalog.get(annIndexName(name)).nonEmpty ||
-        catalog.get(annCentroidsName(name)).nonEmpty
-      Seq(annIndexName(name), annCentroidsName(name)).foreach { s =>
-        if (catalog.get(s).nonEmpty) dropStream(s)
-      }
-      had
+      val had = Ann.names(name).filter(catalog.exists)
+      had.foreach(dropStream(_))
+      had.nonEmpty
     }
 
   /** SemDedup verdicts over stream `name` served FROM the persisted
@@ -1601,22 +1434,22 @@ final class Engine(
                            m: Int = 8, ksub: Int = 16): Unit =
     streamLock(name).synchronized {
     ensureAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)
-    val preEpoch = catalog.get(name).get.writeEpoch
+    val preEpoch = epochOf(name)
     appendRows(name, df)
     // committed shard rows by epoch: cheaper than re-running a possibly
     // expensive caller plan per maintenance pass, and immune to cache
     // invalidation (see [[rowsAtEpoch]])
-    val appended = rowsAtEpoch(name, catalog.get(name).get.writeEpoch)
-    if (!maintainAnnSiblings(name, appended, preEpoch))
+    val appended = rowsAtEpoch(name, epochOf(name))
+    if (!maintainFamily(Ann, name, appended, preEpoch))
       // left stale: the standing index was EMPTY (no codebook to encode
       // under), or this shard crossed the AUTO growth cap — either way a
       // retrain from the now-complete corpus is the right (and
       // amortized-O(1)/row) move, paid here rather than by the next
       // search
       ensureAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)
-    // round 11: any OTHER live sibling family (text/embedding dedup
-    // indexes) ingests this shard too — see [[maintainSiblingIndexes]]
-    maintainSiblingIndexes(name, appended, preEpoch, skip = Set("ann"))
+    // any OTHER live family (text/embedding dedup indexes) ingests this
+    // shard too
+    maintainOtherFamilies(name, appended, preEpoch, Ann)
     }
 
   /** Per-stream ingest mutex: [[write]] is read-epoch-then-write and
@@ -1836,48 +1669,30 @@ final class Engine(
     }
     val nVictims = victims(raw).count()
 
-    // sibling prune plan: (sibling stream, pinned id column, was-live)
-    // resolved BEFORE any mutation — liveness is the maintain-path pin
-    // equality, checked against the pre-forget epochs
-    val annIdx = annIndexName(name); val annCent = annCentroidsName(name)
-    val mhPost = mhPostingsName(name); val mhSig = mhSignaturesName(name)
-    val lshIdx = lshIndexName(name)
+    // the index families on the stream, and which were live over the
+    // pre-forget store — resolved BEFORE any mutation
+    val present = Families.flatMap(f => catalog.get(f.home(name)).map(f -> _))
+    val live = present.map(_._1)
+      .filter(_.live(catalog, name, preMain, raw.columns.contains).nonEmpty).toSet
+    // prune plan: every per-row store, with its family's pinned id column
+    val sibPlan: Seq[(String, String)] = present.flatMap { case (f, home) =>
+      f.stores.filter(_.keyed).map(s =>
+        (name + s.suffix) -> home.properties.getOrElse(f.idColKey, ""))
+    }.filter { case (s, _) => catalog.exists(s) }
     // the prunes below rewrite sibling STORES — a continuous pipeline
     // file-source-reading a sibling directly (registerViews exposes
     // them) is just as corrupted by a swap as one on the main stream
-    Seq(annIdx, mhPost, mhSig, lshIdx).filter(catalog.exists)
-      .foreach(s => requireNoContinuousUse(s, "prune index sibling"))
-    val annD = catalog.get(annIdx)
-    val annLive = annD.exists { id =>
-      id.properties.get("ann_main_epoch").contains(preMain.toString) &&
-        id.properties.get("ann_idx_epoch").contains(id.writeEpoch.toString) &&
-        catalog.get(annCent).exists(cd =>
-          id.properties.get("ann_cent_epoch").contains(cd.writeEpoch.toString))
-    }
-    val mhD = catalog.get(mhPost)
-    val mhLive = mhD.exists { pd =>
-      pd.properties.get("mh_main_epoch").contains(preMain.toString) &&
-        pd.properties.get("mh_post_epoch").contains(pd.writeEpoch.toString) &&
-        catalog.get(mhSig).exists(sd =>
-          pd.properties.get("mh_sig_epoch").contains(sd.writeEpoch.toString))
-    }
-    val lshD = catalog.get(lshIdx)
-    val lshLive = lshD.exists { id =>
-      id.properties.get("lsh_main_epoch").contains(preMain.toString) &&
-        id.properties.get("lsh_idx_epoch").contains(id.writeEpoch.toString)
-    }
+    sibPlan.foreach { case (s, _) => requireNoContinuousUse(s, "prune index sibling") }
     // victim ids per distinct pinned id column, MATERIALIZED before the
     // main rewrite (the frames are lazy — after the swap they would
     // re-scan the post-forget store and prune nothing)
-    val idCols = (annD.flatMap(_.properties.get("ann_id_col")).toSeq ++
-      mhD.flatMap(_.properties.get("mh_id_col")).toSeq ++
-      lshD.flatMap(_.properties.get("lsh_id_col")).toSeq).distinct
-    val vicIds: Map[String, DataFrame] = idCols
+    val vicIds: Map[String, DataFrame] = sibPlan.map(_._2).distinct
       .filter(raw.columns.contains).map { c =>
         c -> materialize(
           victims(raw).select(col(c).as("__forget_id")).distinct(),
           s"id_$c")
       }.toMap
+    val prunes = sibPlan.filter { case (_, c) => vicIds.contains(c) }
 
     // ---- stage every rewrite aside CONCURRENTLY (optimization round
     // 12, guide §2.6 overlapping independent jobs): the main survivor
@@ -1889,19 +1704,11 @@ final class Engine(
     // manifest over the main store and every sibling — so the forget is
     // all-or-nothing: a stage failure aborts it with no store touched, a
     // commit failure is rolled forward by the next read.
-    val sibPlan: Seq[(String, String)] =
-      (annD.map(id => annIdx -> id.properties.getOrElse("ann_id_col", "")).toSeq ++
-        mhD.toSeq.flatMap { pd =>
-          val c = pd.properties.getOrElse("mh_id_col", "")
-          Seq(mhPost -> c, mhSig -> c)
-        } ++
-        lshD.map(id => lshIdx -> id.properties.getOrElse("lsh_id_col", "")).toSeq)
-        .filter { case (s, c) => catalog.exists(s) && vicIds.contains(c) }
     // each task yields its pruned row count; a sibling with no victims
     // stages nothing
     val stages: Seq[() => Long] =
       (() => { commits.stage(d, survivors(raw)); nVictims }) +:
-      sibPlan.map { case (sibName, idC) => () => {
+      prunes.map { case (sibName, idC) => () => {
         val sd = catalog.get(sibName).get
         val sibRaw = readRaw(sd)
         val vic = vicIds(idC)
@@ -1913,48 +1720,36 @@ final class Engine(
             col("ex_id") === col("__forget_id"), "left_anti"))
         n
       } }
-    val names = d.name +: sibPlan.map(s => catalog.qualify(s._1))
+    val names = d.name +: prunes.map(s => catalog.qualify(s._1))
     commits.run(streamLock(name), names)(stages) { counts =>
-      val pruned = sibPlan.map(_._1).zip(counts.tail).toMap
+      val pruned = prunes.map(_._1).zip(counts.tail).toMap
       // the main store's content changed: stale pins, out-of-band
       // detection and any staged commit must all see the epoch bump
       val newMain = preMain + 1
-      /** A sibling's def after its prune (if any) bumped its epoch. */
-      def afterPrune(s: String): StreamDef = {
-        val sd = catalog.get(s).get
-        if (pruned.getOrElse(s, 0L) > 0) sd.copy(writeEpoch = sd.writeEpoch + 1)
-        else sd
+      // every family store after its prune (which bumps its epoch). A
+      // family that was live is re-pinned at the new epochs; a stale one
+      // is pruned (a stale ANN index still SERVES its last epoch — it
+      // must not keep serving forgotten vectors) but not re-pinned, which
+      // would falsely claim coverage of appends it never indexed
+      val sibs = present.flatMap { case (f, _) =>
+        val stores = f.names(name).flatMap(s => catalog.get(s).map(sd => s ->
+          sd.copy(writeEpoch = sd.writeEpoch + (if (pruned.getOrElse(s, 0L) > 0) 1 else 0))))
+        val epochs = stores.map { case (s, sd) => s -> sd.writeEpoch }.toMap
+        stores.map {
+          case (s, h) if live(f) && s == f.home(name) =>
+            // the ANN ledger count drops by the pruned rows. lsh_n does
+            // NOT: the LSH fast path requires solve(lsh_n) == the pinned
+            // layout, so a decrement could cross a solve() boundary and
+            // force the corpus re-signature forget exists to avoid; as an
+            // upper bound it only delays the next layout growth
+            val annN = if (f != Ann) Map.empty[String, String] else Map("ann_n" ->
+              math.max(0L, propLong(h.properties, "ann_n").getOrElse(0L) -
+                pruned.getOrElse(s, 0L)).toString)
+            h.copy(properties = h.properties ++ annN ++ f.pins(name, newMain, epochs))
+          case (_, sd) => sd
+        }
       }
-      // ANN: prune even when stale (a stale index still SERVES its last
-      // epoch — it must not keep serving forgotten vectors); re-pin only
-      // when it was live
-      val ann = annD.map(_ => afterPrune(annIdx)).map(a => if (!annLive) a
-        else a.copy(properties = a.properties ++ Map(
-          "ann_n" -> math.max(0L, propLong(a.properties, "ann_n")
-            .getOrElse(0L) - pruned.getOrElse(annIdx, 0L)).toString,
-          "ann_main_epoch" -> newMain.toString,
-          "ann_idx_epoch" -> a.writeEpoch.toString,
-          "ann_cent_epoch" -> catalog.get(annCent).get.writeEpoch.toString)))
-      // MinHash postings + signatures
-      val sig = mhD.map(_ => afterPrune(mhSig))
-      val post = mhD.map(_ => afterPrune(mhPost)).map(p => if (!mhLive) p
-        else p.copy(properties = p.properties ++ Map(
-          "mh_main_epoch" -> newMain.toString,
-          "mh_post_epoch" -> p.writeEpoch.toString,
-          "mh_sig_epoch" -> sig.get.writeEpoch.toString)))
-      // sign-LSH postings. lsh_n is deliberately NOT decremented: the
-      // live fast-path requires solve(lsh_n) == the pinned layout, so an
-      // exact decrement could cross a solve() boundary and void the pin,
-      // forcing a full corpus re-signature on the next ingest — the exact
-      // rebuild forget exists to avoid. It stays the layout-ledger count
-      // (an upper bound after forgets), which only delays the next
-      // layout growth, never corrupts results.
-      val lsh = lshD.map(_ => afterPrune(lshIdx)).map(l => if (!lshLive) l
-        else l.copy(properties = l.properties ++ Map(
-          "lsh_main_epoch" -> newMain.toString,
-          "lsh_idx_epoch" -> l.writeEpoch.toString)))
-      Some(d.copy(writeEpoch = newMain) +: (ann ++ post ++ sig ++ lsh).toSeq
-        .filterNot(t => catalog.get(t.name).contains(t)))
+      Some(d.copy(writeEpoch = newMain) +: sibs.filterNot(t => catalog.get(t.name).contains(t)))
     }
     nVictims
   }
@@ -2312,22 +2107,27 @@ final class Engine(
 
   /** L3: drop a stream; with `cascade`, first recursively drop every stream
     * whose pipeline reads it (impl.py:197-257, recursion at 246-254). With
-    * `keepConsumers` (internal rebuild path) consumers are left in place. */
+    * `keepConsumers` (internal rebuild path) consumers are left in place.
+    * The stream's index stores go with it in every mode. */
   def dropStream(name: String, cascade: Boolean = true,
                  keepConsumers: Boolean = false): Unit = {
     if (!catalog.exists(name)) return
     if (cascade && !keepConsumers)
       catalog.consumers(name).foreach(c => dropStream(c.name, cascade = true))
-    spark.sql(s"DROP TABLE IF EXISTS ${bucketTableName(name)}")
     deleteStore(name)
   }
 
-  /** Delete a stream's def and data, settling an interrupted commit on it
-    * first: none may replay into a later stream of the same name. */
-  private def deleteStore(name: String): Unit = {
-    commits.repair(name)
-    catalog.delete(name)
-  }
+  /** Delete a stream's def and data, and its index stores': they describe
+    * this store only, and a stream re-created under the name restarts at
+    * write epoch 0, where their pins would match again. Each store's
+    * interrupted commit is settled first: none may replay into a later
+    * stream of the same name. */
+  private def deleteStore(name: String): Unit =
+    (name +: ManagedSuffixes.map(name + _).filter(catalog.exists)).foreach { s =>
+      spark.sql(s"DROP TABLE IF EXISTS ${bucketTableName(s)}")
+      commits.repair(s)
+      catalog.delete(s)
+    }
 
   /** L4: rename stream + pipeline; consumer pipelines' SQL is rewritten by
     * re-parsing (identifier-boundary regex on the parsed source list), not

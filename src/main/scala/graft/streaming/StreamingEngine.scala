@@ -109,7 +109,8 @@ final class StreamingEngine(val engine: Engine) {
     // this plan against a batch view (isStreaming = false)
     engine.viewLock.synchronized {
       d.sources.foreach { src =>
-        readStreamContinuous(src).createOrReplaceTempView(src)
+        val df = readStreamContinuous(src)
+        engine.viewAliases(src).foreach(df.createOrReplaceTempView)
       }
       spark.sql(sql)
     }

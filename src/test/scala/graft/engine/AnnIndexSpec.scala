@@ -164,9 +164,8 @@ class AnnIndexSpec extends SparkSpec {
       e.catalog.get(e.annCentroidsName("emb4")).isEmpty)
     assert(e.catalog.get(e.annIndexName("emb5")).nonEmpty &&
       e.catalog.get(e.annCentroidsName("emb5")).nonEmpty)
-    // the carried index is named right but its pinned epochs belong to
-    // the renamed stream's def — searches still work (ensure rebuilds
-    // if anything mismatches) and return sane rows
+    // the carried index is named right and its pins follow the rename —
+    // searches serve from it and return sane rows
     val rows = e.annTopKIndexed("emb5", "vec_id", "embedding",
       col("vec_id") < 2, k = 3, nProbe = 2)
     assert(rows.count() > 0)
@@ -174,6 +173,98 @@ class AnnIndexSpec extends SparkSpec {
     assert(e.catalog.get(e.annIndexName("emb5")).isEmpty &&
       e.catalog.get(e.annCentroidsName("emb5")).isEmpty,
       "cascade drop must take both ANN siblings")
+  }
+
+  /** An index family as the lifecycle tests drive it: its stores on a
+    * stream (the first carries the pins) and its managed ingest of a
+    * (vec_id, text, embedding) shard. */
+  private case class Family(name: String, stores: (Engine, String) => Seq[String],
+                            ingest: (Engine, String, DataFrame) => Unit)
+
+  private val families = Seq(
+    Family("minhash", (e, s) => Seq(e.mhPostingsName(s), e.mhSignaturesName(s)),
+      (e, s, df) => e.appendRowsDeduped(s, df, "vec_id", "text")),
+    Family("lsh", (e, s) => Seq(e.lshIndexName(s)),
+      (e, s, df) => e.appendRowsDedupedEmbedding(s, df, "vec_id", "embedding", dims = 16)),
+    Family("ann", (e, s) => Seq(e.annIndexName(s), e.annCentroidsName(s)),
+      (e, s, df) => e.appendRowsAnnIndexed(s, df, "vec_id", "embedding")))
+
+  test("lifecycle: every index family stays live across a rename, rebuilds after an out-of-band append, and leaves no store after a drop") {
+    for (f <- families) {
+      val e = newEngine()
+      def indexed(s: String): DataFrame = {
+        docVecStream(e, s)
+        e.appendRows(s, docVecCorpus(0, 30))
+        f.ingest(e, s, docVecCorpus(100, 102)) // bootstraps the index
+        e.readStream(s)
+      }
+      def exists(s: String): Seq[Boolean] = f.stores(e, s).map(e.catalog.exists)
+      def epoch(s: String): Long = e.catalog.get(f.stores(e, s).head).get.writeEpoch
+      indexed("a")
+      e.renameStream("a", "b")
+      assert(exists("a").forall(!_) && exists("b").forall(identity),
+        s"${f.name}: rename must carry every store")
+      // the carried index is live: the next ingest appends once, where a
+      // rebuild would rewrite the store first
+      val carried = epoch("b")
+      f.ingest(e, "b", docVecCorpus(200, 202))
+      assert(epoch("b") == carried + 1, s"${f.name}: the carried index must stay live")
+      if (f.name == "ann")
+        assert(e.annTopKIndexed("b", "vec_id", "embedding", col("vec_id") < 2,
+          k = 3, nProbe = 2).count() > 0, "the carried ANN index must serve")
+      val live = epoch("b")
+      e.appendRows("b", docVecCorpus(300, 301))
+      f.ingest(e, "b", docVecCorpus(400, 402))
+      assert(epoch("b") > live + 1, s"${f.name}: an out-of-band append must force a rebuild")
+      e.dropStream("b")
+      assert(exists("b").forall(!_), s"${f.name}: cascade drop must take every store")
+      indexed("c")
+      e.dropStream("c", cascade = false)
+      assert(exists("c").forall(!_), s"${f.name}: a drop without cascade must take every store")
+      e.close()
+    }
+  }
+
+  test("a rebuilt or re-created stream does not inherit its old index stores") {
+    val e = newEngine()
+    docVecStream(e, "src")
+    e.appendRows("src", docVecCorpus(0, 40))
+    def ids(s: String): Seq[Long] =
+      e.readStream(s).select("vec_id").as[Long].collect().sorted.toSeq
+
+    // ANN: the rebuilt model restarts at the write epoch its old index
+    // pinned, yet holds other rows — its index must rebuild, not serve
+    // the old rows
+    e.createModel("am", "SELECT * FROM src WHERE vec_id < 20")
+    assert(e.ensureAnnIndex("am", "vec_id", "embedding"))
+    assert(e.createModel("am", "SELECT * FROM src WHERE vec_id >= 20") == Updated)
+    assert(e.ensureAnnIndex("am", "vec_id", "embedding"), "the rebuilt model's index must rebuild")
+    val hits = e.annTopKIndexed("am", "vec_id", "embedding", col("vec_id") >= 20,
+      k = 3, nProbe = 64).select("n_id").as[Long].collect()
+    assert(hits.nonEmpty && hits.forall(_ >= 20), "neighbours must come from the model")
+
+    // MinHash: a model rebuilt from doc 1 to doc 2, then written back to
+    // the epoch its old index pinned; 12 copies doc 1's text, 13 doc 2's
+    e.createModel("mm", "SELECT * FROM src WHERE vec_id = 1")
+    assert(e.appendRowsDeduped("mm", docVecCorpus(11, 12), "vec_id", "text") == 0L)
+    e.createModel("mm", "SELECT * FROM src WHERE vec_id = 2")
+    e.appendRows("mm", docVecCorpus(11, 12))
+    assert(e.appendRowsDeduped("mm", docVecCorpus(1, 3)
+      .withColumn("vec_id", col("vec_id") + 11), "vec_id", "text") == 1L)
+    assert(ids("mm") == Seq(2L, 11L, 12L))
+
+    // LSH: a stream dropped without cascade and re-created under its
+    // name; id 24's vector equals id 8's, which only the new corpus holds
+    docVecStream(e, "lv")
+    e.appendRows("lv", docVecCorpus(0, 4))
+    e.appendRowsDedupedEmbedding("lv", docVecCorpus(0, 0), "vec_id", "embedding", dims = 16)
+    e.dropStream("lv", cascade = false)
+    docVecStream(e, "lv")
+    e.appendRows("lv", docVecCorpus(8, 12))
+    e.appendRows("lv", docVecCorpus(12, 13))
+    assert(e.appendRowsDedupedEmbedding("lv", docVecCorpus(24, 25), "vec_id",
+      "embedding", dims = 16) == 1L, "the index must cover the re-created corpus")
+    e.close()
   }
 
   test("HIERARCHICAL quantizer round-trips through the index (kind-2 rows)") {

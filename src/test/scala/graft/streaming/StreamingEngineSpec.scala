@@ -229,4 +229,19 @@ class StreamingEngineSpec extends SparkSpec {
     assert(!e.catalog.get("flag_pm").get.active)
     assert(e.readStream("flag_pm").count() == 2L)
   }
+
+  test("a namespaced model naming its source by the short name streams across refreshes") {
+    import spark.implicits._
+    val e = new Engine(spark, tmpDir("graft-streaming-ns"), namespace = Some("ns"))
+    val se = new StreamingEngine(e)
+    e.createStream("src", StreamSchema(Seq(
+      PhysicalField("k", FString), PhysicalField("v", FBigInt))))
+    e.appendRows("src", Seq(("a", 1L)).toDF("k", "v"))
+    e.createModel("m", "SELECT k, v FROM src", ModelConfig(active = false))
+    se.refreshAvailable("m")
+    e.appendRows("src", Seq(("b", 2L)).toDF("k", "v"))
+    se.refreshAvailable("m")
+    val rows = e.preview("SELECT k, v FROM m ORDER BY k")
+    assert(rows.map(r => (r.getString(0), r.getLong(1))) == Seq(("a", 1L), ("b", 2L)))
+  }
 }

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver benchmark: one COMPACT JSON line on stdout (the driver
-  * contract — `queries` carries only the 30 headline medians, because
+  * contract — `queries` carries only the headline medians, because
   * the driver's scrape window truncated the full sweep map two rounds
   * running: BENCH_r04 a cut-off `tail`, BENCH_r05 `parsed: null`) and
   * the full record — same fields plus the per-gate `sweep` map —
@@ -10,12 +10,24 @@ import org.apache.spark.sql.SparkSession
   *
   * Two tiers (round-4 verdict #8): a FULL SWEEP (every gate, single
   * timed run — coverage, not precision) and a HEADLINE subset (the 30
-  * heaviest gates of this sweep, re-run 3× and reported as per-gate
-  * medians) — round-over-round comparisons should read `headline`,
-  * where ×3 medians suppress the host variance that drowns 150
-  * sub-second one-shot lines.
+  * heaviest gates of this sweep plus the committed r12 headline names,
+  * re-run 3× and reported as per-gate medians) — round-over-round
+  * comparisons should read `headline`, where ×3 medians suppress the
+  * host variance that drowns 150 sub-second one-shot lines.
   */
 object Bench {
+  /** The 30 `queries` keys of BENCH_r12.json: a stable core of the headline. */
+  val HeadlineR12 = Seq("ann_forget_topk", "ann_indexed_filtered_pq",
+    "ann_ivf_topk_indexed", "ann_pq_topk_indexed", "bitext_mine", "cluster_terms",
+    "dedup_minhash_lsh", "dup_ngram_frac", "edit_distance_pairs",
+    "embedding_neardup_scaled", "hourly_quantiles", "jaccard_topk",
+    "knn_graph_indexed", "label_propagation", "pagerank_nations",
+    "pipeline_curation_v2", "pipeline_curation_v4", "pipeline_curation_v5",
+    "pipeline_curation_v6", "pipeline_curation_v7", "pipeline_release_v1",
+    "semdedup_indexed", "shard_novelty", "skyline_pareto", "sql_ann_filtered_topk",
+    "sql_ann_indexed_topk", "tfidf_cosine_pairs", "tpch_q18", "tpch_q2_shape",
+    "triangle_counts")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -134,11 +146,14 @@ object Bench {
       name -> timeGate(name, fn)
     }
 
-    // ---- tier 2: headline = 30 heaviest, ×3, medians -----------------
-    // selected from THIS sweep (self-maintaining as the matrix grows);
-    // caches cleared per iteration so every run recomputes its data
-    val headlineNames = results.toSeq.filter(_._2 > 0).sortBy(-_._2)
-      .take(30).map(_._1)
+    // ---- tier 2: headline = 30 heaviest ∪ the r12 set, ×3, medians ---
+    // the 30 heaviest of THIS sweep (self-maintaining as the matrix
+    // grows) plus the committed r12 headline names, so round-over-round
+    // comparisons always share those gates (a top 30 alone churned 14
+    // names in r12); caches cleared per iteration so every run
+    // recomputes its data
+    val headlineNames = (results.toSeq.filter(_._2 > 0).sortBy(-_._2)
+      .take(30).map(_._1) ++ HeadlineR12.filter(SparkEntry.queries.contains)).distinct
     val headlineCanary = scala.collection.mutable.LinkedHashMap[String, Double]()
     val headline = headlineNames.zipWithIndex.map { case (name, i) =>
       if (i > 0 && i % 4 == 0) canaryPoint(s"headline:$i")
@@ -226,8 +241,9 @@ object Bench {
     val headlineNorm = if (canaryUnit > 0) headlineTotal / canaryUnit else -1.0
     // stdout gets a COMPACT line (round-5 verdict: the driver's scrape
     // window truncated the 193-entry sweep map, leaving BENCH_r05.json
-    // with parsed:null) — `queries` on stdout carries only the 30
-    // headline medians (~1.5 KB); the full sweep map lives in the file.
+    // with parsed:null) — `queries` on stdout carries only the
+    // headline medians (30-60 gates, ~1.5-3 KB); the full sweep map
+    // lives in the file.
     val common = s""""value":$total,"unit":"sec"""" +
       s""","queries":${jmap(headline)},"headline_total":$headlineTotal""" +
       s""","sweep_gates":${results.size},"errors":$errs,"sf":"$sfDir"""" +

@@ -1205,8 +1205,8 @@ object Queries {
     * ranking. Both rankings are exactly SQL-expressible, so the oracle
     * replays the entire measurement — searches AND the recall join —
     * making this the value-exact anchor for the quantizer recall curves
-    * in PERF.md (`ScaleCheck recall`), whose IVF/PQ side DuckDB cannot
-    * reproduce. */
+    * in PERF.md (`Probe gates` over ScaleData K× directories profiles
+    * this gate at scale), whose IVF/PQ side DuckDB cannot reproduce. */
   /** Shared DuckDB replay of the truncated-vs-full recall measurement —
     * consumed by `ann_recall_truncated` (operator path) and
     * `sql_ann_recall` (TVF path): one string, so a tie-break or
@@ -3308,7 +3308,7 @@ object Queries {
     * first fixed-shortlist design lost a neighbor at sf1; the bound
     * made the operator exact by construction), so this gate shares
     * `ann_ivf_topk`'s oracle verbatim at any scale (PqSpec pins the
-    * equality; Probe pq reports measured pruning power). */
+    * equality; PERF.md records the measured pruning power). */
   val annPqTopK: Q = q("ann_pq_topk",
     s"""WITH ${duckIvfCells()},
       |corpus AS (SELECT vec_id AS n_id, v AS v_n, cid AS cell FROM a1 WHERE r = 1),

@@ -99,8 +99,9 @@ object Tables {
     * (normalize regexes, shingle explodes, codec decodes, signature
     * kernels) was running on ONE to TEN tasks no matter how many cores
     * the session had; the sf0.1→sf1 scale record inherited the skew as
-    * fake super-linearity (v4 probe: the normalize stage alone scaled
-    * 0.6 s → 6.6 s at 10× data because both ran ~single-task).
+    * fake super-linearity (pipeline_curation_v4's stage timings: the
+    * normalize stage alone scaled 0.6 s → 6.6 s at 10× data because
+    * both ran ~single-task).
     *
     * When the scan's ROW-GROUP count is pathologically below the
     * session's parallelism, insert one round-robin repartition so

@@ -1058,8 +1058,9 @@ object Dedup {
     * estimated candidate volume `tables·(probes·(n + n²/2^planes) + n)`.
     * The end-to-end cost is the classic LSH `Θ(n^(1+ρ))` with
     * `ρ = ln p₁ / ln p₂ < 1` — genuinely SUB-QUADRATIC, not linear, and
-    * the gap over the fixed layout widens with n (ScaleCheck `emb`
-    * probe at θ=0.8, measurements in PERF.md round 7).
+    * the gap over the fixed layout widens with n (measured at θ=0.8,
+    * PERF.md round 7; `Probe gates` over ScaleData K× directories
+    * re-measures `embedding_neardup_scaled`).
     *
     * The economics remain threshold-bound: at θ ≈ 0.45, q ≈ 0.35 makes
     * p_band small enough that the compensated table count explodes.
@@ -1110,7 +1111,7 @@ object Dedup {
     * a CONSTRAINT, not a clamp: an infeasible (missTarget, maxTables)
     * combination throws rather than ship a degraded miss bound.
     *
-    * Round-7 fix from the 100× `ScaleCheck emb` probe: the previous
+    * Round-7 fix from the 100× embedding-LSH scale probe: the previous
     * rule held per-BUCKET occupancy constant (planes ≈ log₂(n/occ))
     * and used the caller's probe radius verbatim — but with
     * multi-probe the a-side explodes to `probes = Σ_{k≤r} C(planes,k)`

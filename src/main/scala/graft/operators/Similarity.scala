@@ -27,7 +27,7 @@ object Similarity {
     * n·cells + n²/cells, minimized at cells = √n for Θ(n^1.5) overall —
     * the classic IVF sizing rule (FAISS guidance: √n to 4√n lists).
     * A CONSTANT cell count instead leaves occupancy ∝ n and the
-    * candidate product quadratic (measured on `ScaleCheck bitext`:
+    * candidate product quadratic (PERF.md's bitext scale record:
     * fixed-16 cells cost 5.5× at 10× data vs 3.3× for √n cells, gap
     * widening with n — the same disease `Dedup.embeddingNearDup` was
     * cured of in round 6 via its log₂-occupancy plane count).
@@ -170,7 +170,7 @@ object Similarity {
     * highest-cid tie-breaks, FLOAT-rounded Lloyd means), so the
     * hierarchy is as oracle-replayable as the flat path — the gates
     * simply never reach it at gate scale (hierarchy activates past
-    * ~16.8M vectors; ScaleCheck `hier` records the measured curve). */
+    * ~16.8M vectors; PERF.md records the measured curve). */
   private[graft] final class HierQuantizer(
       val top: Seq[(Int, Seq[Float])], val k2: Int,
       val subPacked: DataFrame, val dims: Int) extends CoarseQuantizer {
@@ -813,7 +813,7 @@ object Similarity {
     * degrades gracefully with code quality instead of silently dropping
     * neighbors: on separated data the survivor set is ~k; on
     * adversarially uniform data it approaches the candidate set and the
-    * operator pays what exactness costs (Probe pq reports the measured
+    * operator pays what exactness costs (PERF.md records the measured
     * survivor fractions).
     *
     * Codebooks: the vector splits into `m` subspaces of d/m dims; each
@@ -888,7 +888,7 @@ object Similarity {
         pqProbeRowBytes(quant.dims, books), 4L * quant.dims))._2, k)
   }
 
-  /** Pruning-power observability for [[pqTopK]] (Probe pq): per-query
+  /** Pruning-power observability for [[pqTopK]] (PqSpec): per-query
     * candidate vs survivor counts under the error-bound prune. Exactness
     * is unconditional; this is the code-quality diagnostic — survivors /
     * candidates ≈ the fraction of exact-cosine work the m/ksub code

@@ -29,7 +29,7 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
   * to its key cardinality, so a Generate below one no longer drives the
   * build size (gram-keyed aggregates are a separate, estimate-linear
   * class). [[exemptGates]] carries the audited by-design sites; the
-  * per-site triage record lives in `tools.Probe.bcastMain`'s scaladoc.
+  * per-site triage record lives in `tools.Probe.bcast`'s scaladoc.
   */
 object BroadcastGenerateGuard {
 

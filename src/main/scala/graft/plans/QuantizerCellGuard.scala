@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * Θ(n²/cells) — the exact regression class round 5's fixed-64-bucket
   * `embeddingNearDup` and round 6's fixed-16-cell Similarity defaults
   * belonged to (measured: 5.5× cost at 10× data vs 3.3× for √n cells,
-  * gap widening with n — ScaleCheck `bitext`).
+  * gap widening with n — PERF.md's bitext scale record; `Probe gates`
+  * over ScaleData K× directories re-measures `bitext_mine`).
   *
   * Unlike [[SinglePartitionWindowGuard]] / [[CartesianJoinGuard]] this
   * is NOT an optimizer rule: the cell count is resolved driver-side at

@@ -178,13 +178,16 @@ object Connectors {
     start(None, (batch, _) => engine.appendRows(name, batch))
   }
 
-  /** "No prior checkpoint" means no committed source offsets — the
-    * checkpoint DIRECTORY may pre-exist (callers often create it), so test
-    * for the `offsets/` log Spark writes on the first batch. */
+  /** "No prior checkpoint" means no logged batch — the checkpoint
+    * DIRECTORY may pre-exist (callers often create it), so test for a
+    * batch-id file in the `offsets/` log Spark writes on the first batch.
+    * Only batch ids count: a start interrupted mid-write leaves a temp or
+    * checksum file there, and Spark does not count it as a batch either. */
   def hasCommittedOffsets(checkpoint: String): Boolean = {
     val offsets = Paths.get(checkpoint).resolve("offsets")
     Files.isDirectory(offsets) &&
-      scala.util.Using.resource(Files.list(offsets))(_.findFirst().isPresent)
+      scala.util.Using.resource(Files.list(offsets))(
+        _.anyMatch(p => p.getFileName.toString.toLongOption.isDefined))
   }
 
   /** Batch read of an external file table (the s3 connector's bounded

@@ -227,6 +227,14 @@ final class StreamingEngine(val engine: Engine) {
     * stored target state (`active`) as it is. */
   private def run(name: String, trigger: Trigger): StreamingQuery = {
     require(!active.contains(name), s"pipeline '$name' already active")
+    // a first start interrupted before its first batch was logged leaves
+    // offsets/commits/state files under a checkpoint with no batch, and
+    // Spark refuses to start a new query over them
+    // (STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY); no batch ran, so no
+    // sink write is lost by starting from an empty checkpoint
+    val checkpoint = checkpointDir(name)
+    if (!graft.sources.Connectors.hasCommittedOffsets(checkpoint))
+      engine.catalog.deleteRecursively(java.nio.file.Paths.get(checkpoint))
     fastForwardIfLatest(name)
     val sink: (DataFrame, Long) => Unit =
       if (engine.catalog.get(name).exists(tvfShaped))

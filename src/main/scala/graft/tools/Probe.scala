@@ -1,435 +1,211 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-/** Dev-only perf probe for operator plans (not part of the engine API). */
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+
+/** Dev-only probes over the gate matrix (not part of the engine API).
+  *
+  * {{{
+  * runMain graft.tools.Probe explain <sf> [gate...]   formatted physical plans
+  * runMain graft.tools.Probe sql <statement>           eval under both string-literal modes
+  * runMain graft.tools.Probe bcast <sf> [gate,...]     Generate-in-broadcast audit
+  * runMain graft.tools.Probe gates <sf>[,<sf>...] [gate,...]
+  * }}}
+  *
+  * `gates` is the one measuring loop: it profiles each named gate once
+  * per SF directory (job, stage and task totals from one listener, wall
+  * seconds from one timer) and prints every figure's ratio to the first
+  * directory's. Scale curves run it over [[ScaleData]] K× directories.
+  * `SPARK_GRAFT_CPUS` sets the local core count and shuffle partitions
+  * (default 4); `SPARK_GRAFT_WARM_DIR` the warm-pass SF directory. */
 object Probe {
-  /** `runMain graft.tools.Probe explain <sf> <query...>` → formatted plans;
-    * `runMain graft.tools.Probe sql <statement>` → parse/eval a statement
-    * under both string-literal modes. */
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("explain")) return explainMain(args.drop(1))
-    if (args.headOption.contains("sql")) return sqlMain(args.drop(1).mkString(" "))
-    if (args.headOption.contains("time")) return timeMain(args.drop(1))
-    if (args.headOption.contains("embed")) return embedMain(args.drop(1))
-    if (args.headOption.contains("simhash")) return simhashMain(args.drop(1))
-    if (args.headOption.contains("hashprobe")) return hashProbeMain(args.drop(1))
-    if (args.headOption.contains("v4")) return v4Main(args.drop(1))
-    if (args.headOption.contains("pq")) return pqMain(args.drop(1))
-    if (args.headOption.contains("bloom")) return bloomMain(args.drop(1))
-    if (args.headOption.contains("tri")) return triMain(args.drop(1))
-    if (args.headOption.contains("ac")) return acMain(args.drop(1))
-    if (args.headOption.contains("bcast")) return bcastMain(args.drop(1))
-    if (args.headOption.contains("annprof")) return annprofMain(args.drop(1))
-    if (args.headOption.contains("sqlannprof")) return sqlannprofMain(args.drop(1))
-    if (args.headOption.contains("knprof")) return knprofMain(args.drop(1))
-    if (args.headOption.contains("tfidfprof")) return tfidfprofMain(args.drop(1))
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[probe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-
-    import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
-    val n = 2; val numHashes = 128; val bands = 32; val r = numHashes / bands
-    val withHs = docs.select(col("doc_id").as("id"),
-      array_distinct(transform(Dedup.shingles(col("text"), n), s => xxhash64(s))).as("hs"))
-      .filter(size(col("hs")) > 0)
-    val withMh = withHs.withColumn("mh",
-      call_function("minhashes", col("hs"), lit(numHashes)))
-    timed("minhash compute")(withMh.select(count(lit(1))).collect())
-    val banded = withMh.select(col("id"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(b, slice(mh, b * $r + 1, $r)))"))
-        .as(Seq("band", "bkey")))
-    timed("banded count")(println("banded=" + banded.count()))
-    timed("bucket histogram")(
-      banded.groupBy("band", "bkey").count().groupBy()
-        .agg(max("count").as("max_bucket"), sum(col("count") * col("count")).as("sum_sq"))
-        .show())
-    val candidates = banded.as("a").join(banded.as("b"), Seq("band", "bkey"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    timed("candidate pairs raw")(println("cand=" + candidates.count()))
-    timed("candidate pairs dedup")(println("cand distinct=" + candidates.dropDuplicates("id_a", "id_b").count()))
-    spark.stop()
+    val rest = args.drop(1)
+    val sf = rest.headOption.getOrElse("/root/testdata/sf0.1")
+    val spark = session()
+    try args.headOption match {
+      case Some("explain") => explain(spark, sf, rest.drop(1).toSet)
+      case Some("sql") => sql(spark, rest.mkString(" "))
+      case Some("bcast") => bcast(spark, sf, rest.lift(1).map(_.split(",").map(_.trim).toSet))
+      case Some("gates") =>
+        gates(spark, sf.split(",").toSeq, rest.lift(1).map(_.split(",").toSeq).getOrElse(DefaultGates))
+      case other => System.err.println(s"unknown subcommand ${other.getOrElse("")}: " +
+        "expected explain | sql | bcast | gates")
+    } finally spark.stop()
   }
 
-  /** `Probe hashprobe <sf>` — isolate the shingle-hash stage cost:
-    * string-shingle concat + xxhash64 (the deployed formulation) vs
-    * hashing the pre-hashed token array pairwise with no string
-    * materialization. Decides whether the concat is worth eliminating. */
-  private def hashProbeMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
+  /** The dev tools' session: the bench's shape (UTC, graft extensions so
+    * the `sql_*` gates resolve their table functions). */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("text")).persist()
-    docs.count()
-    def timed(label: String, runs: Int = 3)(f: => Any): Unit =
-      (1 to runs).foreach { i =>
-        val t0 = System.nanoTime(); f
-        println(f"[hashprobe] $label run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-    import graft.operators.Dedup
-    val viaStrings = docs.select(
-      array_sort(array_distinct(transform(
-        Dedup.shingles(col("text"), 2), s => xxhash64(s)))).as("hs"))
-    timed("string-shingle xxhash64")(
-      viaStrings.agg(sum(size(col("hs")))).collect())
-    val viaTokenHashes = docs.select(
-      array_sort(array_distinct(expr(
-        """transform(sequence(0, size(split(text, ' ')) - 2),
-          |  i -> xxhash64(xxhash64(element_at(split(text, ' '), i + 1)),
-          |                xxhash64(element_at(split(text, ' '), i + 2))))"""
-          .stripMargin))).as("hs"))
-    timed("token-hash pairwise xxhash64")(
-      viaTokenHashes.agg(sum(size(col("hs")))).collect())
-    val withMinhash = docs.select(
-      call_function("minhashes",
-        array_sort(array_distinct(transform(
-          Dedup.shingles(col("text"), 2), s => xxhash64(s)))),
-        lit(128)).as("mh"))
-    timed("strings + 128 minhashes")(
-      withMinhash.agg(sum(size(col("mh")))).collect())
-    spark.stop()
-  }
-
-  /** `Probe embed <sf>` — stage timings for the embedding near-dup LSH. */
-  private def embedMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    import graft.operators.Similarity
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[embed] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val (tables, planes, dims) = (8, 6, 64)
-    val sigs = (0 until tables).map(t =>
-      Similarity.planeSignature(col("v"), dims, planes, seed = s"hp$t:"))
-    val withSigs = e.withColumn("sigs", array(sigs: _*))
-    (1 to 2).foreach { i =>
-      timed(s"signatures run$i")(withSigs.select(count(lit(1))).collect()) }
-    val b = withSigs.select(col("id").as("id_b"), col("sigs").as("sigs_b"),
-      posexplode(col("sigs")).as(Seq("tbl", "bucket")))
-    val flips: Seq[Column] =
-      (lit(0L) +: (0 until planes).map(p => lit(1L << p))) ++
-        (for { x <- 0 until planes; y <- x + 1 until planes }
-          yield lit((1L << x) | (1L << y)))
-    val a = withSigs.select(col("id").as("id_a"), col("sigs").as("sigs_a"),
-      posexplode(col("sigs")).as(Seq("tbl", "sig")))
-      .withColumn("bucket", explode(array(flips.map(col("sig").bitwiseXOR): _*)))
-      .drop("sig")
-    timed("a-side explode count")(println("a=" + a.count()))
-    val joined = a.join(b, Seq("tbl", "bucket")).filter(col("id_a") < col("id_b"))
-    timed("joined rows")(println("joined=" + joined.count()))
-    def tblHamming(t: Int): Column = bit_count(
-      element_at(col("sigs_a"), t + 1).bitwiseXOR(element_at(col("sigs_b"), t + 1)))
-    val firstTbl = (0 until tables).foldRight(lit(-1): Column) { (t, els) =>
-      when(tblHamming(t) <= 2, lit(t)).otherwise(els)
-    }
-    val candidates = joined.filter(col("tbl") === firstTbl).select("id_a", "id_b")
-    timed("candidates")(println("cand=" + candidates.count()))
-    val ep = e.persist()
-    val verified = candidates
-      .join(ep.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
-      .join(ep.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
-      .withColumn("cos", round(Similarity.cosine(col("v_a"), col("v_b")), 6))
-      .filter(col("cos") >= 0.45)
-    timed("verify")(println("pairs=" + verified.count()))
-    spark.stop()
-  }
-
-  /** `Probe time <sf> <query...>` — run named gate queries twice (cold +
-    * warm) under the bench's thread count (SPARK_GRAFT_CPUS, default 32)
-    * and print per-run wall times. */
-  private def timeMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the sql_*/forget gates resolve graft table functions, exactly
-      // as the bench session does
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // "-cc" in the name list: clearCache before every run ×4 (reproduces
-    // the bench headline tier's per-run isolation for diagnosis)
-    val cc = names.contains("-cc")
-    graft.Queries.all.filter(q => (names - "-cc").isEmpty || names(q.name)).foreach { q =>
-      (1 to (if (cc) 4 else 2)).foreach { i =>
-        if (cc) spark.catalog.clearCache()
+    spark
+  }
+
+  /** The heavy tail of the bench sweep: the default `gates` set. */
+  private val DefaultGates = Seq("dedup_minhash_lsh", "tfidf_cosine_pairs",
+    "containment_pairs", "edit_distance_pairs", "embedding_neardup",
+    "ann_pq_topk", "knn_graph", "bitext_mine", "incremental_dedup_bloom",
+    "triangle_counts")
+
+  /** Totals of every Spark job that started inside one measured action. */
+  final case class Profile(wallS: Double, rows: Long, jobs: Long, stages: Long,
+                           tasks: Long, runMs: Long, cpuMs: Long,
+                           shuffleReadBytes: Long, shuffleWriteBytes: Long,
+                           spillBytes: Long, inputBytes: Long, slowestTaskMs: Long) {
+    def figures: Seq[(String, Double)] = Seq("s" -> wallS, "rows" -> rows.toDouble,
+      "jobs" -> jobs.toDouble, "stages" -> stages.toDouble, "tasks" -> tasks.toDouble,
+      "run_ms" -> runMs.toDouble, "cpu_ms" -> cpuMs.toDouble,
+      "shuffle_read_b" -> shuffleReadBytes.toDouble,
+      "shuffle_write_b" -> shuffleWriteBytes.toDouble,
+      "spill_b" -> spillBytes.toDouble, "input_b" -> inputBytes.toDouble,
+      "slowest_task_ms" -> slowestTaskMs.toDouble)
+
+    /** `name=value` per figure, each followed by its ratio to `base`'s. */
+    def line(base: Option[Profile]): String =
+      figures.zipWithIndex.map { case ((k, v), i) =>
+        val shown = if (k == "s") f"$v%.2f" else f"$v%.0f"
+        val ratio = base.map(_.figures(i)._2).filter(_ > 0)
+          .fold("")(b => f"(x${v / b}%.2f)")
+        s"$k=$shown$ratio"
+      }.mkString(" ")
+  }
+
+  /** One listener over the session, attributed by job: the jobs that start
+    * while a [[measure]] window is open, their stages that ran, and those
+    * stages' task metrics. Close it to remove the listener. */
+  final class Profiler(spark: SparkSession) extends SparkListener with AutoCloseable {
+    private final class Acc {
+      var jobs, stages, tasks, runMs, cpuNs, shRead, shWrite, spill, input, slowest = 0L
+    }
+    private val sc = spark.sparkContext
+    private var window: Option[Acc] = None
+    private val stageAcc = mutable.HashMap[Int, Acc]()
+    sc.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      window.foreach { a => a.jobs += 1; e.stageIds.foreach(stageAcc(_) = a) }
+    }
+    // skipped stages (their shuffle output reused) never complete
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      stageAcc.get(e.stageInfo.stageId).foreach(_.stages += 1)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      stageAcc.get(e.stageId).foreach { a =>
+        a.tasks += 1
+        if (e.taskInfo != null) a.slowest = math.max(a.slowest, e.taskInfo.duration)
+        val m = e.taskMetrics
+        if (m != null) {
+          a.runMs += m.executorRunTime
+          a.cpuNs += m.executorCpuTime
+          a.shRead += m.shuffleReadMetrics.totalBytesRead
+          a.shWrite += m.shuffleWriteMetrics.bytesWritten
+          a.spill += m.diskBytesSpilled
+          a.input += m.inputMetrics.bytesRead
+        }
+      }
+    }
+
+    /** Run `action` (returning its row count) under the timer and profile
+      * every job it starts. The bus is drained on both sides, so no event
+      * of an earlier action leaks in and none of this one's is missed. */
+    def measure(action: => Long): Profile = {
+      org.apache.spark.GraftListenerBus.drain(sc)
+      synchronized { window = Some(new Acc) }
+      try {
         val t0 = System.nanoTime()
-        val n = q.fn(spark, sf).count()
-        println(f"[time] ${q.name} run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+        val rows = action
+        val wallS = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.GraftListenerBus.drain(sc)
+        val a = synchronized(window.get)
+        Profile(wallS, rows, a.jobs, a.stages, a.tasks, a.runMs, a.cpuNs / 1000000L,
+          a.shRead, a.shWrite, a.spill, a.input, a.slowest)
+      } finally synchronized { window = None; stageAcc.clear() }
+    }
+
+    def close(): Unit = sc.removeSparkListener(this)
+  }
+
+  /** Profile each named `SparkEntry.queries` gate once per SF directory.
+    * A warm pass at `SPARK_GRAFT_WARM_DIR` pays codegen and JIT first (a
+    * gate's plan and generated classes are SF-invariant); operator-pinned
+    * caches are cleared around every run, so an index one run builds never
+    * subsidizes the next. An unknown name or a failing run is reported and
+    * the loop goes on. */
+  def gates(spark: SparkSession, dirs: Seq[String], names: Seq[String]): Unit = {
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    val warm = new java.io.File(warmDir).isDirectory
+    if (!warm) println(s"[gates] WARN: warm dir $warmDir missing — measured runs " +
+      "include codegen/JIT cost (set SPARK_GRAFT_WARM_DIR)")
+    val profiler = new Profiler(spark)
+    def clear(): Unit = graft.operators.OperatorCache.clear(spark)
+    try names.foreach { name =>
+      graft.SparkEntry.queries.get(name) match {
+        case None => println(s"[gates] $name: UNKNOWN gate name, skipped")
+        case Some(fn) =>
+          if (warm)
+            try fn(spark, warmDir).count() catch { case e: Throwable =>
+              println(s"[gates] WARN: warm pass for $name failed " +
+                s"(${e.getClass.getSimpleName}) — measured runs include codegen")
+            }
+          clear()
+          var base = Option.empty[Profile]
+          dirs.foreach { sf =>
+            try {
+              val p = profiler.measure(fn(spark, sf).count())
+              println(s"[gates] $name @ $sf: ${p.line(base)}")
+              if (base.isEmpty) base = Some(p)
+            } catch { case e: Throwable =>
+              println(s"[gates] $name @ $sf: ERROR ${e.getClass.getName}: ${e.getMessage}")
+            }
+            clear()
+          }
       }
-    }
-    spark.stop()
+    } finally profiler.close()
   }
 
-  /** `Probe v4 <sf>` — stage timings for the pipeline_curation_v4
-    * chain (normalize → boilerplate → entropy → sample). */
-  private def v4Main(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    import graft.operators.{Sampling, TextAnalysis}
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[v4] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    (1 to 2).foreach { round =>
-      println(s"[v4] --- round $round ---")
-      spark.catalog.clearCache()
-      val docs = graft.Tables.load(spark, sf, "documents")
-      println(s"[v4] docs partitions: ${docs.rdd.getNumPartitions}")
-      timed("raw scan")(docs.agg(sum(length(col("text")))).head())
-      val norm = TextAnalysis.normalizeText(docs)
-        .filter(length(col("norm_text")) > 0)
-        .select(col("doc_id"), col("norm_text").as("text"))
-      timed("normalize")(norm.agg(sum(length(col("text")))).head())
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      timed("normalize (AQE off)")(norm.agg(sum(length(col("text")))).head())
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      if (round == 1) {
-        val plain = docs.select(trim(regexp_replace(regexp_replace(
-          lower(col("text")), "[^a-z0-9 ]", ""), " +", " ")).as("nt"))
-        timed("regex only (no splits)")(plain.agg(sum(length(col("nt")))).head())
-        val splitsOnly = docs.select(
-          size(split(col("text"), " ")).cast("long").as("a"))
-        timed("split only")(splitsOnly.agg(sum(col("a"))).head())
-        norm.agg(sum(length(col("text")))).explain("formatted")
-      }
-      val clean = TextAnalysis.removeBoilerplate(norm, windowWords = 8, dfLimit = 1L)
-        .filter(col("n_kept") > 0)
-        .select(col("doc_id"), col("clean_text"))
-      timed("normalize+boilerplate")(
-        clean.agg(sum(length(col("clean_text")))).head())
-      val kept = TextAnalysis.tokenEntropy(clean, "doc_id", "clean_text")
-        .filter(col("entropy") >= 2.8)
-        .select(col("doc_id"), col("n_tokens"))
-      timed("+entropy")(kept.agg(sum(col("n_tokens"))).head())
-      timed("+sample (full v4)")(
-        Sampling.weightedSample(kept, "doc_id", col("n_tokens"),
-          k = 100, salt = "v4").count())
-    }
-    spark.stop()
-  }
-
-  /** `Probe pq <sf>` — bound-prune pruning power vs exact IVF: match
-    * (always true — exactness is unconditional) + the fraction of
-    * candidates the Cauchy–Schwarz bound could not prove away, on the
-    * near-random testdata and on a clustered corpus. */
-  private def pqMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val emb = graft.Tables.load(spark, sf, "embeddings")
-    val ivf = graft.operators.Similarity.ivfTopK(emb, "vec_id", "embedding",
-      queryPred = col("vec_id") < 10, k = 5, nCentroids = 16, nProbe = 3)
-      .collect().map(_.toString).toSet
-    // exactness is unconditional since the bound-prune rework; what the
-    // code geometry buys is PRUNING POWER — the fraction of candidates
-    // the bound could not prove away and that pay an exact cosine
-    for (m <- Seq(8, 16)) {
-      val pq = graft.operators.Similarity.pqTopK(emb, "vec_id", "embedding",
-        queryPred = col("vec_id") < 10, k = 5, nCentroids = 16, nProbe = 3,
-        m = m, ksub = 16)
-        .collect().map(_.toString).toSet
-      val stats = graft.operators.Similarity.pqPruneStats(emb, "vec_id",
-        "embedding", queryPred = col("vec_id") < 10, k = 5,
-        nCentroids = 16, nProbe = 3, m = m, ksub = 16)
-        .agg(sum("candidates"), sum("survivors")).collect().head
-      println(s"[pq] m=$m: match=${pq == ivf} " +
-        s"survivors=${stats.getLong(1)}/${stats.getLong(0)} " +
-        f"(${stats.getLong(1).toDouble / stats.getLong(0) * 100}%.1f%% pay exact)")
-    }
-    // the testdata embeddings are near-random — residuals ≈ full norms,
-    // so the bound can prove nothing away (100% exact, still correct).
-    // Pruning power appears when data HAS structure the code captures:
-    // a clustered corpus (prototype directions + small noise) is the
-    // realistic shape of real sentence embeddings
-    import spark.implicits._
-    val dims = 64
-    def unit(seed: Int): Array[Float] = {
-      val r = new scala.util.Random(seed)
-      val v = Array.fill(dims)(r.nextGaussian().toFloat)
-      val n = math.sqrt(v.map(x => x * x.toDouble).sum).toFloat
-      v.map(_ / n)
-    }
-    val protos = (0 until 50).map(unit)
-    val clustered = (0 until 2000).map { i =>
-      val p = protos(i % 50); val jit = unit(100000 + i)
-      val mixed = p.zip(jit).map { case (a, b) => a + 0.08f * b }
-      val n = math.sqrt(mixed.map(x => x * x.toDouble).sum).toFloat
-      (i.toLong, mixed.map(_ / n))
-    }.toDF("vec_id", "embedding")
-    for (m <- Seq(8, 16)) {
-      val pq = graft.operators.Similarity.pqTopK(clustered, "vec_id",
-        "embedding", queryPred = col("vec_id") < 10, k = 5,
-        nCentroids = 16, nProbe = 3, m = m, ksub = 16)
-        .collect().map(_.toString).toSet
-      val ivfC = graft.operators.Similarity.ivfTopK(clustered, "vec_id",
-        "embedding", queryPred = col("vec_id") < 10, k = 5,
-        nCentroids = 16, nProbe = 3)
-        .collect().map(_.toString).toSet
-      val stats = graft.operators.Similarity.pqPruneStats(clustered, "vec_id",
-        "embedding", queryPred = col("vec_id") < 10, k = 5,
-        nCentroids = 16, nProbe = 3, m = m, ksub = 16)
-        .agg(sum("candidates"), sum("survivors")).collect().head
-      println(s"[pq] clustered m=$m: match=${pq == ivfC} " +
-        s"survivors=${stats.getLong(1)}/${stats.getLong(0)} " +
-        f"(${stats.getLong(1).toDouble / stats.getLong(0) * 100}%.1f%% pay exact)")
-    }
-    spark.stop()
-  }
-
-  /** `Probe simhash <sf>` — stage timings for simhashPairs. */
-  private def simhashMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[simhash] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    timed("token count")(println("toks=" + docs.select(
-      sum(size(split(col("text"), " ")))).collect().head))
-    val sig = graft.operators.Dedup.simhash(docs, "doc_id", "text")
-    timed("signatures (cold)")(sig.count())
-    timed("signatures (warm)")(sig.count())
-    // raw join volume under the current banding (maxHamming=10 → 11 bands)
-    val bands = 11
-    val bounds = (0 to bands).map(i => i * 56 / bands)
-    val bandKeys = (0 until bands).map { i =>
-      val lo = bounds(i); val w = bounds(i + 1) - lo
-      struct(lit(i).as("band"),
-        shiftright(col("simhash"), lo).bitwiseAND(lit((1L << w) - 1)).as("bits"))
-    }
-    val exploded = sig.select(col("id"),
-      explode(array(bandKeys: _*)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.bits").as("bits"))
-    timed("bucket stats")(exploded.groupBy("band", "bits").count()
-      .agg(max("count").as("max_bucket"),
-        sum(col("count") * col("count")).as("sum_sq_join_rows")).show())
-    // variant: 6 wider bands (9-10 bits), a-side probes hamming ≤ 1 in-band
-    // (pigeonhole: 10 errors over 6 bands → some band carries ≤ 1)
-    val b6 = 6
-    val bounds6 = (0 to b6).map(i => i * 56 / b6)
-    val keys6 = (0 until b6).map { i =>
-      val lo = bounds6(i); val w = bounds6(i + 1) - lo
-      struct(lit(i).as("band"),
-        shiftright(col("simhash"), lo).bitwiseAND(lit((1L << w) - 1)).as("bits"),
-        lit(w).as("w"))
-    }
-    val ex6 = sig.select(col("id"),
-      explode(array(keys6: _*)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.bits").as("bits"),
-        col("bk.w").as("w"))
-    val probes6 = ex6.select(col("id"), col("band"),
-      explode(expr("concat(array(bits), transform(sequence(0, w - 1), " +
-        "p -> bits ^ shiftleft(1L, p)))")).as("bits"))
-    timed("6x9 probe join rows")(
-      println("rows=" + probes6.as("a").join(ex6.as("b"), Seq("band", "bits")).count()))
-    timed("full pairs (cold)")(println("pairs=" + graft.operators.Dedup
-      .simhashPairs(docs, "doc_id", "text", maxHamming = 10).count()))
-    timed("full pairs (warm)")(println("pairs=" + graft.operators.Dedup
-      .simhashPairs(docs, "doc_id", "text", maxHamming = 10).count()))
-    spark.stop()
-  }
-
-  private def sqlMain(stmt: String): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Seq("false", "true").foreach { mode =>
-      spark.conf.set("spark.sql.parser.escapedStringLiterals", mode)
-      val out = try spark.sql(stmt).collect().mkString("; ")
-      catch { case e: Throwable => s"ERROR: ${e.getMessage.take(200)}" }
-      println(s"[sqlprobe] escaped=$mode -> $out")
-    }
-    spark.stop()
-  }
-
-  /** `Probe bcast <sf> [gate1,gate2,...]` — audit for the explode-blind
-    * broadcast class (round 7): Catalyst sizes a Generate by its
-    * column-pruned CHILD, so an exploded posting side is estimated at
-    * ~child-size no matter its true multiplicity; a BroadcastExchange
-    * whose build subtree contains a Generate is therefore mis-estimated
-    * by exactly the explode factor — the bug that broadcast a 12.9 GiB
-    * LSH probe side at sf1. This walks every gate's STATIC physical
-    * plan (AQE off, sf-realistic stats) and reports each such site with
-    * the generator expression, for manual triage: bounded query-side
-    * explodes (×nprobe, ×k) are fine; corpus-side posting explodes are
-    * the regression class.
+  /** Audit for the explode-blind broadcast class (round 7): Catalyst sizes a
+    * Generate by its column-pruned CHILD, so an exploded posting side is
+    * estimated at ~child-size no matter its true multiplicity; a
+    * BroadcastExchange whose build subtree contains a Generate is therefore
+    * mis-estimated by exactly the explode factor — the bug that broadcast a
+    * 12.9 GiB LSH probe side at sf1. This walks every gate's STATIC physical
+    * plan (AQE off, sf-realistic stats) and reports each such site with the
+    * generator expression, for manual triage: bounded query-side explodes
+    * (×nprobe, ×k) are fine; corpus-side posting explodes are the
+    * regression class.
     *
     * Round-7 triage record (sf0.1, after the hint sweep): 9 flags, all
-    * by-design — `ann_{ivf,lsh,pq}_topk` broadcast the pred-filtered
-    * QUERY side exploded ×nprobe (bounded multiplier, intended);
+    * by-design — `ann_{ivf,lsh,pq}_topk` broadcast the pred-filtered QUERY
+    * side exploded ×nprobe (bounded multiplier, intended);
     * `exact_quantile`/`hourly_quantiles`/`weighted_quantile` explode a
     * 2-element quantile literal; `skew_salted_join` explodes the salt
-    * literal on the dim side; `range_join` explodes the INTERVAL (dim)
-    * side ×span/width (small multiplier — broadcasting exploded
-    * campaigns against 100 TB of points is the right plan). Everything
-    * corpus-sided was pinned: minhash/hamming bands, ngram/containment
-    * prefixes + df joins, gram-df, LSH buckets (merge), incremental
-    * shard probes (shuffle_hash, shard build), phrase postings (merge),
-    * domain-cap kept-ids (shuffle_hash). */
-  private def bcastMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val only: Option[Set[String]] =
-      args.lift(1).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    * literal on the dim side; `range_join` explodes the INTERVAL (dim) side
+    * ×span/width (small multiplier — broadcasting exploded campaigns
+    * against 100 TB of points is the right plan). Everything corpus-sided
+    * was pinned: minhash/hamming bands, ngram/containment prefixes + df
+    * joins, gram-df, LSH buckets (merge), incremental shard probes
+    * (shuffle_hash, shard build), phrase postings (merge), domain-cap
+    * kept-ids (shuffle_hash). */
+  def bcast(spark: SparkSession, sf: String, only: Option[Set[String]]): Unit = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     var flagged = 0
     graft.SparkEntry.queries
       .filter(kv => only.forall(_.contains(kv._1)))
       .toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try {
-          // same walker the Verify-time lint enforces (fail mode with
-          // the audited exemptions); the probe reports EVERY site,
-          // exempt or not, for triage
+          // same walker the Verify-time lint enforces (fail mode with the
+          // audited exemptions); the probe reports EVERY site, exempt or
+          // not, for triage
           val gs = graft.plans.BroadcastGenerateGuard.offenders(fn(spark, sf))
           if (gs.nonEmpty) {
             flagged += 1
@@ -443,381 +219,19 @@ object Probe {
         }
       }
     println(s"[bcast] flagged sites: $flagged")
-    spark.stop()
   }
 
-  private def explainMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.drop(1).toSet
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  private def sql(spark: SparkSession, stmt: String): Unit =
+    Seq("false", "true").foreach { mode =>
+      spark.conf.set("spark.sql.parser.escapedStringLiterals", mode)
+      val out = try spark.sql(stmt).collect().mkString("; ")
+      catch { case e: Throwable => s"ERROR: ${e.getMessage.take(200)}" }
+      println(s"[sqlprobe] escaped=$mode -> $out")
+    }
+
+  private def explain(spark: SparkSession, sf: String, names: Set[String]): Unit =
     graft.Queries.all.filter(q => names.isEmpty || names(q.name)).foreach { q =>
       println(s"\n=================== ${q.name} ===================")
       q.fn(spark, sf).explain("formatted")
     }
-    spark.stop()
-  }
-
-  /** `Probe tri <sf>` — duplication diagnosis for triangleCounts. */
-  /** `Probe ac <sf> [nPatterns]` — the multi_match one-pass claim: one
-    * Aho–Corasick pass vs P chained `contains()` scans over documents,
-    * equal hit totals asserted. */
-  private def acMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val p = args.drop(1).headOption.map(_.toInt).getOrElse(50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("text")).filter(col("text").isNotNull)
-    // realistic blocklist: corpus words + variations, half absent
-    val base = Seq("table", "value", "scan", "merge", "batch", "spark",
-      "window", "hash", "sort", "key")
-    val pats = (0 until p).map { i =>
-      if (i % 2 == 0) base(i % base.size) + (if (i % 4 == 0) "" else " " + base((i + 1) % base.size))
-      else s"absent_${i}_zz"
-    }.distinct
-    def run(label: String)(c: org.apache.spark.sql.Column): Long = {
-      val t0 = System.nanoTime()
-      val n = docs.select(c.as("n")).agg(sum("n")).head().getLong(0)
-      println(f"[ac] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s (hits $n)")
-      n
-    }
-    (1 to 3).foreach { round =>
-      val ac = run(s"round$round multi_match ${pats.size} patterns")(
-        size(call_function("multi_match", col("text"),
-          lit(pats.mkString("\u0001")))).cast("long"))
-      val ch = run(s"round$round ${pats.size} x contains")(
-        pats.map(s => when(col("text").contains(s), 1L).otherwise(0L))
-          .reduce(_ + _))
-      require(ac == ch, s"hit totals diverged: $ac != $ch")
-    }
-    spark.stop()
-  }
-
-  private def triMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("data/sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(graft.plans.SinglePartitionWindowGuard.ModeKey, "fail")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val edges = graft.operators.Similarity.knnGraph(
-      graft.Tables.load(spark, sf, "embeddings"), "vec_id", "embedding",
-      k = 5, nCentroids = 16)
-    println("[tri] edge rows=" + edges.count() +
-      " distinct=" + edges.select("id_a", "id_b").distinct().count())
-    val out = graft.operators.Graphs.triangleCounts(edges, "id_a", "id_b")
-      .orderBy("id")
-    out.write.mode("overwrite").parquet("/tmp/tri_probe")
-    val rb = spark.read.parquet("/tmp/tri_probe")
-    val dup = rb.groupBy("id").count().filter(col("count") > 1).count()
-    println("[tri] written rows=" + rb.count() + " dup ids=" + dup)
-    spark.stop()
-  }
-
-  /** `Probe bloom <sf>` — the Bloom prefilter's work-shift: what
-    * fraction of an incoming shard never touches the exact confirm
-    * anti-join (definite misses), and the confirm probe size vs the
-    * unfiltered |shard|, against the standing corpus at this sf. The
-    * answer is unconditionally identical (BloomSpec); this measures the
-    * saved join work. */
-  private def bloomMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val docs = graft.Tables.load(spark, sf, "documents")
-      .filter(col("text").isNotNull)
-    // same head-fingerprint key as the gate, so true dups exist
-    val standing = docs.filter(col("doc_id") % 10 =!= 0)
-      .select(md5(substring(col("text"), 1, 50)).as("key"))
-    val shard = docs.filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), md5(substring(col("text"), 1, 50)).as("key"))
-    val buckets = math.max(
-      8, (standing.count() / 1000).toInt) // ~1k keys/bucket, 1 KiB each
-    val f = graft.operators.Bloom.buildFilter(standing, "key", buckets)
-      .persist()
-    val probed = shard
-      .withColumn("__bkt", graft.operators.Bloom.bucketOf(col("key"), buckets))
-      .join(f.select(col("bucket").as("__bkt"), col("bits")),
-        Seq("__bkt"), "left")
-      .withColumn("__hit", graft.operators.Bloom.mightContain(
-        col("key"), col("bits")))
-    val (nShard, nHits) = {
-      val r = probed.agg(count(lit(1)), count(when(col("__hit"), 1)))
-        .collect().head
-      (r.getLong(0), r.getLong(1))
-    }
-    val trueDups = shard.join(standing.distinct(), Seq("key"), "left_semi")
-      .count()
-    println(f"[bloom] buckets=$buckets shard=$nShard " +
-      f"confirm-probe=$nHits (${nHits * 100.0 / nShard}%.1f%% of shard; " +
-      f"true dups=$trueDups, fp overhead=${nHits - trueDups}) — " +
-      f"definite misses skipped: ${nShard - nHits}")
-    f.unpersist()
-    spark.stop()
-  }
-
-  /** `Probe tfidfprof <sf> [reps]` — stage decomposition of
-    * tfidfCosinePairs (the tfidf_cosine_pairs gate: ~8 s cold at sf0.1
-    * despite a 278k-row candidate join). */
-  private def tfidfprofMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[tfidfprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    (1 to reps).foreach { rep =>
-      println(s"[tfidfprof] --- rep $rep ---")
-      spark.catalog.clearCache()
-      val shingleN = 3
-      val grams = element_at(transform(array(split(col("text"), " ")),
-        words =>
-          when(size(words) >= shingleN,
-            transform(sequence(lit(0), size(words) - shingleN),
-              i => concat_ws(" ", slice(words, i + lit(1), lit(shingleN)))))
-          .otherwise(array().cast("array<string>"))), 1)
-      val tf = docs.select(col("doc_id").as("id"), explode(grams).as("gram"))
-        .groupBy("id", "gram").agg(count(lit(1)).as("tf"))
-      timed("tf agg")(tf.write.format("noop").mode("overwrite").save())
-      val dfTbl = tf.groupBy("gram").agg(count(lit(1)).as("df"))
-      timed("df agg")(dfTbl.write.format("noop").mode("overwrite").save())
-      val n = docs.select(count(lit(1)).as("n"))
-      val w = tf.join(dfTbl, "gram").crossJoin(broadcast(n))
-        .withColumn("w",
-          round(log(col("n").cast("double") / col("df")) * 1000, 0)
-            .cast("long") * col("tf"))
-        .filter(col("w") > 0)
-        .select("id", "gram", "w")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      timed("w materialize")(w.count())
-      val norms = w.groupBy("id").agg(sum(col("w") * col("w")).as("nrm"))
-      timed("norms")(norms.write.format("noop").mode("overwrite").save())
-      val num = w.filter(col("id") % 10 === 0)
-        .select(col("id").as("id_a"), col("gram"), col("w").as("w_a"))
-        .join(w.select(col("id").as("id_b"), col("gram"),
-          col("w").as("w_b")), "gram")
-        .filter(col("id_a") =!= col("id_b"))
-        .groupBy("id_a", "id_b").agg(sum(col("w_a") * col("w_b")).as("num"))
-      timed("num join+agg")(num.write.format("noop").mode("overwrite").save())
-      val out = num
-        .join(norms.select(col("id").as("id_a"), col("nrm").as("na")), "id_a")
-        .join(norms.select(col("id").as("id_b"), col("nrm").as("nb")), "id_b")
-        .withColumn("cos", col("num").cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-        .filter(col("cos") >= 0.3)
-      timed("final")(out.count())
-      w.unpersist()
-    }
-    spark.stop()
-  }
-
-  /** `Probe knprof <sf> [reps]` — stage decomposition of the
-    * Kneser-Ney perplexity chain (ppl_buckets / pipeline_curation_v6's
-    * triage half) and the label-propagation rounds. */
-  private def knprofMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[knprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    (1 to reps).foreach { rep =>
-      println(s"[knprof] --- rep $rep ---")
-      spark.catalog.clearCache()
-      // KN chain in gate shape
-      timed("kneserNey full")(
-        graft.operators.Vocab.kneserNeyLogPerplexity(docs).count())
-      timed("perplexityBuckets full")(
-        graft.operators.Vocab.perplexityBuckets(docs).count())
-      spark.catalog.clearCache()
-      // pipeline_curation_v6 decomposition (optimization round 12): the
-      // gate = buckets-triage `kept` (persisted) → editDistancePairs →
-      // anti-join; time each half against the whole
-      val kept = graft.operators.Vocab.perplexityBuckets(docs)
-        .filter(col("band") =!= "tail")
-        .join(docs.select("doc_id", "text"), Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      timed("v6: kept materialize")(kept.count())
-      val dupIds = graft.operators.Dedup.editDistancePairs(kept, "doc_id",
-        "text", shingleN = 3, blockJaccard = 0.3, maxEdits = 6)
-        .select(col("id_b").as("doc_id")).distinct()
-      timed("v6: editDistancePairs over kept")(dupIds.count())
-      timed("v6: anti-join close")(
-        kept.join(dupIds, Seq("doc_id"), "left_anti")
-          .select("doc_id", "lang", "band", "avg_neg_logp").count())
-      kept.unpersist()
-      spark.catalog.clearCache()
-      // LP decomposition
-      val edges = timed("knnGraph edges")(
-        graft.operators.Similarity.knnGraph(emb, "vec_id", "embedding", k = 5)
-          .localCheckpoint(true))
-      timed("labelPropagation rounds")(
-        graft.operators.Graphs.labelPropagation(
-          emb.select("vec_id"), edges, idCol = "vec_id", rounds = 4).count())
-    }
-    spark.stop()
-  }
-
-  /** `Probe sqlannprof <sf> [reps]` — phase decomposition of the
-    * sql_ann_indexed_topk gate (engine ingest → registerViews → SQL
-    * rebuild TVF → TVF search), which measures 2-3× the direct
-    * ann_ivf_topk_indexed gate despite sharing its substrate. */
-  private def sqlannprofMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select("vec_id", "embedding")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[sqlannprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    (1 to reps).foreach { rep =>
-      println(s"[sqlannprof] --- rep $rep ---")
-      spark.catalog.clearCache()
-      val tmp = java.nio.file.Files.createTempDirectory("graft-sqlannprof")
-        .toString
-      val e = new graft.engine.Engine(spark, tmp)
-      val st = new org.apache.spark.sql.types.StructType()
-        .add("vec_id", "long", nullable = false)
-        .add("embedding", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))
-      timed("createStream")(
-        e.createStream("emb_idx", graft.schema.StreamSchema.fromStruct(st)))
-      timed("appendRows corpus")(e.appendRows("emb_idx", emb))
-      timed("registerViews")(e.registerViews())
-      timed("rebuild TVF plan")(spark.sql(
-        "SELECT * FROM ann_index_rebuild('emb_idx', 'vec_id', 'embedding')"))
-      timed("rebuild TVF collect")(spark.sql(
-        "SELECT * FROM ann_index_rebuild('emb_idx', 'vec_id', 'embedding')")
-        .collect())
-      val q = timed("search TVF plan")(spark.sql(
-        """SELECT q_id, n_id, rnk, cos
-          |FROM ann_indexed_topk('emb_idx', 'vec_id', 'embedding',
-          |  'vec_id < 10', 5, 3)
-          |ORDER BY q_id, rnk""".stripMargin))
-      timed("search TVF count")(q.count())
-      timed("engine close")(e.close())
-    }
-    spark.stop()
-  }
-
-  /** `Probe annprof <sf> [reps]` — stage decomposition of the
-    * `withAnnEngine` + `ensureAnnIndex` substrate that ~10 indexed-ANN
-    * gates pay per invocation (optimization round 11): engine create,
-    * createStream, appendRows(corpus), ensureAnnIndex, and the served
-    * search, each timed separately. The data at sf0.1 is 2k × d64
-    * (~0.5 MB), so everything measured here is fixed per-gate overhead
-    * (action count × scheduler/commit latency), not data volume. */
-  private def annprofMain(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select("vec_id", "embedding")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[annprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    (1 to reps).foreach { rep =>
-      println(s"[annprof] --- rep $rep ---")
-      spark.catalog.clearCache()
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annprof").toString
-      val e = timed("engine create")(new graft.engine.Engine(spark, tmp))
-      val st = new org.apache.spark.sql.types.StructType()
-        .add("vec_id", "long", nullable = false)
-        .add("embedding", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))
-      timed("createStream")(
-        e.createStream("emb_idx", graft.schema.StreamSchema.fromStruct(st)))
-      timed("appendRows corpus")(e.appendRows("emb_idx", emb))
-      timed("ensureAnnIndex")(
-        e.ensureAnnIndex("emb_idx", "vec_id", "embedding"))
-      val served = timed("annTopKIndexed plan")(
-        e.annTopKIndexed("emb_idx", "vec_id", "embedding",
-          queryPred = org.apache.spark.sql.functions.col("vec_id") < 10,
-          k = 5, nProbe = 3))
-      timed("search count")(served.count())
-      timed("engine close")(e.close())
-
-      // ---- annIndexContents stage replica (what ensureAnnIndex pays) --
-      import graft.operators.Similarity
-      val corpus = emb.select(col("vec_id").as("n_id"),
-        col("embedding").as("v"))
-      val n = timed("  count")(corpus.count())
-      val quant = timed("  buildQuantizer (seeds + 1 lloyd)")(
-        Similarity.buildQuantizer("annprof", 0, corpus, Some(n)))
-      val dims = 64
-      val books = timed("  trainPqBooks (m=8 x (seeds + lloyd))")(
-        Similarity.trainPqBooks(corpus, dims, 8, 16))
-      val encoded = Similarity.pqEncode(quant.assign(corpus), books)
-        .select(col("n_id").as("ex_id"), col("cell"),
-          col("v_n").as("v"), col("codes"), col("eps"), col("norm_x"))
-      val tmpd = java.nio.file.Files.createTempDirectory("annprof-w").toString
-      timed("  encode+write plain parquet")(
-        encoded.write.mode("overwrite").parquet(tmpd + "/plain"))
-      timed("  encode+write bucketed saveAsTable")({
-        encoded.write.mode("overwrite")
-          .bucketBy(8, "cell").sortBy("cell")
-          .option("path", tmpd + "/bucketed").format("parquet")
-          .saveAsTable("annprof_stage")
-        spark.sql("DROP TABLE IF EXISTS annprof_stage")
-      })
-      timed("  centroid rows write")(
-        Similarity.quantizerRows(quant, spark)
-          .unionAll(Similarity.booksRows(books, spark))
-          .write.mode("overwrite").parquet(tmpd + "/cent"))
-    }
-    spark.stop()
-  }
 }

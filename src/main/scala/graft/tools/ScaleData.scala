@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a K× replication of an SF directory for bench-only scale
@@ -49,13 +49,7 @@ object ScaleData {
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(t: String): Boolean = only.forall(_.contains(t))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scaledata")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session()
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(t: String, df: DataFrame): Unit = if (wanted(t)) {

@@ -244,4 +244,61 @@ class StreamingEngineSpec extends SparkSpec {
     val rows = e.preview("SELECT k, v FROM m ORDER BY k")
     assert(rows.map(r => (r.getString(0), r.getLong(1))) == Seq(("a", 1L), ("b", 2L)))
   }
+
+  test("a first start interrupted before its first batch was logged leaves a startable checkpoint") {
+    import java.nio.file.{Files, Path, Paths}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    val e = newEngine()
+    val se = new StreamingEngine(e)
+    e.createStream("feed", StreamSchema(Seq(PhysicalField("id", FBigInt))))
+    e.appendRows("feed", Seq(1L, 2L).toDF("id"))
+    def ckpt(n: String): Path = Paths.get(s"${e.root}/_checkpoints/${e.catalog.qualify(n)}")
+    def ids(n: String): Seq[Long] = e.readStream(n).select("id").as[Long].collect().toSeq.sorted
+    def list(p: Path): Seq[String] =
+      if (!Files.isDirectory(p)) Nil
+      else scala.util.Using.resource(Files.list(p))(_.toArray.toSeq.map(_.toString))
+
+    // stopped inside its first batch's sink: offsets/0 is logged with no
+    // commit, so the next start replays batch 0
+    e.createModel("m", "SELECT id FROM feed", ModelConfig(active = false))
+    val entered = new CountDownLatch(1)
+    val q = se.continuousPlan("m").writeStream
+      .option("checkpointLocation", ckpt("m").toString)
+      .trigger(Trigger.ProcessingTime("1 hour"))
+      .foreachBatch { (_: DataFrame, _: Long) =>
+        entered.countDown(); new CountDownLatch(1).await(60, TimeUnit.SECONDS); () }
+      .start()
+    assert(entered.await(60, TimeUnit.SECONDS))
+    q.stop()
+    assert(Files.exists(ckpt("m").resolve("offsets/0")) && list(ckpt("m").resolve("commits")).isEmpty)
+    se.refreshAvailable("m")
+    assert(ids("m") == Seq(1L, 2L))
+
+    // stopped inside the offsets write: the write's temp file is left in
+    // offsets/ and no batch is logged — Spark's new-query check refuses
+    // a non-empty offsets/ (STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY)
+    def plantInterruptedStart(n: String): Unit = {
+      val offsets = Files.createDirectories(ckpt(n).resolve("offsets"))
+      Files.createDirectories(ckpt(n).resolve("commits"))
+      Files.writeString(offsets.resolve(s".0.${java.util.UUID.randomUUID}.tmp"), "v1\n")
+    }
+    e.createModel("m2", "SELECT id FROM feed", ModelConfig(active = false))
+    plantInterruptedStart("m2")
+    assert(!graft.sources.Connectors.hasCommittedOffsets(ckpt("m2").toString))
+    se.refreshAvailable("m2")
+    assert(ids("m2") == Seq(1L, 2L), "refreshAvailable catches up from the cleared checkpoint")
+
+    // a `latest` start over the same leftovers still fast-forwards
+    e.createModel("tail", "SELECT id FROM feed", ModelConfig(active = false,
+      properties = Map("start_position.feed" -> "latest")))
+    plantInterruptedStart("tail")
+    se.refreshAvailable("tail")
+    assert(ids("tail").isEmpty, "latest must skip the rows present at first start")
+    e.appendRows("feed", Seq(3L).toDF("id"))
+    se.refreshAvailable("tail")
+    assert(ids("tail") == Seq(3L))
+  }
 }

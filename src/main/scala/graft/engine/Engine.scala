@@ -1,13 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftInternal, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith, View}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{Catalog, ConnectionDef, StreamDef}
-import graft.functions.GraftFunctions
+import graft.functions.{EpochStamp, GraftFunctions}
 import graft.schema._
 import graft.types.FlinkType
 import SiblingIndex.{Ann, Families, Lsh, MinHash}
@@ -106,6 +106,13 @@ final class Engine(
   /** Every store rewrite and its crash repair ([[StagedCommit]]). */
   private[graft] val commits = new StagedCommit(this)
   GraftFunctions.register(spark)
+  // Every Structured Streaming start clones this session, and with
+  // artifact isolation on (Spark 4.1's default) each clone carries a new
+  // artifact UUID, so its executor tasks run under a fresh classloader and
+  // miss the generated-code cache (keyed by classloader and source): each
+  // refresh recompiled its whole plan. The engine adds no artifacts, so
+  // there is nothing to isolate; clones inherit the setting.
+  spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
   Engine.registry.put(root, this) // engine-bound TVF resolution
 
   /** Hidden ingest-order columns. Epoch and within-write sequence are
@@ -1502,7 +1509,8 @@ final class Engine(
     * ([[deleteKeys]]) and stamped false otherwise. Shared by [[write]]
     * and the ANN build-aside stager ([[buildAnnIndex]]), which writes
     * the SAME stored shape into a stage directory outside the ingest
-    * lock. */
+    * lock. The epoch is an [[EpochStamp]], not a literal, so one stored
+    * shape compiles its write projection once, not once per epoch. */
   private def stampRows(d: StreamDef, df: DataFrame, epoch: Long): DataFrame = {
     val target = d.schema.toStruct
     val deleted =
@@ -1511,7 +1519,7 @@ final class Engine(
     val aligned = df.select(target.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)) :+ deleted.as(DeletedCol): _*)
     aligned
-      .withColumn(EpochCol, lit(epoch))
+      .withColumn(EpochCol, GraftInternal.column(EpochStamp(epoch)))
       .withColumn(SeqCol, monotonically_increasing_id())
       .select((target.fieldNames.toSeq ++ Seq(EpochCol, SeqCol, DeletedCol))
         .map(col): _*)

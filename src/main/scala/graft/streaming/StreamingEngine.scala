@@ -55,8 +55,7 @@ final class StreamingEngine(val engine: Engine) {
   /** Streaming read of a source stream: file-source over the stream dir,
     * declared schema, computed columns + watermark applied. */
   def readStreamContinuous(name: String): DataFrame = {
-    val d = engine.catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = streamDef(name)
     val struct = d.schema.toStruct
       .add(engine.EpochCol, "long", nullable = false)
       .add(engine.SeqCol, "long", nullable = false)
@@ -82,27 +81,33 @@ final class StreamingEngine(val engine: Engine) {
               .contains(f.name.last.toLowerCase) => f.name.last
       }).distinct
 
-  private def tvfShaped(d: graft.catalog.StreamDef): Boolean =
-    d.sql.exists(sql => graftTvfsIn(sql).nonEmpty)
+  private def streamDef(name: String): graft.catalog.StreamDef =
+    engine.catalog.get(name).getOrElse(
+      throw new IllegalArgumentException(s"stream '$name' not found"))
 
   /** Build the continuous DataFrame for a model by running its pipeline
     * SQL over streaming views of its sources. */
   def continuousPlan(name: String): DataFrame = {
-    val d = engine.catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
-    val sql = d.sql.getOrElse(
-      throw new IllegalStateException(s"stream '${d.name}' has no pipeline"))
+    val d = streamDef(name)
     // a graft TVF cannot resolve over streaming temp views (its builder
     // returns an analyzed BATCH plan) — activation handles TVF-shaped
     // models via the re-materialization path in startQuery, never
     // through this plan builder
-    val tvfs = graftTvfsIn(sql)
+    val tvfs = d.sql.toSeq.flatMap(graftTvfsIn)
     if (tvfs.nonEmpty) throw new UnsupportedOperationException(
       s"model '$name' uses graft table function(s) " +
         s"${tvfs.mkString(", ")} — TVF-shaped pipelines are batch " +
         "operator plans and have no native continuous form; activate " +
         "the model (StreamingEngine.activate re-materializes it per " +
         "micro-batch) or materialize it through the batch engine")
+    continuousPlan(d)
+  }
+
+  /** [[continuousPlan]] over a def already read and known to name no
+    * graft table function. */
+  private def continuousPlan(d: graft.catalog.StreamDef): DataFrame = {
+    val sql = d.sql.getOrElse(
+      throw new IllegalStateException(s"stream '${d.name}' has no pipeline"))
     // register + analyze atomically vs the batch side: a TVF model's
     // micro-batch re-materialization calls registerViews() on the SAME
     // session from its sink thread, and an interleaving would resolve
@@ -140,10 +145,10 @@ final class StreamingEngine(val engine: Engine) {
     }.reduce(_ unionByName _)
   }
 
-  private def startQuery(name: String, trigger: Trigger,
+  /** Start model `d`'s query (`tvfs`: the graft table functions its SQL
+    * names) under `trigger`, handing each micro-batch to `sink`. */
+  private def startQuery(d: graft.catalog.StreamDef, tvfs: Seq[String], trigger: Trigger,
                          sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val d = engine.catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
     // Round 11 (VERDICT r10 item 5, upgraded from the fail-loud pin): a
     // TVF-shaped model activates as a micro-batch RE-MATERIALIZATION
     // loop — the streaming plan is only the source-tick driver; each
@@ -153,14 +158,14 @@ final class StreamingEngine(val engine: Engine) {
     // (ann_indexed_topk) recompute sub-linearly; corpus-pass TVFs pay a
     // corpus pass per refresh, which is the operator's documented
     // contract, surfaced at ingest cadence instead of per query.
-    if (tvfShaped(d))
+    if (tvfs.nonEmpty)
       return tickPlan(d).writeStream
         .outputMode("append")
-        .option("checkpointLocation", checkpointDir(name))
+        .option("checkpointLocation", checkpointDir(d.name))
         .trigger(trigger)
         .foreachBatch(sink)
         .start()
-    val plan = continuousPlan(name)
+    val plan = continuousPlan(d)
     val analyzed = plan.queryExecution.analyzed
     val isAggregating = plan.isStreaming && analyzed.collectFirst {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
@@ -182,7 +187,7 @@ final class StreamingEngine(val engine: Engine) {
       if (isAggregating && !hasSessionWindow) "update" else "append"
     plan.writeStream
       .outputMode(mode)
-      .option("checkpointLocation", checkpointDir(name))
+      .option("checkpointLocation", checkpointDir(d.name))
       .trigger(trigger)
       .foreachBatch(sink)
       .start()
@@ -200,14 +205,13 @@ final class StreamingEngine(val engine: Engine) {
     * discarded pass still folds pre-existing rows into aggregation state
     * (source-level skipping would need connector support, as Kafka's
     * startingOffsets has — Connectors.open maps it natively for kafka). */
-  private def fastForwardIfLatest(name: String): Unit = {
-    val d = engine.catalog.get(name).getOrElse(return)
+  private def fastForwardIfLatest(d: graft.catalog.StreamDef, tvfs: Seq[String]): Unit = {
     val wantsLatest = d.properties.exists { case (k, v) =>
       k.startsWith("start_position") && v.equalsIgnoreCase("latest")
     }
     if (wantsLatest &&
-        !graft.sources.Connectors.hasCommittedOffsets(checkpointDir(name))) {
-      val q = startQuery(name, Trigger.AvailableNow(), (_, _) => ())
+        !graft.sources.Connectors.hasCommittedOffsets(checkpointDir(d.name))) {
+      val q = startQuery(d, tvfs, Trigger.AvailableNow(), (_, _) => ())
       q.awaitTermination()
     }
   }
@@ -224,9 +228,12 @@ final class StreamingEngine(val engine: Engine) {
   }
 
   /** Start the model's pipeline query under `trigger`, leaving its
-    * stored target state (`active`) as it is. */
+    * stored target state (`active`) as it is. The def is read, and its SQL
+    * parsed for graft table functions, once per start. */
   private def run(name: String, trigger: Trigger): StreamingQuery = {
     require(!active.contains(name), s"pipeline '$name' already active")
+    val d = streamDef(name)
+    val tvfs = d.sql.toSeq.flatMap(graftTvfsIn)
     // a first start interrupted before its first batch was logged leaves
     // offsets/commits/state files under a checkpoint with no batch, and
     // Spark refuses to start a new query over them
@@ -235,16 +242,15 @@ final class StreamingEngine(val engine: Engine) {
     val checkpoint = checkpointDir(name)
     if (!graft.sources.Connectors.hasCommittedOffsets(checkpoint))
       engine.catalog.deleteRecursively(java.nio.file.Paths.get(checkpoint))
-    fastForwardIfLatest(name)
+    fastForwardIfLatest(d, tvfs)
     val sink: (DataFrame, Long) => Unit =
-      if (engine.catalog.get(name).exists(tvfShaped))
+      if (tvfs.nonEmpty)
         // TVF re-materialization: the micro-batch rows are ticks, not
         // data — overwrite the sink with the pipeline's current result
         (_: DataFrame, _: Long) => engine.runPipeline(name)
       else (batch: DataFrame, _: Long) => engine.appendRows(name, batch)
-    val q = startQuery(name, trigger, sink)
+    val q = startQuery(d, tvfs, trigger, sink)
     active.put(name, q)
-    val d = engine.catalog.get(name).get
     // storage-rewrite guard: while this query lives, its file-source
     // reads (and its sink appends) must block forget/rewrite ops
     registeredSources.put(name, d.sources)

@@ -153,7 +153,7 @@ object Probe {
         case None => println(s"[gates] $name: UNKNOWN gate name, skipped")
         case Some(fn) =>
           if (warm)
-            try fn(spark, warmDir).count() catch { case e: Throwable =>
+            try graft.Bench.runGate(fn(spark, warmDir)) catch { case e: Throwable =>
               println(s"[gates] WARN: warm pass for $name failed " +
                 s"(${e.getClass.getSimpleName}) — measured runs include codegen")
             }
@@ -161,7 +161,7 @@ object Probe {
           var base = Option.empty[Profile]
           dirs.foreach { sf =>
             try {
-              val p = profiler.measure(fn(spark, sf).count())
+              val p = profiler.measure(graft.Bench.runGate(fn(spark, sf)))
               println(s"[gates] $name @ $sf: ${p.line(base)}")
               if (base.isEmpty) base = Some(p)
             } catch { case e: Throwable =>

@@ -861,4 +861,24 @@ class EngineSpec extends SparkSpec {
     e3.close()
     assert(Engine.registry.size() == before)
   }
+
+  test("a warm file-backed appendRows compiles no generated class") {
+    import spark.implicits._
+    val e = newEngine()
+    e.createStream("s", StreamSchema(Seq(
+      PhysicalField("k", FString), PhysicalField("v", FBigInt))))
+    val shards = tmpDir("graft-shards")
+    // each append is a new write epoch: the stamp must not put the epoch
+    // into the generated source
+    def append(i: Int): Long = {
+      Seq(("a", i.toLong), ("b", i + 10L)).toDF("k", "v").write.parquet(s"$shards/$i")
+      compilesDuring(e.appendRows("s", spark.read.parquet(s"$shards/$i")))
+    }
+    append(1); append(2)
+    assert(append(3) == 0L)
+    val epochs = spark.read.parquet(e.catalog.dataPath("s")).select(col(e.EpochCol)).as[Long]
+      .collect().toSeq.sorted
+    val last = e.catalog.get("s").get.writeEpoch
+    assert(epochs == Seq(last - 2, last - 2, last - 1, last - 1, last, last))
+  }
 }

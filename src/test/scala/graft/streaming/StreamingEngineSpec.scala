@@ -301,4 +301,34 @@ class StreamingEngineSpec extends SparkSpec {
     se.refreshAvailable("tail")
     assert(ids("tail") == Seq(3L))
   }
+
+  test("a warm bounded refresh compiles no generated class") {
+    import spark.implicits._
+    val e = newEngine()
+    val se = new StreamingEngine(e)
+    e.createStream("src", StreamSchema(Seq(
+      PhysicalField("k", FString), PhysicalField("v", FBigInt))))
+    e.createModel("kept", "SELECT k, v FROM src WHERE v > 1",
+      ModelConfig(active = false))
+    e.createModel("per_k", "SELECT k, count(*) AS n, sum(v) AS total FROM src GROUP BY k",
+      ModelConfig(primaryKey = Seq("k"), active = false))
+    val shards = tmpDir("graft-shards")
+    // one round: a parquet-backed shard appended, both models caught up;
+    // neither a new streaming start nor a new write epoch may change the
+    // generated source or the classloader it is cached under
+    def round(i: Int): Long = {
+      Seq(("a", i.toLong), (s"k$i", 1L)).toDF("k", "v").write.parquet(s"$shards/$i")
+      compilesDuring {
+        e.appendRows("src", spark.read.parquet(s"$shards/$i"))
+        se.refreshAvailable("kept")
+        se.refreshAvailable("per_k")
+      }
+    }
+    round(1); round(2)
+    assert(round(3) == 0L)
+    assert(e.preview("SELECT v FROM kept ORDER BY v").map(_.getLong(0)) == Seq(2L, 3L))
+    assert(e.preview("SELECT k, n, total FROM per_k ORDER BY k")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))) ==
+      Seq(("a", 3L, 6L), ("k1", 1L, 1L), ("k2", 1L, 1L), ("k3", 1L, 1L)))
+  }
 }

@@ -49,4 +49,26 @@ class ProbeSpec extends SparkSpec {
     assert(figures("rows").toLong > 0L && figures("jobs").toLong >= 1L &&
       figures("tasks").toLong >= 1L && figures("input_b").toLong > 0L, profiles.head)
   }
+
+  test("a gate run executes the written plan: triangle_counts reads the jobs and tasks of a parquet write") {
+    val p = new Probe.Profiler(spark)
+    val gate = graft.SparkEntry.queries("triangle_counts")
+    val sf = "/root/testdata/sf0.01"
+    val out = tmpDir("graft-probe-write")
+    // cold operator caches around every run, as `gates` and perfbench's
+    // layer pass run a gate
+    def cold(action: => Long): Probe.Profile = {
+      graft.operators.OperatorCache.clear(spark)
+      try p.measure(action) finally graft.operators.OperatorCache.clear(spark)
+    }
+    try {
+      val gateRun = cold(graft.Bench.runGate(gate(spark, sf)))
+      val written = cold { gate(spark, sf).write.mode("overwrite").parquet(out); 0L }
+      val counted = cold(gate(spark, sf).count())
+      assert(gateRun.rows == counted.rows && gateRun.rows > 0L, (gateRun, counted))
+      assert((gateRun.jobs, gateRun.tasks) == (written.jobs, written.tasks), (gateRun, written))
+      // what `count()` timed instead: a pruned plan with fewer jobs
+      assert(counted.jobs < written.jobs, (counted, written))
+    } finally p.close()
+  }
 }

@@ -46,15 +46,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the sql_* gates resolve graft table functions (round 10)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.tools.Probe.session()
     spark.sparkContext.setLogLevel("WARN")
     // one untimed warmup pass: run the WHOLE matrix at the smallest
     // available SF first. A gate's plan is identical at every SF, so its

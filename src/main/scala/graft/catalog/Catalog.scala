@@ -123,6 +123,13 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
     if (!exists(name)) None
     else Some(fromNode(mapper.readTree(Files.readAllBytes(defPath(name)))))
 
+  /** `name`'s def, like `get`, but a missing stream throws an
+    * `IllegalArgumentException` naming the qualified stream (as a Scala
+    * `Map`'s `apply` throws where its `get` returns `None`). */
+  def apply(name: String): StreamDef =
+    get(name).getOrElse(
+      throw new IllegalArgumentException(s"stream '${qualify(name)}' not found"))
+
   def put(d: StreamDef): Unit = {
     val qualified = d.copy(name = qualify(d.name))
     writeAtomically(defPath(qualified.name),
@@ -152,8 +159,7 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
   }
 
   def rename(oldName: String, newName: String): Unit = {
-    val d = get(oldName).getOrElse(
-      throw new IllegalArgumentException(s"stream '$oldName' not found"))
+    val d = apply(oldName)
     val qNew = qualify(newName)
     // move data dir
     val oldData = Paths.get(dataPath(oldName))

@@ -145,8 +145,7 @@ final class Engine(
     *                retract-stream result semantics (handler.py:87-94).
     */
   def readStream(name: String, compact: Boolean = true): DataFrame = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '${catalog.qualify(name)}' not found"))
+    val d = catalog(name)
     foldCompact(d, d.schema.applyComputed(readRaw(d)), compact)
   }
 
@@ -191,21 +190,22 @@ final class Engine(
     * filter + the same PK fold. The CDC-engine snapshot read neither
     * Spark tables nor the reference expose. */
   def readStreamAsOf(name: String, epoch: Long, compact: Boolean = true): DataFrame = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '${catalog.qualify(name)}' not found"))
+    val d = catalog(name)
     val raw = readRaw(d).filter(col(EpochCol) <= lit(epoch))
     foldCompact(d, d.schema.applyComputed(raw), compact)
   }
 
-  private def storedStruct(d: StreamDef) =
+  /** The stored row shape: the declared columns plus the hidden ingest
+    * columns. */
+  private[graft] def storedStruct(d: StreamDef) =
     d.schema.toStruct
       .add(EpochCol, "long", nullable = false)
       .add(SeqCol, "long", nullable = false)
       .add(DeletedCol, "boolean", nullable = false)
 
   /** The rows ONE write epoch appended, re-read from COMMITTED storage
-    * (round 11): the stable frame the sibling-index ingest/maintenance
-    * passes run over. The ingest paths' `survivors` plan runs through a
+    * (round 11): the stable frame the sibling-index maintenance passes
+    * run over. [[managedIngest]]'s `survivors` plan runs through a
     * persisted probe frame whose lineage includes the postings streams —
     * the moment the first sibling append commits, Spark invalidates that
     * cache, and a later re-evaluation probes the survivors' OWN fresh
@@ -214,8 +214,7 @@ final class Engine(
     * a constant column per file, so parquet min/max stats prune the scan
     * to the shard's own files. */
   private def rowsAtEpoch(name: String, epoch: Long): DataFrame = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = catalog(name)
     d.schema.applyComputed(readRaw(d).filter(col(EpochCol) === lit(epoch)))
       .drop(SeqCol, EpochCol, DeletedCol)
   }
@@ -427,8 +426,7 @@ final class Engine(
   /** Execute a stream's pipeline SQL and overwrite its contents (batch
     * re-materialization of `INSERT INTO sink SELECT …`). */
   def runPipeline(name: String): Unit = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = catalog(name)
     val sql = d.sql.getOrElse(
       throw new IllegalStateException(s"stream '${d.name}' has no pipeline"))
     // the analyzed plan holds resolved relations, so the materialization
@@ -439,18 +437,70 @@ final class Engine(
   /** Append the result of `sql` to an existing stream (incremental INSERT
     * INTO semantics — S2). */
   def insertInto(name: String, sql: String): Unit = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = catalog(name)
     write(d, analyzed(SqlDialect.rewrite(sql)), SaveMode.Append)
   }
 
   /** Append rows directly (the analog of POSTing events to a REST source
     * connection, client.py:493-501). */
   def appendRows(name: String, df: DataFrame): Unit = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = catalog(name)
     write(d, df, SaveMode.Append)
   }
+
+  /** The one managed-ingest path: [[appendRows]] with curation on the way
+    * in, owned by index family `owner`. Under `name`'s ingest lock it
+    *  1. makes the owner's index live (`ensure`, which returns the layout
+    *     its probe needs);
+    *  2. takes the write epoch before the append;
+    *  3. admits rows: with a `probe` (given the layout, it returns the
+    *     `in_id` pairs of incoming rows that near-duplicate the index, and
+    *     their release handle) every incoming row with a flagged id is
+    *     dropped and counted; without one every row is admitted;
+    *  4. appends the survivors, releases what admission pinned, and
+    *     re-reads the survivors once, committed ([[rowsAtEpoch]]);
+    *  5. maintains EVERY family over those rows ([[maintainFamily]]), the
+    *     owner included;
+    *  6. runs `ensure` again when that left the owner stale (its growth
+    *     crossed an LSH layout breakpoint or the ANN growth cap, or ANN
+    *     had no codebook yet): the rebuild is paid here, not by the next
+    *     call.
+    *
+    * @return number of incoming rows dropped */
+  private def managedIngest[L](name: String, owner: SiblingFamily, df: DataFrame,
+                               idCol: String)(ensure: => L)(
+                               probe: Option[L => (DataFrame, () => Unit)]): Long =
+    streamLock(name).synchronized {
+    val layout = ensure
+    val preEpoch = epochOf(name)
+    val dropped = probe.fold { appendRows(name, df); 0L } { p =>
+      // the shard feeds three jobs (index probe, drop count, anti-join
+      // append) — persist it for the call so an expensive upstream plan
+      // isn't recomputed per job
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val (pairs, cleanup) = p(layout)
+        val flagged = pairs.select(col("in_id").as(idCol)).distinct()
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // ROW-accurate drop count (a shard that repeats a flagged id
+          // drops every copy): semi-join against the materialized id set,
+          // which the anti-join append then reuses instead of re-probing
+          val n = df.join(flagged, Seq(idCol), "left_semi").count()
+          appendRows(name, df.join(flagged, Seq(idCol), "left_anti"))
+          n
+        } finally { flagged.unpersist(); cleanup() }
+      } finally df.unpersist()
+    }
+    // the committed rows, re-read by epoch: every index ingest runs over
+    // THIS frame, never over the reactive survivors plan (`flagged` is
+    // released, and re-evaluated after a sibling append it self-flags the
+    // survivors and evaluates empty)
+    val appended = rowsAtEpoch(name, epochOf(name))
+    if (Families.filterNot(maintainFamily(_, name, appended, preEpoch)).contains(owner))
+      ensure
+    dropped
+    }
 
   /** Ingest-time near-dup curation: append only the rows of `df` whose
     * `textCol` does NOT near-duplicate (MinHash-LSH Jaccard ≥
@@ -482,61 +532,28 @@ final class Engine(
     * @return number of incoming rows dropped as near-duplicates
     */
   def appendRowsDeduped(name: String, df: DataFrame, idCol: String,
-                        textCol: String, threshold: Double = 0.5): Long =
-    streamLock(name).synchronized {
-    val existing = readStream(name).select(col(idCol), col(textCol))
+                        textCol: String, threshold: Double = 0.5): Long = {
     val (shingleN, numHashes, bands) = (2, 128, 32)
-    val mainEpoch = epochOf(name)
     // the indexed columns are pinned too, so other managed ingest paths
     // can maintain this index for their rows ([[maintainFamily]])
     val config = Map(
       "mh_shingle_n" -> shingleN.toString,
       "mh_num_hashes" -> numHashes.toString, "mh_bands" -> bands.toString,
       MinHash.idColKey -> idCol, "mh_text_col" -> textCol)
-    // no layout solver (parameters are fixed and the verify threshold is
-    // not baked in): rebuild when the config or an epoch pin disagrees
-    val live = MinHash.live(catalog, name, mainEpoch, _ == idCol)
-      .exists(d => config.forall { case (k, v) => d.properties.get(k).contains(v) })
-    if (!live) {
-      // bootstrap/rebuild: ONE shingle+minhash pass over the corpus
-      resetFamily(MinHash, name, existing.schema(idCol).dataType)
-      mhAppend(name, existing, idCol, textCol, shingleN, numHashes, bands)
-      repin(MinHash, name, config)
-    }
-    // the shard feeds three jobs (index probe, drop count, anti-join
-    // append) — persist it for the call so an expensive upstream plan
-    // isn't recomputed per job
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (pairs, cleanup) = graft.operators.Dedup.incrementalNearDupsIndexed(
-        readStream(mhPostingsName(name)), readStream(mhSignaturesName(name)),
-        df, idCol, textCol, shingleN, numHashes, bands, threshold)
-      val flagged = pairs
-        .select(col("in_id").as(idCol)).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // ROW-accurate drop count (a shard that repeats a flagged id drops
-        // every copy): semi-join against the materialized id set — which
-        // the anti-join write below then reuses instead of re-probing
-        val dropped = df.join(flagged, Seq(idCol), "left_semi").count()
-        val survivors = df.join(flagged, Seq(idCol), "left_anti")
-        appendRows(name, survivors)
-        // the committed survivor rows, re-read by epoch: every index
-        // ingest below runs over THIS frame, never over the reactive
-        // `survivors` plan (see [[rowsAtEpoch]] — the first sibling
-        // append invalidates `flagged`'s cache, after which a
-        // re-evaluated `survivors` self-flags and evaluates empty)
-        val survivorRows = rowsAtEpoch(name, epochOf(name))
-        // the index ingests the survivors' rows — shard-sized, no
-        // corpus work
-        mhAppend(name, survivorRows, idCol, textCol, shingleN, numHashes, bands)
-        repin(MinHash, name)
-        compactFamily(MinHash, name)
-        maintainOtherFamilies(name, survivorRows, mainEpoch, MinHash)
-        dropped
-      } finally { flagged.unpersist(); cleanup() }
-    } finally df.unpersist()
-    }
+    managedIngest(name, MinHash, df, idCol) {
+      // no layout solver (parameters are fixed and the verify threshold is
+      // not baked in): rebuild when the config or an epoch pin disagrees
+      if (MinHash.liveWith(catalog, name, epochOf(name), config).isEmpty) {
+        // bootstrap/rebuild: ONE shingle+minhash pass over the corpus
+        val corpus = readStream(name).select(col(idCol), col(textCol))
+        resetFamily(MinHash, name, corpus.schema(idCol).dataType)
+        mhAppend(name, corpus, idCol, textCol, shingleN, numHashes, bands)
+        repin(MinHash, name, config)
+      }
+    }(Some(_ => graft.operators.Dedup.incrementalNearDupsIndexed(
+      readStream(mhPostingsName(name)), readStream(mhSignaturesName(name)),
+      df, idCol, textCol, shingleN, numHashes, bands, threshold)))
+  }
 
   /** Append `rows`' band postings and signatures to `name`'s MinHash
     * stores. */
@@ -606,11 +623,13 @@ final class Engine(
     * appends its survivors' postings; the solver layout
     * ([[graft.operators.Dedup.lshLayout]]) is pinned in the index
     * stream's properties and re-solved against the ledger count on
-    * every call — when corpus growth moves the solver to a new
-    * (planes, tables, radius), the index is rebuilt from the corpus in
-    * ONE signature pass (a layout epoch; breakpoints are geometric in
-    * n, so the amortized per-row rebuild cost is O(1)). The ledger
-    * count also means the fast path runs zero corpus-sized actions.
+    * every call — when an ingest's survivors move the solver to a new
+    * (planes, tables, radius), that ingest rebuilds the index from the
+    * corpus in ONE signature pass (a layout epoch; breakpoints are
+    * geometric in n, so the amortized per-row rebuild cost is O(1)), so
+    * every probe runs under the layout solved at its ledger count. The
+    * ledger count also means the fast path runs zero corpus-sized
+    * actions.
     *
     * Same ingest-lock serialization and per-call unpersist hygiene as
     * the MinHash sibling; in-batch mutual near-dups are kept.
@@ -623,71 +642,36 @@ final class Engine(
     */
   def appendRowsDedupedEmbedding(name: String, df: DataFrame, idCol: String,
                                  vecCol: String, threshold: Double = 0.8,
-                                 dims: Int = 64): Long =
-    streamLock(name).synchronized {
-    val existing = readStream(name).select(col(idCol), col(vecCol))
-    val idxName = lshIndexName(name)
-    val mainEpoch = epochOf(name)
+                                 dims: Int = 64): Long = {
+    def existing = readStream(name).select(col(idCol), col(vecCol))
     // pinned with the solver layout; the indexed columns let other
     // managed ingest paths maintain this index ([[maintainFamily]])
     val config = Map("lsh_threshold" -> threshold.toString,
       "lsh_dims" -> dims.toString, Lsh.idColKey -> idCol, "lsh_vec_col" -> vecCol)
-    // fast path: a live index whose pinned layout still matches the
-    // solver at the ledger count (and this call's config). Non-numeric
-    // pinned values (hand-edited catalog) fall through to a rebuild
-    // rather than throwing.
-    val live = Lsh.live(catalog, name, mainEpoch, _ == idCol).flatMap { d =>
-      val p = d.properties
-      for {
-        planes <- propLong(p, "lsh_planes").map(_.toInt)
-        tables <- propLong(p, "lsh_tables").map(_.toInt)
-        radius <- propLong(p, "lsh_radius").map(_.toInt)
-        n <- propLong(p, "lsh_n")
-        if config.forall { case (k, v) => p.get(k).contains(v) }
-        if lshSolve(n, threshold) == ((planes, tables, radius))
-      } yield (planes, tables, radius, n)
-    }
-    val (planes, tables, radius, n0) = live.getOrElse {
-      // bootstrap or layout-epoch rebuild: one signature pass over the
-      // standing corpus under the new layout
-      val n = existing.count()
-      val (p, t, r) = lshSolve(n, threshold)
-      resetFamily(Lsh, name, existing.schema(idCol).dataType)
-      appendRows(idxName,
-        graft.operators.Dedup.embeddingPostings(existing, idCol, vecCol, p, t, dims))
-      repin(Lsh, name, config ++ Map("lsh_planes" -> p.toString,
-        "lsh_tables" -> t.toString, "lsh_radius" -> r.toString, "lsh_n" -> n.toString))
-      (p, t, r, n)
-    }
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (pairs, cleanup) =
-        graft.operators.Dedup.embeddingIncrementalNearDupsIndexed(
-          readStream(idxName), existing, df, idCol, vecCol, threshold,
-          planes, tables, radius, dims)
-      val flagged = pairs
-        .select(col("in_id").as(idCol)).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val dropped = df.join(flagged, Seq(idCol), "left_semi").count()
-        val survivors = df.join(flagged, Seq(idCol), "left_anti")
-        appendRows(name, survivors)
-        // committed survivor rows, re-read by epoch (see [[rowsAtEpoch]]
-        // — the postings append below invalidates `flagged`'s cache)
-        val survivorRows = rowsAtEpoch(name, epochOf(name))
-        // the index ingests the survivors' postings under the SAME epoch
-        // layout the probe used — shard-sized, no corpus work
-        appendRows(idxName, graft.operators.Dedup.embeddingPostings(
-          survivorRows.select(col(idCol), col(vecCol)), idCol, vecCol,
-          planes, tables, dims))
-        val ingested = df.count() - dropped
-        repin(Lsh, name, Map("lsh_n" -> (n0 + ingested).toString))
-        compactFamily(Lsh, name)
-        maintainOtherFamilies(name, survivorRows, mainEpoch, Lsh)
-        dropped
-      } finally { flagged.unpersist(); cleanup() }
-    } finally df.unpersist()
-    }
+    managedIngest(name, Lsh, df, idCol) {
+      // fast path: a live index (pinned with this call's config) whose
+      // pinned layout still matches the solver at the ledger count
+      Lsh.liveWith(catalog, name, epochOf(name), config).flatMap(d => lshPins(d.properties))
+        .collect { case (layout, n) if lshSolve(n, threshold) == layout => layout }
+        .getOrElse {
+          // bootstrap or layout-epoch rebuild: one signature pass over the
+          // standing corpus under the new layout
+          val corpus = existing
+          val n = corpus.count()
+          val layout @ (p, t, r) = lshSolve(n, threshold)
+          resetFamily(Lsh, name, corpus.schema(idCol).dataType)
+          appendRows(lshIndexName(name),
+            graft.operators.Dedup.embeddingPostings(corpus, idCol, vecCol, p, t, dims))
+          repin(Lsh, name, config ++ Map("lsh_planes" -> p.toString,
+            "lsh_tables" -> t.toString, "lsh_radius" -> r.toString, "lsh_n" -> n.toString))
+          layout
+        }
+    }(Some { case (planes, tables, radius) =>
+      graft.operators.Dedup.embeddingIncrementalNearDupsIndexed(
+        readStream(lshIndexName(name)), existing, df, idCol, vecCol, threshold,
+        planes, tables, radius, dims)
+    })
+  }
 
   /** The managed postings-index stream backing
     * [[appendRowsDedupedEmbedding]] for `name` — public so operational
@@ -710,12 +694,13 @@ final class Engine(
   // embedding dedup and ANN retrieval indexes share one lifecycle here —
   // store creation, epoch pins, compaction, cross-family maintenance,
   // forget pruning and drop. A stream can carry all three at once, so
-  // every managed ingest also routes its appended rows through the
-  // OTHER live families' standing layouts (shard-sized encode/posting
-  // passes), then re-pins them: all live indexes stay live across any
-  // managed ingest. Out-of-band writes (plain appendRows / truncate /
-  // deleteKeys) still invalidate everything — the epoch pins are the
-  // correctness backstop, maintenance is purely the fast path.
+  // every managed ingest ([[managedIngest]]) routes its appended rows
+  // through EVERY live family's standing layout, its own included
+  // (shard-sized encode/posting passes), then re-pins them: all live
+  // indexes stay live across any managed ingest. Out-of-band writes
+  // (plain appendRows / truncate / deleteKeys) still invalidate
+  // everything — the epoch pins are the correctness backstop,
+  // maintenance is purely the fast path.
   // ------------------------------------------------------------------
 
   private def propLong(p: Map[String, String], k: String): Option[Long] =
@@ -723,8 +708,7 @@ final class Engine(
 
   /** `name`'s write epoch. */
   private def epochOf(name: String): Long =
-    catalog.get(name).map(_.writeEpoch).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    catalog(name).writeEpoch
 
   /** Create `f`'s missing stores for stream `name`, empty, with their
     * schema and bucket layout (`idType`: the indexed id column's type);
@@ -754,13 +738,6 @@ final class Engine(
   /** Compact `f`'s per-row stores on the [[maybeCompactIndex]] cadence. */
   private def compactFamily(f: SiblingFamily, name: String): Unit =
     f.stores.filter(_.keyed).foreach(s => maybeCompactIndex(name + s.suffix))
-
-  /** Maintain every family but `owner` (whose managed ingest appended
-    * `appended` to `name`) — see [[maintainFamily]]. Caller holds
-    * streamLock(name). */
-  private def maintainOtherFamilies(name: String, appended: DataFrame,
-                                    preEpoch: Long, owner: SiblingFamily): Unit =
-    Families.filterNot(_ == owner).foreach(maintainFamily(_, name, appended, preEpoch))
 
   /** Ingest `appended` (rows a managed ingest just wrote to `name`) into
     * `f`'s index, when it was live over exactly the corpus the ingest
@@ -796,18 +773,28 @@ final class Engine(
       true
     }
 
+  /** The pinned LSH layout `(planes, tables, radius)` and its ledger
+    * count `lsh_n`; None when a pin is missing or not a number (a
+    * hand-edited catalog rebuilds rather than throws). */
+  private def lshPins(p: Map[String, String]): Option[((Int, Int, Int), Long)] =
+    for {
+      planes <- propLong(p, "lsh_planes")
+      tables <- propLong(p, "lsh_tables")
+      radius <- propLong(p, "lsh_radius")
+      n <- propLong(p, "lsh_n")
+    } yield ((planes.toInt, tables.toInt, radius.toInt), n)
+
   /** Sign-LSH: the appended rows' postings enter the standing (planes,
     * tables) layout UNLESS their count crosses a solver layout
-    * breakpoint — then the index is left stale and the next embedding
-    * ingest rebuilds under the new layout (geometric epochs, amortized
-    * O(1)/row, exactly the owning path's own policy). */
+    * breakpoint — then the index is left stale and rebuilt under the new
+    * layout, inline by an embedding-dedup ingest ([[managedIngest]] step
+    * 6), by the next one otherwise (geometric epochs, amortized O(1)/row).
+    * An empty append still writes, as MinHash's does: the postings epoch
+    * moves by one on every maintained ingest. */
   private def maintainLsh(name: String, appended: DataFrame,
                           p: Map[String, String]): Boolean =
     (for {
-      planes <- propLong(p, "lsh_planes").map(_.toInt)
-      tables <- propLong(p, "lsh_tables").map(_.toInt)
-      radius <- propLong(p, "lsh_radius").map(_.toInt)
-      n <- propLong(p, "lsh_n")
+      ((planes, tables, radius), n) <- lshPins(p)
       dims <- propLong(p, "lsh_dims").map(_.toInt)
       thr <- p.get("lsh_threshold")
         .flatMap(s => scala.util.Try(s.toDouble).toOption)
@@ -819,9 +806,8 @@ final class Engine(
         val shardN = shard.count()
         val newN = n + shardN
         lshSolve(newN, thr) == ((planes, tables, radius)) && {
-          if (shardN > 0)
-            appendRows(lshIndexName(name), graft.operators.Dedup.embeddingPostings(
-              shard, idC, vC, planes, tables, dims))
+          appendRows(lshIndexName(name), graft.operators.Dedup.embeddingPostings(
+            shard, idC, vC, planes, tables, dims))
           repin(Lsh, name, Map("lsh_n" -> newN.toString))
           compactFamily(Lsh, name)
           true
@@ -919,24 +905,23 @@ final class Engine(
     * match, within the AUTO-codebook growth cap. */
   private def annIndexLive(name: String, idCol: String, vecCol: String,
                            nCentroids: Int, m: Int, ksub: Int): Boolean =
-    Ann.live(catalog, name, epochOf(name), _ == idCol).exists { d =>
-      val p = d.properties
-      // the indexed COLUMNS are part of the config — an ensure over a
-      // different vector column must rebuild, not silently serve the
-      // other column's index
-      annConfig(idCol, vecCol, nCentroids, m, ksub).forall { case (k, v) =>
-        p.get(k).contains(v) } &&
+    // the indexed COLUMNS are part of the config — an ensure over a
+    // different vector column must rebuild, not silently serve the other
+    // column's index
+    Ann.liveWith(catalog, name, epochOf(name), annConfig(idCol, vecCol, nCentroids, m, ksub))
+      .exists { d =>
+        val p = d.properties
         // codebook-drift bound: [[appendRowsAnnIndexed]] grows the corpus
         // under FROZEN codebooks, so per-cell occupancy drifts off the
         // √n-ideal linearly with growth. Past `annGrowthCap`× the corpus
         // the codebook was trained at, the index is stale and the next
         // ensure retrains — the geometric-epoch amortization argument of
         // the LSH layout solver (rebuild cost O(1)/row amortized).
-        (nCentroids > 0 || { // explicit codebooks are the caller's choice
+        nCentroids > 0 || { // explicit codebooks are the caller's choice
           propLong(p, "ann_trained_n").zip(propLong(p, "ann_n")).exists {
             case (t, c) => c <= math.max(1L, t) * annGrowthCap }
-        })
-    }
+        }
+      }
 
   private def annConfig(idCol: String, vecCol: String, nCentroids: Int,
                         m: Int, ksub: Int): Map[String, String] = Map(
@@ -1434,30 +1419,15 @@ final class Engine(
     * standard IVF deployment shape (codebooks retrain rarely; the cell
     * layout drifts from the √n-ideal as the corpus grows, and the
     * operator forces a retrain by dropping the index or changing
-    * config). Epochs re-pin afterward so subsequent searches keep the
-    * fast path. */
+    * config). Every row is admitted ([[managedIngest]] with no probe);
+    * epochs re-pin afterward so subsequent searches keep the fast path,
+    * and a shard that leaves the index stale (an empty standing index,
+    * or growth past [[annGrowthCap]]) retrains it inside the call. */
   def appendRowsAnnIndexed(name: String, df: DataFrame, idCol: String,
                            vecCol: String, nCentroids: Int = 0,
                            m: Int = 8, ksub: Int = 16): Unit =
-    streamLock(name).synchronized {
-    ensureAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)
-    val preEpoch = epochOf(name)
-    appendRows(name, df)
-    // committed shard rows by epoch: cheaper than re-running a possibly
-    // expensive caller plan per maintenance pass, and immune to cache
-    // invalidation (see [[rowsAtEpoch]])
-    val appended = rowsAtEpoch(name, epochOf(name))
-    if (!maintainFamily(Ann, name, appended, preEpoch))
-      // left stale: the standing index was EMPTY (no codebook to encode
-      // under), or this shard crossed the AUTO growth cap — either way a
-      // retrain from the now-complete corpus is the right (and
-      // amortized-O(1)/row) move, paid here rather than by the next
-      // search
-      ensureAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)
-    // any OTHER live family (text/embedding dedup indexes) ingests this
-    // shard too
-    maintainOtherFamilies(name, appended, preEpoch, Ann)
-    }
+    managedIngest(name, Ann, df, idCol)(
+      ensureAnnIndex(name, idCol, vecCol, nCentroids, m, ksub))(None)
 
   /** Per-stream ingest mutex: [[write]] is read-epoch-then-write and
     * [[appendRowsDeduped]] is read-index-probe-then-write — two
@@ -1554,8 +1524,7 @@ final class Engine(
     * [[readStreamAsOf]]. `keys` must carry the stream's PK columns; any
     * other declared columns are stored as NULL on the marker row. */
   def deleteKeys(name: String, keys: DataFrame): Unit = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = catalog(name)
     val pk = d.schema.primaryKeyColumns
     require(pk.nonEmpty, s"stream '${d.name}' has no primary key — " +
       "tombstone deletes need change-stream (PK) semantics")
@@ -1625,8 +1594,7 @@ final class Engine(
 
   private def forgetRowsLocked(name: String,
                                pred: org.apache.spark.sql.Column): Long = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = catalog(name)
     // re-check under the stream lock: the entry check predates a
     // possibly long staged-build await, and activation takes no lock —
     // this shrinks the window to the rewrite itself
@@ -2187,8 +2155,7 @@ final class Engine(
   /** L5/S6: truncate — overwrite with an empty DataFrame of the same
     * schema (impl.py:259-275). */
   def truncate(name: String): Unit = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = catalog(name)
     writeEmpty(d)
   }
 
@@ -2218,8 +2185,7 @@ final class Engine(
     val lock = streamLock(name)
     lock.synchronized {
       // the def as of the lock: the commit puts it back verbatim
-      val d = catalog.get(name).getOrElse(
-        throw new IllegalArgumentException(s"stream '$name' not found"))
+      val d = catalog(name)
       // optional clustering: files then hold narrow value ranges, so
       // parquet min/max stats prune scans — sortBy for a single leading
       // dimension, zorderBy (Morton interleave) for multi-dimensional
@@ -2248,8 +2214,7 @@ final class Engine(
     val lock = streamLock(name)
     // same scan→swap race as compactStorage: hold the ingest lock
     lock.synchronized {
-      val d = catalog.get(name).getOrElse(
-        throw new IllegalArgumentException(s"stream '$name' not found"))
+      val d = catalog(name)
       val pk = d.schema.primaryKeyColumns
       require(pk.nonEmpty, s"stream '${d.name}' has no primary key — " +
         "vacuum folds change-stream history")
@@ -2270,8 +2235,7 @@ final class Engine(
     * state. Row count is a distributed count over the raw store; file
     * stats come from the filesystem. */
   def describeStream(name: String): StreamStats = {
-    val d = catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
+    val d = catalog(name)
     val dir = java.nio.file.Paths.get(catalog.dataPath(d.name))
     val (files, bytes) =
       if (java.nio.file.Files.isDirectory(dir)) {

@@ -63,6 +63,13 @@ private[engine] final case class SiblingFamily(prefix: String, stores: Seq[Sibli
         d.properties.get(mainKey).contains(main.toString) &&
         stores.forall(s => epoch(s).exists(e => d.properties.get(s.epochKey).contains(e.toString)))
     }
+
+  /** [[live]] for an index built with `config`: every entry is pinned as
+    * given, the indexed id column (`idColKey`) among them. */
+  def liveWith(catalog: Catalog, stream: String, main: Long,
+               config: Map[String, String]): Option[StreamDef] =
+    live(catalog, stream, main, config.get(idColKey).contains(_)).filter(d =>
+      config.forall { case (k, v) => d.properties.get(k).contains(v) })
 }
 
 /** The engine's three index families. Everything they share — liveness,

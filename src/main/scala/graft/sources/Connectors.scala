@@ -160,8 +160,7 @@ object Connectors {
   def bindSource(engine: Engine, name: String, source: DataFrame,
                  checkpoint: String,
                  startPosition: StartPosition = Earliest): StreamingQuery = {
-    val schema = engine.catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found")).schema
+    val schema = engine.catalog(name).schema
     val projected = source.select(schema.fields.collect {
       case PhysicalField(n, _) => col(n)
       case MetadataField(n, key, t) =>

@@ -55,12 +55,9 @@ final class StreamingEngine(val engine: Engine) {
   /** Streaming read of a source stream: file-source over the stream dir,
     * declared schema, computed columns + watermark applied. */
   def readStreamContinuous(name: String): DataFrame = {
-    val d = streamDef(name)
-    val struct = d.schema.toStruct
-      .add(engine.EpochCol, "long", nullable = false)
-      .add(engine.SeqCol, "long", nullable = false)
-      .add(engine.DeletedCol, "boolean", nullable = false)
-    val raw = spark.readStream.schema(struct).parquet(engine.catalog.dataPath(name))
+    val d = engine.catalog(name)
+    val raw = spark.readStream.schema(engine.storedStruct(d))
+      .parquet(engine.catalog.dataPath(name))
     val computed = d.schema.applyComputed(raw)
       .drop(engine.SeqCol, engine.EpochCol, engine.DeletedCol)
     d.schema.watermarks.headOption.flatMap(w =>
@@ -81,14 +78,10 @@ final class StreamingEngine(val engine: Engine) {
               .contains(f.name.last.toLowerCase) => f.name.last
       }).distinct
 
-  private def streamDef(name: String): graft.catalog.StreamDef =
-    engine.catalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"stream '$name' not found"))
-
   /** Build the continuous DataFrame for a model by running its pipeline
     * SQL over streaming views of its sources. */
   def continuousPlan(name: String): DataFrame = {
-    val d = streamDef(name)
+    val d = engine.catalog(name)
     // a graft TVF cannot resolve over streaming temp views (its builder
     // returns an analyzed BATCH plan) — activation handles TVF-shaped
     // models via the re-materialization path in startQuery, never
@@ -135,11 +128,7 @@ final class StreamingEngine(val engine: Engine) {
       val sd = engine.catalog.get(src).getOrElse(
         throw new IllegalArgumentException(
           s"source stream '$src' of TVF model '${d.name}' not found"))
-      val struct = sd.schema.toStruct
-        .add(engine.EpochCol, "long", nullable = false)
-        .add(engine.SeqCol, "long", nullable = false)
-        .add(engine.DeletedCol, "boolean", nullable = false)
-      spark.readStream.schema(struct)
+      spark.readStream.schema(engine.storedStruct(sd))
         .parquet(engine.catalog.dataPath(src))
         .select(lit(1L).as("tick"))
     }.reduce(_ unionByName _)
@@ -232,7 +221,7 @@ final class StreamingEngine(val engine: Engine) {
     * parsed for graft table functions, once per start. */
   private def run(name: String, trigger: Trigger): StreamingQuery = {
     require(!active.contains(name), s"pipeline '$name' already active")
-    val d = streamDef(name)
+    val d = engine.catalog(name)
     val tvfs = d.sql.toSeq.flatMap(graftTvfsIn)
     // a first start interrupted before its first batch was logged leaves
     // offsets/commits/state files under a checkpoint with no batch, and

@@ -532,6 +532,56 @@ class EngineSpec extends SparkSpec {
     assert(d2.properties("lsh_n").toLong == 4L)
   }
 
+  test("appendRowsDedupedEmbedding: survivors crossing a layout breakpoint leave the index live under the new layout") {
+    import spark.implicits._
+    val e = newEngine()
+    e.createStream("vbp", StreamSchema.fromStruct(
+      new org.apache.spark.sql.types.StructType()
+        .add("vec_id", "long", nullable = false)
+        .add("embedding", "array<float>")))
+    val thr = 0.9
+    def solve(n: Long) = graft.operators.Dedup.lshLayout(math.max(1L, n), thr,
+      targetOccupancy = 16, missTarget = 1e-6, probeRadius = 2, maxTables = 512)
+    // the solver's first layout breakpoint past 8 rows
+    val cross = (9L to 100000L).find(n => solve(n) != solve(n - 1)).get
+    // 16-dim vectors with hash-derived coordinates in [-1, 1]: no two are
+    // near; `jitter` shifts every coordinate of row `like`'s vector
+    def vecs(rows: Seq[(Long, Long)], jitter: Double = 0.0) =
+      rows.toDF("vec_id", "like").select(col("vec_id"),
+        org.apache.spark.sql.functions.expr("transform(sequence(0, 15), j -> CAST(" +
+          s"pmod(xxhash64(like, j), 2001) / 1000.0 - 1.0 + $jitter AS FLOAT))").as("embedding"))
+    def ingest(df: org.apache.spark.sql.DataFrame): Long =
+      e.appendRowsDedupedEmbedding("vbp", df, "vec_id", "embedding", threshold = thr, dims = 16)
+    val n0 = cross - 3
+    e.appendRows("vbp", vecs((0L until n0).map(i => (i, i))))
+    assert(ingest(vecs(Nil)) == 0L) // builds the index at n0
+    val idxName = e.lshIndexName("vbp")
+    assert(e.catalog.get(idxName).get.properties("lsh_n").toLong == n0)
+
+    // six novel survivors carry the corpus past the breakpoint
+    assert(ingest(vecs((n0 until n0 + 6).map(i => (i, i)))) == 0L)
+    val n1 = n0 + 6
+    val d1 = e.catalog.get(idxName).get
+    assert(SiblingIndex.Lsh.live(e.catalog, "vbp", e.catalog.get("vbp").get.writeEpoch,
+      _ == "vec_id").nonEmpty, "the owning index must be live after the ingest")
+    assert(d1.properties("lsh_n").toLong == n1)
+    assert((d1.properties("lsh_planes").toInt, d1.properties("lsh_tables").toInt,
+      d1.properties("lsh_radius").toInt) == solve(n1),
+      s"the pinned layout must be the solver's at lsh_n = $n1 (breakpoint $cross)")
+    assert(e.readStream(idxName).count() == n1 * solve(n1)._2)
+
+    // the next ingest probes the standing index (one postings append, no
+    // rebuild) and drops what the rebuild-on-next-ingest order dropped:
+    // near copies of an old row and of a row from the crossing shard
+    val idxEpoch = d1.writeEpoch
+    val next = vecs(Seq((900L, 1L), (901L, n0 + 2)), jitter = 0.01)
+      .unionByName(vecs(Seq((902L, 902L), (903L, 903L))))
+    assert(ingest(next) == 2L)
+    assert(e.catalog.get(idxName).get.writeEpoch == idxEpoch + 1,
+      "the next ingest must take the fast path")
+    assert(e.readStream("vbp").count() == n1 + 2)
+  }
+
   test("out-of-band writes to a deduped stream force an index rebuild") {
     import spark.implicits._
     val e = newEngine()

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, GraftInternal, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith, View}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -113,6 +114,14 @@ final class Engine(
   // refresh recompiled its whole plan. The engine adds no artifacts, so
   // there is nothing to isolate; clones inherit the setting.
   spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+  // Spark's default checkpoint file manager renames through Hadoop's
+  // FileContext, which without the native hadoop library forks a
+  // `readlink` process per rename (several per checkpoint file, each
+  // micro-batch). The engine's checkpoints are local files, where the
+  // FileSystem-based manager publishes the same way (temp file, then
+  // rename), keeps the .crc sidecars and renames in-process.
+  spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+    classOf[FileSystemBasedCheckpointFileManager].getName)
   Engine.registry.put(root, this) // engine-bound TVF resolution
 
   /** Hidden ingest-order columns. Epoch and within-write sequence are

@@ -209,8 +209,10 @@ object Multimodal {
     Png.encode(Png.Image(w, h, 3, px), filterType = (docId % 5).toInt)
   }
 
-  private case class PngMeta(format: String, width: Int, height: Int,
-                             channels: Int)
+  /** Sniffed image metadata, the `meta` struct of a media table. Public:
+    * Spark's generated encoder for a UDF result constructs it, and cannot
+    * reach a private class's constructor. */
+  case class PngMeta(format: String, width: Int, height: Int, channels: Int)
 
   /** Media table with GENUINE PNG payloads; metadata comes from
     * header-sniffing the bytes (not from the generator), so it is data

@@ -264,14 +264,15 @@ final class StreamingEngine(val engine: Engine) {
     }
   }
 
-  /** ST3: deactivate. */
+  /** ST3: deactivate. The continuous-use guard is released even when the
+    * model was dropped while active; only a def that still exists is
+    * marked inactive. */
   def deactivate(name: String): Unit =
     active.remove(name).foreach { q =>
-      q.stop()
-      val d = engine.catalog.get(name).get
-      engine.unregisterContinuous(name,
+      try q.stop()
+      finally engine.unregisterContinuous(name,
         registeredSources.remove(name).getOrElse(Nil))
-      engine.catalog.put(d.copy(active = false))
+      engine.catalog.get(name).foreach(d => engine.catalog.put(d.copy(active = false)))
     }
 
   def isActive(name: String): Boolean = active.get(name).exists(_.isActive)

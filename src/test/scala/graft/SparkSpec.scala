@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -36,5 +42,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     body
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** The command lines of the operating-system processes this JVM started
+    * while `body` ran (JFR `jdk.ProcessStart` events, recorded in-process). */
+  def processesDuring(body: => Unit): Seq[String] = {
+    val recording = new Recording()
+    val dump = Files.createTempFile("graft-spawns", ".jfr")
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      try body finally recording.stop()
+      recording.dump(dump)
+      RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+    } finally {
+      recording.close()
+      Files.deleteIfExists(dump)
+    }
   }
 }

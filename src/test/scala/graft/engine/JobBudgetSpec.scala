@@ -38,37 +38,62 @@ class JobBudgetSpec extends SparkSpec {
   private val ann = (e: Engine, df: DataFrame) =>
     e.appendRowsAnnIndexed("docs", df, "vec_id", "embedding")
 
-  /** A 30-row stream with `second`'s index live when given, then the
-    * owner's index live after one ingest of its own: the jobs of the
-    * owner's next ingest. */
-  private def jobs(owner: (Engine, DataFrame) => Any,
-                   second: Option[(Engine, DataFrame) => Any]): Long = {
+  /** The jobs of `op` on a 30-row stream `docs`, after `setup`. */
+  private def jobsOf(setup: Engine => Any)(op: Engine => Any): Long = {
     val e = new Engine(spark, tmpDir("graft-jobbudget"))
     try {
       e.createStream("docs", StreamSchema.fromStruct(fresh(0 until 1).schema))
       e.appendRows("docs", fresh(0 until 30))
-      if (second.contains(ann) || owner == ann)
-        assert(e.ensureAnnIndex("docs", "vec_id", "embedding"))
-      second.filterNot(_ == ann).foreach(_(e, fresh(100 until 102)))
-      owner(e, fresh(200 until 202))
+      setup(e)
       val p = new Probe.Profiler(spark)
-      try p.measure { owner(e, shard(300)); 0L }.jobs finally p.close()
+      try p.measure { op(e); 0L }.jobs finally p.close()
     } finally e.close()
   }
 
-  test("managed ingests stay within their job budgets, alone and beside a second live family") {
-    val cases = Seq(
-      ("append_deduped", minhash, None, 17L),
-      ("append_deduped + ann", minhash, Some(ann), 22L),
-      ("append_deduped_embedding", lsh, None, 18L),
-      ("append_deduped_embedding + minhash", lsh, Some(minhash), 20L),
-      ("append_ann_indexed", ann, None, 6L),
-      ("append_ann_indexed + lsh", ann, Some(lsh), 9L))
-    val over = cases.flatMap { case (name, owner, second, budget) =>
-      val n = jobs(owner, second)
+  private val annLive = (e: Engine) =>
+    assert(e.ensureAnnIndex("docs", "vec_id", "embedding"))
+
+  /** With `second`'s index live when given, then the owner's index live
+    * after one ingest of its own: the jobs of the owner's next ingest. */
+  private def jobs(owner: (Engine, DataFrame) => Any,
+                   second: Option[(Engine, DataFrame) => Any]): Long =
+    jobsOf { e =>
+      if (second.contains(ann) || owner == ann) annLive(e)
+      second.filterNot(_ == ann).foreach(_(e, fresh(100 until 102)))
+      owner(e, fresh(200 until 202))
+    }(owner(_, shard(300)))
+
+  /** Cases over (name, measured jobs, budget): fails naming every case
+    * over its budget. */
+  private def assertWithin(cases: Seq[(String, () => Long, Long)]): Unit = {
+    val over = cases.flatMap { case (name, measure, budget) =>
+      val n = measure()
       info(s"$name: $n jobs (budget $budget)")
       if (n > budget) Some(s"$name: $n jobs > $budget") else None
     }
     assert(over.isEmpty, over.mkString("; "))
+  }
+
+  test("managed ingests stay within their job budgets, alone and beside a second live family") {
+    assertWithin(Seq(
+      ("append_deduped", () => jobs(minhash, None), 17L),
+      ("append_deduped + ann", () => jobs(minhash, Some(ann)), 22L),
+      ("append_deduped_embedding", () => jobs(lsh, None), 18L),
+      ("append_deduped_embedding + minhash", () => jobs(lsh, Some(minhash)), 20L),
+      ("append_ann_indexed", () => jobs(ann, None), 6L),
+      ("append_ann_indexed + lsh", () => jobs(ann, Some(lsh)), 9L)))
+  }
+
+  test("index upkeep, indexed top-k and forgets stay within their job budgets") {
+    val forgotten = col("vec_id") % 4 === 0
+    assertWithin(Seq(
+      ("ensure_ann_index on a live index",
+        () => jobsOf(annLive)(_.ensureAnnIndex("docs", "vec_id", "embedding")), 0L),
+      ("ann_topk_indexed", () => jobsOf(annLive)(_.annTopKIndexed("docs", "vec_id",
+        "embedding", col("vec_id") < 3, k = 5).collect()), 4L),
+      ("forget_rows", () => jobsOf(_ => ())(_.forgetRows("docs", forgotten)), 4L),
+      ("forget_rows, ann-indexed", () => jobsOf(annLive)(_.forgetRows("docs", forgotten)), 13L),
+      ("forget_rows_cascade", () => jobsOf(_.createModel("kept", "SELECT vec_id, text FROM docs"))(
+        _.forgetRowsCascade("docs", forgotten)), 5L)))
   }
 }

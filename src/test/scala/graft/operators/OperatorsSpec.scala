@@ -262,6 +262,19 @@ class OperatorsSpec extends SparkSpec {
     assert(Png.resizeArea(split, 1, 1).pixels.toSeq == Seq[Byte](55, 55, 55))
   }
 
+  test("multimodal: the sniffed metadata struct encodes through generated code") {
+    // an encoder Spark cannot compile falls back to interpreted evaluation;
+    // codegen-only mode turns that silent fallback into a failure
+    val key = "spark.sql.codegen.factoryMode"
+    spark.conf.set(key, "CODEGEN_ONLY")
+    try {
+      val rows = Multimodal.resize(Multimodal.asPngTable(docs.limit(3)), 8, 8)
+        .select("meta").collect()
+      assert(rows.length == 3)
+      rows.foreach(r => assert(r.getStruct(0).getAs[Int]("width") == 8))
+    } finally spark.conf.unset(key)
+  }
+
   test("gopherFilter: rule boundaries and empty-text degenerate") {
     import spark.implicits._
     val d = Seq(

@@ -156,6 +156,32 @@ class StreamingEngineSpec extends SparkSpec {
     assert(e.preview("SELECT y FROM m").head.getLong(0) == 2L)
   }
 
+  test("deactivating a model dropped while active releases its rewrite guard") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val e = newEngine()
+    val se = new StreamingEngine(e)
+    e.createStream("s", StreamSchema(Seq(PhysicalField("x", FBigInt))))
+    e.appendRows("s", Seq(1L, 2L, 3L).toDF("x"))
+    e.createModel("m", "SELECT x * 2 AS y FROM s", ModelConfig(active = false))
+    e.createModel("n", "SELECT x FROM s WHERE x > 1", ModelConfig(active = false))
+    se.activate("m").processAllAvailable()
+    e.dropStream("m")
+    se.deactivate("m")
+    assert(!se.isActive("m") && !e.catalog.exists("m"))
+    assert(e.forgetRows("s", col("x") === 1L) == 1L,
+      "no guard entry may outlive the stopped query")
+
+    // deactivateAll stops every pipeline, past one whose model is gone
+    e.createModel("m", "SELECT x * 2 AS y FROM s", ModelConfig(active = false))
+    se.activate("m").processAllAvailable()
+    se.activate("n").processAllAvailable()
+    e.dropStream("m")
+    se.deactivateAll()
+    assert(se.activePipelines.isEmpty && !e.catalog.get("n").get.active)
+    assert(e.forgetRows("s", col("x") === 2L) == 1L)
+  }
+
   test("a TVF-shaped model activates as a micro-batch re-materialization loop (round 11)") {
     // VERDICT r10 item 5, upgraded from the fail-loud pin: activation
     // of a model whose SQL is a graft table function runs a source-tick
@@ -302,7 +328,11 @@ class StreamingEngineSpec extends SparkSpec {
     assert(ids("tail") == Seq(3L))
   }
 
-  test("a warm bounded refresh compiles no generated class") {
+  /** A source with two models over it, the filter `kept` and the PK
+    * aggregate `per_k`, run through three rounds: a parquet-backed shard
+    * appended, then both models caught up. `measure` wraps the third,
+    * warm round; the models' rows are checked after it. */
+  private def warmThirdRound[T](measure: (=> Unit) => T): (Engine, T) = {
     import spark.implicits._
     val e = newEngine()
     val se = new StreamingEngine(e)
@@ -313,22 +343,53 @@ class StreamingEngineSpec extends SparkSpec {
     e.createModel("per_k", "SELECT k, count(*) AS n, sum(v) AS total FROM src GROUP BY k",
       ModelConfig(primaryKey = Seq("k"), active = false))
     val shards = tmpDir("graft-shards")
-    // one round: a parquet-backed shard appended, both models caught up;
-    // neither a new streaming start nor a new write epoch may change the
-    // generated source or the classloader it is cached under
-    def round(i: Int): Long = {
-      Seq(("a", i.toLong), (s"k$i", 1L)).toDF("k", "v").write.parquet(s"$shards/$i")
-      compilesDuring {
-        e.appendRows("src", spark.read.parquet(s"$shards/$i"))
-        se.refreshAvailable("kept")
-        se.refreshAvailable("per_k")
-      }
+    def round(i: Int): Unit = {
+      e.appendRows("src", spark.read.parquet(s"$shards/$i"))
+      se.refreshAvailable("kept")
+      se.refreshAvailable("per_k")
     }
+    def shard(i: Int): Unit =
+      Seq(("a", i.toLong), (s"k$i", 1L)).toDF("k", "v").write.parquet(s"$shards/$i")
+    (1 to 3).foreach(shard)
     round(1); round(2)
-    assert(round(3) == 0L)
+    val measured = measure(round(3))
     assert(e.preview("SELECT v FROM kept ORDER BY v").map(_.getLong(0)) == Seq(2L, 3L))
     assert(e.preview("SELECT k, n, total FROM per_k ORDER BY k")
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))) ==
       Seq(("a", 3L, 6L), ("k1", 1L, 1L), ("k2", 1L, 1L), ("k3", 1L, 1L)))
+    (e, measured)
+  }
+
+  test("a warm bounded refresh compiles no generated class") {
+    // neither a new streaming start nor a new write epoch may change the
+    // generated source or the classloader it is cached under
+    val (_, compiles) = warmThirdRound(compilesDuring(_))
+    assert(compiles == 0L)
+  }
+
+  test("a warm bounded refresh forks no readlink on its checkpoint and stays within its chmod budget") {
+    // Without its native library, Hadoop's local FileContext forks a
+    // readlink per rename and its local file system a chmod per file or
+    // directory it creates with a permission. The engine's checkpoint
+    // file manager renames through the FileSystem API, which starts no
+    // process; the chmod per created file remains, pinned here (the
+    // count measured when it was set: lower it when a cut lands, never
+    // raise it)
+    val budget = 28
+    val (e, spawned) = warmThirdRound(processesDuring(_))
+    val checkpoints = s"${e.root}/_checkpoints"
+    val onCheckpoint = spawned.filter(_.contains(checkpoints))
+    info(s"${onCheckpoint.size} processes on the checkpoint (budget $budget): " +
+      onCheckpoint.groupBy(_.takeWhile(_ != ' ')).view.mapValues(_.size).toMap)
+    assert(!onCheckpoint.exists(_.startsWith("readlink ")), onCheckpoint.mkString("\n"))
+    assert(onCheckpoint.size <= budget, onCheckpoint.mkString("\n"))
+    // the logs are still written through Hadoop's checksummed local file
+    // system: every logged batch keeps its .crc sidecar
+    import java.nio.file.{Files, Paths}
+    for (model <- Seq("kept", "per_k"); log <- Seq("offsets", "commits"); batch <- 0 to 2) {
+      val dir = Paths.get(s"$checkpoints/${e.catalog.qualify(model)}/$log")
+      assert(Files.exists(dir.resolve(s"$batch")) && Files.exists(dir.resolve(s".$batch.crc")),
+        s"$model/$log/$batch")
+    }
   }
 }

@@ -84,6 +84,14 @@ final case class CommitEntry(target: StreamDef, staged: Boolean, fromEpoch: Long
   * Connections live under `_catalog/_connections/<name>.json` — a separate
   * resource type, as in the reference control plane.
   */
+object Catalog {
+  private[graft] def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      scala.util.Using.resource(Files.walk(p))(
+        _.iterator().asScala.toSeq.reverse.foreach(Files.delete))
+    }
+}
+
 final class Catalog(val root: String, val namespace: Option[String] = None) {
 
   private val mapper = new ObjectMapper()
@@ -148,7 +156,7 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
 
   def delete(name: String): Unit = {
     Files.deleteIfExists(defPath(name))
-    deleteRecursively(Paths.get(dataPath(name)))
+    Catalog.deleteRecursively(Paths.get(dataPath(name)))
   }
 
   /** Streams whose pipeline reads `name` as a source — the consumers that a
@@ -168,12 +176,6 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
     Files.deleteIfExists(defPath(oldName))
     put(d.copy(name = qNew))
   }
-
-  private[graft] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      scala.util.Using.resource(Files.walk(p))(
-        _.iterator().asScala.toSeq.reverse.foreach(Files.delete))
-    }
 
   // --- connection resources (client.py:433-501) ---
 
@@ -273,7 +275,7 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
   private def toNode(d: StreamDef): ObjectNode = {
     val node = mapper.createObjectNode()
     node.put("name", d.name)
-    node.set[ObjectNode]("schema", mapper.readTree(d.schema.canonicalJson).asInstanceOf[ObjectNode])
+    node.set[ObjectNode]("schema", d.schema.canonicalNode)
     d.sql.foreach(node.put("sql", _))
     val srcs = node.putArray("sources"); d.sources.foreach(srcs.add)
     node.put("active", d.active)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith,
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.catalog.{Catalog, ConnectionDef, StreamDef}
 import graft.functions.{EpochStamp, GraftFunctions}
@@ -70,6 +71,12 @@ object Engine {
     * construction; roots are temp-dir-unique in practice. */
   private[graft] val registry =
     new java.util.concurrent.ConcurrentHashMap[String, Engine]()
+
+  /** The owner of a running continuous query: a pipeline, by model
+    * name, or a source connection, by qualified name. */
+  private[graft] sealed trait QueryOwner { def name: String }
+  private[graft] final case class PipelineOwner(name: String) extends QueryOwner
+  private[graft] final case class ConnectionOwner(name: String) extends QueryOwner
 
   /** The engine bound to the session's [[RootConfKey]], for TVFs. */
   private[graft] def bound(spark: SparkSession): Engine = {
@@ -1462,24 +1469,28 @@ final class Engine(
     // later read replays the (pre-append) stage
     commits.repair(d.name)
     val epoch = d.writeEpoch + 1
-    val stamped = stampRows(d, df, epoch)
+    writeStore(d, stampRows(d, df, epoch), mode, catalog.dataPath(d.name),
+      bucketTableName(d.name))
+    catalog.put(d.copy(writeEpoch = epoch))
+    }
+
+  /** Write `rows` (the stored shape) for `d` at `path`. Bucketed storage
+    * must go through the session catalog — path-based parquet writes
+    * cannot carry a bucket spec, and a path-based read would discard it —
+    * so it is saved as external table `table` over `path`, and every
+    * other lifecycle op (rename, OPTIMIZE, VACUUM fallback paths) still
+    * sees the same files. */
+  private[engine] def writeStore(d: StreamDef, rows: DataFrame, mode: SaveMode,
+                                 path: String, table: => String): Unit =
     bucketSpec(d) match {
       case Some((n, cols)) =>
-        // bucketed storage must go through the session catalog —
-        // path-based parquet writes cannot carry a bucket spec, and a
-        // path-based read would discard it. External table at the
-        // stream's own data dir, so every other lifecycle op (rename,
-        // OPTIMIZE, VACUUM fallback paths) still sees the same files.
-        stamped.write.mode(mode)
+        rows.write.mode(mode)
           .bucketBy(n, cols.head, cols.tail: _*)
           .sortBy(cols.head, cols.tail: _*)
-          .option("path", catalog.dataPath(d.name))
+          .option("path", path)
           .format("parquet")
-          .saveAsTable(bucketTableName(d.name))
-      case None =>
-        stamped.write.mode(mode).parquet(catalog.dataPath(d.name))
-    }
-    catalog.put(d.copy(writeEpoch = epoch))
+          .saveAsTable(table)
+      case None => rows.write.mode(mode).parquet(path)
     }
 
   /** Align `df` to `d`'s declared schema and stamp the hidden ingest
@@ -1633,7 +1644,7 @@ final class Engine(
       spark.read.parquet(p)
     }
     try forgetRowsStaged(name, d, raw, hit, pkCols, preMain, materialize)
-    finally catalog.deleteRecursively(tmpDir)
+    finally Catalog.deleteRecursively(tmpDir)
   }
 
   private def forgetRowsStaged(name: String, d: StreamDef, raw: DataFrame,
@@ -2404,34 +2415,42 @@ final class Engine(
     catalog.putConnection(c.copy(active = true))
   }
 
-  /** Qualified stream name → names of ACTIVE continuous pipelines that
-    * read it as a file-source OR append into it as their sink —
-    * registered by [[graft.streaming.StreamingEngine]] activation so
-    * storage REWRITES can refuse loudly: the parquet file source tracks
-    * input files by name in its offset log, and a rewrite under a live
-    * reader re-emits every surviving row as brand-new input (or fails
-    * the scan on a vanished file). Plain appends are safe (new files
-    * only) and stay unguarded. */
-  private[graft] val continuousUse =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
+  /** Every running continuous query by owner, with the qualified streams
+    * it guards. A pipeline's query guards the streams it file-source-reads
+    * and its own sink, so storage REWRITES of them can refuse loudly: the
+    * parquet file source tracks input files by name in its offset log,
+    * and a rewrite under a live reader re-emits every surviving row as
+    * brand-new input (or fails the scan on a vanished file). Plain appends
+    * are safe (new files only) and stay unguarded, so a source
+    * connection's query, which only appends, guards nothing. */
+  private val liveQueries =
+    scala.collection.concurrent.TrieMap.empty[Engine.QueryOwner, (StreamingQuery, Set[String])]
 
-  private[graft] def registerContinuous(pipeline: String,
-                                        sources: Seq[String]): Unit =
-    (sources :+ pipeline).map(catalog.qualify).distinct.foreach { s =>
-      continuousUse.updateWith(s)(cur =>
-        Some(cur.getOrElse(Set.empty) + pipeline))
-    }
+  /** Track `q` as `owner`'s running query, guarding `guards`. */
+  private[graft] def trackQuery(owner: Engine.QueryOwner, q: StreamingQuery,
+                                guards: Seq[String]): Unit =
+    liveQueries.put(owner, (q, guards.map(catalog.qualify).toSet))
 
-  private[graft] def unregisterContinuous(pipeline: String,
-                                          sources: Seq[String]): Unit =
-    (sources :+ pipeline).map(catalog.qualify).distinct.foreach { s =>
-      continuousUse.updateWith(s)(_.map(_ - pipeline).filter(_.nonEmpty))
+  private[graft] def liveQuery(owner: Engine.QueryOwner): Option[StreamingQuery] =
+    liveQueries.get(owner).map(_._1)
+
+  private[graft] def queryOwners: Seq[Engine.QueryOwner] = liveQueries.keys.toSeq
+
+  /** Stop `owner`'s query and release its guards, even when the stop
+    * throws. Returns whether `owner` had a query. */
+  private[graft] def stopQuery(owner: Engine.QueryOwner): Boolean =
+    liveQueries.get(owner) match {
+      case Some(entry @ (q, _)) =>
+        try q.stop() finally liveQueries.remove(owner, entry)
+        true
+      case None => false
     }
 
   /** Refuse a storage rewrite of `name` while a continuous pipeline is
     * live on it — the actionable alternative is to deactivate first. */
   private def requireNoContinuousUse(name: String, op: String): Unit = {
-    val users = continuousUse.getOrElse(catalog.qualify(name), Set.empty)
+    val stream = catalog.qualify(name)
+    val users = liveQueries.collect { case (owner, (_, guards)) if guards(stream) => owner.name }
     if (users.nonEmpty) throw new IllegalStateException(
       s"cannot $op '$name': active continuous pipeline(s) " +
         s"${users.toSeq.sorted.mkString(", ")} read or write it — a " +
@@ -2439,15 +2458,10 @@ final class Engine(
         "surviving rows as new input; deactivate them first")
   }
 
-  /** Running source-bind queries per connection (data plane of an ACTIVE
-    * source connection). */
-  private val boundQueries =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.streaming.StreamingQuery]
-
   /** Activate a source connection's data plane: open its connector and
     * continuously append into its stream ([[graft.sources.Connectors.bindSource]]).
     * Marks the connection active; [[deactivateConnection]] stops the query. */
-  def bindConnection(name: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+  def bindConnection(name: String, checkpoint: String): StreamingQuery = {
     val c = requireConnection(name, "bind")
     require(c.connType == "source", s"connection '${c.name}' is not a source")
     val startPos =
@@ -2457,7 +2471,7 @@ final class Engine(
     val source = graft.sources.Connectors.open(spark,
       graft.sources.Connectors.ConnectorSpec(c.connector, c.properties, startPos))
     val q = graft.sources.Connectors.bindSource(this, c.stream, source, checkpoint, startPos)
-    boundQueries.put(catalog.qualify(name), q)
+    trackQuery(Engine.ConnectionOwner(catalog.qualify(name)), q, Nil)
     activateConnection(name)
     q
   }
@@ -2466,7 +2480,7 @@ final class Engine(
     * ingest query, if one is running. */
   def deactivateConnection(name: String): Unit = {
     val c = requireConnection(name, "deactivate")
-    boundQueries.remove(catalog.qualify(name)).foreach(q => if (q.isActive) q.stop())
+    stopQuery(Engine.ConnectionOwner(catalog.qualify(name)))
     catalog.putConnection(c.copy(active = false))
   }
 

@@ -55,7 +55,7 @@ object PreviewCursor {
   /** The deterministic (seeded) sleep schedule `exponential_backoff`
     * produces for a budget: `min(2^k + stagger_k, remaining)` until the
     * remaining budget drops under epsilon. Exposed pure so specs can
-    * assert the protocol shape; [[loop]] consumes the same arithmetic. */
+    * assert the protocol shape; [[loop]] sleeps through the same schedule. */
   def backoffSchedule(timeoutSec: Double, rng: java.util.Random): Seq[Double] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Double]
     var backoff = 1.0
@@ -77,25 +77,16 @@ object PreviewCursor {
   /** handler.py:29-42 + the `for _ in exponential_backoff(...)` loop:
     * `poll()` runs FIRST (the generator yields before sleeping), then
     * the cursor sleeps and re-polls until `poll()` reports completion
-    * (returns true) or the budget is spent. Returns (polls, timedOut). */
+    * (returns true) or the budget is spent — the last sleep of the
+    * schedule is not followed by a poll. Returns (polls, timedOut). */
   private def loop(poll: () => Boolean, timeoutSec: Double,
       rng: java.util.Random, sleep: Double => Unit): (Int, Boolean) = {
-    var backoff = 1.0
-    var total = 0.0
-    var polls = 0
-    var done = false
-    var budgetLeft = true
-    while (!done && budgetLeft) {
-      polls += 1
-      done = poll()
-      if (!done) {
-        val stagger = rng.nextInt(1000) / 1000.0
-        val t = math.min(backoff + stagger, timeoutSec - total)
-        sleep(t)
-        total += t
-        backoff *= 2
-        if (timeoutSec - total < Epsilon) budgetLeft = false
-      }
+    val sleeps = backoffSchedule(timeoutSec, rng).iterator
+    var polls = 1
+    var done = poll()
+    while (!done && sleeps.hasNext) {
+      sleep(sleeps.next())
+      if (sleeps.hasNext) { polls += 1; done = poll() }
     }
     (polls, !done)
   }
@@ -117,6 +108,24 @@ object PreviewCursor {
     (extra, stillRunning)
   }
 
+  /** The protocol around one poll rule: [[loop]], then on budget
+    * exhaustion a [[finalDrain]] and, if the pager is still yielding,
+    * `cancel`; the fake test row is seeded when `rows` is empty. */
+  private def drive(poll: () => Boolean, cancel: () => Unit, rows: () => Seq[Row],
+      columns: Seq[String], timeoutSec: Double, rng: java.util.Random,
+      sleep: Double => Unit): Result = {
+    var (polls, timedOut) = loop(poll, timeoutSec, rng, sleep)
+    if (timedOut) {
+      val (extra, still) = finalDrain(poll)
+      polls += extra
+      timedOut = still
+      if (timedOut) cancel()
+    }
+    val out = rows()
+    if (out.isEmpty) Result(Seq(fakeRow), FakeColumns, polls, timedOut, seededFake = true)
+    else Result(out, columns, polls, timedOut, seededFake = false)
+  }
+
   /** Poll loop for an APPEND-stream preview: extend per page, stop on
     * end-of-pages or budget exhaustion (keeping what accumulated, like
     * the reference — after a final drain of anything the job produced
@@ -130,15 +139,7 @@ object PreviewCursor {
       case Some(page) => acc ++= page; false
       case None => true
     }
-    var (polls, timedOut) = loop(poll, timeoutSec, rng, sleep)
-    if (timedOut) {
-      val (extra, still) = finalDrain(poll)
-      polls += extra
-      timedOut = still
-      if (timedOut) pager.cancel()
-    }
-    if (acc.isEmpty) Result(Seq(fakeRow), FakeColumns, polls, timedOut, seededFake = true)
-    else Result(acc.toSeq, columns, polls, timedOut, seededFake = false)
+    drive(poll, () => pager.cancel(), () => acc.toSeq, columns, timeoutSec, rng, sleep)
   }
 
   /** Poll loop for a CHANGE-stream preview: each non-empty page
@@ -154,14 +155,6 @@ object PreviewCursor {
         false
       case None => true
     }
-    var (polls, timedOut) = loop(poll, timeoutSec, rng, sleep)
-    if (timedOut) {
-      val (extra, still) = finalDrain(poll)
-      polls += extra
-      timedOut = still
-      if (timedOut) pager.cancel()
-    }
-    if (state.isEmpty) Result(Seq(fakeRow), FakeColumns, polls, timedOut, seededFake = true)
-    else Result(state, columns, polls, timedOut, seededFake = false)
+    drive(poll, () => pager.cancel(), () => state, columns, timeoutSec, rng, sleep)
   }
 }

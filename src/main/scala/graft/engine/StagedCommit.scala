@@ -6,7 +6,7 @@ import java.util.concurrent.{Callable, ExecutionException, LinkedBlockingQueue,
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-import graft.catalog.{CommitEntry, StreamDef}
+import graft.catalog.{Catalog, CommitEntry, StreamDef}
 
 object StagedCommit {
   /** [[StagedCommit.hook]] phases. */
@@ -69,21 +69,11 @@ private[graft] final class StagedCommit(engine: Engine) {
     * spec intact. */
   def stage(d: StreamDef, rows: DataFrame): Unit = {
     hook(Stage, d.name)
-    val tmp = stageDir(d.name).toString
-    engine.bucketSpec(d) match {
-      case Some((nb, cols)) =>
-        val stageTable = engine.bucketTableName(d.name) + "_stage"
-        try rows.write.mode(SaveMode.Overwrite)
-          .bucketBy(nb, cols.head, cols.tail: _*)
-          .sortBy(cols.head, cols.tail: _*)
-          .option("path", tmp)
-          .format("parquet")
-          .saveAsTable(stageTable)
-        // external table: dropping the staging entry keeps the files
-        finally engine.spark.sql(s"DROP TABLE IF EXISTS `$stageTable`")
-      case None =>
-        rows.write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
+    val stageTable = engine.bucketTableName(d.name) + "_stage"
+    try engine.writeStore(d, rows, SaveMode.Overwrite, stageDir(d.name).toString, stageTable)
+    // external table: dropping the staging entry keeps the files
+    finally if (engine.bucketSpec(d).isDefined)
+      engine.spark.sql(s"DROP TABLE IF EXISTS `$stageTable`")
   }
 
   /** A pure physical rewrite of one store (OPTIMIZE, VACUUM): stage
@@ -128,7 +118,7 @@ private[graft] final class StagedCommit(engine: Engine) {
         }
       }
     } finally {
-      names.filterNot(logged).foreach(n => catalog.deleteRecursively(stageDir(n)))
+      names.filterNot(logged).foreach(n => Catalog.deleteRecursively(stageDir(n)))
       synchronized { names.foreach(inFlight.remove); notifyAll() }
     }
   }
@@ -149,7 +139,7 @@ private[graft] final class StagedCommit(engine: Engine) {
       .filter(_._2.exists(e => names.contains(e.target.name)))
       .foreach { case (id, entries) => apply(id, entries) }
     names.foreach { n =>
-      catalog.deleteRecursively(stageDir(n)); catalog.deleteRecursively(oldDir(n))
+      Catalog.deleteRecursively(stageDir(n)); Catalog.deleteRecursively(oldDir(n))
     }
   }
 
@@ -167,7 +157,7 @@ private[graft] final class StagedCommit(engine: Engine) {
           c.writeEpoch == from || c.writeEpoch == t.writeEpoch))
         catalog.put(t)
     }
-    entries.foreach(e => catalog.deleteRecursively(oldDir(e.target.name)))
+    entries.foreach(e => Catalog.deleteRecursively(oldDir(e.target.name)))
     catalog.deleteManifest(id)
   }
 

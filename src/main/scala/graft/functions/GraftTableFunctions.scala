@@ -62,44 +62,30 @@ object GraftTableFunctions {
   // numeric/boolean knob arguments: absent → default; explicitly NULL →
   // error (ADVICE r10 item 4: `semdedup('t','id','v', NULL)` silently
   // ran at the default threshold)
-  private def litDouble(args: Seq[Expression], i: Int, fn: String,
-                        what: String, default: Double): Double =
+  private def litKnob[T](args: Seq[Expression], i: Int, fn: String, what: String,
+                         default: T, kind: String)(parse: String => T): T =
     args.lift(i) match {
       case None => default
       case Some(e) if e.foldable =>
-        Option(e.eval()).map(_.toString.toDouble).getOrElse(
+        Option(e.eval()).map(v => parse(v.toString)).getOrElse(
           throw new IllegalArgumentException(
             s"$fn: $what (argument ${i + 1}) must not be NULL — omit it " +
               s"for the default ($default)"))
       case Some(other) => throw new IllegalArgumentException(
-        s"$fn: $what (argument ${i + 1}) must be a numeric literal, got $other")
+        s"$fn: $what (argument ${i + 1}) must be $kind literal, got $other")
     }
+
+  private def litDouble(args: Seq[Expression], i: Int, fn: String,
+                        what: String, default: Double): Double =
+    litKnob(args, i, fn, what, default, "a numeric")(_.toDouble)
 
   private def litInt(args: Seq[Expression], i: Int, fn: String,
                      what: String, default: Int): Int =
-    args.lift(i) match {
-      case None => default
-      case Some(e) if e.foldable =>
-        Option(e.eval()).map(_.toString.toDouble.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"$fn: $what (argument ${i + 1}) must not be NULL — omit it " +
-              s"for the default ($default)"))
-      case Some(other) => throw new IllegalArgumentException(
-        s"$fn: $what (argument ${i + 1}) must be an integer literal, got $other")
-    }
+    litKnob(args, i, fn, what, default, "an integer")(_.toDouble.toInt)
 
   private def litBoolean(args: Seq[Expression], i: Int, fn: String,
                          what: String, default: Boolean): Boolean =
-    args.lift(i) match {
-      case None => default
-      case Some(e) if e.foldable =>
-        Option(e.eval()).map(_.toString.toBoolean).getOrElse(
-          throw new IllegalArgumentException(
-            s"$fn: $what (argument ${i + 1}) must not be NULL — omit it " +
-              s"for the default ($default)"))
-      case Some(other) => throw new IllegalArgumentException(
-        s"$fn: $what (argument ${i + 1}) must be a boolean literal, got $other")
-    }
+    litKnob(args, i, fn, what, default, "a boolean")(_.toBoolean)
 
   private def table(name: String) = SparkSession.active.table(name)
 

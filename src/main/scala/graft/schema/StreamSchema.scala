@@ -1,5 +1,7 @@
 package graft.schema
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -96,27 +98,27 @@ final case class StreamSchema(
     }
 
   /** Canonical JSON used for hashing/diffing (reference SchemaV2.__hash__,
-    * schema.py:143-145 hashes the dict dump). Stable field order. */
-  def canonicalJson: String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c => c.toString
+    * schema.py:143-145 hashes the dict dump). Stable field order; the
+    * catalog stores this node as the def's schema. */
+  def canonicalNode: ObjectNode = {
+    val node = StreamSchema.mapper.createObjectNode()
+    val fs = node.putArray("fields")
+    fields.foreach { f =>
+      val o = fs.addObject().put("kind", f.kind).put("name", f.name)
+      f match {
+        case PhysicalField(_, t) => o.put("type", t.render)
+        case MetadataField(_, k, t) => o.put("key", k).put("type", t.render)
+        case ComputedField(_, e) => o.put("expression", e)
+      }
     }
-    val fs = fields.map {
-      case PhysicalField(n, t) =>
-        s"""{"kind":"physical","name":"${esc(n)}","type":"${esc(t.render)}"}"""
-      case MetadataField(n, k, t) =>
-        s"""{"kind":"metadata","name":"${esc(n)}","key":"${esc(k)}","type":"${esc(t.render)}"}"""
-      case ComputedField(n, e) =>
-        s"""{"kind":"computed","name":"${esc(n)}","expression":"${esc(e)}"}"""
-    }.mkString("[", ",", "]")
-    val ws = watermarks.map(w =>
-      s"""{"name":"${esc(w.name)}","expression":"${esc(w.expression)}"}""").mkString("[", ",", "]")
-    val pk = primaryKey.map(k => s""""${esc(k)}"""").mkString("[", ",", "]")
-    s"""{"fields":$fs,"watermarks":$ws,"constraints":{"primary_key":$pk}}"""
+    val ws = node.putArray("watermarks")
+    watermarks.foreach(w => ws.addObject().put("name", w.name).put("expression", w.expression))
+    val pk = node.putObject("constraints").putArray("primary_key")
+    primaryKey.foreach(pk.add)
+    node
   }
+
+  def canonicalJson: String = StreamSchema.mapper.writeValueAsString(canonicalNode)
 
   def contentHash: String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -125,6 +127,8 @@ final case class StreamSchema(
 }
 
 object StreamSchema {
+  private val mapper = new ObjectMapper()
+
   /** Infer a StreamSchema from a Spark schema (the S7 schema-from-SQL path:
     * `spark.sql(select).schema` analyzed lazily, then rendered as Flink
     * types — reference POST /pipelines/outputStream, client.py:292-297). */

@@ -150,11 +150,13 @@ object Connectors {
     * their declared type — and continuously append — the analog of a
     * source connection feeding a stream (client.py:433-501).
     *
-    * With `startPosition = Latest` and no prior checkpoint, a fast-forward
-    * AvailableNow pass first commits offsets past all current contents
-    * (discarding the rows), so the returned query only ingests data that
-    * arrives after binding — Kafka `startingOffsets=latest` semantics for
-    * sources that lack a native skip-existing switch.
+    * The query starts through [[graft.streaming.QueryRunner.start]], so
+    * `checkpoint` belongs to it: with no logged batch there it is cleared
+    * first, and with `startPosition = Latest` a fast-forward AvailableNow
+    * pass then commits offsets past all current contents (discarding the
+    * rows), so the returned query only ingests data that arrives after
+    * binding — Kafka `startingOffsets=latest` semantics for sources that
+    * lack a native skip-existing switch.
     *
     * Returns the running query. */
   def bindSource(engine: Engine, name: String, source: DataFrame,
@@ -166,15 +168,11 @@ object Connectors {
       case MetadataField(n, key, t) =>
         metadataColumn(source, key).cast(t.toSpark).as(n)
     }: _*)
-    def start(trigger: Option[Trigger], sink: (DataFrame, Long) => Unit) = {
-      val w = projected.writeStream.option("checkpointLocation", checkpoint)
-      trigger.fold(w)(w.trigger).foreachBatch(sink).start()
-    }
-    if (startPosition == Latest && !hasCommittedOffsets(checkpoint)) {
-      val ff = start(Some(Trigger.AvailableNow()), (_, _) => ())
-      ff.awaitTermination()
-    }
-    start(None, (batch, _) => engine.appendRows(name, batch))
+    // ProcessingTime(0): Spark's default trigger, a batch as soon as the
+    // previous one ends
+    graft.streaming.QueryRunner.start(projected, checkpoint, "append",
+      Trigger.ProcessingTime(0L), skipExisting = startPosition == Latest)(
+      (batch, _) => engine.appendRows(name, batch))
   }
 
   /** "No prior checkpoint" means no logged batch — the checkpoint

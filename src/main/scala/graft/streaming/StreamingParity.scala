@@ -26,7 +26,7 @@ import graft.Tables
   * oracle already certified — the same differential-testing contract, with
   * the micro-batch engine in the DuckDB seat.
   *
-  * Execution-mode mapping (mirrors [[StreamingEngine.startQuery]]):
+  * Execution-mode mapping (mirrors StreamingEngine.queryPlan):
   *   - aggregating plans run in `complete` mode — every trigger re-emits
   *     the full result, so the LAST micro-batch is the answer (the
   *     retract-stream "materialized view" reading, handler.py:79-94);
@@ -92,22 +92,15 @@ object StreamingParity {
 
     val batches = mutable.ArrayBuffer.empty[(Long, Array[Row])]
     val ckpt = java.nio.file.Files.createTempDirectory("graft-parity").toString
-    val q = ds.writeStream
-      .outputMode(if (aggregating) "complete" else "append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val rows = b.collect()
-        batches.synchronized { batches += ((id, rows)) }
-        if (batchCount != null) batchCount.incrementAndGet()
-        ()
-      }
-      .start()
-    try {
-      if (!q.awaitTermination(timeoutMs))
-        throw new RuntimeException(
-          s"streaming parity run did not finish in ${timeoutMs}ms")
-    } finally if (q.isActive) q.stop()
+    val q = QueryRunner.start(ds, ckpt, if (aggregating) "complete" else "append",
+        Trigger.AvailableNow(), skipExisting = false) { (b: DataFrame, id: Long) =>
+      val rows = b.collect()
+      batches.synchronized { batches += ((id, rows)) }
+      if (batchCount != null) batchCount.incrementAndGet()
+      ()
+    }
+    QueryRunner.awaitBounded(q, timeoutMs)(
+      s"streaming parity run did not finish in ${timeoutMs}ms")
 
     val rows = batches.synchronized {
       val inOrder = batches.sortBy(_._1)
@@ -162,23 +155,16 @@ object StreamingParity {
     engine.createStream(stream,
       graft.schema.StreamSchema.fromStruct(keyed.schema, primaryKey = pk))
     val ckpt = java.nio.file.Files.createTempDirectory("graft-upd").toString
-    val q = keyed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        // the engine's writer stamps (epoch, seq) exactly as batch writes
-        // do, so the read-side fold needs no streaming-specific case
-        engine.appendRows(stream, b)
-        if (batchCount != null) batchCount.incrementAndGet()
-        ()
-      }
-      .start()
-    try {
-      if (!q.awaitTermination(timeoutMs))
-        throw new RuntimeException(
-          s"update-mode parity run did not finish in ${timeoutMs}ms")
-    } finally if (q.isActive) q.stop()
+    val q = QueryRunner.start(keyed, ckpt, "update", Trigger.AvailableNow(),
+        skipExisting = false) { (b: DataFrame, _: Long) =>
+      // the engine's writer stamps (epoch, seq) exactly as batch writes
+      // do, so the read-side fold needs no streaming-specific case
+      engine.appendRows(stream, b)
+      if (batchCount != null) batchCount.incrementAndGet()
+      ()
+    }
+    QueryRunner.awaitBounded(q, timeoutMs)(
+      s"update-mode parity run did not finish in ${timeoutMs}ms")
     val out = engine.readStream(stream).drop(GlobalKey)
     (out.schema, out.collect().toSeq)
   }

@@ -64,6 +64,37 @@ class StreamSchemaSpec extends AnyFunSuite {
       same.copy(fields = same.fields.tail).contentHash)
   }
 
+  test("control characters in expressions survive a catalog round trip") {
+    val expr = "CASE WHEN name = '\t' THEN 1\r\nELSE 0 END"
+    val wm = "`ktime` -\tINTERVAL '1' SECOND\r"
+    val d = graft.catalog.StreamDef("ctl", StreamSchema(
+      fields = Seq(PhysicalField("name", FString),
+        PhysicalField("ktime", FTimestampLtz(3)),
+        ComputedField("is_tab", expr)),
+      watermarks = Seq(Watermark("ktime", wm))))
+    val cat = new graft.catalog.Catalog(
+      java.nio.file.Files.createTempDirectory("graft-ctl").toString)
+    cat.put(d)
+    val back = cat("ctl")
+    assert(back.schema == d.schema)
+    assert(back.specHash == d.specHash)
+  }
+
+  test("the canonical form of a storable def is unchanged") {
+    // quotes, backslashes, newlines and non-ASCII text: everything the
+    // catalog could already store keeps its spec hash
+    val d = graft.catalog.StreamDef("fixed", StreamSchema(
+      fields = Seq(PhysicalField("id", FNotNull(FBigInt)),
+        PhysicalField("na\"me", FString),
+        MetadataField("ktime", "timestamp", FTimestampLtz(3)),
+        ComputedField("c", "concat(`na\"me`, '\\', '\n', 'é→')")),
+      watermarks = Seq(Watermark("ktime", "`ktime` - INTERVAL '0.001' SECOND")),
+      primaryKey = Seq("id")),
+      sql = Some("SELECT 1"), sources = Seq("src"),
+      properties = Map("start_position.src" -> "latest"))
+    assert(d.specHash == "0729c30e83d64fd26564544ca23682955eaa537bb2262e626d219b897720230f")
+  }
+
   test("fromStruct renders nullability as NOT NULL") {
     val st = StructType(Seq(
       StructField("a", IntegerType, nullable = false),

@@ -95,6 +95,48 @@ class ConnectorsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a bind interrupted before its first batch was logged restarts from a clean checkpoint") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val dir = tmpDir("interruptedsrc")
+    Seq((1L, "old"), (2L, "old")).toDF("id", "v").write.parquet(s"$dir/data")
+    val e = new Engine(spark, tmpDir("graft-conn-interrupted"))
+    def openSrc() = Connectors.open(spark, Connectors.ConnectorSpec("file",
+      Map("path" -> s"$dir/data", "schema" -> "id BIGINT, v STRING")))
+    // a first start stopped inside its offsets write: the write's temp
+    // file is left in offsets/ and no batch id is logged
+    def plantInterruptedStart(): String = {
+      val ckpt = tmpDir("ckpt-interrupted")
+      val offsets = Files.createDirectories(Paths.get(ckpt, "offsets"))
+      Files.createDirectories(Paths.get(ckpt, "commits"))
+      Files.writeString(offsets.resolve(s".0.${java.util.UUID.randomUUID}.tmp"), "v1\n")
+      assert(!Connectors.hasCommittedOffsets(ckpt))
+      ckpt
+    }
+    def ids(stream: String): Seq[Long] =
+      e.readStream(stream).select("id").as[Long].collect().toSeq.sorted
+
+    e.createStream("replayed", StreamSchema(Seq(
+      PhysicalField("id", FBigInt), PhysicalField("v", FString))))
+    val q = Connectors.bindSource(e, "replayed", openSrc(), plantInterruptedStart())
+    try {
+      q.processAllAvailable()
+      assert(ids("replayed") == Seq(1L, 2L), "earliest ingests every file present")
+    } finally q.stop()
+
+    e.createStream("tailed", StreamSchema(Seq(
+      PhysicalField("id", FBigInt), PhysicalField("v", FString))))
+    val tail = Connectors.bindSource(e, "tailed", openSrc(), plantInterruptedStart(),
+      startPosition = Connectors.Latest)
+    try {
+      tail.processAllAvailable()
+      assert(ids("tailed").isEmpty, "latest must skip the files present at first bind")
+      Seq((3L, "new")).toDF("id", "v").write.mode("append").parquet(s"$dir/data")
+      tail.processAllAvailable()
+      assert(ids("tailed") == Seq(3L))
+    } finally tail.stop()
+  }
+
   test("unsupported / invalid connectors error clearly") {
     intercept[IllegalArgumentException](
       Connectors.open(spark, Connectors.ConnectorSpec("rest")))

@@ -705,7 +705,7 @@ object Queries {
   }
 
   /** Union-free Jaccard (`i / (|a|+|b|-i)`) — the same integer arithmetic
-    * as [[operators.Dedup.jaccard]], so doubles match bit-for-bit.
+    * as `Dedup.jaccardSorted`, so doubles match bit-for-bit.
     *
     * Formulated as a GRAM EQUI-JOIN, not an all-pairs `list_intersect`
     * self-join: shingle sets are distinct per doc, so counting matching

@@ -77,16 +77,6 @@ object Dedup {
     }), 1)
   }
 
-  /** Exact Jaccard similarity of two distinct-element array columns,
-    * union-free: `|A∩B| / (|A| + |B| − |A∩B|)` — one hash-set probe pass
-    * per pair instead of two (the pair-verify joins are quadratic; the
-    * per-pair kernel cost is what shows up at scale). Integer arithmetic,
-    * so the DuckDB oracle (same formula) matches bit-for-bit. */
-  def jaccard(a: Column, b: Column): Column = {
-    val ni = size(array_intersect(a, b))
-    ni.cast("double") / (size(a) + size(b) - ni).cast("double")
-  }
-
   /** Sorted distinct xxhash64 values of an array of shingles — pair
     * verification runs a two-pointer merge over long arrays
     * ([[graft.functions.SortedIntersectCount]]) instead of per-pair
@@ -97,10 +87,96 @@ object Dedup {
   private def hashedShingles(sh: Column): Column =
     array_sort(array_distinct(transform(sh, s => xxhash64(s))))
 
-  /** Union-free Jaccard over pre-sorted distinct hash arrays. */
+  /** Union-free Jaccard over pre-sorted distinct hash arrays:
+    * `|A∩B| / (|A| + |B| − |A∩B|)` in integer arithmetic, so the DuckDB
+    * oracle (same formula) matches bit-for-bit. */
   private def jaccardSorted(a: Column, b: Column): Column = {
     val ni = call_function("sorted_intersect_count", a, b)
     ni.cast("double") / (size(a) + size(b) - ni).cast("double")
+  }
+
+  /** The shingle-set frame every set-similarity operator starts from:
+    * `(idAs, setAs)` with each document's sorted distinct shingle hashes
+    * ([[hashedShingles]]); documents shorter than `n` words (empty sets)
+    * are dropped. Registers the graft kernels the callers' plans use. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int,
+                          idAs: String = "id", setAs: String = "sh"): DataFrame = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    df.select(col(idCol).as(idAs), hashedShingles(shingles(col(textCol), n)).as(setAs))
+      .filter(size(col(setAs)) > 0)
+  }
+
+  /** One MinHash-LSH signature pass: the persisted `(idAs, hs, mh)` frame
+    * (shingle set + `numHashes` minhashes from the fused codegen'd
+    * [[graft.functions.MinHashes]]) and its `(idAs, band, bkey)` band
+    * postings, one row per document per band, the band key
+    * `xxhash64(band, slice)` over that band's `numHashes / bands` rows.
+    * The signature frame feeds both the band join and the verify, so it
+    * is persisted: unpersisted, the interpreted-HOF prep pipeline ran ~4×
+    * (the round-1 local[32] bench collapse, 92 s → ~4 s). */
+  private def minhashBands(df: DataFrame, idCol: String, textCol: String,
+                           shingleN: Int, numHashes: Int, bands: Int,
+                           idAs: String): (DataFrame, DataFrame) = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    val r = numHashes / bands
+    val sigs = shingleSets(df, idCol, textCol, shingleN, idAs, "hs")
+      .withColumn("mh", call_function("minhashes", col("hs"), lit(numHashes)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // band keys only travel through the candidate join — the shingle
+    // arrays are re-joined afterwards (candidates are rare; shipping the
+    // arrays ×bands through the shuffle is the expensive wrong plan)
+    val banded = sigs.select(col(idAs),
+      posexplode(expr(
+        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(b, slice(mh, b * $r + 1, $r)))"))
+        .as(Seq("band", "bkey")))
+    (sigs, banded)
+  }
+
+  /** Prefix length of the AllPairs/PPJoin filters over a `len` column:
+    * `|s| − ⌈t·|s|⌉ + 1`, with a 1e-9 guard so rounding can only admit
+    * an extra candidate (verified away), never drop a qualifying pair. */
+  private def prefixLen(threshold: Double): Column =
+    (col("len") - ceil(lit(threshold) * col("len").cast("double") - lit(1e-9)) + 1)
+      .cast("int")
+
+  /** The rarity order of the prefix filters over an `(id, sh)` shingle-set
+    * frame. Explodes it once to `(id, len, tok)` and numbers each
+    * document's tokens from 1 as `rankAs`, by ascending corpus document
+    * frequency, ties by token (the canonical AllPairs order: prefixes hold
+    * each document's RAREST tokens, so per-token join buckets stay tiny).
+    * `ranked` picks the exploded rows that get a rank (all by default;
+    * the df counts always cover the whole frame). All shuffles are
+    * equi-keyed (tok, tok, id).
+    *
+    * @return (exploded `(id, len, tok)` rows, ranked rows) */
+  private def rarityRanked(sets: DataFrame, rankAs: String,
+                           ranked: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
+    val ex = sets.select(col("id"), size(col("sh")).as("len"),
+      explode(col("sh")).as("tok"))
+    val dfMap = ex.groupBy("tok").agg(count(lit(1)).as("df"))
+    val byRarity = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(col("df").asc, col("tok").asc)
+    (ex, ranked(ex).join(dfMap.hint("merge"), "tok")
+      .withColumn(rankAs, row_number().over(byRarity)))
+  }
+
+  /** The exact verify: candidate `pairs` (`keyA`, `keyB`) re-join both
+    * sides' sorted sets, as `<set>_a` from `a` and `<set>_b` from `b`
+    * (each an `(id, set)` frame, or one already keyed by its side's key),
+    * score them, keep pairs scoring ≥ `threshold` when one is given, and
+    * return `(keyA, keyB, scoreAs)`. */
+  private def verifySets(pairs: DataFrame, keyA: String, keyB: String,
+                         a: DataFrame, b: DataFrame, set: String,
+                         threshold: Option[Double], scoreAs: String = "jaccard",
+                         score: (Column, Column) => Column = jaccardSorted): DataFrame = {
+    def side(f: DataFrame, key: String, suffix: String) =
+      f.select(if (f.columns.contains(key)) col(key) else col("id").as(key),
+        col(set).as(s"${set}_$suffix"))
+    val scored = pairs.join(side(a, keyA, "a"), keyA).join(side(b, keyB, "b"), keyB)
+      .withColumn(scoreAs, score(col(s"${set}_a"), col(s"${set}_b")))
+    threshold.fold(scored)(t => scored.filter(col(scoreAs) >= t))
+      .select(keyA, keyB, scoreAs)
   }
 
   /** MinHash + LSH near-duplicate pairs.
@@ -118,11 +194,8 @@ object Dedup {
     *      and its size is O(true near-dups) for well-chosen b, r);
     *   5. verify: exact Jaccard on the candidates, filter ≥ `threshold`.
     *
-    * The signature frame (hashed shingles + minhash signature) is
-    * persisted: it feeds both sides of the band join and both verify
-    * joins, so without the persist the whole interpreted-HOF prep
-    * pipeline runs ~4× (the round-1 local[32] bench collapse,
-    * 92 s → ~4 s).
+    * The signature frame is persisted ([[minhashBands]]): it feeds both
+    * sides of the band join and both verify joins.
     *
     * With b=32, r=4: P(miss | j=0.8) = (1-0.8⁴)³² ≈ 5e-8 — the sketch is
     * effectively exact above the threshold, so the brute-force oracle
@@ -134,28 +207,9 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 2, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    // one xxhash64 per shingle, then the whole signature in one fused
-    // codegen'd loop (graft.functions.MinHashes) — the interpreted
-    // higher-order-function formulation was the bench's dominant cost
-    val withSig = df.select(col(idCol).as("id"),
-      hashedShingles(shingles(col(textCol), shingleN)).as("hs"))
-      .filter(size(col("hs")) > 0)
-      .withColumn("mh", call_function("minhashes", col("hs"), lit(numHashes)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (withSig, banded) = minhashBands(df, idCol, textCol, shingleN,
+      numHashes, bands, "id")
     val withHs = withSig.select("id", "hs")
-
-    // band keys only travel through the candidate join — the shingle
-    // arrays are re-joined afterwards (candidates are rare; shipping the
-    // arrays ×bands through the shuffle is the expensive wrong plan)
-    val banded = withSig.select(col("id"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(b, slice(mh, b * $r + 1, $r)))"))
-        .as(Seq("band", "bkey")))
-
     // merge-hinted like every corpus×corpus posting join in this file:
     // Catalyst sizes a Generate by its (pruned) child, so an exploded
     // band-key side is estimated ~KB no matter the corpus and gets
@@ -165,13 +219,7 @@ object Dedup {
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-
-    candidates
-      .join(withHs.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(withHs.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-      .withColumn("jaccard", jaccardSorted(col("hs_a"), col("hs_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifySets(candidates, "id_a", "id_b", withHs, withHs, "hs", Some(threshold))
   }
 
   /** Incremental near-dup detection: flag an INCOMING shard's documents
@@ -196,31 +244,15 @@ object Dedup {
       existing: DataFrame, incoming: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 2,
       numHashes: Int = 128, bands: Int = 32,
-      threshold: Double = 0.5): DataFrame =
-    incrementalNearDupsManaged(existing, incoming, idCol, textCol,
-      shingleN, numHashes, bands, threshold)._1
-
-  /** [[incrementalNearDups]] plus a cleanup handle that unpersists the
-    * two internal signature frames. The one-shot gate path never needs
-    * it (the session ends with the query); a LONG-RUNNING caller that
-    * probes per ingest ([[graft.engine.Engine.appendRowsDeduped]]) must
-    * invoke the handle after consuming the result, or every ingest
-    * leaks two MEMORY_AND_DISK frames into the block store. */
-  def incrementalNearDupsManaged(
-      existing: DataFrame, incoming: DataFrame,
-      idCol: String, textCol: String, shingleN: Int = 2,
-      numHashes: Int = 128, bands: Int = 32,
-      threshold: Double = 0.5): (DataFrame, () => Unit) = {
-    // one-shot callers re-signature the standing corpus inline; a
-    // long-running ingest loop should persist the index frames once and
-    // probe them via [[incrementalNearDupsIndexed]] instead
-    // (Engine.appendRowsDeduped does exactly that)
-    val (post, sigs, cleanupIdx) = minhashIndexFrames(
+      threshold: Double = 0.5): DataFrame = {
+    // one-shot: the standing corpus is re-signatured inline and both
+    // signature frames stay pinned with the returned plan; a long-running
+    // ingest loop persists the index frames once and probes them via
+    // [[incrementalNearDupsIndexed]] (Engine.appendRowsDeduped)
+    val (post, sigs, _) = minhashIndexFrames(
       existing, idCol, textCol, shingleN, numHashes, bands)
-    val (out, cleanupIn) = incrementalNearDupsIndexed(
-      post, sigs, incoming, idCol, textCol, shingleN, numHashes, bands,
-      threshold)
-    (out, () => { cleanupIn(); cleanupIdx() })
+    incrementalNearDupsIndexed(post, sigs, incoming, idCol, textCol,
+      shingleN, numHashes, bands, threshold)._1
   }
 
   /** The persistable MinHash-LSH index over a text corpus, as two
@@ -241,19 +273,8 @@ object Dedup {
   def minhashIndexFrames(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 2, numHashes: Int = 128,
                          bands: Int = 32): (DataFrame, DataFrame, () => Unit) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val s = df
-      .select(col(idCol).as("ex_id"),
-        hashedShingles(shingles(col(textCol), shingleN)).as("hs"))
-      .filter(size(col("hs")) > 0)
-      .withColumn("mh", call_function("minhashes", col("hs"), lit(numHashes)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val post = s.select(col("ex_id"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(b, slice(mh, b * $r + 1, $r)))"))
-        .as(Seq("band", "bkey")))
+    val (s, post) = minhashBands(df, idCol, textCol, shingleN, numHashes,
+      bands, "ex_id")
     (post, s.select("ex_id", "hs"), () => { s.unpersist(); () })
   }
 
@@ -274,19 +295,8 @@ object Dedup {
       numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.5,
       shardRows: Option[Long] = None): (DataFrame, () => Unit) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
-    val inSig = incoming
-      .select(col(idCol).as("id"),
-        hashedShingles(shingles(col(textCol), shingleN)).as("hs"))
-      .filter(size(col("hs")) > 0)
-      .withColumn("mh", call_function("minhashes", col("hs"), lit(numHashes)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val inBand = inSig.select(col("id"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(b, slice(mh, b * $r + 1, $r)))"))
-        .as(Seq("band", "bkey")))
+    val (inSig, inBand) = minhashBands(incoming, idCol, textCol, shingleN,
+      numHashes, bands, "id")
     // band keys only through the join (the minhashLsh lesson);
     // SHUFFLE_HASH with the SHARD as build side — the standing postings
     // stream through untouched (bucketed storage on (band, bkey)
@@ -306,12 +316,8 @@ object Dedup {
     // exact verify: unhinted so AQE broadcasts the shard-bounded
     // candidate side at runtime; the standing signatures are scanned,
     // never moved (the embedding-twin verify argument)
-    val out = candidates
-      .join(inSig.select(col("id").as("in_id"), col("hs").as("hs_a")), "in_id")
-      .join(signatures.select(col("ex_id"), col("hs").as("hs_b")), "ex_id")
-      .withColumn("jaccard", jaccardSorted(col("hs_a"), col("hs_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("in_id", "ex_id", "jaccard")
+    val out = verifySets(candidates, "in_id", "ex_id", inSig, signatures, "hs",
+      Some(threshold))
     (out, () => { inSig.unpersist(); () })
   }
 
@@ -425,25 +431,12 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 2, threshold: Double = 0.5,
       queryPred: Column = lit(true)): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val withSh = df.select(col(idCol).as("id"),
-      hashedShingles(shingles(col(textCol), shingleN)).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val withSh = shingleSets(df, idCol, textCol, shingleN)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // rare-first prefix: explode once, aggregate per-token df, rank each
-    // document's tokens by (df, tok) and keep the first prefLen — all
-    // equi-keyed shuffles (tok, tok, id), no pair blowup anywhere
-    val ex = withSh.select(col("id"), size(col("sh")).as("len"),
-      explode(col("sh")).as("tok"))
-    val dfMap = ex.groupBy("tok").agg(count(lit(1)).as("df"))
-    val prefLen = (col("len")
-      - ceil(lit(threshold) * col("len").cast("double") - lit(1e-9))
-      + 1).cast("int")
-    val byRarity = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("df").asc, col("tok").asc)
-    val pref = ex.join(dfMap.hint("merge"), "tok")
-      .withColumn("__rn", row_number().over(byRarity))
-      .filter(col("__rn") <= prefLen)
+    // rare-first prefix: each document's first prefixLen tokens in (df, tok)
+    // order — no pair blowup anywhere
+    val pref = rarityRanked(withSh, "__rn")._2
+      .filter(col("__rn") <= prefixLen(threshold))
       .select("id", "len", "tok")
     val candidates = pref.filter(queryPred)
       .select(col("id").as("id_a"), col("len").as("len_a"), col("tok"))
@@ -453,12 +446,7 @@ object Dedup {
               col("len_b").cast("double") >= lit(threshold) * col("len_a") - lit(1e-9))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
-    candidates
-      .join(withSh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(withSh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifySets(candidates, "id_a", "id_b", withSh, withSh, "sh", Some(threshold))
   }
 
   /** Edit-distance-verified near-dup pairs: Jaccard-blocked candidate
@@ -496,28 +484,6 @@ object Dedup {
       .select("id_a", "id_b", "jaccard", "edit_distance")
   }
 
-  /** EXACT asymmetric containment pairs — `C(A,B) = |A∩B| / |A| ≥ t`
-    * (the "A is mostly inside B" relation that doc-level Jaccard misses:
-    * a paragraph quoted verbatim inside a much larger page has high
-    * containment but low Jaccard; substring-style dedup pipelines filter
-    * on exactly this signal).
-    *
-    * Candidate generation is the one-sided prefix filter (the containment
-    * variant of AllPairs/PPJoin, Bayardo et al. WWW'07): if
-    * `|A∩B| ≥ ⌈t·|A|⌉`, then A has at most `|A| − ⌈t·|A|⌉` tokens outside
-    * B, so its rarest-first prefix of length `|A| − ⌈t·|A|⌉ + 1` must hit
-    * B. Unlike the symmetric join, only the PROBE side (A) prunes to a
-    * prefix — the indexed side (B) keeps every token, because containment
-    * has no lower bound on B's share of the intersection. The only valid
-    * length filter is `|B| ≥ ⌈t·|A|⌉` (the intersection fits inside B).
-    *
-    * Scale shape: explode → df aggregate → rarity-ranked prefix (probe
-    * side only) → equi-join on token → verify ([[jaccardSorted]]'s
-    * two-pointer kernel divided by |A|). All shuffles are equi-keyed on
-    * (tok | id); no pair blowup outside true candidates.
-    *
-    * @return (id_a, id_b, containment) with id_a ≠ id_b, C(A,B) ≥ t
-    */
   /** Sorted-neighborhood candidate pairs (Hernández & Stolfo, SIGMOD'95):
     * total-order the corpus by a numeric blocking key, emit every pair
     * within `window` positions. The classic entity-resolution blocking
@@ -555,29 +521,38 @@ object Dedup {
       .select("id_a", "id_b", "dist")
   }
 
+  /** EXACT asymmetric containment pairs — `C(A,B) = |A∩B| / |A| ≥ t`
+    * (the "A is mostly inside B" relation that doc-level Jaccard misses:
+    * a paragraph quoted verbatim inside a much larger page has high
+    * containment but low Jaccard; substring-style dedup pipelines filter
+    * on exactly this signal).
+    *
+    * Candidate generation is the one-sided prefix filter (the containment
+    * variant of AllPairs/PPJoin, Bayardo et al. WWW'07): if
+    * `|A∩B| ≥ ⌈t·|A|⌉`, then A has at most `|A| − ⌈t·|A|⌉` tokens outside
+    * B, so its rarest-first prefix of length `|A| − ⌈t·|A|⌉ + 1` must hit
+    * B. Unlike the symmetric join, only the PROBE side (A) prunes to a
+    * prefix — the indexed side (B) keeps every token, because containment
+    * has no lower bound on B's share of the intersection. The only valid
+    * length filter is `|B| ≥ ⌈t·|A|⌉` (the intersection fits inside B).
+    *
+    * Scale shape: explode → df aggregate → rarity-ranked prefix (probe
+    * side only) → equi-join on token → verify ([[jaccardSorted]]'s
+    * two-pointer kernel divided by |A|). All shuffles are equi-keyed on
+    * (tok | id); no pair blowup outside true candidates.
+    *
+    * @return (id_a, id_b, containment) with id_a ≠ id_b, C(A,B) ≥ t
+    */
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
       queryPred: Column = lit(true)): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val withSh = df.select(col(idCol).as("id"),
-      hashedShingles(shingles(col(textCol), shingleN)).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val withSh = shingleSets(df, idCol, textCol, shingleN)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val ex = withSh.select(col("id"), size(col("sh")).as("len"),
-      explode(col("sh")).as("tok"))
-    val dfMap = ex.groupBy("tok").agg(count(lit(1)).as("df"))
-    // probe prefix: |A| − ⌈t·|A|⌉ + 1 rarest tokens (1e-9 guard admits,
-    // never drops — same convention as ngramJaccardPairs)
-    val prefLen = (col("len")
-      - ceil(lit(threshold) * col("len").cast("double") - lit(1e-9))
-      + 1).cast("int")
-    val byRarity = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("df").asc, col("tok").asc)
-    val probe = ex.filter(queryPred)
-      .join(dfMap.hint("merge"), "tok")
-      .withColumn("__rn", row_number().over(byRarity))
-      .filter(col("__rn") <= prefLen)
+    // probe prefix: the |A| − ⌈t·|A|⌉ + 1 rarest tokens of query documents
+    val (ex, ranked) = rarityRanked(withSh, "__rn", _.filter(queryPred))
+    val probe = ranked
+      .filter(col("__rn") <= prefixLen(threshold))
       .select(col("id").as("id_a"), col("len").as("len_a"), col("tok"))
     val indexed = ex.select(col("id").as("id_b"), col("len").as("len_b"), col("tok"))
     val candidates = probe.join(indexed.hint("merge"), "tok")
@@ -586,14 +561,9 @@ object Dedup {
         >= lit(threshold) * col("len_a") - lit(1e-9))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
-    candidates
-      .join(withSh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(withSh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("containment",
-        call_function("sorted_intersect_count", col("sh_a"), col("sh_b"))
-          .cast("double") / size(col("sh_a")).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment")
+    verifySets(candidates, "id_a", "id_b", withSh, withSh, "sh", Some(threshold),
+      "containment", (a, b) =>
+        call_function("sorted_intersect_count", a, b).cast("double") / size(a).cast("double"))
   }
 
   /** Top-k most-Jaccard-similar documents per query — the retrieval
@@ -640,28 +610,16 @@ object Dedup {
                   shingleN: Int = 3, threshold: Double = 0.2, k: Int = 5,
                   queryPred: Column = lit(true)): DataFrame = {
     require(k >= 1, "k must be at least 1")
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val withSh = df.select(col(idCol).as("id"),
-      hashedShingles(shingles(col(textCol), shingleN)).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val withSh = shingleSets(df, idCol, textCol, shingleN)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val ex = withSh.select(col("id"), size(col("sh")).as("len"),
-      explode(col("sh")).as("tok"))
-    val dfMap = ex.groupBy("tok").agg(count(lit(1)).as("df"))
-    val prefLen = (col("len")
-      - ceil(lit(threshold) * col("len").cast("double") - lit(1e-9))
-      + 1).cast("int")
-    val byRarity = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("df").asc, col("tok").asc)
     // positions under ONE global (df, tok) order feed both the probe
     // prefix and the positional bound — persisted because probe and
     // index both consume it (and the df join + per-id sort is the
     // expensive half of candidate generation)
-    val exPos = ex.join(dfMap.hint("merge"), "tok")
-      .withColumn("pos", row_number().over(byRarity))
+    val exPos = rarityRanked(withSh, "pos")._2
       .persist(StorageLevel.MEMORY_AND_DISK)
     val probe = exPos.filter(queryPred)
-      .filter(col("pos") <= prefLen)
+      .filter(col("pos") <= prefixLen(threshold))
       .select(col("id").as("id_a"), col("len").as("len_a"),
         col("pos").as("pos_a"), col("tok"))
     val indexed = exPos.select(col("id").as("id_b"), col("len").as("len_b"),
@@ -686,11 +644,8 @@ object Dedup {
       .withColumn("__ubr", row_number().over(byUb))
       .select("id_a", "id_b", "ub_j", "__ubr")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def verify(c: DataFrame): DataFrame = c.select("id_a", "id_b")
-      .join(withSh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(withSh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .select("id_a", "id_b", "jaccard")
+    def verify(c: DataFrame): DataFrame = verifySets(c.select("id_a", "id_b"),
+      "id_a", "id_b", withSh, withSh, "sh", None)
     val byScore = org.apache.spark.sql.expressions.Window
       .partitionBy("id_a").orderBy(col("jaccard").desc, col("id_b").asc)
     // phase 1: the O(k) most-promising candidates per query, exact
@@ -889,11 +844,8 @@ object Dedup {
     // band a pair collides on at most ONE mask — the mask IS the band
     // xor — so cross-band duplicates are the only ones to suppress)
     val aKeys = (0 until bands).flatMap { i =>
-      val w = bounds(i + 1) - bounds(i)
-      (0 to e).flatMap(r => (0 until w).combinations(r).map { flips =>
-        val mask = flips.foldLeft(0L)((m, b) => m | (1L << b))
-        struct(lit(i).as("band"), bandBits(i).bitwiseXOR(lit(mask)).as("bits"))
-      })
+      flipMasks(bounds(i + 1) - bounds(i), e).map(mask =>
+        struct(lit(i).as("band"), bandBits(i).bitwiseXOR(lit(mask)).as("bits")))
     }
     def exploded(keys: Seq[Column]) =
       sh.select(col("id"), col("simhash"), explode(array(keys: _*)).as("bk"))
@@ -966,8 +918,7 @@ object Dedup {
     // vectors do NOT travel through the candidate join — shipping them
     // ×tables×probes was 8× the verify cost; they re-join from the
     // persisted frame at the end.
-    val withSigs = e.withColumn("sigs", Similarity.planeSignatures(
-      col("v"), (0 until tables).map(t => s"hp$t:"), planes, dims))
+    val withSigs = e.withColumn("sigs", tableSignatures(col("v"), planes, tables, dims))
       .select("id", "sigs")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Cross-table pair dedup strategy (round 6): within one table a pair
@@ -985,8 +936,7 @@ object Dedup {
     // the candidate count, not candidate×tables.
     val slim = tables > SlimDedupTables
     val b = {
-      val base = withSigs.select(col("id").as("id_b"), col("sigs").as("sigs_b"),
-        posexplode(col("sigs")).as(Seq("tbl", "bucket")))
+      val base = tableRows(withSigs, Seq(col("id").as("id_b"), col("sigs").as("sigs_b")))
       if (slim) base.drop("sigs_b") else base
     }
     // a-side: additionally exploded to all buckets within probeRadius —
@@ -996,14 +946,9 @@ object Dedup {
     // full radius: silent false negatives at probeRadius ≥ 3)
     require(probeRadius <= planes,
       s"probeRadius ($probeRadius) cannot exceed planes ($planes)")
-    val flips: Seq[Column] = (0 to probeRadius).flatMap(r =>
-      (0 until planes).combinations(r).map(bits =>
-        lit(bits.foldLeft(0L)((m, b) => m | (1L << b)))))
     val a = {
-      val base = withSigs.select(col("id").as("id_a"), col("sigs").as("sigs_a"),
-        posexplode(col("sigs")).as(Seq("tbl", "sig")))
-        .withColumn("bucket", explode(array(flips.map(col("sig").bitwiseXOR): _*)))
-        .drop("sig")
+      val base = probeRows(withSigs,
+        Seq(col("id").as("id_a"), col("sigs").as("sigs_a")), planes, probeRadius)
       if (slim) base.drop("sigs_a") else base
     }
 
@@ -1149,17 +1094,8 @@ object Dedup {
   private[graft] def lshLayout(n: Long, threshold: Double,
                                    targetOccupancy: Int, missTarget: Double,
                                    probeRadius: Int, maxTables: Int): (Int, Int, Int) = {
-    val q = math.acos(math.min(1.0, math.max(-1.0, threshold))) / math.Pi
-    // P[Binom(planes, q) <= radius]: a true pair at exactly θ collides
-    // with one table's probe set with this probability (pairs above θ
-    // collide more often — θ is the worst case)
-    def pBand(planes: Int, radius: Int): Double =
-      (0 to math.min(radius, planes)).map { k =>
-        val choose = (1 to k).map(i => (planes - i + 1).toDouble / i).product
-        choose * math.pow(q, k) * math.pow(1 - q, planes - k)
-      }.sum
     def tablesFor(planes: Int, radius: Int): Int = {
-      val p = pBand(planes, radius)
+      val p = pBand(threshold, planes, radius)
       if (p >= 1.0) 2
       else math.max(2, math.ceil(math.log(missTarget) / math.log(1.0 - p)).toInt)
     }
@@ -1188,8 +1124,7 @@ object Dedup {
     * of looking free. */
   private[operators] def lshLayoutCost(n: Long, planes: Int, radius: Int,
                                        tables: Int): Double = {
-    val probes = (0 to math.min(radius, planes)).map(k =>
-      (1 to k).map(i => (planes - i + 1).toDouble / i).product).sum
+    val probes = (0 to math.min(radius, planes)).map(choose(planes, _)).sum
     tables.toDouble *
       (probes * (n.toDouble + n.toDouble * n.toDouble / math.pow(2.0, planes)) +
         n.toDouble * (1.0 + planes / 8.0))
@@ -1226,9 +1161,10 @@ object Dedup {
       threshold, dims, targetOccupancy, missTarget, probeRadius, maxTables,
       knownExistingCount)._1
 
-  /** [[embeddingIncrementalNearDups]] plus the unpersist handle — same
-    * contract as [[incrementalNearDupsManaged]]: a long-running caller
-    * probing per ingest must invoke it after consuming the result. */
+  /** [[embeddingIncrementalNearDups]] plus a handle that unpersists its
+    * internal frames: a long-running caller probing per ingest must invoke
+    * it after consuming the result, or every ingest leaks MEMORY_AND_DISK
+    * frames into the block store. */
   def embeddingIncrementalNearDupsManaged(
       existing: DataFrame, incoming: DataFrame,
       idCol: String, vecCol: String, threshold: Double, dims: Int = 64,
@@ -1303,10 +1239,8 @@ object Dedup {
                         planes: Int, tables: Int,
                         dims: Int = 64): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
-    df.select(col(idCol).as("ex_id"),
-        Similarity.planeSignatures(col(vecCol),
-          (0 until tables).map(t => s"hp$t:"), planes, dims).as("sigs"))
-      .select(col("ex_id"), posexplode(col("sigs")).as(Seq("tbl", "bucket")))
+    tableRows(df.select(col(idCol).as("ex_id"),
+      tableSignatures(col(vecCol), planes, tables, dims).as("sigs")), Seq(col("ex_id")))
   }
 
   /** Incremental embedding near-dup against a PREBUILT postings index
@@ -1341,15 +1275,9 @@ object Dedup {
     val exPost = postings.select(col("ex_id"), col("tbl"), col("bucket"))
     // probe side: every bit-combination within the index layout's radius,
     // as in the self-join path — vectors stay home, only band keys travel
-    val flips: Seq[Column] = (0 to radius).flatMap(r =>
-      (0 until planes).combinations(r).map(bits =>
-        lit(bits.foldLeft(0L)((m, b) => m | (1L << b)))))
-    val inPost = in.withColumn("sigs",
-        Similarity.planeSignatures(col("v_a"),
-          (0 until tables).map(t => s"hp$t:"), planes, dims))
-      .select(col("in_id"), posexplode(col("sigs")).as(Seq("tbl", "sig")))
-      .withColumn("bucket", explode(array(flips.map(col("sig").bitwiseXOR): _*)))
-      .drop("sig")
+    val inPost = probeRows(
+      in.withColumn("sigs", tableSignatures(col("v_a"), planes, tables, dims)),
+      Seq(col("in_id")), planes, radius)
     // cross-table duplicates dedup on the slim 16-byte id pair — sized
     // by the candidate count, not candidate×tables (the minhashLsh /
     // slim-tables lesson). SHUFFLE_HASH with the SHARD postings as the
@@ -1367,9 +1295,9 @@ object Dedup {
     // shard rows via caller hint or plan statistics — never a count()
     // action in the ingest path (round 10; error direction documented
     // at [[shardRowEstimate]])
-    val probeRows = shardRows.getOrElse(shardRowEstimate(incoming)) *
-      tables.toLong * flips.size
-    val hinted = if (probeRows <= probeHashBuildCap(incoming.sparkSession))
+    val exploded = shardRows.getOrElse(shardRowEstimate(incoming)) *
+      tables.toLong * flipMasks(planes, radius).size
+    val hinted = if (exploded <= probeHashBuildCap(incoming.sparkSession))
       inPost.hint("shuffle_hash") else inPost.hint("merge")
     val candidates = hinted.join(exPost, Seq("tbl", "bucket"))
       .select("in_id", "ex_id").distinct()
@@ -1390,26 +1318,52 @@ object Dedup {
     * worst-case threshold pair — exposed for the layout-solver spec. */
   private[operators] def lshMissRate(planes: Int, tables: Int,
                                      threshold: Double,
-                                     probeRadius: Int): Double = {
+                                     probeRadius: Int): Double =
+    math.pow(1.0 - pBand(threshold, planes, probeRadius), tables)
+
+  /** `C(n, k)` as a double (the layout math's probe and binomial counts). */
+  private def choose(n: Int, k: Int): Double =
+    (1 to k).map(i => (n - i + 1).toDouble / i).product
+
+  /** P[Binom(planes, q) ≤ radius] with per-bit disagreement
+    * `q = arccos(θ)/π`: the probability that a true pair at exactly
+    * `threshold` collides with one table's probe set (pairs above θ
+    * collide more often — θ is the worst case). */
+  private def pBand(threshold: Double, planes: Int, radius: Int): Double = {
     val q = math.acos(math.min(1.0, math.max(-1.0, threshold))) / math.Pi
-    val pBand = (0 to math.min(probeRadius, planes)).map { k =>
-      val choose = (1 to k).map(i => (planes - i + 1).toDouble / i).product
-      choose * math.pow(q, k) * math.pow(1 - q, planes - k)
+    (0 to math.min(radius, planes)).map { k =>
+      choose(planes, k) * math.pow(q, k) * math.pow(1 - q, planes - k)
     }.sum
-    math.pow(1.0 - pBand, tables)
   }
 
-  /** Round-5 name for the corpus-dimensioned layout, kept as a source-
-    * compatible alias now that [[embeddingNearDup]] IS that layout. */
-  def embeddingNearDupScaled(emb: DataFrame, idCol: String, vecCol: String,
-                             threshold: Double, dims: Int = 64,
-                             targetOccupancy: Int = 16,
-                             missTarget: Double = 1e-6,
-                             probeRadius: Int = 2,
-                             maxTables: Int = 512,
-                             knownCount: Option[Long] = None): DataFrame =
-    embeddingNearDup(emb, idCol, vecCol, threshold, dims, targetOccupancy,
-      missTarget, probeRadius, maxTables, knownCount)
+  /** Every mask of at most `radius` set bits among the low `width` bits,
+    * by popcount then combination order (mask 0 first): the multi-probe
+    * flip set of the sign-LSH and Hamming-LSH probe sides. */
+  private def flipMasks(width: Int, radius: Int): Seq[Long] =
+    (0 to radius).flatMap(r => (0 until width).combinations(r)
+      .map(_.foldLeft(0L)((m, b) => m | (1L << b))))
+
+  /** The per-table sign signatures of a vector column in one fused pass,
+    * table `t` seeded `hp<t>:` — the seeds every embedding-LSH path in
+    * this file shares, so a stored posting is the bucket a probe looks up. */
+  private def tableSignatures(v: Column, planes: Int, tables: Int,
+                              dims: Int): Column =
+    Similarity.planeSignatures(v, (0 until tables).map(t => s"hp$t:"), planes, dims)
+
+  /** `keep` columns plus `(tbl, bucketAs)`: one row per table of the
+    * frame's `sigs` signatures. */
+  private def tableRows(sigs: DataFrame, keep: Seq[Column],
+                        bucketAs: String = "bucket"): DataFrame =
+    sigs.select(keep :+ posexplode(col("sigs")).as(Seq("tbl", bucketAs)): _*)
+
+  /** The multi-probe side: [[tableRows]] with each table's signature
+    * XORed with every [[flipMasks]] mask within `radius`, as `bucket`. */
+  private def probeRows(sigs: DataFrame, keep: Seq[Column], planes: Int,
+                        radius: Int): DataFrame =
+    tableRows(sigs, keep, "sig")
+      .withColumn("bucket", explode(array(
+        flipMasks(planes, radius).map(m => col("sig").bitwiseXOR(lit(m))): _*)))
+      .drop("sig")
 
   /** Brute-force embedding near-dup (the oracle twin of
     * [[embeddingNearDup]]): all-pairs cosine — O(n²), baseline only. */
@@ -1425,37 +1379,6 @@ object Dedup {
       .select("id_a", "id_b", "cos")
   }
 
-  /** Duplicate-cluster assignment: connected components over a candidate
-    * pair set (the step after LSH in an industrial dedup pipeline — a
-    * near-dup RELATION is not transitive, so "keep one per pair" is
-    * ill-defined until pairs are closed into components). Returns
-    * `(id, cluster_id)` for every input id; `cluster_id` is the minimum
-    * id reachable through the pair graph (singletons cluster as
-    * themselves), so downstream "keep canonical" is `id === cluster_id`.
-    *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes the min of its own label and its neighbors' labels, until a
-    * round changes nothing. Each round is one equi-join + one
-    * hash-aggregate, both keyed by node id, with the label frame
-    * `localCheckpoint`ed per round to cut lineage. Rounds = graph
-    * diameter; near-dup graphs are overwhelmingly tiny star/clique
-    * components (diameter ≤ ~3), so 3-4 rounds close 100 TB corpora —
-    * the same reasoning that makes plain propagation the default in
-    * production dedup over the O(log n) star-contraction variants, whose
-    * per-round cost is higher. `maxIters` bounds pathological chains;
-    * convergence is detected by an `isEmpty` probe on changed labels
-    * (cheap: it short-circuits on the first changed row).
-    *
-    * Pairs may be any candidate relation: [[minhashLsh]], [[simhashPairs]],
-    * [[embeddingNearDup]] outputs all fit (`id_a`/`id_b` columns).
-    *
-    * Hybrid execution: when the (output-sized) pair list is small enough
-    * to collect safely (`driverUnionFindLimit`, default 2M pairs ≈ 32 MB)
-    * and ids are integral, a driver-side union-find resolves components
-    * in ONE collect — identical min-label result, none of the per-round
-    * fixed job overhead. Larger pair sets fall through to the iterative
-    * plan, so the scale path is never lost.
-    */
   /** Canonical-document selection: given cluster assignments
     * ([[duplicateClusters]] output) and a source-priority order, keep one
     * document per cluster — highest-priority source wins, ties break by
@@ -1536,6 +1459,37 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs"))
   }
 
+  /** Duplicate-cluster assignment: connected components over a candidate
+    * pair set (the step after LSH in an industrial dedup pipeline — a
+    * near-dup RELATION is not transitive, so "keep one per pair" is
+    * ill-defined until pairs are closed into components). Returns
+    * `(id, cluster_id)` for every input id; `cluster_id` is the minimum
+    * id reachable through the pair graph (singletons cluster as
+    * themselves), so downstream "keep canonical" is `id === cluster_id`.
+    *
+    * Algorithm: iterative min-label propagation — each round every node
+    * takes the min of its own label and its neighbors' labels, until a
+    * round changes nothing. Each round is one equi-join + one
+    * hash-aggregate, both keyed by node id, with the label frame
+    * `localCheckpoint`ed per round to cut lineage. Rounds = graph
+    * diameter; near-dup graphs are overwhelmingly tiny star/clique
+    * components (diameter ≤ ~3), so 3-4 rounds close 100 TB corpora —
+    * the same reasoning that makes plain propagation the default in
+    * production dedup over the O(log n) star-contraction variants, whose
+    * per-round cost is higher. `maxIters` bounds pathological chains;
+    * convergence is detected by an `isEmpty` probe on changed labels
+    * (cheap: it short-circuits on the first changed row).
+    *
+    * Pairs may be any candidate relation: [[minhashLsh]], [[simhashPairs]],
+    * [[embeddingNearDup]] outputs all fit (`id_a`/`id_b` columns).
+    *
+    * Hybrid execution: when the (output-sized) pair list is small enough
+    * to collect safely (`driverUnionFindLimit`, default 2M pairs ≈ 32 MB)
+    * and ids are integral, a driver-side union-find resolves components
+    * in ONE collect — identical min-label result, none of the per-round
+    * fixed job overhead. Larger pair sets fall through to the iterative
+    * plan, so the scale path is never lost.
+    */
   def duplicateClusters(ids: DataFrame, pairs: DataFrame,
                         idCol: String = "id", maxIters: Int = 20,
                         driverUnionFindLimit: Long = 2000000L): DataFrame = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * stages in the capstone pipelines). Operators whose persists can be
   * released as soon as the result is consumed expose a `...Managed` /
   * `...WithCleanup` twin returning `(result, cleanup)` —
-  * [[Dedup.incrementalNearDupsManaged]], [[PageRank.runWithCleanup]],
+  * [[Dedup.embeddingIncrementalNearDupsManaged]], [[PageRank.runWithCleanup]],
   * [[graft.operators.Sequences.rfmSegmentsWithCleanup]] — but the plain
   * entry points deliberately keep the frame pinned: the caller may hold
   * the lazy plan and re-trigger it (a second `.count()`, a retry, an

@@ -110,9 +110,6 @@ object SkewJoin {
       val m = math.max(lo.getOrElse(k, 0L), ro.getOrElse(k, 0L))
       (k, math.ceil(m.toDouble / bound).toInt)
     }.filter(_._2 > 1).toMap
-    if (sys.env.contains("SPARK_GRAFT_GRID_DEBUG"))
-      System.err.println(s"[gridSalted] keys=${all.size} mean=$mean " +
-        s"bound=$bound hot=${hot.toSeq.sortBy(-_._2).take(5)}")
     if (hot.isEmpty) return left.join(right, key)
     val sf = coalesce(element_at(typedlit(hot), col(key)), lit(1))
     val l2 = left

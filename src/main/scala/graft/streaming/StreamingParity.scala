@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -9,6 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.catalog.Catalog
 
 /** Batch ≡ streaming differential executor (SURVEY §2.5 ST1-ST6 proof
   * harness).
@@ -39,15 +42,6 @@ import graft.Tables
   */
 object StreamingParity {
 
-  /** Run `fn` (a gate body) as a Structured Streaming job; return its
-    * output schema and the complete result rows.
-    *
-    * `chunks > 1` re-materializes every table `fn` loads as that many
-    * files and streams them one file per trigger — the gate's aggregation
-    * state then folds across `chunks` real micro-batches instead of one
-    * (see [[Tables.withChunkedStreamingReads]]); `batchCount` (when
-    * non-null) receives the number of micro-batches actually executed so
-    * callers can assert the run was genuinely incremental. */
   /** Strip ONLY presentation sorts (gates order solely for the driver's
     * deterministic hash): global Sorts reachable from the root through
     * ordering-preserving Projects — `orderBy.select(...)` analyzes to
@@ -68,47 +62,63 @@ object StreamingParity {
     case other => other
   }
 
-  private def buildStreamingPlan(fn: (SparkSession, String) => DataFrame,
-      spark: SparkSession, dir: String, chunks: Int): DataFrame = {
-    val plan =
-      if (chunks > 1) {
-        val cd = java.nio.file.Files.createTempDirectory("graft-chunks").toString
-        Tables.withChunkedStreamingReads(chunks, cd) { fn(spark, dir) }
-      } else Tables.withStreamingReads { fn(spark, dir) }
-    require(plan.isStreaming,
-      "gate does not read through Tables.load — nothing to stream")
-    plan
+  /** Builds the streaming plan of `fn` and hands it to `body` with a
+    * fresh checkpoint directory (named by `ckptPrefix`). With `chunks > 1`
+    * the inputs are re-materialized under a `graft-chunks` temp dir. Both
+    * directories are deleted once `body` has collected its rows. */
+  private def withStreamingPlan[T](fn: (SparkSession, String) => DataFrame,
+      spark: SparkSession, dir: String, chunks: Int, ckptPrefix: String)(
+      body: (DataFrame, String) => T): T = {
+    val ckpt = Files.createTempDirectory(ckptPrefix)
+    val chunkDir = if (chunks > 1) Some(Files.createTempDirectory("graft-chunks")) else None
+    try {
+      val plan = chunkDir match {
+        case Some(cd) => Tables.withChunkedStreamingReads(chunks, cd.toString) { fn(spark, dir) }
+        case None => Tables.withStreamingReads { fn(spark, dir) }
+      }
+      require(plan.isStreaming,
+        "gate does not read through Tables.load — nothing to stream")
+      body(plan, ckpt.toString)
+    } finally (ckpt +: chunkDir.toSeq).foreach(Catalog.deleteRecursively)
   }
 
+  /** Run `fn` (a gate body) as a Structured Streaming job; return its
+    * output schema and the complete result rows.
+    *
+    * `chunks > 1` re-materializes every table `fn` loads as that many
+    * files and streams them one file per trigger — the gate's aggregation
+    * state then folds across `chunks` real micro-batches instead of one
+    * (see [[Tables.withChunkedStreamingReads]]); `batchCount` (when
+    * non-null) receives the number of micro-batches actually executed so
+    * callers can assert the run was genuinely incremental. */
   def run(fn: (SparkSession, String) => DataFrame, spark: SparkSession,
           dir: String, timeoutMs: Long = 180000L, chunks: Int = 1,
           batchCount: java.util.concurrent.atomic.AtomicInteger = null)
-      : (StructType, Seq[Row]) = {
-    val plan = buildStreamingPlan(fn, spark, dir, chunks)
-    val analyzed = plan.queryExecution.analyzed
-    val noSort = stripRootSort(analyzed)
-    val ds = org.apache.spark.sql.GraftInternal.ofRows(spark, noSort)
-    val aggregating = analyzed.collectFirst { case a: Aggregate => a }.nonEmpty
+      : (StructType, Seq[Row]) =
+    withStreamingPlan(fn, spark, dir, chunks, "graft-parity") { (plan, ckpt) =>
+      val analyzed = plan.queryExecution.analyzed
+      val noSort = stripRootSort(analyzed)
+      val ds = org.apache.spark.sql.GraftInternal.ofRows(spark, noSort)
+      val aggregating = analyzed.collectFirst { case a: Aggregate => a }.nonEmpty
 
-    val batches = mutable.ArrayBuffer.empty[(Long, Array[Row])]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-parity").toString
-    val q = QueryRunner.start(ds, ckpt, if (aggregating) "complete" else "append",
-        Trigger.AvailableNow(), skipExisting = false) { (b: DataFrame, id: Long) =>
-      val rows = b.collect()
-      batches.synchronized { batches += ((id, rows)) }
-      if (batchCount != null) batchCount.incrementAndGet()
-      ()
-    }
-    QueryRunner.awaitBounded(q, timeoutMs)(
-      s"streaming parity run did not finish in ${timeoutMs}ms")
+      val batches = mutable.ArrayBuffer.empty[(Long, Array[Row])]
+      val q = QueryRunner.start(ds, ckpt, if (aggregating) "complete" else "append",
+          Trigger.AvailableNow(), skipExisting = false) { (b: DataFrame, id: Long) =>
+        val rows = b.collect()
+        batches.synchronized { batches += ((id, rows)) }
+        if (batchCount != null) batchCount.incrementAndGet()
+        ()
+      }
+      QueryRunner.awaitBounded(q, timeoutMs)(
+        s"streaming parity run did not finish in ${timeoutMs}ms")
 
-    val rows = batches.synchronized {
-      val inOrder = batches.sortBy(_._1)
-      if (aggregating) inOrder.lastOption.map(_._2.toSeq).getOrElse(Nil)
-      else inOrder.iterator.flatMap(_._2).toSeq
+      val rows = batches.synchronized {
+        val inOrder = batches.sortBy(_._1)
+        if (aggregating) inOrder.lastOption.map(_._2.toSeq).getOrElse(Nil)
+        else inOrder.iterator.flatMap(_._2).toSeq
+      }
+      (ds.schema, rows)
     }
-    (ds.schema, rows)
-  }
 
   /** Synthetic PK column for keyless (global) aggregates — one logical row
     * whose value is replaced per trigger. */
@@ -140,32 +150,31 @@ object StreamingParity {
       engine: graft.engine.Engine, stream: String, keyCols: Seq[String],
       chunks: Int = 4, timeoutMs: Long = 240000L,
       batchCount: java.util.concurrent.atomic.AtomicInteger = null)
-      : (StructType, Seq[Row]) = {
-    val plan = buildStreamingPlan(fn, spark, dir, chunks)
-    val analyzed = plan.queryExecution.analyzed
-    require(analyzed.collectFirst { case a: Aggregate => a }.nonEmpty,
-      "update-mode upsert parity is for aggregating plans")
-    val noSort = org.apache.spark.sql.GraftInternal.ofRows(
-      spark, stripRootSort(analyzed))
-    val keyed =
-      if (keyCols.nonEmpty) noSort
-      else noSort.withColumn(GlobalKey,
-        org.apache.spark.sql.functions.lit(0L))
-    val pk = if (keyCols.nonEmpty) keyCols else Seq(GlobalKey)
-    engine.createStream(stream,
-      graft.schema.StreamSchema.fromStruct(keyed.schema, primaryKey = pk))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-upd").toString
-    val q = QueryRunner.start(keyed, ckpt, "update", Trigger.AvailableNow(),
-        skipExisting = false) { (b: DataFrame, _: Long) =>
-      // the engine's writer stamps (epoch, seq) exactly as batch writes
-      // do, so the read-side fold needs no streaming-specific case
-      engine.appendRows(stream, b)
-      if (batchCount != null) batchCount.incrementAndGet()
-      ()
+      : (StructType, Seq[Row]) =
+    withStreamingPlan(fn, spark, dir, chunks, "graft-upd") { (plan, ckpt) =>
+      val analyzed = plan.queryExecution.analyzed
+      require(analyzed.collectFirst { case a: Aggregate => a }.nonEmpty,
+        "update-mode upsert parity is for aggregating plans")
+      val noSort = org.apache.spark.sql.GraftInternal.ofRows(
+        spark, stripRootSort(analyzed))
+      val keyed =
+        if (keyCols.nonEmpty) noSort
+        else noSort.withColumn(GlobalKey,
+          org.apache.spark.sql.functions.lit(0L))
+      val pk = if (keyCols.nonEmpty) keyCols else Seq(GlobalKey)
+      engine.createStream(stream,
+        graft.schema.StreamSchema.fromStruct(keyed.schema, primaryKey = pk))
+      val q = QueryRunner.start(keyed, ckpt, "update", Trigger.AvailableNow(),
+          skipExisting = false) { (b: DataFrame, _: Long) =>
+        // the engine's writer stamps (epoch, seq) exactly as batch writes
+        // do, so the read-side fold needs no streaming-specific case
+        engine.appendRows(stream, b)
+        if (batchCount != null) batchCount.incrementAndGet()
+        ()
+      }
+      QueryRunner.awaitBounded(q, timeoutMs)(
+        s"update-mode parity run did not finish in ${timeoutMs}ms")
+      val out = engine.readStream(stream).drop(GlobalKey)
+      (out.schema, out.collect().toSeq)
     }
-    QueryRunner.awaitBounded(q, timeoutMs)(
-      s"update-mode parity run did not finish in ${timeoutMs}ms")
-    val out = engine.readStream(stream).drop(GlobalKey)
-    (out.schema, out.collect().toSeq)
-  }
 }

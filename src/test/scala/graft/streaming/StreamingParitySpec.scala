@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -189,6 +191,22 @@ class StreamingParitySpec extends SparkSpec {
         s"$n: expected >=4 micro-batches, got ${nBatches.get} — not incremental")
       assert(canon(sRows) == canon(bRows), s"$n: rows diverged")
     }
+  }
+
+  test("parity runs delete their checkpoint and chunk directories") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def leftovers(): Int = scala.util.Using.resource(java.nio.file.Files.list(tmp)) {
+      _.iterator().asScala.count { p =>
+        val n = p.getFileName.toString
+        Seq("graft-parity", "graft-upd", "graft-chunks").exists(n.startsWith)
+      }
+    }
+    val before = leftovers()
+    val g = gate("events_count")
+    StreamingParity.run(g.fn, spark, dir, chunks = 4)
+    StreamingParity.runUpdateUpsert(g.fn, spark, dir,
+      new Engine(spark, tmpDir("parity-leak-engine")), "sink", Seq("event_type"))
+    assert(leftovers() == before)
   }
 
   test("session windows reject update mode (merging keys need retractions)") {

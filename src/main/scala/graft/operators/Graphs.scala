@@ -107,38 +107,28 @@ object Graphs {
     * cut, Catalyst re-inlines the whole chain per consumer and the
     * plan doubles per round.
     *
-    * Exchange economy (optimization round 12, guide §2.4): the edge
-    * frame is pre-partitioned on the join key `v` ONCE before its
-    * checkpoint (localCheckpoint preserves the physical partitioning),
-    * and each round's labels checkpoint comes out of the per-node
-    * aggregate hash-partitioned on `id` — which the alias to `v`
-    * carries into the next round's join. Both join inputs therefore
-    * arrive clustered on the key and the join plans with NO exchange;
-    * the one per-round exchange left is the explicit `id` repartition
-    * feeding the vote aggregates, whose subset key satisfies both the
-    * (id, lbl) count and the per-id argmax. 4 exchanges/round → 1 —
-    * at 100 TB each removed exchange is a full |E|-row shuffle per
-    * round. */
+    * Exchange economy: the votes are repartitioned once on `id`, a
+    * subset key that satisfies both the (id, lbl) count and the per-id
+    * argmax, so the two vote aggregates share one exchange. A checkpoint
+    * does NOT keep its input's partitioning (the scan reports
+    * `UnknownPartitioning(0)`), so the edge and label frames are not
+    * repartitioned before their checkpoints: the join would shuffle them
+    * again anyway. */
   def labelPropagation(ids: DataFrame, edges: DataFrame,
                        idCol: String = "id", edgeACol: String = "id_a",
                        edgeBCol: String = "id_b",
                        rounds: Int = 4): DataFrame = {
     require(rounds >= 1, "rounds must be positive")
     // explicit partition COUNT (the session's shuffle knob — scale-
-    // adaptive, never a local constant): hash(v, n) on the edges must
-    // equal hash(id→v, n) on every round's labels for the join to plan
-    // exchange-free, and AQE coalesces count-less repartitions to
-    // data-dependent widths that would break that equality
+    // adaptive, never a local constant) for the votes repartition
     val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
     val bid = edges
       .select(col(edgeACol).as("u"), col(edgeBCol).as("v"))
       .union(edges.select(col(edgeBCol).as("u"), col(edgeACol).as("v")))
       .filter(col("u") =!= col("v")).distinct()
-      .repartition(nPart, col("v"))
       .localCheckpoint(eager = true)
     var labels = ids
       .select(col(idCol).as("id"), col(idCol).cast("long").as("lbl"))
-      .repartition(nPart, col("id"))
       .localCheckpoint(eager = true)
     for (_ <- 1 to rounds) {
       val votes = bid

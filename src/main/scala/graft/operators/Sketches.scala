@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Mergeable distinct-count sketch rollups (Apache DataSketches HLL,
@@ -33,11 +34,9 @@ object Sketches {
     * touched. Emits the estimate alongside the merged sketch so the
     * result can keep rolling up. */
   def rollup(sketches: DataFrame, coarser: Seq[String]): DataFrame = {
-    val grouped =
-      if (coarser.isEmpty) sketches.agg(hll_union_agg(col("sketch")).as("sketch"))
-      else sketches.groupBy(coarser.map(col): _*)
-        .agg(hll_union_agg(col("sketch")).as("sketch"))
-    grouped.withColumn("estimate", hll_sketch_estimate(col("sketch")))
+    sketches.groupBy(coarser.map(col): _*)
+      .agg(hll_union_agg(col("sketch")).as("sketch"))
+      .withColumn("estimate", hll_sketch_estimate(col("sketch")))
   }
 
   /** Set-overlap estimate from two distinct-sketch tables via
@@ -166,12 +165,6 @@ object Sketches {
     * global aggregate rather than a single-partition window. */
   def sketchQuantiles(sketch: DataFrame, groupCols: Seq[String],
                       qs: Seq[Double], mantissaBits: Int = 4): DataFrame = {
-    val buckets = sort_array(collect_list(struct(
-      col("msb"), col("mant"), col("cnt")))).as("bks")
-    val n = sum("cnt").as("n")
-    val agged =
-      if (groupCols.isEmpty) sketch.agg(buckets, n)
-      else sketch.groupBy(groupCols.map(col): _*).agg(buckets, n)
     val qlits = array(qs.map(lit): _*)
     // first bucket (value order) whose cumulative count reaches the
     // target rank: a fold with an "already picked" latch in the struct
@@ -187,12 +180,19 @@ object Sketches {
     val lo = call_function("shiftleft", col("pk.mant"), shiftBits)
     // shiftBits = 0 ⟹ hi = mant = lo (exact single-value bucket, incl. v=0)
     val hi = call_function("shiftleft", col("pk.mant") + 1, shiftBits) - 1
-    agged
+    bucketLists(sketch, groupCols)
       .withColumn("q", explode(qlits))
       .withColumn("pk", pick)
       .select(groupCols.map(col) :+ col("q") :+
         ((lo + hi) / 2.0).as("est"): _*)
   }
+
+  /** Each group's sketch as ONE row: its buckets in value order (`bks`)
+    * and their total count `n`. */
+  private def bucketLists(sketch: DataFrame, groupCols: Seq[String]): DataFrame =
+    sketch.groupBy(groupCols.map(col): _*).agg(
+      sort_array(collect_list(struct(col("msb"), col("mant"), col("cnt")))).as("bks"),
+      sum("cnt").as("n"))
 
   /** In-plan drift assertion (the self-checking-sketch convention):
     * TRUE when `est` is within `tol` relative error of `exact`, else the
@@ -221,51 +221,8 @@ object Sketches {
     * exact BIGINT — no estimate band, no tolerance, replayed by a
     * plain order-statistic oracle. */
   def exactQuantiles(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                     qs: Seq[Double], mantissaBits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
-      "quantiles must lie in (0, 1]")
-    val gcols = groupCols.map(col)
-    val sk = quantileSketch(df, groupCols, valueCol, mantissaBits)
-    val buckets = sort_array(collect_list(struct(
-      col("msb"), col("mant"), col("cnt")))).as("bks")
-    val n = sum("cnt").as("n")
-    val agged =
-      if (groupCols.isEmpty) sk.agg(buckets, n)
-      else sk.groupBy(gcols: _*).agg(buckets, n)
-    // target bucket + exact count strictly below it, same latch fold as
-    // sketchQuantiles (bucket order IS value order)
-    val pick = expr(
-      s"""aggregate(bks,
-         |  named_struct('cum', 0L, 'msb', -1, 'mant', -1L, 'below', 0L),
-         |  (acc, s) -> IF(acc.msb >= 0, acc,
-         |    named_struct('cum', acc.cum + s.cnt,
-         |      'msb', IF(acc.cum + s.cnt >= CEIL(q * n), s.msb, -1),
-         |      'mant', IF(acc.cum + s.cnt >= CEIL(q * n), s.mant, -1L),
-         |      'below', IF(acc.cum + s.cnt >= CEIL(q * n), acc.cum, 0L))))
-         |""".stripMargin)
-    val targets = agged
-      .withColumn("q", explode(array(qs.map(lit): _*)))
-      .withColumn("pk", pick)
-      .select(gcols ++ Seq(col("q"),
-        ceil(col("q") * col("n")).cast("long").as("r"),
-        col("pk.msb").as("msb"), col("pk.mant").as("mant"),
-        col("pk.below").as("below")): _*)
-    val (msbC, mantC) = valueBuckets(col(valueCol).cast("long"), mantissaBits)
-    val rows = df.filter(col(valueCol).isNotNull)
-      .select(gcols :+ col(valueCol).cast("long").as("v") :+
-        msbC.as("msb") :+ mantC.as("mant"): _*)
-    val inBucket = rows.join(broadcast(targets), groupCols ++ Seq("msb", "mant"))
-    val perVal = inBucket
-      .groupBy((gcols ++ Seq(col("q"), col("r"), col("below"), col("v"))): _*)
-      .agg(count(lit(1)).as("c"))
-    val wv = Window.partitionBy((gcols :+ col("q")): _*).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perVal.withColumn("cum", sum("c").over(wv))
-      .filter(col("below") + col("cum") >= col("r"))
-      .groupBy((gcols :+ col("q")): _*)
-      .agg(min("v").as("val"))
-  }
+                     qs: Seq[Double], mantissaBits: Int = 4): DataFrame =
+    exactOrderStats(df, groupCols, valueCol, None, qs, mantissaBits)
 
   /** WEIGHTED exact order statistics — [[exactQuantiles]] with every
     * row carrying an integer mass: the target rank becomes
@@ -281,26 +238,31 @@ object Sketches {
   def exactWeightedQuantiles(df: DataFrame, groupCols: Seq[String],
                              valueCol: String, weightCol: String,
                              qs: Seq[Double],
-                             mantissaBits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                             mantissaBits: Int = 4): DataFrame =
+    exactOrderStats(df, groupCols, valueCol, Some(weightCol), qs, mantissaBits)
+
+  /** The two-pass body of [[exactQuantiles]] (`weightCol = None`: every
+    * row has mass 1) and [[exactWeightedQuantiles]] (mass = the integer
+    * weight; rows with NULL or non-positive weight are dropped). */
+  private def exactOrderStats(df: DataFrame, groupCols: Seq[String],
+                              valueCol: String, weightCol: Option[String],
+                              qs: Seq[Double], mantissaBits: Int): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       "quantiles must lie in (0, 1]")
     val gcols = groupCols.map(col)
     val (msbC, mantC) = valueBuckets(col(valueCol).cast("long"), mantissaBits)
     val rows = df
-      .filter(col(valueCol).isNotNull && col(weightCol).isNotNull &&
-        col(weightCol).cast("long") > 0)
-      .select(gcols :+ col(valueCol).cast("long").as("v") :+
-        col(weightCol).cast("long").as("wt") :+
-        msbC.as("msb") :+ mantC.as("mant"): _*)
+      .filter(weightCol.foldLeft(col(valueCol).isNotNull)((c, w) =>
+        c && col(w).isNotNull && col(w).cast("long") > 0))
+      .select((gcols :+ col(valueCol).cast("long").as("v")) ++
+        weightCol.map(w => col(w).cast("long").as("wt")) ++
+        Seq(msbC.as("msb"), mantC.as("mant")): _*)
+    val mass = weightCol.fold(count(lit(1)))(_ => sum("wt"))
+    // pass 1: the bounded sketch, then per (group, q) the target bucket
+    // and the exact mass strictly below it — the sketchQuantiles latch
+    // fold (bucket order IS value order)
     val sk = rows.groupBy((gcols ++ Seq(col("msb"), col("mant"))): _*)
-      .agg(sum("wt").as("cnt"))
-    val buckets = sort_array(collect_list(struct(
-      col("msb"), col("mant"), col("cnt")))).as("bks")
-    val n = sum("cnt").as("n")
-    val agged =
-      if (groupCols.isEmpty) sk.agg(buckets, n)
-      else sk.groupBy(gcols: _*).agg(buckets, n)
+      .agg(mass.as("cnt"))
     val pick = expr(
       s"""aggregate(bks,
          |  named_struct('cum', 0L, 'msb', -1, 'mant', -1L, 'below', 0L),
@@ -310,17 +272,18 @@ object Sketches {
          |      'mant', IF(acc.cum + s.cnt >= CEIL(q * n), s.mant, -1L),
          |      'below', IF(acc.cum + s.cnt >= CEIL(q * n), acc.cum, 0L))))
          |""".stripMargin)
-    val targets = agged
+    val targets = bucketLists(sk, groupCols)
       .withColumn("q", explode(array(qs.map(lit): _*)))
       .withColumn("pk", pick)
       .select(gcols ++ Seq(col("q"),
         ceil(col("q") * col("n")).cast("long").as("r"),
         col("pk.msb").as("msb"), col("pk.mant").as("mant"),
         col("pk.below").as("below")): _*)
+    // pass 2: only rows in a target bucket, reduced to per-value mass
     val inBucket = rows.join(broadcast(targets), groupCols ++ Seq("msb", "mant"))
     val perVal = inBucket
       .groupBy((gcols ++ Seq(col("q"), col("r"), col("below"), col("v"))): _*)
-      .agg(sum("wt").as("c"))
+      .agg(mass.as("c"))
     val wv = Window.partitionBy((gcols :+ col("q")): _*).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     perVal.withColumn("cum", sum("c").over(wv))
@@ -362,6 +325,17 @@ object Sketches {
                    salt: String = "cm"): String =
     s"(${CrossHash.duckdbHash56(s"'$salt:$row:' || ($e)")}) % $width"
 
+  /** `keep` plus one `(r, slot)` row per hash row of `v`: the depth
+    * cells `v` counts into, or is probed at. */
+  private def cmCells(df: DataFrame, keep: Seq[Column], v: Column,
+                      depth: Int, width: Int, salt: String): DataFrame = {
+    val cells = explode(array((0 until depth).map { r =>
+      struct(lit(r).cast("int").as("r"), cmSlot(v, r, width, salt).as("slot"))
+    }: _*)).as("__cell")
+    df.select((keep :+ cells): _*)
+      .select((keep ++ Seq(col("__cell.r").as("r"), col("__cell.slot").as("slot"))): _*)
+  }
+
   /** Per-group count-min sketch over `valueCol` occurrences: one shuffle
     * keyed on (group, r, slot) with full map-side partial aggregation,
     * so the shuffle moves ≤ partitions × groups × depth × width counter
@@ -370,14 +344,8 @@ object Sketches {
   def countMinSketch(df: DataFrame, groupCols: Seq[String], valueCol: String,
                      depth: Int = 3, width: Int = 1024,
                      salt: String = "cm"): DataFrame = {
-    val cells = explode(array((0 until depth).map { r =>
-      struct(lit(r).cast("int").as("r"),
-        cmSlot(col(valueCol), r, width, salt).as("slot"))
-    }: _*)).as("__cell")
-    df.filter(col(valueCol).isNotNull)
-      .select((groupCols.map(col) :+ cells): _*)
-      .select((groupCols.map(col) ++
-        Seq(col("__cell.r").as("r"), col("__cell.slot").as("slot"))): _*)
+    cmCells(df.filter(col(valueCol).isNotNull), groupCols.map(col),
+      col(valueCol), depth, width, salt)
       .groupBy((groupCols.map(col) ++ Seq(col("r"), col("slot"))): _*)
       .agg(count(lit(1)).as("cnt"))
   }
@@ -411,14 +379,8 @@ object Sketches {
   def cmEstimate(sketch: DataFrame, items: DataFrame, groupCols: Seq[String],
                  itemCol: String, depth: Int = 3, width: Int = 1024,
                  salt: String = "cm"): DataFrame = {
-    val probes = explode(array((0 until depth).map { r =>
-      struct(lit(r).cast("int").as("r"),
-        cmSlot(col(itemCol), r, width, salt).as("slot"))
-    }: _*)).as("__cell")
-    items
-      .select((groupCols.map(col) :+ col(itemCol) :+ probes): _*)
-      .select((groupCols.map(col) ++ Seq(col(itemCol),
-        col("__cell.r").as("r"), col("__cell.slot").as("slot"))): _*)
+    cmCells(items, groupCols.map(col) :+ col(itemCol), col(itemCol),
+      depth, width, salt)
       .join(broadcast(sketch), groupCols ++ Seq("r", "slot"), "left")
       .na.fill(0L, Seq("cnt"))
       .groupBy((groupCols.map(col) :+ col(itemCol)): _*)
@@ -453,6 +415,28 @@ object Sketches {
   def cmJoinSizeEstimate(a: DataFrame, b: DataFrame): DataFrame =
     cmJoinSizeByRow(a, b).agg(min("est").as("join_size_est"))
 
+  /** Two bucket sketches aligned on the union of their buckets (absent =
+    * 0), with each side's step CDF `cum_a`/`cum_b` in value order and
+    * its group total `n_a`/`n_b`; groups present on only one side are
+    * dropped. Every operation is keyed by group over ≤ 64·2^m + 1
+    * buckets per group. */
+  private def alignedCdfs(a: DataFrame, b: DataFrame,
+                          groupCols: Seq[String]): DataFrame = {
+    val keys = groupCols ++ Seq("msb", "mant")
+    val wg = Window.partitionBy(groupCols.map(col): _*)
+    val wCum = wg.orderBy(col("msb"), col("mant"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    a.select((keys.map(col) :+ col("cnt").as("cnt_a")): _*)
+      .join(b.select((keys.map(col) :+ col("cnt").as("cnt_b")): _*),
+        keys, "full_outer")
+      .na.fill(0L, Seq("cnt_a", "cnt_b"))
+      .withColumn("cum_a", sum("cnt_a").over(wCum))
+      .withColumn("cum_b", sum("cnt_b").over(wCum))
+      .withColumn("n_a", sum("cnt_a").over(wg))
+      .withColumn("n_b", sum("cnt_b").over(wg))
+      .filter(col("n_a") > 0 && col("n_b") > 0)
+  }
+
   /** Distribution-drift statistic between two quantile-sketch tables —
     * the ingest-time monitor that closes the loop the incremental
     * sketch maintenance opens: keep the STANDING sketch per group, sketch
@@ -481,21 +465,7 @@ object Sketches {
     */
   def sketchKsDistance(a: DataFrame, b: DataFrame,
                        groupCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keys = groupCols ++ Seq("msb", "mant")
-    val aligned = a.select((keys.map(col) :+ col("cnt").as("cnt_a")): _*)
-      .join(b.select((keys.map(col) :+ col("cnt").as("cnt_b")): _*),
-        keys, "full_outer")
-      .na.fill(0L, Seq("cnt_a", "cnt_b"))
-    val wg = Window.partitionBy(groupCols.map(col): _*)
-    val wCum = wg.orderBy(col("msb"), col("mant"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    aligned
-      .withColumn("cum_a", sum("cnt_a").over(wCum))
-      .withColumn("cum_b", sum("cnt_b").over(wCum))
-      .withColumn("n_a", sum("cnt_a").over(wg))
-      .withColumn("n_b", sum("cnt_b").over(wg))
-      .filter(col("n_a") > 0 && col("n_b") > 0)
+    alignedCdfs(a, b, groupCols)
       .groupBy(groupCols.map(col): _*)
       // DECIMAL(38,0) cross-products: BIGINT·BIGINT overflows past
       // ~3e9-row sides, and the statistic must stay exact at any n
@@ -524,23 +494,9 @@ object Sketches {
     * @return (groupCols…, n_a, n_b, emd_micro); one-sided groups omitted */
   def sketchW1Distance(a: DataFrame, b: DataFrame,
                        groupCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keys = groupCols ++ Seq("msb", "mant")
-    val aligned = a.select((keys.map(col) :+ col("cnt").as("cnt_a")): _*)
-      .join(b.select((keys.map(col) :+ col("cnt").as("cnt_b")): _*),
-        keys, "full_outer")
-      .na.fill(0L, Seq("cnt_a", "cnt_b"))
-    val wg = Window.partitionBy(groupCols.map(col): _*)
-    val wCum = wg.orderBy(col("msb"), col("mant"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val num = col("__num") * lit(1000000L)
     val den = col("n_a").cast("decimal(38,0)") * col("n_b")
-    aligned
-      .withColumn("cum_a", sum("cnt_a").over(wCum))
-      .withColumn("cum_b", sum("cnt_b").over(wCum))
-      .withColumn("n_a", sum("cnt_a").over(wg))
-      .withColumn("n_b", sum("cnt_b").over(wg))
-      .filter(col("n_a") > 0 && col("n_b") > 0)
+    alignedCdfs(a, b, groupCols)
       .groupBy(groupCols.map(col): _*)
       .agg(max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"),
         sum(abs(col("cum_a").cast("decimal(38,0)") * col("n_b")

@@ -56,41 +56,70 @@ object Vocab {
     */
   def unigramLogPerplexity(docs: DataFrame, idCol: String = "doc_id",
                            textCol: String = "text"): DataFrame = {
-    val words = docs.select(col(idCol).as("did"),
-      explode(split(col(textCol), " ")).as("word"))
-    // pre-aggregate to distinct (doc, word) term frequencies so the
-    // vocab join shuffles doc-vocabulary rows, not every token
-    // occurrence — at corpus scale that is the repetition factor saved.
-    // Persisted: both the vocab derivation and the score join consume it
-    val docTf = words.groupBy("did", "word").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docTf = docTermFreqs(docs, idCol, textCol)
     val vocab = docTf.groupBy("word").agg(sum("tf").as("cnt"))
     val total = vocab.agg(sum("cnt").cast("double").as("total"))
-    val scored = vocab.crossJoin(broadcast(total))
-      .withColumn("lp_micro",
-        round(log(col("cnt") / col("total")) * 1000000L).cast("long"))
-      .select("word", "lp_micro")
-    docTf.join(scored, "word")
-      .groupBy(col("did").as(idCol))
-      .agg(sum("tf").as("n_words"), sum(col("lp_micro") * col("tf")).as("s"))
-      .withColumn("avg_neg_logp",
-        -col("s").cast("double") / (col("n_words") * 1000000L))
-      .select(idCol, "n_words", "avg_neg_logp")
+    meanNegLogp(docTf, vocab.crossJoin(broadcast(total)), Seq("word"),
+      col("cnt") / col("total"), idCol, "n_words")
   }
 
-  /** Per-row bigram structs `(w1, w2)` over whitespace tokens, with the
-    * split bound ONCE per row (optimization round 11): higher-order
-    * lambdas are interpreted per element, so the former
-    * `element_at(split(text), i+…)` lambda body re-split the text at
-    * every bigram position — O(words²) splits per doc. Wrapping the
-    * split in a 1-element array and transforming over it binds the
-    * words to a lambda VARIABLE the inner lambda reads in O(1); output
-    * is exactly the old expression's. */
-  private def docBigrams(textCol: String): Column =
-    element_at(transform(array(split(col(textCol), " ")), ws =>
+  /** Per-(doc, word) term frequencies `(did, word, tf)`: one explode, one
+    * pre-aggregate, so every later join shuffles doc-vocabulary rows, not
+    * every token occurrence — at corpus scale that is the repetition
+    * factor saved. Persisted: the vocabulary and the per-doc join both
+    * consume it. */
+  private def docTermFreqs(docs: DataFrame, idCol: String,
+                           textCol: String): DataFrame =
+    docs.select(col(idCol).as("did"),
+      explode(split(col(textCol), " ")).as("word"))
+      .groupBy("did", "word").agg(count(lit(1)).as("tf"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Per-(doc, bigram) frequencies `(did, w1, w2, tf)` of the docs with
+    * ≥ 2 whitespace tokens. The aggregate combines map-side, so the
+    * exploded bigram stream reaches its first exchange already reduced to
+    * distinct (doc, bigram) rows. Persisted: the bigram-type table and
+    * the per-doc scoring join both consume it.
+    *
+    * The split is bound ONCE per row (optimization round 11):
+    * higher-order lambdas are interpreted per element, so an
+    * `element_at(split(text), i+…)` lambda body would re-split the text
+    * at every bigram position — O(words²) splits per doc. Wrapping the
+    * split in a 1-element array and transforming over it binds the words
+    * to a lambda VARIABLE the inner lambda reads in O(1). */
+  private def docBigramFreqs(docs: DataFrame, idCol: String,
+                             textCol: String): DataFrame = {
+    val bigrams = element_at(transform(array(split(col(textCol), " ")), ws =>
       transform(sequence(lit(0), size(ws) - 2), i =>
         struct(element_at(ws, i + 1).as("w1"),
           element_at(ws, i + 2).as("w2")))), 1)
+    docs.filter(size(split(col(textCol), " ")) >= 2)
+      .select(col(idCol).as("did"), explode(bigrams).as("bg"))
+      .select(col("did"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      .groupBy("did", "w1", "w2").agg(count(lit(1)).as("tf"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Each document's mean negative log-probability under an LM table:
+    * `model` holds one row per `keys` type with the columns `p` reads;
+    * `p` becomes integer micro-units (`round(ln p·1e6)`), joins back to
+    * the per-doc frequencies `tf` on `keys`, and sums exactly per doc —
+    * one closing double division (same recipe as
+    * [[Similarity.labelCentroidStats]]).
+    *
+    * @return (idCol, nCol, avg_neg_logp) with nCol = Σ tf */
+  private def meanNegLogp(tf: DataFrame, model: DataFrame, keys: Seq[String],
+                          p: Column, idCol: String, nCol: String): DataFrame = {
+    val scored = model
+      .withColumn("lp_micro", round(log(p) * 1000000L).cast("long"))
+      .select((keys :+ "lp_micro").map(col): _*)
+    tf.join(scored, keys)
+      .groupBy(col("did").as(idCol))
+      .agg(sum("tf").as(nCol), sum(col("lp_micro") * col("tf")).as("s"))
+      .withColumn("avg_neg_logp",
+        -col("s").cast("double") / (col(nCol) * 1000000L))
+      .select(idCol, nCol, "avg_neg_logp")
+  }
 
   /** Interpolated bigram log-perplexity (the KenLM-shaped upgrade of
     * [[unigramLogPerplexity]], with the corpus itself as the LM): each
@@ -112,46 +141,23 @@ object Vocab {
   def bigramLogPerplexity(docs: DataFrame, idCol: String = "doc_id",
                           textCol: String = "text",
                           lambda: Double = 0.5): DataFrame = {
-    val w = split(col(textCol), " ")
-    // per-doc bigram term frequencies — one explode, one pre-aggregate.
-    // The explicit (w1, w2) repartition (optimization round 12, guide
-    // §2.4 "two operations keyed the same way share one exchange")
-    // replaces the aggregate's (did, w1, w2) exchange with the SUBSET
-    // key both downstream consumers need: the per-doc aggregate is
-    // satisfied by it (same-key rows stay co-located), and the biCnt
-    // aggregate plus the final (w1, w2) scoring join then run with NO
-    // further exchange of this — the corpus-scale — frame.
-    val docBf = docs.filter(size(w) >= 2)
-      .select(col(idCol).as("did"), explode(docBigrams(textCol)).as("bg"))
-      .select(col("did"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .repartition(col("w1"), col("w2"))
-      .groupBy("did", "w1", "w2").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docBf = docBigramFreqs(docs, idCol, textCol)
     val biCnt = docBf.groupBy("w1", "w2").agg(sum("tf").as("bi"))
     // context count = occurrences of w1 as a bigram LHS (= Σ bi over w2),
-    // computed as a WINDOW over the bigram-type frame (round 12): the
-    // former groupBy(w1)-then-join-back shuffled biCnt twice (aggregate +
-    // join probe); the window shuffles it once on the same key and emits
-    // identical exact-integer sums. Unigram counts/total come from ALL
-    // word occurrences, matching the unigram gate's distribution.
-    val byW1 = Window.partitionBy("w1")
+    // a window over the bigram-type frame: one exchange on w1, where a
+    // groupBy(w1)-then-join-back aggregates and probes biCnt separately.
+    // Unigram counts/total come from ALL word occurrences, matching the
+    // unigram gate's distribution.
     val uniWords = docs.select(explode(split(col(textCol), " ")).as("w2"))
     val uniCnt = uniWords.groupBy("w2").agg(count(lit(1)).as("uni"))
     val total = uniCnt.agg(sum("uni").cast("double").as("total"))
-    val scored = biCnt.withColumn("ctx", sum("bi").over(byW1))
+    val model = biCnt.withColumn("ctx", sum("bi").over(Window.partitionBy("w1")))
       .join(uniCnt, "w2")
       .crossJoin(broadcast(total))
-      .withColumn("lp_micro", round(log(
-        lit(lambda) * (col("bi").cast("double") / col("ctx").cast("double"))
-          + lit(1.0 - lambda) * (col("uni").cast("double") / col("total")))
-        * 1000000L).cast("long"))
-      .select("w1", "w2", "lp_micro")
-    docBf.join(scored, Seq("w1", "w2"))
-      .groupBy(col("did").as(idCol))
-      .agg(sum("tf").as("n_bigrams"), sum(col("lp_micro") * col("tf")).as("s"))
-      .withColumn("avg_neg_logp",
-        -col("s").cast("double") / (col("n_bigrams") * 1000000L))
-      .select(idCol, "n_bigrams", "avg_neg_logp")
+    meanNegLogp(docBf, model, Seq("w1", "w2"),
+      lit(lambda) * (col("bi").cast("double") / col("ctx").cast("double"))
+        + lit(1.0 - lambda) * (col("uni").cast("double") / col("total")),
+      idCol, "n_bigrams")
   }
 
   /** Interpolated Kneser-Ney bigram log-perplexity (Kneser & Ney 1995;
@@ -181,48 +187,29 @@ object Vocab {
                              textCol: String = "text",
                              discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0, "discount must be in (0, 1)")
-    val w = split(col(textCol), " ")
-    // (w1, w2) repartition in place of the aggregate's (did, w1, w2)
-    // exchange — see [[bigramLogPerplexity]] (round 12): the per-doc
-    // aggregate, the biCnt aggregate AND the final scoring join all ride
-    // this one corpus-scale shuffle.
-    val docBf = docs.filter(size(w) >= 2)
-      .select(col(idCol).as("did"), explode(docBigrams(textCol)).as("bg"))
-      .select(col("did"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .repartition(col("w1"), col("w2"))
-      .groupBy("did", "w1", "w2").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docBf = docBigramFreqs(docs, idCol, textCol)
     val biCnt = docBf.groupBy("w1", "w2").agg(sum("tf").as("bi"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // context mass + leaving-type count ride ONE window over the bigram-
-    // type frame, entering-type count a second (round 12): the former
-    // two groupBy-then-join-back aggregates each shuffled biCnt twice
-    // (aggregate + join probe, 4 exchanges); two windows shuffle it once
-    // per key (2 exchanges) and emit identical exact-integer counts —
-    // every bigram type keeps exactly the (ctx, nfr, nto) the inner
-    // joins attached (w1/w2 are never NULL, so window vs inner-join row
-    // sets coincide). The type total stays a 1-row broadcast aggregate:
-    // a global window would funnel the vocabulary through one partition.
+    // type frame, entering-type count a second: one exchange per key
+    // where two groupBy-then-join-back aggregates each shuffle biCnt for
+    // the aggregate and again for the join probe. Every bigram type keeps
+    // exactly the (ctx, nfr, nto) the inner joins attached (w1/w2 are
+    // never NULL, so window vs inner-join row sets coincide). The type
+    // total stays a 1-row broadcast aggregate: a global window would
+    // funnel the vocabulary through one partition.
     val byW1 = Window.partitionBy("w1")
-    val byW2 = Window.partitionBy("w2")
     val types = biCnt.agg(count(lit(1)).cast("double").as("tt"))
-    val scored = biCnt
+    val model = biCnt
       .withColumn("ctx", sum("bi").over(byW1))
       .withColumn("nfr", count(lit(1)).over(byW1))
-      .withColumn("nto", count(lit(1)).over(byW2))
+      .withColumn("nto", count(lit(1)).over(Window.partitionBy("w2")))
       .crossJoin(broadcast(types))
-      .withColumn("lp_micro", round(log(
-        (col("bi").cast("double") - lit(discount)) / col("ctx").cast("double")
-          + lit(discount) * col("nfr").cast("double") / col("ctx").cast("double")
-            * (col("nto").cast("double") / col("tt")))
-        * 1000000L).cast("long"))
-      .select("w1", "w2", "lp_micro")
-    docBf.join(scored, Seq("w1", "w2"))
-      .groupBy(col("did").as(idCol))
-      .agg(sum("tf").as("n_bigrams"), sum(col("lp_micro") * col("tf")).as("s"))
-      .withColumn("avg_neg_logp",
-        -col("s").cast("double") / (col("n_bigrams") * 1000000L))
-      .select(idCol, "n_bigrams", "avg_neg_logp")
+    meanNegLogp(docBf, model, Seq("w1", "w2"),
+      (col("bi").cast("double") - lit(discount)) / col("ctx").cast("double")
+        + lit(discount) * col("nfr").cast("double") / col("ctx").cast("double")
+          * (col("nto").cast("double") / col("tt")),
+      idCol, "n_bigrams")
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020, "CCNet:
@@ -280,10 +267,7 @@ object Vocab {
     */
   def oovRate(docs: DataFrame, idCol: String = "doc_id",
               textCol: String = "text", k: Int = 1000): DataFrame = {
-    val docTf = docs.select(col(idCol).as("did"),
-      explode(split(col(textCol), " ")).as("word"))
-      .groupBy("did", "word").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docTf = docTermFreqs(docs, idCol, textCol)
     val vocab = docTf.groupBy("word").agg(sum("tf").as("cnt"))
       .withColumn("rn", row_number().over(
         Window.orderBy(col("cnt").desc, col("word").asc)))
@@ -667,28 +651,39 @@ object Vocab {
     // LEFT join from the token side: a shard that introduces zero new
     // types is still a ladder point (V stays flat while N grows — the
     // saturated-crawl signal this fit exists to measure)
-    val xy = toks.join(newTypes, Seq("__graft_bkt"), "left")
+    val ladder = toks.join(newTypes, Seq("__graft_bkt"), "left")
       .na.fill(0L, Seq("new_types"))
       .withColumn("v", sum("new_types").over(wCum))
       .withColumn("ntk", sum("n_tok").over(wCum))
-      .select(
-        round(log(col("ntk").cast("double")) * lit(1e6)).cast("long").as("x"),
-        round(log(col("v").cast("double")) * lit(1e6)).cast("long").as("y"))
-    val sums = xy.agg(count(lit(1)).as("n"), sum("x").as("sx"),
-      sum("y").as("sy"), sum(col("x") * col("y")).as("sxy"),
-      sum(col("x") * col("x")).as("sxx"))
+    logLogFit(ladder, Nil, col("ntk"), col("v"), "n_points", "beta_micro")
+  }
+
+  /** Least-squares line through log-log points, per `keys` group (one
+    * global fit for `keys = Nil`): each log rounds to integer micros
+    * FIRST (`round(ln·10⁶)`), so the power sums are exact integers and
+    * the closing slope/intercept divisions are single IEEE ops replayed
+    * verbatim in SQL — double summation order never enters. Degenerate
+    * groups (n < 2 or zero x-variance) have no defined slope: they emit
+    * NULL micro values instead of 0/0 = NaN, whose ANSI long cast would
+    * abort the whole job (the oracles mirror the CASE).
+    *
+    * @return (keys…, nCol, slopeCol, intercept_micro) */
+  private def logLogFit(points: DataFrame, keys: Seq[String], x: Column,
+                        y: Column, nCol: String, slopeCol: String): DataFrame = {
+    def micro(c: Column): Column =
+      round(log(c.cast("double")) * lit(1e6)).cast("long")
+    val sums = points.select(keys.map(col) :+ micro(x).as("x") :+ micro(y).as("y"): _*)
+      .groupBy(keys.map(col): _*).agg(
+        count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
+        sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
     val nd = col("n").cast("double")
-    val (sx, sy, sxy, sxx) = (col("sx").cast("double"),
-      col("sy").cast("double"), col("sxy").cast("double"),
-      col("sxx").cast("double"))
-    // degenerate ladders (n < 2 or zero x-variance) have no defined
-    // slope: emit NULL rather than an ANSI divide-by-zero
+    val (sx, sy, sxy, sxx) = (col("sx").cast("double"), col("sy").cast("double"),
+      col("sxy").cast("double"), col("sxx").cast("double"))
     val den = nd * sxx - sx * sx
-    val slope = when(col("n") >= 2 && den =!= 0.0,
-      (nd * sxy - sx * sy) / den)
-    sums.select(col("n").as("n_points"),
-      round(slope * lit(1e6)).cast("long").as("beta_micro"),
-      round((sy - slope * sx) / nd).cast("long").as("intercept_micro"))
+    val slope = when(col("n") >= 2 && den =!= 0.0, (nd * sxy - sx * sy) / den)
+    sums.select(keys.map(col) ++ Seq(col("n").as(nCol),
+      round(slope * lit(1e6)).cast("long").as(slopeCol),
+      round((sy - slope * sx) / nd).cast("long").as("intercept_micro")): _*)
   }
 
   /** Vocabulary coverage curve: for each candidate vocabulary size V,
@@ -738,23 +733,29 @@ object Vocab {
     * @return (w1, w2, cnt, rn) with rn ≤ k */
   def nextTokenTopK(docs: DataFrame, textCol: String = "text",
                     k: Int = 3, minCount: Long = 1L): DataFrame = {
-    val words = docs.filter(col(textCol).isNotNull)
-      .select(split(col(textCol), " ").as("w"))
-      .filter(size(col("w")) >= 2)
-    // adjacent pairs (w[i], w[i+1]) emitted row-locally in one transform
-    val bigrams = words.select(explode(expr(
-      "transform(slice(w, 1, size(w) - 1), (x, i) -> struct(x AS w1, w[i + 1] AS w2))"))
-      .as("p"))
-      .select(col("p.w1"), col("p.w2"))
-      .filter(col("w1") =!= "" && col("w2") =!= "")
-    val counts = bigrams.groupBy("w1", "w2")
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount)
     val w = Window.partitionBy("w1")
       .orderBy(col("cnt").desc, col("w2"))
-    counts.withColumn("rn", row_number().over(w).cast("long"))
+    adjacentPairCounts(docs, textCol, minCount)
+      .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
   }
+
+  /** Corpus counts `(w1, w2, cnt)` of adjacent non-empty token pairs
+    * (w[i], w[i+1]), emitted row-locally in one transform and counted by
+    * one map-side-combinable aggregate; pairs below `minCount` are
+    * dropped. */
+  private def adjacentPairCounts(docs: DataFrame, textCol: String,
+                                 minCount: Long): DataFrame =
+    docs.filter(col(textCol).isNotNull)
+      .select(split(col(textCol), " ").as("w"))
+      .filter(size(col("w")) >= 2)
+      .select(explode(expr(
+        "transform(slice(w, 1, size(w) - 1), (x, i) -> struct(x AS w1, w[i + 1] AS w2))"))
+        .as("p"))
+      .select(col("p.w1"), col("p.w2"))
+      .filter(col("w1") =!= "" && col("w2") =!= "")
+      .groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
+      .filter(col("cnt") >= minCount)
 
   /** Nucleus (top-p) next-token sets: for every context word, the
     * SMALLEST prefix of successors (by descending count, w2 tie-break)
@@ -779,19 +780,8 @@ object Vocab {
                        pNum: Long = 8L, pDen: Long = 10L,
                        minCount: Long = 1L): DataFrame = {
     require(pNum >= 1 && pNum <= pDen, "p must be in (0, 1]")
-    val words = docs.filter(col(textCol).isNotNull)
-      .select(split(col(textCol), " ").as("w"))
-      .filter(size(col("w")) >= 2)
-    val bigrams = words.select(explode(expr(
-      "transform(slice(w, 1, size(w) - 1), (x, i) -> struct(x AS w1, w[i + 1] AS w2))"))
-      .as("p"))
-      .select(col("p.w1"), col("p.w2"))
-      .filter(col("w1") =!= "" && col("w2") =!= "")
-    val counts = bigrams.groupBy("w1", "w2")
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount)
     val ord = Window.partitionBy("w1").orderBy(col("cnt").desc, col("w2"))
-    counts
+    adjacentPairCounts(docs, textCol, minCount)
       .withColumn("n_ctx", sum("cnt").over(Window.partitionBy("w1")))
       .withColumn("cum", sum("cnt").over(
         ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -820,24 +810,7 @@ object Vocab {
       .groupBy(groupCol, "tok").agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(groupCol).orderBy(col("cnt").desc, col("tok"))
     val top = counts.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-    val xy = top.select(col(groupCol),
-      round(log(col("rn").cast("double")) * lit(1e6)).cast("long").as("x"),
-      round(log(col("cnt").cast("double")) * lit(1e6)).cast("long").as("y"))
-    val sums = xy.groupBy(groupCol).agg(
-      count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-      sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
-    val nd = col("n").cast("double")
-    val (sx, sy, sxy, sxx) = (col("sx").cast("double"), col("sy").cast("double"),
-      col("sxy").cast("double"), col("sxx").cast("double"))
-    // degenerate groups (a single ranked term, or zero x-variance) have
-    // no defined slope: emit NULL micro values instead of 0/0 = NaN,
-    // whose ANSI long cast would abort the whole job (same guard as
-    // heapsFit; the oracle mirrors the CASE)
-    val den = nd * sxx - sx * sx
-    val slope = when(col("n") >= 2 && den =!= 0.0, (nd * sxy - sx * sy) / den)
-    sums.select(col(groupCol), col("n").as("n_terms"),
-      round(slope * lit(1e6)).cast("long").as("slope_micro"),
-      round((sy - slope * sx) / nd).cast("long").as("intercept_micro"))
+    logLogFit(top, Seq(groupCol), col("rn"), col("cnt"), "n_terms", "slope_micro")
   }
 
   /** Feature hashing (the "hashing trick", Weinberger et al. ICML'09):

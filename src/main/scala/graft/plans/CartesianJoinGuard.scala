@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo, Expression, PredicateHelper}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, OneRowRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 
@@ -40,19 +40,7 @@ import org.apache.spark.sql.internal.SQLConf
 class CartesianJoinGuard extends Rule[LogicalPlan] with PredicateHelper {
 
   import CartesianJoinGuard._
-
-  private def bounded(plan: LogicalPlan): Boolean = plan match {
-    case a: Aggregate =>
-      a.groupingExpressions.isEmpty ||
-        a.groupingExpressions.forall(g =>
-          g.foldable ||
-            (g.references.nonEmpty &&
-              g.references.forall(_.name.startsWith("__graft_bkt"))))
-    case _: GlobalLimit | _: LocalLimit => true
-    case _: LocalRelation | _: OneRowRelation => true
-    case leaf if leaf.children.isEmpty => false
-    case other => other.children.forall(bounded)
-  }
+  import SinglePartitionWindowGuard.{bounded, warnedOnce}
 
   private def spansSides(j: Join, l: Expression, r: Expression): Boolean = {
     def against(e: Expression, side: LogicalPlan): Boolean =
@@ -93,13 +81,4 @@ class CartesianJoinGuard extends Rule[LogicalPlan] with PredicateHelper {
 
 object CartesianJoinGuard {
   val ModeKey = "spark.graft.guard.cartesianJoin"
-
-  private val MaxWarned = 1000
-  private val warned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[plans] def warnedOnce(msg: String): Boolean = {
-    if (warned.size > MaxWarned) warned.clear()
-    warned.add(msg)
-  }
 }

@@ -59,30 +59,6 @@ class SinglePartitionWindowGuard extends Rule[LogicalPlan] {
 
   import SinglePartitionWindowGuard._
 
-  private def bounded(plan: LogicalPlan): Boolean = plan match {
-    // round 6 (advice): a grouped aggregate is NOT bounded in general —
-    // groupBy(doc_id) over the corpus is corpus-sized, and exempting it
-    // was a false-negative surface for exactly the hazard this rule
-    // exists to catch. Bounded aggregates are the structural cases only:
-    // a global aggregate (1 row) or the library's range-bucket ladder
-    // convention (grouping keys all `__graft_bkt*` — ≤ buckets rows by
-    // construction, [[graft.operators.Ranks.globalRowNumber]]). Rank
-    // windows over big vocab aggregates stay legal through the
-    // rank-limit exemption, which is how the library writes them.
-    case a: Aggregate =>
-      a.groupingExpressions.isEmpty ||
-        a.groupingExpressions.forall(g =>
-          g.foldable ||
-            (g.references.nonEmpty &&
-              g.references.forall(_.name.startsWith("__graft_bkt"))))
-    case _: GlobalLimit | _: LocalLimit => true
-    case _: LocalRelation | _: OneRowRelation => true
-    case leaf if leaf.children.isEmpty => false
-    // every input path must be bounded (a bounded dim joined to an
-    // unbounded fact is still unbounded)
-    case other => other.children.forall(bounded)
-  }
-
   /** Attributes the filter compares to a literal — the candidate "rn"
     * columns of a rank-limit idiom. Round 6 (advice): the exemption used
     * to fire on ANY attribute-vs-literal comparison above a rank window,
@@ -150,11 +126,39 @@ class SinglePartitionWindowGuard extends Rule[LogicalPlan] {
 object SinglePartitionWindowGuard {
   val ModeKey = "spark.graft.guard.singlePartitionWindow"
 
+  /** True when `plan`'s output is structurally BOUNDED on every input
+    * path — the exemption walk this rule and [[CartesianJoinGuard]]
+    * share. */
+  private[plans] def bounded(plan: LogicalPlan): Boolean = plan match {
+    // round 6 (advice): a grouped aggregate is NOT bounded in general —
+    // groupBy(doc_id) over the corpus is corpus-sized, and exempting it
+    // was a false-negative surface for exactly the hazard this rule
+    // exists to catch. Bounded aggregates are the structural cases only:
+    // a global aggregate (1 row) or the library's range-bucket ladder
+    // convention (grouping keys all `__graft_bkt*` — ≤ buckets rows by
+    // construction, [[graft.operators.Ranks.globalRowNumber]]). Rank
+    // windows over big vocab aggregates stay legal through the
+    // rank-limit exemption, which is how the library writes them.
+    case a: Aggregate =>
+      a.groupingExpressions.isEmpty ||
+        a.groupingExpressions.forall(g =>
+          g.foldable ||
+            (g.references.nonEmpty &&
+              g.references.forall(_.name.startsWith("__graft_bkt"))))
+    case _: GlobalLimit | _: LocalLimit => true
+    case _: LocalRelation | _: OneRowRelation => true
+    case leaf if leaf.children.isEmpty => false
+    // every input path must be bounded (a bounded dim joined to an
+    // unbounded fact is still unbounded)
+    case other => other.children.forall(bounded)
+  }
+
   private val MaxWarned = 1000
   private val warned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** True exactly once per distinct message (per JVM, bounded). */
+  /** True exactly once per distinct message (per JVM, bounded); the
+    * guard rules share one set. */
   private[plans] def warnedOnce(msg: String): Boolean = {
     if (warned.size > MaxWarned) warned.clear()
     warned.add(msg)

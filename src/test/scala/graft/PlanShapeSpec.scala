@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 /** Plan-shape regression tests: the properties that make the operators
   * survive a 100× scale-up are PLAN facts, not timings — lock them in so
   * a refactor that silently degrades a candidate join to a cartesian (or
@@ -140,6 +147,34 @@ class PlanShapeSpec extends SparkSpec {
     assert(!tfidf.contains("CartesianProduct"),
       s"tfidf_terms must join tf to df on word (the 1-row N is a " +
         s"broadcast nested loop, never a cartesian):\n$tfidf")
+    // the bigram LMs: every exploded stream (the persisted per-doc bigram
+    // frame included) reaches its first shuffle through a partial
+    // aggregate, never as raw exploded rows
+    for (name <- Seq("bigram_logppl", "kneser_ney_logppl")) {
+      val plan = Queries.all.find(_.name == name).get
+        .fn(spark, sf).queryExecution.executedPlan
+      val paths = generateToExchange(plan)
+      assert(paths.nonEmpty, s"$name plans no Generate:\n$plan")
+      paths.foreach(path => assert(path.exists {
+        case h: HashAggregateExec => h.aggregateExpressions.forall(_.mode == Partial)
+        case _ => false
+      }, s"$name shuffles an exploded stream before a partial aggregate " +
+        s"(${path.map(_.nodeName).mkString(" <- ")}):\n$plan"))
+    }
+  }
+
+  /** For each Generate in `plan` (inside cached and adaptive subplans
+    * too), the operators above it up to its first shuffle exchange. */
+  private def generateToExchange(plan: SparkPlan): Seq[Seq[SparkPlan]] = {
+    def walk(p: SparkPlan, above: List[SparkPlan]): Seq[Seq[SparkPlan]] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, above)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan, m :: above)
+      case g: GenerateExec =>
+        above.takeWhile(!_.isInstanceOf[ShuffleExchangeExec]) +:
+          g.children.flatMap(walk(_, g :: above))
+      case other => other.children.flatMap(walk(_, other :: above))
+    }
+    walk(plan, Nil)
   }
 
   test("label cohesion broadcasts centroids back, never shuffling the corpus twice") {

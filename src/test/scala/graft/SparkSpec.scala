@@ -32,8 +32,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp directory, deleted with its contents after the suite. */
+  def tmpDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toFile
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally tmpDirs.asScala.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
 
   /** Generated classes Spark compiled while `body` ran, driver and
     * executor tasks together (one process-wide counter; the forked test

@@ -48,7 +48,7 @@ class MultiMatchSpec extends SparkSpec {
   }
 
   test("kernel runs inside WholeStageCodegen on a parquet-backed plan") {
-    val dir = java.nio.file.Files.createTempDirectory("mm").toString
+    val dir = tmpDir("mm")
     (0 until 100).map(i => s"row $i table value").toDF("t")
       .write.mode("overwrite").parquet(dir)
     graft.functions.GraftFunctions.register(spark)

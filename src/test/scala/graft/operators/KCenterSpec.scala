@@ -83,7 +83,7 @@ class KCenterSpec extends SparkSpec {
   test("plan: no join and no shuffle in the per-round scoring pass") {
     // parquet-backed input: a LocalRelation would let Catalyst constant-fold
     // the scoring pass away and hide the plan under test
-    val dir = java.nio.file.Files.createTempDirectory("kcenter").toString
+    val dir = tmpDir("kcenter")
     mk((0 until 100).map(i => (i.toLong, Seq(i.toFloat, 1f))))
       .write.mode("overwrite").parquet(dir)
     val df = Similarity.kCenterCoreset(spark.read.parquet(dir),

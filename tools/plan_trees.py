@@ -9,6 +9,7 @@ Then:
 
     python3 tools/plan_trees.py show plans.txt [gate ...]
     python3 tools/plan_trees.py diff parent.txt change.txt [--rerun parent2.txt]
+        [--expect gate1,gate2,...]
 
 A gate's tree is the header of its formatted plan (operator names and
 nesting) plus the header of each subquery plan. Operator numbers, `#`
@@ -16,12 +17,15 @@ expression ids, plan ids, lambda variable numbers and the engine-root hash
 in bucketed table names (`graft_b<hash>_`, random per temp root) are
 stripped. The per-operator detail sections (columns, expressions, join
 keys) are kept only with `--details`, a stricter check that also strips
-JVM object hashes and random temp-dir suffixes.
+JVM object hashes, random temp-dir suffixes, RDD ids and source line numbers
+of RDD call sites.
 
 `diff` prints every gate whose tree differs between the two dumps and
 exits 1 if there is one. `--rerun` names a second dump of the first side:
 gates whose trees already differ between the two runs of that side are
-listed as unstable and left out of the comparison.
+listed as unstable and left out of the comparison. `--expect` names the
+gates a change means to alter: the exit status is then 0 exactly when the
+stable gates that differ are those gates.
 """
 import argparse
 import difflib
@@ -34,8 +38,10 @@ SBT_LOG = re.compile(r"^\[(info|success|warn|error)\] ")
 OP_NUMBER = re.compile(r" \(\d+\)(?= |$)")
 EXPR_ID = re.compile(r"#\d+L?|plan_id=\d+|(?<=lambda x_)\d+|(?<=graft_b)\d+(?=_)")
 # run-specific noise in the detail lines: JVM object hashes, lambda class
-# names and random temp-dir suffixes
-DETAIL_NOISE = re.compile(r"\$\$Lambda\$\d+/0x[0-9a-f]+|@[0-9a-f]{4,}\b|(?<=[a-z-])\d{6,}(?=/)")
+# names, random temp-dir suffixes, RDD ids and the source line of an RDD's
+# call site (`MapPartitionsRDD[201] at localCheckpoint at Graphs.scala:131`)
+DETAIL_NOISE = re.compile(r"\$\$Lambda\$\d+/0x[0-9a-f]+|@[0-9a-f]{4,}\b|(?<=[a-z-])\d{6,}(?=/)"
+                          r"|(?<=RDD\[)\d+(?=\])|(?<=\.scala:)\d+")
 
 
 def normalize(line):
@@ -99,7 +105,15 @@ def cmd_diff(args):
     compared = len([g for g in a if g in b and g not in unstable])
     print(f"{compared - len(diffs)} identical, {len(diffs)} differ, "
           f"{len(unstable)} unstable, {len(only_a) + len(only_b)} unmatched")
-    return 1 if diffs or only_a or only_b else 0
+    if args.expect is None:
+        return 1 if diffs or only_a or only_b else 0
+    expected = {g for g in args.expect.split(",") if g}
+    unexpected = sorted(set(diffs) - expected)
+    missing = sorted(expected - set(diffs) - unstable)
+    print(f"expected to differ: {len(expected)}; differ unexpectedly: "
+          f"{', '.join(unexpected) or 'none'}; identical though expected to "
+          f"differ: {', '.join(missing) or 'none'}")
+    return 1 if unexpected or missing or only_a or only_b else 0
 
 
 def main():
@@ -112,6 +126,8 @@ def main():
     d.add_argument("a")
     d.add_argument("b")
     d.add_argument("--rerun", help="second dump of the first side")
+    d.add_argument("--expect", help="comma-separated gates the change is "
+                   "meant to alter; exit 0 only if exactly these differ")
     for x in (s, d):
         x.add_argument("--details", action="store_true",
                        help="keep the per-operator detail lines too")

@@ -10,6 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.catalog.{Catalog, ConnectionDef, StreamDef}
 import graft.functions.{EpochStamp, GraftFunctions}
+import graft.operators.Similarity
 import graft.schema._
 import graft.types.FlinkType
 import SiblingIndex.{Ann, Families, Lsh, MinHash}
@@ -839,31 +840,24 @@ final class Engine(
     * ensure's rebuild IS the right move and encoding first would be
     * wasted work. */
   private def maintainAnn(name: String, appended: DataFrame,
-                          p: Map[String, String]): Boolean = {
-    import graft.operators.Similarity
-    (for {
-      m <- propLong(p, "ann_m").map(_.toInt)
-      ksub <- propLong(p, "ann_ksub").map(_.toInt)
+                          p: Map[String, String]): Boolean =
+    (for { // the first three: what the codebook loader reads
+      _ <- propLong(p, "ann_m")
+      _ <- propLong(p, "ann_ksub")
+      _ <- p.get("ann_kind")
       annN <- propLong(p, "ann_n") if annN > 0
       trained <- propLong(p, "ann_trained_n")
-      kind <- p.get("ann_kind")
       vC <- p.get("ann_vec_col") if appended.columns.contains(vC)
-    } yield (m, ksub, annN, trained, kind, vC)).exists {
-      case (m, ksub, annN, trained, kind, vC) =>
+    } yield (annN, trained, vC)).exists {
+      case (annN, trained, vC) =>
         val shard = appended.select(col(p(Ann.idColKey)).as("n_id"), col(vC).as("v"))
         val shardN = shard.count()
         val auto = p.get("ann_ncentroids").contains("0")
         // past the drift cap: stale → next ensure retrains
         !(auto && annN + shardN > math.max(1L, trained) * annGrowthCap) && {
           if (shardN > 0) {
-            val centRows = readStream(annCentroidsName(name))
-            val hierK2 =
-              if (kind == "hier") propLong(p, "ann_k2").map(_.toInt) else None
-            val quant = Similarity.quantizerFromRows(centRows, hierK2)
-            val books = Similarity.booksFromRows(centRows, m, ksub)
-            appendRows(annIndexName(name), Similarity.pqEncode(quant.assign(shard), books)
-              .select(col("n_id").as("ex_id"), col("cell"),
-                col("v_n").as("v"), col("codes"), col("eps"), col("norm_x")))
+            val (quant, books) = annCodebooks(name, p, withBooks = true)
+            appendRows(annIndexName(name), annEncoded(shard, quant, books.get))
           }
           // zero survivors still re-pin: the caller's (empty) append
           // advanced the main epoch, and a no-op ingest must not cost the
@@ -873,7 +867,6 @@ final class Engine(
           true
         }
     }
-  }
 
   // ------------------------------------------------------------------
   // Persisted ANN retrieval index (round 10 — VERDICT r9 item 1: the
@@ -950,17 +943,17 @@ final class Engine(
   private def annIndexContents(name: String, idCol: String, vecCol: String,
                                nCentroids: Int, m: Int, ksub: Int)
       : (DataFrame, DataFrame, Long, String, Int, Int) = {
-    import graft.operators.Similarity
     val existing = readStream(name).select(col(idCol), col(vecCol))
     val e = existing.select(col(idCol).as("n_id"), col(vecCol).as("v"))
     // one metadata-scale count (the sizing action every AUTO build pays;
     // pinned as ann_n so subsequent ensure calls run zero actions)
     val n = e.count()
-    // fused trainer (optimization round 11): the flat layout's coarse
-    // codebook + all PQ sub-books train in 2 actions instead of 2·(m+1)
+    // fused trainer (optimization round 11): the coarse codebook (or
+    // the hierarchy's top level) + all PQ sub-books train in 2 actions
+    // instead of 2·(m+1)
     val (quant, booksOpt) =
-      Similarity.buildIndexQuantizers("annIndex", nCentroids, e, Some(n),
-        m, ksub)
+      Similarity.buildQuantizer("annIndex", nCentroids, e, Some(n),
+        Some((m, ksub)))
     val (kind, k2, dims) = quant match {
       case h: Similarity.HierQuantizer => ("hier", h.k2, h.dims)
       case f: Similarity.FlatQuantizer =>
@@ -975,11 +968,42 @@ final class Engine(
       val books = booksOpt.get
       (Similarity.quantizerRows(quant, spark)
         .unionAll(Similarity.booksRows(books, spark)),
-        Similarity.pqEncode(quant.assign(e), books)
-          .select(col("n_id").as("ex_id"), col("cell"),
-            col("v_n").as("v"), col("codes"), col("eps"), col("norm_x")),
-        n, kind, k2, dims)
+        annEncoded(e, quant, books), n, kind, k2, dims)
     }
+  }
+
+  /** The stored `__annidx` rows of an (`n_id`, `v`) frame under the
+    * given codebooks: its cell assignment and PQ encoding, as (ex_id,
+    * cell, v, codes, eps, norm_x). */
+  private def annEncoded(e: DataFrame, quant: Similarity.CoarseQuantizer,
+                         books: Similarity.PqBooks): DataFrame =
+    Similarity.pqEncode(quant.assign(e), books).select(col("n_id").as("ex_id"),
+      col("cell"), col("v"), col("codes"), col("eps"), col("norm_x"))
+
+  /** The standing index's codebooks, read from `__anncent`: the coarse
+    * quantizer, and with `withBooks` the PQ books (one more K×d
+    * metadata collect, which an IVF search does not need). */
+  private def annCodebooks(name: String, p: Map[String, String],
+                           withBooks: Boolean)
+      : (Similarity.CoarseQuantizer, Option[Similarity.PqBooks]) = {
+    val rows = readStream(annCentroidsName(name))
+    val hierK2 = if (p("ann_kind") == "hier") Some(p("ann_k2").toInt) else None
+    (Similarity.quantizerFromRows(rows, hierK2), Option.when(withBooks)(
+      Similarity.booksFromRows(rows, p("ann_m").toInt, p("ann_ksub").toInt)))
+  }
+
+  /** Whether the index properties `p` cover (idCol, vecCol). */
+  private def annCovers(p: Map[String, String], idCol: String,
+                        vecCol: String): Boolean =
+    p.get(Ann.idColKey).contains(idCol) && p.get("ann_vec_col").contains(vecCol)
+
+  /** The standing index's assignment (`n_id`, `v`, `cell`), after
+    * [[ensureAnnIndex]] — what the cell-blocked family reuses. */
+  private def annAssigned(name: String, idCol: String, vecCol: String,
+                          nCentroids: Int, m: Int, ksub: Int): DataFrame = {
+    ensureAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)
+    readStream(annIndexName(name))
+      .select(col("ex_id").as("n_id"), col("v"), col("cell"))
   }
 
   /** Probe-width tuning pins ([[annNProbeForRecall]] `pin = true`):
@@ -1066,15 +1090,13 @@ final class Engine(
     val (centRows, idxRows, n, kind, k2, dims) =
       annIndexContents(name, idCol, vecCol, nCentroids, m, ksub)
     val (idxEpoch, centEpoch) = (idxD.writeEpoch + 1, centD.writeEpoch + 1)
-    // the two sibling stages are independent writes — centroids are a
-    // LocalRelation (codebooks collected during training), the index the
-    // corpus encode pass — so they overlap as concurrent jobs
-    // (optimization round 12, guide §2.6): the single-file centroid
-    // write rides the encode's idle cores instead of adding its fixed
-    // job latency after it
-    commits.run(lock, Seq(centD.name, idxD.name))(Seq(
-      () => commits.stage(centD, stampRows(centD, centRows, centEpoch)),
-      () => commits.stage(idxD, stampRows(idxD, idxRows, idxEpoch)))) { _ =>
+    // both stores stage in one task: running the two writes as concurrent
+    // jobs won no time on the ANN-indexed gates (PERF.md "Round 12
+    // carried claims settled")
+    commits.run(lock, Seq(centD.name, idxD.name))(Seq(() => {
+      commits.stage(centD, stampRows(centD, centRows, centEpoch))
+      commits.stage(idxD, stampRows(idxD, idxRows, idxEpoch))
+    })) { _ =>
       val unmoved = catalog.get(name).exists(_.writeEpoch == mainEpoch) &&
         catalog.get(idxName).exists(_.writeEpoch == idxD.writeEpoch) &&
         catalog.get(centName).exists(_.writeEpoch == centD.writeEpoch)
@@ -1118,8 +1140,7 @@ final class Engine(
     // builder when one is registered).
     val inFlight = annBuilds.containsKey(catalog.qualify(name))
     val servable = catalog.get(annIndexName(name)).exists { d =>
-      d.properties.get(Ann.idColKey).contains(idCol) &&
-        d.properties.get("ann_vec_col").contains(vecCol) &&
+      annCovers(d.properties, idCol, vecCol) &&
         propLong(d.properties, "ann_n").nonEmpty
     }
     if (!(inFlight && servable))
@@ -1159,14 +1180,12 @@ final class Engine(
                           method: String = "ivf",
                           corpusPred: Option[org.apache.spark.sql.Column] =
                             None): DataFrame = {
-    import graft.operators.Similarity
     require(Seq("ivf", "pq").contains(method), s"unknown method '$method'")
     require(nProbe >= 0,
       s"nProbe must be >= 0 (0 = AUTO: the pinned tuned width, else 2), " +
         s"got $nProbe")
     val props = annIndexProps(name, idCol, vecCol)
-    if (!props.get(Ann.idColKey).contains(idCol) ||
-        !props.get("ann_vec_col").contains(vecCol))
+    if (!annCovers(props, idCol, vecCol))
       throw new IllegalStateException(
         s"the persisted ANN index for stream '$name' covers columns " +
           s"(${props.getOrElse(Ann.idColKey, "?")}, " +
@@ -1176,12 +1195,8 @@ final class Engine(
     val queries = readStream(name).filter(queryPred)
       .select(col(idCol).as("n_id"), col(vecCol).as("v"))
     if (props("ann_n").toLong == 0L) // empty corpus: empty result
-      return queries.limit(0).select(col("n_id").as("q_id"), col("n_id"),
-        lit(0L).as("rnk"), lit(0.0).as("cos"))
-    val centRows = readStream(annCentroidsName(name))
-    val hierK2 =
-      if (props("ann_kind") == "hier") Some(props("ann_k2").toInt) else None
-    val quant = Similarity.quantizerFromRows(centRows, hierK2)
+      return Similarity.emptyTopK(queries)
+    val (quant, books) = annCodebooks(name, props, withBooks = method == "pq")
     val idx = readStream(annIndexName(name))
       .withColumnRenamed("ex_id", "n_id")
     // AUTO: the recall-tuned pinned width when one is live (rebuilds
@@ -1191,16 +1206,9 @@ final class Engine(
       else props.get("ann_nprobe").map(_.toInt).getOrElse(2)
     val eligible = corpusPred.map(p =>
       readStream(name).filter(p).select(col(idCol).as("n_id")))
-    method match {
-      case "ivf" =>
-        Similarity.ivfTopKFromIndex(idx, quant, queries, k, effProbe,
-          eligible)
-      case "pq" =>
-        val books = Similarity.booksFromRows(centRows,
-          props("ann_m").toInt, props("ann_ksub").toInt)
-        Similarity.pqTopKFromIndex(idx, quant, books, queries, k, effProbe,
-          eligible)
-    }
+    books.fold(Similarity.ivfTopKFromIndex(idx, quant, queries, k, effProbe,
+      eligible))(Similarity.pqTopKFromIndex(idx, quant, _, queries, k,
+      effProbe, eligible))
   }
 
   /** Measured recall@k of the index-served search against exact ground
@@ -1229,7 +1237,7 @@ final class Engine(
                         corpusPred: Option[org.apache.spark.sql.Column] =
                           None): Double = {
     val pred = annSamplePred(name, idCol, sampleQueries)
-    val truth = graft.operators.Similarity.bruteForceTopK(
+    val truth = Similarity.bruteForceTopK(
       readStream(name), idCol, vecCol, pred, k,
       corpusPred = corpusPred.getOrElse(lit(true))).persist()
     try annRecallAgainst(truth, name, idCol, vecCol, pred, k, nProbe, method,
@@ -1282,11 +1290,9 @@ final class Engine(
     // deliberately strips pins; writing a measurement taken against the
     // old codebooks onto the new index would be a stale promise)
     val measuredGen = Ann.generation(props)
-    val quant = graft.operators.Similarity.quantizerFromRows(
-      readStream(annCentroidsName(name)),
-      if (props("ann_kind") == "hier") Some(props("ann_k2").toInt) else None)
+    val quant = annCodebooks(name, props, withBooks = false)._1
     val pred = annSamplePred(name, idCol, sampleQueries)
-    val truth = graft.operators.Similarity.bruteForceTopK(
+    val truth = Similarity.bruteForceTopK(
       readStream(name), idCol, vecCol, pred, k,
       corpusPred = corpusPred.getOrElse(lit(true))).persist()
     try {
@@ -1350,7 +1356,7 @@ final class Engine(
                                  = None): Double = {
     val approx = annTopKIndexedServe(name, idCol, vecCol, pred, k,
       nProbe, method, corpusPred)
-    val r = graft.operators.Similarity.recallAtK(approx, truth, k)
+    val r = Similarity.recallAtK(approx, truth, k)
       .agg(avg("recall")).head()
     if (r.isNullAt(0)) 1.0 else r.getDouble(0) // no truth rows: vacuous
   }
@@ -1408,12 +1414,9 @@ final class Engine(
     * exact cosines. AnnIndexSpec pins both halves. */
   def semDedupIndexed(name: String, idCol: String, vecCol: String,
                       threshold: Double = 0.4, nCentroids: Int = 0,
-                      m: Int = 8, ksub: Int = 16): DataFrame = {
-    ensureAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)
-    val idx = readStream(annIndexName(name))
-      .select(col("ex_id").as("n_id"), col("v"), col("cell"))
-    graft.operators.Similarity.semDedupFromCells(idx, threshold)
-  }
+                      m: Int = 8, ksub: Int = 16): DataFrame =
+    Similarity.semDedupFromCells(
+      annAssigned(name, idCol, vecCol, nCentroids, m, ksub), threshold)
 
   /** Mutual-kNN graph over stream `name` served FROM the persisted
     * index — same assignment-reuse split AND the same qualified
@@ -1422,12 +1425,9 @@ final class Engine(
     * the frozen-codebook drift bound after index-preserving ingests. */
   def knnGraphIndexed(name: String, idCol: String, vecCol: String,
                       k: Int, nCentroids: Int = 0,
-                      m: Int = 8, ksub: Int = 16): DataFrame = {
-    ensureAnnIndex(name, idCol, vecCol, nCentroids, m, ksub)
-    val idx = readStream(annIndexName(name))
-      .select(col("ex_id").as("n_id"), col("v"), col("cell"))
-    graft.operators.Similarity.knnGraphFromCells(idx, k)
-  }
+                      m: Int = 8, ksub: Int = 16): DataFrame =
+    Similarity.knnGraphFromCells(
+      annAssigned(name, idCol, vecCol, nCentroids, m, ksub), k)
 
   /** Ingest a shard INTO an ANN-indexed stream without a rebuild: the
     * rows append to the main stream and their assignments/codes append

@@ -1339,7 +1339,7 @@ object Dedup {
   /** Every mask of at most `radius` set bits among the low `width` bits,
     * by popcount then combination order (mask 0 first): the multi-probe
     * flip set of the sign-LSH and Hamming-LSH probe sides. */
-  private def flipMasks(width: Int, radius: Int): Seq[Long] =
+  private[operators] def flipMasks(width: Int, radius: Int): Seq[Long] =
     (0 to radius).flatMap(r => (0 until width).combinations(r)
       .map(_.foldLeft(0L)((m, b) => m | (1L << b))))
 

@@ -175,11 +175,6 @@ object Graphs {
   def connectedComponentsLss(ids: DataFrame, pairs: DataFrame,
                              idCol: String = "id",
                              maxRounds: Int = 50): DataFrame = {
-    val spark = ids.sparkSession
-    // explicit shuffle width, as in [[labelPropagation]]: the per-star
-    // (u) repartition must satisfy both the min-aggregate and the
-    // hook-up join, so its count is pinned to the session knob
-    val nPart = ids.sparkSession.sessionState.conf.numShufflePartitions
     var edges = pairs
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
@@ -187,15 +182,12 @@ object Graphs {
       .distinct()
       .localCheckpoint(eager = true)
 
-    // each star pre-partitions its edge frame on `u` ONCE (optimization
-    // round 12, guide §2.4): the min aggregate and the hook-up join both
-    // cluster on `u`, so they ride that single exchange instead of one
-    // each — per star, 3 exchanges → 2, and the frame that stops
-    // shuffling twice is the round's full edge set
+    // no repartition on `u` before the min aggregate and the hook-up
+    // join: it added stages and tasks per round, not a saved exchange
+    // (PERF.md "Round 12 carried claims settled")
     def largeStar(e: DataFrame): DataFrame = {
       val bid = e.select(col("u"), col("v"))
         .union(e.select(col("v").as("u"), col("u").as("v")))
-        .repartition(nPart, col("u"))
       val mins = bid.groupBy("u").agg(min("v").as("mn"))
       bid.join(mins, "u")
         .withColumn("m", least(col("mn"), col("u")))
@@ -206,9 +198,8 @@ object Graphs {
 
     def smallStar(e: DataFrame): DataFrame = {
       // edges already point (larger u → smaller v)
-      val ep = e.repartition(nPart, col("u"))
-      val mins = ep.groupBy("u").agg(min("v").as("m"))
-      ep.join(mins, "u")
+      val mins = e.groupBy("u").agg(min("v").as("m"))
+      e.join(mins, "u")
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins.select(col("u"), col("m").as("v")))

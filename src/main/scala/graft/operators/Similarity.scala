@@ -72,7 +72,7 @@ object Similarity {
   val SubBroadcastCapKey = "spark.graft.quantizer.subBroadcastCapBytes"
 
   /** Size cap on the PROBED-QUERY broadcast in the IVF/PQ search tails
-    * (round 11 — ADVICE r10 item 1): `ivfSearchTail`/`pqBarFrames`
+    * (round 11 — ADVICE r10 item 1): the IVF/PQ search join ([[cellPairs]])
     * broadcast the probed query side unconditionally, which is right
     * for gate-scale query batches but dies at Spark's broadcast ceiling
     * when a standing-index serving path is handed a bulk query batch
@@ -182,18 +182,12 @@ object Similarity {
       * [[packedSide]] with this hierarchy's k1·k2 centroid budget. */
     private def subSide: DataFrame =
       packedSide(subPacked, top.size.toLong * k2, dims)
-    private def subPick(vec: Column): Column =
-      // same all-NaN fold as withCell: kernel returns -1, pmod folds to
-      // the LAST (highest-cid) sub-centroid
-      element_at(col("__cids"),
-        pmod(call_function("nearest_centroid", vec, col("__flat"), lit(dims)),
-          size(col("__cids"))) + 1)
     def assign(df: DataFrame): DataFrame = {
       val keep = df.columns.toSeq.map(col)
       withCell(df, top).withColumnRenamed("cell", "__tcell")
         .join(subSide, col("__tcell") === col("__sp_tcell"))
         .select(keep :+
-          (col("__tcell") * lit(k2) + subPick(col("v"))).cast("int").as("cell"): _*)
+          (col("__tcell") * lit(k2) + packedPick(col("v"), dims)).cast("int").as("cell"): _*)
     }
     def probeCells(queries: DataFrame, vecCol: String, nProbe: Int): DataFrame = {
       val keep = queries.columns.toSeq.map(col)
@@ -247,8 +241,8 @@ object Similarity {
     * on the UNPROBED query side (Generate-blind stats would undercount
     * the fan-out), × the quantizer's probe fan-out × the caller's
     * post-probe row payload. Rows fall back to sizeInBytes divided by
-    * `srcRowBytes` — the caller's FLOOR on the source row width (the
-    * 4·dims vector payload every row of this family carries; round 11
+    * the FLOOR on the source row width (the 4·dims vector payload
+    * every row of this family carries; round 11
     * re-audit: the former /8 divisor over-counted 64-float rows ~50×,
     * silently flipping the audited probe broadcast to the shuffle
     * degrade at gate scales — the strict unused-exemption lint caught
@@ -256,8 +250,9 @@ object Similarity {
     * error direction remains toward the shuffle degrade — never toward
     * an oversized broadcast (the [[graft.operators.Dedup]]
     * shardRowEstimate convention). */
-  private def probedBytesEstimate(queries: DataFrame, fanout: Long,
-                                  rowBytes: Long, srcRowBytes: Long): Long = {
+  private def probedBytesEstimate(queries: DataFrame, quant: CoarseQuantizer,
+                                  nProbe: Int, rowBytes: Long): Long = {
+    val srcRowBytes = 4L * quant.dims
     val st = queries.queryExecution.optimizedPlan.stats
     val rows = st.rowCount.map(_.min(BigInt(Long.MaxValue)).toLong)
       .getOrElse {
@@ -265,7 +260,8 @@ object Similarity {
         if (approx >= BigInt(Long.MaxValue)) Long.MaxValue
         else math.max(1L, approx.toLong)
       }
-    val b = BigInt(rows) * math.max(1L, fanout) * math.max(1L, rowBytes)
+    val b = BigInt(rows) * math.max(1L, quant.probeFanout(nProbe)) *
+      math.max(1L, rowBytes)
     if (b >= BigInt(Long.MaxValue)) Long.MaxValue else b.toLong
   }
 
@@ -274,6 +270,15 @@ object Similarity {
   private def ivfProbeRowBytes(dims: Int): Long = 4L * dims + 48
   private def pqProbeRowBytes(dims: Int, b: PqBooks): Long =
     4L * dims + 8L * b.m * b.ksub + 8L * b.m + 64
+
+  /** The nearest sub-centroid id of `vec` in a joined packed row
+    * (`__cids`, `__flat`) — the same all-NaN fold as withCell: the
+    * kernel returns -1, pmod folds it to the LAST (highest-cid)
+    * sub-centroid. */
+  private def packedPick(vec: Column, dims: Int): Column =
+    element_at(col("__cids"),
+      pmod(call_function("nearest_centroid", vec, col("__flat"), lit(dims)),
+        size(col("__cids"))) + 1)
 
   /** Packs per-top-cell sub-centroids into one row per top cell:
     * `(__sp_tcell, __cids, __flat)` — cids sorted ascending so the
@@ -347,18 +352,18 @@ object Similarity {
     }
   }
 
-  /** Trains the two-level hierarchy: top level via [[refinedCentroids]]
-    * (unchanged recipe), then ONE distributed Lloyd step over ALL top
-    * cells simultaneously — per-cell seeds are the first k2 vectors by
-    * id (one window shuffle keyed by top cell), assignment is one
-    * broadcast-join + fused-kernel corpus pass, and the mean recompute
-    * is a (tcell, sub, dim)-keyed aggregate with map-side combine.
-    * Nothing corpus-sized ever reaches the driver: top centroids are
-    * k1×d floats, and the packed sub table (√n·d floats) stays
-    * distributed behind a broadcast. */
-  private def trainHier(e: DataFrame, k1: Int, k2: Int): CoarseQuantizer = {
-    val top = refinedCentroids(e, k1)
+  /** Trains the two-level hierarchy under the trained `top` level: ONE
+    * distributed Lloyd step over ALL top cells simultaneously — per-cell
+    * seeds are the first k2 vectors by id (one window shuffle keyed by
+    * top cell), assignment is one broadcast-join + fused-kernel corpus
+    * pass, and the mean recompute is a (tcell, sub, dim)-keyed aggregate
+    * with map-side combine. Nothing corpus-sized ever reaches the
+    * driver: top centroids are k1×d floats, and the packed sub table
+    * (√n·d floats) stays distributed behind a broadcast. */
+  private def trainHier(e: DataFrame, top: Seq[(Int, Seq[Float])],
+                        k2: Int): CoarseQuantizer = {
     if (top.isEmpty) return new FlatQuantizer(Nil)
+    val k1 = top.size
     val dims = top.head._2.length
     val t = withCell(e, top).withColumnRenamed("cell", "__tcell")
     val wSeed = Window.partitionBy("__tcell").orderBy("n_id")
@@ -369,9 +374,7 @@ object Similarity {
     val assigned = t
       .join(packedSide(seedPacked, k1.toLong * k2, dims),
         col("__tcell") === col("__sp_tcell"))
-      .withColumn("__sub", element_at(col("__cids"),
-        pmod(call_function("nearest_centroid", col("v"), col("__flat"),
-          lit(dims)), size(col("__cids"))) + 1))
+      .withColumn("__sub", packedPick(col("v"), dims))
     val refinedSubs = assigned
       .select(col("__tcell"), col("__sub"),
         posexplode(col("v")).as(Seq("__dim", "__x")))
@@ -388,42 +391,55 @@ object Similarity {
     new HierQuantizer(top, k2, subPacked, dims)
   }
 
-  /** Shared quantizer resolution for every family entry point:
-    * `nCentroids > 0` = caller-explicit FLAT codebook (audited by the
-    * lint when it is on — past the cap an explicit flat count fails the
-    * audit, which is correct: the auto path is the scale path);
-    * `nCentroids <= 0` = AUTO, corpus-dimensioned from `knownCount` or
-    * one metadata-scale `count()` — flat [[ivfCellCount]] up to
-    * [[FlatCellCap]], the two-level [[HierQuantizer]] beyond it
-    * (k1 = ⌈√total⌉ top cells × k2 = ⌈total/k1⌉ subs ≥ the uncapped
-    * √n-ideal). Every resolution routes through
-    * [[graft.plans.QuantizerCellGuard]] so a constant-cells regression
-    * fails the Verify matrix instead of shipping. */
-  private[graft] def buildQuantizer(op: String, nCentroids: Int, e: DataFrame,
-                                    knownCount: Option[Long]): CoarseQuantizer = {
+  /** The one layout resolver of the family: `nCentroids > 0` =
+    * caller-explicit FLAT codebook (audited by the lint when it is on —
+    * past the cap an explicit flat count fails the audit, which is
+    * correct: the auto path is the scale path); `nCentroids <= 0` =
+    * AUTO, corpus-dimensioned from `knownCount` or one metadata-scale
+    * `count()` — flat [[ivfCellCount]] up to [[FlatCellCap]], the
+    * two-level [[HierQuantizer]] beyond it (k1 = ⌈√total⌉ top cells ×
+    * k2 = ⌈total/k1⌉ subs ≥ the uncapped √n-ideal). Every resolution
+    * routes through [[graft.plans.QuantizerCellGuard]] so a
+    * constant-cells regression fails the Verify matrix instead of
+    * shipping. @return `Left(cells)` flat, `Right((k1, k2))` hierarchical */
+  private def resolveLayout(op: String, nCentroids: Int, e: DataFrame,
+                            knownCount: Option[Long]): Either[Int, (Int, Int)] = {
     val spark = e.sparkSession
-    if (nCentroids > 0) {
-      if (graft.plans.QuantizerCellGuard.enabled(spark)) {
-        val n = knownCount.getOrElse(e.count())
-        graft.plans.QuantizerCellGuard.check(spark, op, n, nCentroids.toLong,
-          idealCells(n))
-      }
-      new FlatQuantizer(refinedCentroids(e, nCentroids))
-    } else {
-      val n = knownCount.getOrElse(e.count())
-      val total = idealCells(n)
-      val cap = flatCap(spark)
-      if (total <= cap) {
-        val cells = total.toInt
-        graft.plans.QuantizerCellGuard.check(spark, op, n, cells.toLong, total)
-        new FlatQuantizer(refinedCentroids(e, cells))
-      } else {
+    val guard = graft.plans.QuantizerCellGuard
+    if (nCentroids > 0 && !guard.enabled(spark)) return Left(nCentroids)
+    val n = knownCount.getOrElse(e.count())
+    val total = idealCells(n)
+    val cap = flatCap(spark)
+    val layout =
+      if (nCentroids > 0) Left(nCentroids)
+      else if (total <= cap) Left(total.toInt)
+      else {
         val k1 = math.min(cap, math.ceil(math.sqrt(total.toDouble)).toInt)
-        val k2 = math.min(cap, math.ceil(total.toDouble / k1).toInt)
-        graft.plans.QuantizerCellGuard.check(spark, op, n, k1.toLong * k2, total)
-        trainHier(e, k1, k2)
+        Right((k1, math.min(cap, math.ceil(total.toDouble / k1).toInt)))
       }
+    guard.check(spark, op, n,
+      layout.fold(_.toLong, { case (k1, k2) => k1.toLong * k2 }), total)
+    layout
+  }
+
+  /** Trains the resolved layout's coarse quantizer over `e` (`n_id`,
+    * `v`) and, with `pq = Some((m, ksub))`, the PQ books beside it. The
+    * flat codebook (or the hierarchy's top level) trains by
+    * one [[lloyd]] iteration (the deterministic coarse quantizer of
+    * every family operator), or — with books — by the one-pass
+    * [[trainFlatAndBooks]], which yields the same centroids; the
+    * hierarchy then refines its sub-cells under that top level. */
+  private[graft] def buildQuantizer(op: String, nCentroids: Int, e: DataFrame,
+                                    knownCount: Option[Long],
+                                    pq: Option[(Int, Int)] = None)
+      : (CoarseQuantizer, Option[PqBooks]) = {
+    val layout = resolveLayout(op, nCentroids, e, knownCount)
+    val cells = layout.fold(identity, _._1)
+    val (cents, books) = pq.fold((lloyd(e, cells, 1), Option.empty[PqBooks])) {
+      case (m, ksub) => trainFlatAndBooks(e, cells, m, ksub)
     }
+    (layout.fold(_ => new FlatQuantizer(cents), { case (_, k2) => trainHier(e, cents, k2) }),
+      books)
   }
 
   /** Per-bucket pair budget floor for [[SkewJoin.gridSalted]] hot-cell
@@ -473,14 +489,27 @@ object Similarity {
       .select(col(idCol).as("n_id"), col(vecCol).as("v_n"))
     val queries = emb.filter(queryPred)
       .select(col(idCol).as("q_id"), col(vecCol).as("v_q"))
-    val scored = corpus.crossJoin(broadcast(queries))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", round(cosine(col("v_q"), col("v_n")), 6))
+    topKByCosine(corpus.crossJoin(broadcast(queries))
+      .filter(col("q_id") =!= col("n_id")), k)
+  }
+
+  /** The family's one per-query rank tail over candidate pairs (`q_id`,
+    * `n_id`, `v_q`, `v_n`): round-6 exact cosine, row_number per query
+    * by cos desc with the n_id tie-break, the first `k`.
+    * @return (q_id, n_id, rnk, cos) */
+  private def topKByCosine(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
+    pairs.withColumn("cos", round(cosine(col("v_q"), col("v_n")), 6))
+      .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select("q_id", "n_id", "rnk", "cos")
   }
+
+  /** The family's empty top-k result over a frame with `n_id`: no rows,
+    * the (q_id, n_id, rnk, cos) schema. */
+  private[graft] def emptyTopK(e: DataFrame): DataFrame =
+    e.limit(0).select(col("n_id").as("q_id"), col("n_id"),
+      lit(0L).as("rnk"), lit(0.0).as("cos"))
 
   /** Recall@k of an approximate neighbor frame against exact ground
     * truth — the standard ANN quality metric (fraction of each query's
@@ -563,18 +592,6 @@ object Similarity {
                      seed: String = "hp"): Column =
     element_at(planeSignatures(vec, Seq(seed), planes, dims), 1)
 
-  /** IVF (inverted-file) approximate top-k: a coarse quantizer of
-    * `nCentroids` centroids (deterministic seeds = the first `nCentroids`
-    * corpus vectors, refined by one Lloyd iteration), corpus partitioned
-    * by nearest centroid, queries probing their `nProbe` nearest cells.
-    *
-    * Scale shape: centroids are metadata (K×d floats, collected to the
-    * driver and broadcast as literals — the standard IVF coarse-quantizer
-    * deployment); assignment is a corpus-linear pass of K codegen'd
-    * cosines; the search join is an equi-join on cell id, never a cross
-    * join. Higher recall than single-probe sign-LSH at the same cost
-    * shape (asserted in the spec).
-    */
   /** All assignment cosines for one row in a single fused codegen loop
     * ([[graft.functions.CentroidCosines]]) — K inline [[cosine]] literal
     * subtrees blow the JVM method limit near K≈100 and drop the whole
@@ -618,36 +635,50 @@ object Similarity {
         lit(cids.length)) + 1))
   }
 
-  /** Deterministic coarse quantizer shared by [[ivfTopK]] and [[semDedup]]:
-    * seeds = the first `nCentroids` vectors of `e` (id, v) by id, refined
-    * by one Lloyd iteration (elementwise mean per assigned cell, rounded
-    * to FLOAT). Both collects are K×d centroid metadata — the standard
-    * IVF deployment shape, not a corpus collect. */
-  private def refinedCentroids(e: DataFrame, nCentroids: Int): Seq[(Int, Seq[Float])] = {
-    val seeds: Seq[(Int, Seq[Float])] = e.orderBy("n_id").limit(nCentroids)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](1)) }.toSeq
-    if (seeds.isEmpty) return Nil // empty corpus: no cells to refine
-    lloydStep(e, seeds)
+  /** The family's deterministic seeds: the vectors of the first `k` rows
+    * of `e` (`n_id`, `v`) by `n_id` — one TakeOrdered, K×d floats. */
+  private def firstVectors(e: DataFrame, k: Int): IndexedSeq[Seq[Float]] =
+    e.orderBy("n_id").limit(k).collect().map(_.getSeq[Float](1)).toIndexedSeq
+
+  /** `iters` Lloyd iterations from [[firstVectors]] seeds (cids 0..k-1;
+    * `Nil` on an empty corpus). Each iteration assigns every vector to
+    * its nearest centroid (fused kernel, round-6 cosine, highest-cid
+    * tie-break) and recomputes each non-empty cell's elementwise mean,
+    * ROUNDED TO FLOAT — the rounding is what makes the step bit-stable
+    * across engines (double summation order drifts by ~n·2⁻⁵², orders of
+    * magnitude below float precision, so the FLOAT cast absorbs it;
+    * proven at sf1 by the IVF gates). Cells that win no rows drop out,
+    * exactly as the SQL replay's GROUP BY drops them. Every collect is
+    * K×d centroid metadata — the standard quantizer-training shape,
+    * never corpus-sized. */
+  private def lloyd(e: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Float])] = {
+    val seeds = firstVectors(e, k).zipWithIndex.map { case (v, i) => (i, v) }
+    if (seeds.isEmpty) return Nil
+    (0 until iters).foldLeft(seeds: Seq[(Int, Seq[Float])]) { (cents, _) =>
+      withCell(e, cents)
+        .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
+        .groupBy("cell", "dim").agg(avg("x").as("m"))
+        .groupBy("cell").agg(sort_array(collect_list(struct(col("dim"), col("m")))).as("ms"))
+        .select(col("cell"), expr("transform(ms, s -> CAST(s.m AS FLOAT))").as("centroid"))
+        .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).toSeq
+    }
   }
 
-  /** One Lloyd iteration: assign every vector to its nearest centroid
-    * (fused kernel, round-6 cosine, highest-cid tie-break) and recompute
-    * each non-empty cell's elementwise mean, ROUNDED TO FLOAT — the
-    * rounding is what makes the step bit-stable across engines (double
-    * summation order drifts by ~n·2⁻⁵², orders of magnitude below float
-    * precision, so the FLOAT cast absorbs it; proven at sf1 by the IVF
-    * gates). Cells that win no rows drop out, exactly as the SQL replay's
-    * GROUP BY drops them. The collect is K×d centroid metadata — the
-    * standard quantizer-training shape, never corpus-sized. */
-  private def lloydStep(e: DataFrame,
-                        cents: Seq[(Int, Seq[Float])]): Seq[(Int, Seq[Float])] =
-    withCell(e, cents)
-      .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("cell", "dim").agg(avg("x").as("m"))
-      .groupBy("cell").agg(sort_array(collect_list(struct(col("dim"), col("m")))).as("ms"))
-      .select(col("cell"), expr("transform(ms, s -> CAST(s.m AS FLOAT))").as("centroid"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).toSeq
+  /** [[kmeansTrain]]'s cluster ASSIGNMENTS instead of its centroids:
+    * `(idCol, cell)` for every vector, after `iters` Lloyd passes from
+    * the same deterministic seeds. The per-row labeling feeds
+    * cluster-level corpus analytics (term labeling, per-cluster
+    * sampling); same scale shape as training plus one final fused-kernel
+    * assignment scan. */
+  def kmeansCells(emb: DataFrame, idCol: String, vecCol: String,
+                  k: Int = 8, iters: Int = 3): DataFrame = {
+    graft.functions.GraftFunctions.register(emb.sparkSession)
+    val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
+    val cents = lloyd(e, k, iters)
+    if (cents.isEmpty) return e.limit(0)
+      .select(col("n_id").as(idCol), lit(0).as("cell"))
+    withCell(e, cents).select(col("n_id").as(idCol), col("cell"))
+  }
 
   /** Deterministic distributed k-means training (Lloyd): seeds = the
     * first `k` vectors by id, `iters` full assignment+mean passes. Every
@@ -663,41 +694,15 @@ object Similarity {
     *         assignment pass (0 for a centroid that survives training
     *         but wins no rows at the end)
     */
-  /** [[kmeansTrain]]'s cluster ASSIGNMENTS instead of its centroids:
-    * `(idCol, cell)` for every vector, after `iters` Lloyd passes from
-    * the same deterministic seeds. The per-row labeling feeds
-    * cluster-level corpus analytics (term labeling, per-cluster
-    * sampling); same scale shape as training plus one final fused-kernel
-    * assignment scan. */
-  def kmeansCells(emb: DataFrame, idCol: String, vecCol: String,
-                  k: Int = 8, iters: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-    val seeds: Seq[(Int, Seq[Float])] = e.orderBy("n_id").limit(k)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](1)) }.toSeq
-    if (seeds.isEmpty) return e.limit(0)
-      .select(col("n_id").as(idCol), lit(0).as("cell"))
-    var cents = seeds
-    var it = 0
-    while (it < iters) { cents = lloydStep(e, cents); it += 1 }
-    withCell(e, cents).select(col("n_id").as(idCol), col("cell"))
-  }
-
   def kmeansTrain(emb: DataFrame, idCol: String, vecCol: String,
                   k: Int = 8, iters: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-    val seeds: Seq[(Int, Seq[Float])] = e.orderBy("n_id").limit(k)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](1)) }.toSeq
+    val cents = lloyd(e, k, iters)
     val spark = emb.sparkSession
     import spark.implicits._
-    if (seeds.isEmpty)
+    if (cents.isEmpty)
       return Seq.empty[(Int, Long, Double, Long)].toDF("cid", "dim", "c", "n")
-    var cents = seeds
-    var it = 0
-    while (it < iters) { cents = lloydStep(e, cents); it += 1 }
     val sizes = withCell(e, cents)
       .groupBy(col("cell").as("cid")).agg(count(lit(1)).as("n"))
     val centDf = cents
@@ -710,53 +715,59 @@ object Similarity {
         coalesce(col("n"), lit(0L)).as("n"))
   }
 
+  /** The cell-blocked prologue of every inline quantizer operator:
+    * register the kernels, project the corpus to (`n_id`, `v`) plus the
+    * caller's `extra` columns, and train the quantizer (with `pq`, the
+    * PQ books too — [[buildQuantizer]]) over (`n_id`, `v`). Runs `body`
+    * on the projected corpus, or `empty` — the caller's empty result
+    * shape over the same projection — when the corpus is empty. */
+  private def cellBlocked[T](op: String, emb: DataFrame, idCol: String,
+                             vecCol: String, nCentroids: Int,
+                             knownCount: Option[Long],
+                             pq: Option[(Int, Int)] = None,
+                             extra: Seq[Column] = Nil)(empty: DataFrame => T)(
+      body: (DataFrame, CoarseQuantizer, Option[PqBooks]) => T): T = {
+    graft.functions.GraftFunctions.register(emb.sparkSession)
+    val e = emb.select(Seq(col(idCol).as("n_id"), col(vecCol).as("v")) ++ extra: _*)
+    val (quant, books) =
+      buildQuantizer(op, nCentroids, e.select("n_id", "v"), knownCount, pq)
+    if (quant.isEmpty) empty(e) else body(e, quant, books)
+  }
+
+  /** IVF (inverted-file) approximate top-k: a coarse quantizer of
+    * `nCentroids` centroids (deterministic seeds = the first `nCentroids`
+    * corpus vectors, refined by one Lloyd iteration), corpus partitioned
+    * by nearest centroid, queries probing their `nProbe` nearest cells.
+    * The search is [[ivfTopKFromIndex]] over the in-memory assignment —
+    * the inline operator is the persisted index, built per call.
+    *
+    * Scale shape: centroids are metadata (K×d floats, collected to the
+    * driver and broadcast as literals — the standard IVF coarse-quantizer
+    * deployment); assignment is a corpus-linear pass of K codegen'd
+    * cosines; the search join is an equi-join on cell id, never a cross
+    * join. Higher recall than single-probe sign-LSH at the same cost
+    * shape (asserted in the spec).
+    */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
               queryPred: Column, k: Int, nCentroids: Int = 0,
               nProbe: Int = 2,
-              knownCount: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-    val quant = buildQuantizer("ivfTopK", nCentroids, e, knownCount)
-    if (quant.isEmpty) // empty corpus: empty result, same schema
-      return e.limit(0).select(col("n_id").as("q_id"), col("n_id"),
-        lit(0L).as("rnk"), lit(0.0).as("cos"))
+              knownCount: Option[Long] = None): DataFrame =
+    cellBlocked("ivfTopK", emb, idCol, vecCol, nCentroids, knownCount)(emptyTopK) {
+      (e, quant, _) =>
+        ivfTopKFromIndex(quant.assign(e), quant, e.filter(queryPred), k, nProbe)
+    }
 
-    val corpus = quant.assign(e)
-      .withColumnRenamed("v", "v_n")
-    val qs = e.filter(queryPred)
-      .select(col("n_id").as("q_id"), col("v").as("v_q"))
-    val queries = quant.probeCells(qs, "v_q", nProbe)
-    ivfSearchTail(corpus, queries, k, probedBytesEstimate(qs,
-      quant.probeFanout(nProbe), ivfProbeRowBytes(quant.dims),
-      4L * quant.dims))
-  }
-
-  /** The exact-scoring tail shared by [[ivfTopK]] and the index-backed
-    * [[ivfTopKFromIndex]]: cell equi-join with the PROBED QUERIES
-    * broadcast while `probedBytes` fits [[ProbeBroadcastCapKey]] (the
-    * corpus never shuffles; past the cap the probed side builds a
-    * shuffle-hash instead — ADVICE r10 item 1), round-6 exact cosine,
-    * per-query window with the family's n_id tie-break. */
-  private[graft] def ivfSearchTail(corpus: DataFrame, probed: DataFrame,
-                                   k: Int, probedBytes: Long): DataFrame = {
-    val scored = corpus.join(probedSide(probed, probedBytes), "cell")
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", round(cosine(col("v_q"), col("v_n")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("q_id", "n_id", "rnk", "cos")
-  }
-
-  /** IVF top-k over a PERSISTED index (round 10 — VERDICT r9 item 1):
-    * `index` is the materialized `(n_id, cell, v)` assignment (what
-    * `Engine.ensureAnnIndex` stores as the `__annidx` sibling stream)
-    * and `quant` the deserialized codebook ([[quantizerFromRows]]) — so
-    * a repeat query batch pays probe + cell-join only, never the
-    * per-call Lloyd retrain + full-corpus re-assignment the inline path
-    * does. Bit-identical to [[ivfTopK]] on the same corpus because the
-    * stored assignment IS the inline assignment (floats round-trip
-    * parquet exactly; the recipe is storage-order-independent).
+  /** IVF top-k over an assigned corpus `index` (`n_id`, `cell`, `v`, …)
+    * and its quantizer `quant`: the in-memory assignment of [[ivfTopK]],
+    * or the materialized `__annidx` assignment `Engine.ensureAnnIndex`
+    * stores with the codebook it deserialized ([[quantizerFromRows]]) —
+    * so a repeat query batch over the index pays probe + cell-join only,
+    * never the per-call Lloyd retrain + full-corpus re-assignment.
+    * Bit-identical either way, because the stored assignment IS the
+    * inline assignment (floats round-trip parquet exactly; the recipe is
+    * storage-order-independent). The [[cellPairs]] join broadcasts the
+    * probed queries under [[ProbeBroadcastCapKey]]; [[topKByCosine]]
+    * ranks the candidates.
     *
     * `eligible` (round 11) is the PRE-FILTERED search shape served from
     * the index: a single-column (`n_id`) frame of corpus ids allowed to
@@ -775,14 +786,23 @@ object Similarity {
                                       nProbe: Int,
                                       eligible: Option[DataFrame] = None)
       : DataFrame = {
-    val base = index.select(col("n_id"), col("cell"), col("v").as("v_n"))
-    val corpus = eligible.fold(base)(el =>
-      base.join(el.select(col("n_id")), Seq("n_id"), "left_semi"))
     val qs = queries.select(col("n_id").as("q_id"), col("v").as("v_q"))
-    val probed = quant.probeCells(qs, "v_q", nProbe)
-    ivfSearchTail(corpus, probed, k, probedBytesEstimate(qs,
-      quant.probeFanout(nProbe), ivfProbeRowBytes(quant.dims),
-      4L * quant.dims))
+    topKByCosine(cellPairs(index, eligible, quant.probeCells(qs, "v_q", nProbe),
+      probedBytesEstimate(qs, quant, nProbe, ivfProbeRowBytes(quant.dims))), k)
+  }
+
+  /** The search join of both methods: the assigned corpus `index` with
+    * `v` as `v_n`, restricted to the `eligible` ids BEFORE the join,
+    * cell-equi-joined to the `probed` queries — broadcast while
+    * `probedBytes` fits [[ProbeBroadcastCapKey]] (the corpus never
+    * shuffles; past the cap the probed side builds a shuffle-hash
+    * instead — ADVICE r10 item 1) — with self-pairs dropped. */
+  private def cellPairs(index: DataFrame, eligible: Option[DataFrame],
+                        probed: DataFrame, probedBytes: Long): DataFrame = {
+    val corpus = index.withColumnRenamed("v", "v_n")
+    eligible.fold(corpus)(el => corpus.join(el.select(col("n_id")), Seq("n_id"), "left_semi"))
+      .join(probedSide(probed, probedBytes), "cell")
+      .filter(col("q_id") =!= col("n_id"))
   }
 
   /** IVF-PQ ANN (round 6 — the fourth ANN path, and the canonical 100 TB
@@ -818,11 +838,12 @@ object Similarity {
     *
     * Codebooks: the vector splits into `m` subspaces of d/m dims; each
     * subspace trains its own `ksub`-centroid quantizer with the SAME
-    * deterministic recipe as the coarse quantizer ([[refinedCentroids]]:
-    * first-ksub seeds, one Lloyd pass, FLOAT rounding) — m·ksub·(d/m)
-    * floats of metadata, the standard PQ deployment shape. Encoding is m
-    * fused [[graft.functions.NearestCentroid]] kernel calls per row plus
-    * m [[graft.functions.CentroidCosines]] scans for the residual norms
+    * deterministic recipe as the coarse quantizer (first-ksub seeds, one
+    * Lloyd pass, FLOAT rounding), all in the one pass of
+    * [[trainFlatAndBooks]] — m·ksub·(d/m) floats of metadata, the
+    * standard PQ deployment shape. Encoding ([[pqEncode]]) is m fused
+    * [[graft.functions.NearestCentroid]] kernel calls per row plus m
+    * [[graft.functions.CentroidCosines]] scans for the residual norms
     * (direction-nearest: spherical PQ, matching the cosine metric).
     *
     * ADC: per query, `lut[j·ksub + c] = dot(qⱼ, c_{j,c})` (a flat
@@ -832,39 +853,24 @@ object Similarity {
     * doubles per vector at m=8 — and raw vectors are gathered only for
     * survivors; here the vector column rides along because the gate's
     * corpus IS the frame, but the plan still pays the exact cosine only
-    * on survivor rows per query.
+    * on survivor rows per query. The search is [[pqTopKFromIndex]]'s
+    * over the in-memory encoding.
     */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int, nCentroids: Int = 0,
              nProbe: Int = 2, m: Int = 8, ksub: Int = 16,
              knownCount: Option[Long] = None): DataFrame =
-    pqFrames(emb, idCol, vecCol, queryPred, k, nCentroids, nProbe, m, ksub,
-      knownCount)
-    match {
-      case None =>
-        val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-        e.limit(0).select(col("n_id").as("q_id"), col("n_id"),
-          lit(0L).as("rnk"), lit(0.0).as("cos"))
-      case Some((_, survivors)) => pqFinal(survivors, k)
-    }
+    pqInline(emb, idCol, vecCol, queryPred, k, nCentroids, nProbe, m, ksub,
+      knownCount)(emptyTopK)(bars => topKByCosine(bars._2, k))
 
-  /** The exact-cosine final ranking over the bound-prune survivors —
-    * shared by [[pqTopK]] and [[pqTopKFromIndex]]. */
-  private def pqFinal(survivors: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    survivors.withColumn("cos", round(cosine(col("v_q"), col("v_n")), 6))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("q_id", "n_id", "rnk", "cos")
-  }
-
-  /** IVF-PQ top-k over a PERSISTED index (round 10 — VERDICT r9 item 1):
-    * `index` carries the stored `(n_id, cell, v, codes, eps, norm_x)`
-    * encoding and `books` the deserialized PQ codebooks, so a repeat
-    * query batch pays LUT build + probe + ADC only — never the per-call
-    * codebook retrain + full-corpus re-encode. Output ≡ [[pqTopK]] ≡
-    * [[ivfTopK]] (the error-bound prune is exact by construction and
-    * every stored float round-trips parquet bit-exactly).
+  /** IVF-PQ top-k over an encoded corpus `index` (`n_id`, `cell`, `v`,
+    * `codes`, `eps`, `norm_x`) and its codebooks: the in-memory encoding
+    * of [[pqTopK]], or the stored `__annidx` encoding with the
+    * deserialized books — so a repeat query batch over the index pays
+    * LUT build + probe + ADC only, never the per-call codebook retrain +
+    * full-corpus re-encode. Output ≡ [[pqTopK]] ≡ [[ivfTopK]] (the
+    * error-bound prune is exact by construction and every stored float
+    * round-trips parquet bit-exactly).
     *
     * `eligible` (round 11, same contract as [[ivfTopKFromIndex]]) MUST
     * apply BEFORE the ADC bound-prune, never after: the prune threshold
@@ -877,16 +883,8 @@ object Similarity {
                                      books: PqBooks, queries: DataFrame,
                                      k: Int, nProbe: Int,
                                      eligible: Option[DataFrame] = None)
-      : DataFrame = {
-    val baseEnc = index.select(col("n_id"), col("cell"), col("v").as("v_n"),
-      col("codes"), col("eps"), col("norm_x"))
-    val corpusEnc = eligible.fold(baseEnc)(el =>
-      baseEnc.join(el.select(col("n_id")), Seq("n_id"), "left_semi"))
-    val probed = quant.probeCells(pqQueries(queries, books), "v_q", nProbe)
-    pqFinal(pqBarFrames(corpusEnc, probed, books, k,
-      probedBytesEstimate(queries, quant.probeFanout(nProbe),
-        pqProbeRowBytes(quant.dims, books), 4L * quant.dims))._2, k)
-  }
+      : DataFrame =
+    topKByCosine(pqBars(index, quant, books, queries, k, nProbe, eligible)._2, k)
 
   /** Pruning-power observability for [[pqTopK]] (PqSpec): per-query
     * candidate vs survivor counts under the error-bound prune. Exactness
@@ -897,88 +895,93 @@ object Similarity {
                                   vecCol: String, queryPred: Column, k: Int,
                                   nCentroids: Int = 0, nProbe: Int = 2,
                                   m: Int = 8, ksub: Int = 16): DataFrame =
-    pqFrames(emb, idCol, vecCol, queryPred, k, nCentroids, nProbe, m, ksub,
-      None)
-    match {
-      case None =>
-        val e = emb.select(col(idCol).as("n_id"))
-        e.limit(0).select(col("n_id").as("q_id"),
-          lit(0L).as("candidates"), lit(0L).as("survivors"))
-      case Some((withBar, _)) =>
-        // one pass over the bar frame: the window columns don't change
-        // row count, so count(*) IS the candidate count, and the
-        // survivor count is the same predicate the prune applies
-        withBar.groupBy("q_id").agg(count(lit(1)).as("candidates"),
-          count(when(pqSurvives, 1)).as("survivors"))
+    pqInline(emb, idCol, vecCol, queryPred, k, nCentroids, nProbe, m, ksub,
+      None)(_.limit(0).select(col("n_id").as("q_id"),
+        lit(0L).as("candidates"), lit(0L).as("survivors"))) { bars =>
+      // one pass over the bar frame: the window columns don't change
+      // row count, so count(*) IS the candidate count, and the
+      // survivor count is the same predicate the prune applies
+      bars._1.groupBy("q_id").agg(count(lit(1)).as("candidates"),
+        count(when(pqSurvives, 1)).as("survivors"))
+    }
+
+  /** The inline IVF-PQ pipeline: train, assign and encode the corpus
+    * ([[pqEncode]]), then [[pqBars]] for its `queryPred` rows — or
+    * `empty` over the projected corpus when it is empty. */
+  private def pqInline[T](emb: DataFrame, idCol: String, vecCol: String,
+                          queryPred: Column, k: Int, nCentroids: Int,
+                          nProbe: Int, m: Int, ksub: Int,
+                          knownCount: Option[Long])(empty: DataFrame => T)(
+      tail: ((DataFrame, DataFrame)) => T): T =
+    // only the COARSE quantizer corpus-dimensions: ksub is per-subspace
+    // code granularity (reconstruction quality), not a blocking key —
+    // occupancy arguments do not apply to it
+    cellBlocked("pqTopK", emb, idCol, vecCol, nCentroids, knownCount,
+      Some((m, ksub)))(empty) { (e, quant, books) =>
+      tail(pqBars(pqEncode(quant.assign(e), books.get), quant, books.get,
+        e.filter(queryPred), k, nProbe))
     }
 
   /** The trained PQ codebooks: `m` subspaces of `sub` dims, `ksub`
     * centroids each, flattened per subspace (`flats(j)` = ksub×sub
-    * floats in cid order) with precomputed squared norms. Metadata-
+    * floats in code order) with precomputed squared norms. Metadata-
     * scale (m·ksub·sub floats) — the persistable half of the IVF-PQ
     * index, serialized via [[booksRows]]/[[booksFromRows]]. */
   private[graft] final case class PqBooks(
       m: Int, ksub: Int, sub: Int,
       flats: Seq[Array[Float]], normSqs: Seq[Array[Double]])
 
-  /** Trains the per-subspace PQ codebooks (m × ksub × sub floats of
-    * metadata) with the family's deterministic recipe. Lloyd can return
-    * FEWER than ksub centroids (cells that win no rows vanish in the
-    * refine groupBy; small corpora have few seeds) — pad to exactly
-    * ksub by repeating the last centroid, because the flat LUT indexes
-    * with a FIXED j·ksub stride: a short book would silently misalign
-    * every later subspace's lookups. Padding is behavior-neutral: a pad
-    * duplicates a real centroid, so whichever index the encode kernel
-    * picks reconstructs the same vector. */
-  private[graft] def trainPqBooks(e: DataFrame, dims: Int, m: Int,
-                                  ksub: Int): PqBooks = {
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val sub = dims / m
-    val books: Seq[Seq[(Int, Seq[Float])]] = (0 until m).map { j =>
-      val trained = refinedCentroids(
-        e.select(col("n_id"), slice(col("v"), j * sub + 1, sub).as("v")), ksub)
-        .sortBy(_._1)
-      trained ++ (trained.size until ksub).map(i => (i, trained.last._2))
+  private[graft] object PqBooks {
+    /** The one books assembler, for trained and for stored books:
+      * `books(j)` = subspace j's centroids in code order. Lloyd can
+      * return FEWER than ksub centroids (cells that win no rows vanish
+      * in the refine groupBy; small corpora have few seeds) — pad to
+      * exactly ksub by repeating the last centroid, because the flat LUT
+      * indexes with a FIXED j·ksub stride: a short book would silently
+      * misalign every later subspace's lookups. Padding is
+      * behavior-neutral: a pad duplicates a real centroid, so whichever
+      * index the encode kernel picks reconstructs the same vector. The
+      * squared norms are one left-to-right double fold per centroid, so
+      * stored books reload bit-exactly. */
+    def of(ksub: Int, books: Seq[Seq[Seq[Float]]]): PqBooks = {
+      val padded = books.map(b => b ++ Seq.fill(ksub - b.size)(b.last))
+      PqBooks(books.size, ksub, padded.head.head.length,
+        padded.map(_.flatten.toArray),
+        padded.map(_.map(_.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)).toArray))
     }
-    PqBooks(m, ksub, sub,
-      books.map(_.flatMap(_._2).toArray),
-      books.map(_.map(c =>
-        c._2.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)).toArray))
   }
 
-  /** ONE-PASS trainer for a flat coarse codebook plus all `m` PQ
-    * sub-codebooks (optimization round 11 — guide §1.2 "remove
-    * unnecessary passes"): [[refinedCentroids]] + [[trainPqBooks]] run
-    * 2·(m+1) Spark actions (a TakeOrdered seeds collect and a Lloyd
-    * corpus pass PER book — 18 actions at m=8), every one of them a
-    * full corpus scan whose cost at gate scale is fixed job overhead,
-    * not data. This fuses them into TWO actions with bit-identical
-    * results:
+  /** The ONE PQ trainer, fused with the coarse codebook (optimization
+    * round 11 — guide §1.2 "remove unnecessary passes"): the flat
+    * codebook (one [[lloyd]] iteration) plus all `m` PQ sub-codebooks
+    * trained one book at a time would run 2·(m+1) Spark actions (a
+    * TakeOrdered seeds collect and a Lloyd corpus pass PER book — 18
+    * actions at m=8), every one of them a full corpus scan whose cost at
+    * gate scale is fixed job overhead, not data. This fuses them into
+    * TWO actions with bit-identical results:
     *
-    *  - SEEDS: one TakeOrdered of the first max(nCells, ksub) rows by
-    *    `n_id`. The flat seeds are those rows' full vectors; book j's
-    *    seeds are the SAME rows' j-th subspace slices — exactly what the
-    *    per-book `orderBy(n_id).limit(k)` collected (same unique order
-    *    key, so the same rows win).
+    *  - SEEDS: one [[firstVectors]] of max(nCells, ksub) rows. The flat
+    *    seeds are those rows' full vectors; book j's seeds are the SAME
+    *    rows' j-th subspace slices — exactly what a per-book
+    *    `firstVectors` would collect (same unique order key, so the same
+    *    rows win).
     *  - REFINE: one corpus pass assigns each row in all m+1 books at
     *    once (m+1 fused-kernel calls on the row's slices — the identical
     *    per-element work, just one scan instead of m+1) and one
     *    (book, cell, dim)-keyed avg replaces the per-book aggregates.
     *    The double summation order inside a group may differ from the
     *    sequential passes'; the FLOAT rounding of every centroid mean
-    *    absorbs that, which is the established [[lloydStep]] convention
+    *    absorbs that, which is the established [[lloyd]] convention
     *    (the DuckDB oracle replays the same avg in its own order).
     *
     * Returns the flat book's refined centroids (what
-    * `refinedCentroids(e, nCells)` returns) and the padded [[PqBooks]]
-    * (what `trainPqBooks(e, dims, m, ksub)` returns); `(Nil, None)` on
-    * an empty corpus or `nCells == 0`, matching the separate paths. */
-  private[graft] def trainFlatAndBooks(e: DataFrame, nCells: Int, m: Int,
+    * `lloyd(e, nCells, 1)` returns — the hierarchy's top level
+    * trains here too) and the [[PqBooks]]; `(Nil, None)` on an empty
+    * corpus. */
+  private def trainFlatAndBooks(e: DataFrame, nCells: Int, m: Int,
       ksub: Int): (Seq[(Int, Seq[Float])], Option[PqBooks]) = {
-    val seedRows: IndexedSeq[Seq[Float]] =
-      e.orderBy("n_id").limit(math.max(nCells, ksub))
-        .collect().map(_.getSeq[Float](1)).toIndexedSeq
-    if (seedRows.isEmpty || nCells <= 0) return (Nil, None)
+    val seedRows = firstVectors(e, math.max(nCells, ksub))
+    if (seedRows.isEmpty) return (Nil, None)
     val dims = seedRows.head.length
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val sub = dims / m
@@ -1014,7 +1017,7 @@ object Similarity {
       .agg(avg("x").as("mv"))
       .collect()
     // driver assembly: per book, surviving cells sorted by cid, each
-    // cell's means sorted by slot and FLOAT-rounded — lloydStep's exact
+    // cell's means sorted by slot and FLOAT-rounded — lloyd's exact
     // output shape (cells that win no rows drop out here too)
     def bookOf(bid: Int): Seq[(Int, Seq[Float])] =
       rows.filter(_.getInt(0) == bid)
@@ -1022,51 +1025,7 @@ object Similarity {
         .map { case (cell, rs) =>
           (cell, rs.sortBy(_.getInt(2)).map(_.getDouble(3).toFloat).toSeq)
         }
-    val flatTrained = bookOf(m)
-    val books: Seq[Seq[(Int, Seq[Float])]] = (0 until m).map { j =>
-      val trained = bookOf(j)
-      trained ++ (trained.size until ksub).map(i => (i, trained.last._2))
-    }
-    (flatTrained, Some(PqBooks(m, ksub, sub,
-      books.map(_.flatMap(_._2).toArray),
-      books.map(_.map(c =>
-        c._2.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-        .toArray))))
-  }
-
-  /** [[buildQuantizer]] + [[trainPqBooks]] for the paths that need both
-    * (the persisted-index build and the inline PQ family), routed
-    * through [[trainFlatAndBooks]] when the layout resolves FLAT — the
-    * hierarchical layout keeps its train-top + per-cell refinement
-    * shape and the separate book passes. Same [[graft.plans
-    * .QuantizerCellGuard]] audit as [[buildQuantizer]]. */
-  private[graft] def buildIndexQuantizers(op: String, nCentroids: Int,
-      e: DataFrame, knownCount: Option[Long], m: Int, ksub: Int)
-      : (CoarseQuantizer, Option[PqBooks]) = {
-    val spark = e.sparkSession
-    if (nCentroids > 0) {
-      if (graft.plans.QuantizerCellGuard.enabled(spark)) {
-        val n = knownCount.getOrElse(e.count())
-        graft.plans.QuantizerCellGuard.check(spark, op, n, nCentroids.toLong,
-          idealCells(n))
-      }
-      val (flat, books) = trainFlatAndBooks(e, nCentroids, m, ksub)
-      (new FlatQuantizer(flat), books)
-    } else {
-      val n = knownCount.getOrElse(e.count())
-      val total = idealCells(n)
-      if (total <= flatCap(spark)) {
-        val cells = total.toInt
-        graft.plans.QuantizerCellGuard.check(spark, op, n, cells.toLong, total)
-        val (flat, books) = trainFlatAndBooks(e, cells, m, ksub)
-        (new FlatQuantizer(flat), books)
-      } else {
-        val quant = buildQuantizer(op, nCentroids, e, Some(n))
-        (quant,
-          if (quant.isEmpty) None
-          else Some(trainPqBooks(e, quant.dims, m, ksub)))
-      }
-    }
+    (bookOf(m), Some(PqBooks.of(ksub, (0 until m).map(j => bookOf(j).map(_._2)))))
   }
 
   /** PQ codebooks → (kind=1, j=subspace, cid, centroid) rows (the
@@ -1079,27 +1038,21 @@ object Similarity {
   }
 
   /** Rebuild [[PqBooks]] from stored kind-1 rows — bit-exact: floats
-    * round-trip parquet, and the norm recompute is the same
-    * left-to-right fold [[trainPqBooks]] ran. */
+    * round-trip parquet, and [[PqBooks.of]] reruns the norm fold. */
   private[graft] def booksFromRows(rows: DataFrame, m: Int,
                                    ksub: Int): PqBooks = {
     val collected = rows.filter(col("kind") === 1).select("j", "cid", "centroid")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
     require(collected.nonEmpty, "no PQ codebook rows in the index")
-    val sub = collected.head._3.length
-    val flats = (0 until m).map(j =>
-      collected.filter(_._1 == j).sortBy(_._2).flatMap(_._3).toArray).toSeq
-    PqBooks(m, ksub, sub, flats,
-      flats.map(f => (0 until ksub).map(c =>
-        f.slice(c * sub, (c + 1) * sub)
-          .foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)).toArray))
+    PqBooks.of(ksub, (0 until m).map(j =>
+      collected.filter(_._1 == j).sortBy(_._2).map(_._3).toSeq))
   }
 
   /** PQ-encode an assigned corpus frame (`n_id`, `v`, `cell`): adds
-    * `codes`, `eps`, `norm_x` (and the intermediate `x_sub_sq`) and
-    * renames `v` → `v_n`. Encode is m fused nearest-centroid kernel
-    * calls per row plus m centroid-cosine scans for the residual norms
-    * (direction-nearest: spherical PQ, matching the cosine metric).
+    * `codes`, `eps`, `norm_x` (and the intermediate `x_sub_sq`). Encode
+    * is m fused nearest-centroid kernel calls per row plus m
+    * centroid-cosine scans for the residual norms (direction-nearest:
+    * spherical PQ, matching the cosine metric).
     *
     * Residual norms come from the MATERIALIZED codes and x_sub_sq
     * columns (multiple references keep CollapseProject from re-inlining
@@ -1135,7 +1088,6 @@ object Similarity {
       .withColumn("eps", array((0 until m).map(epsJ): _*))
       .withColumn("norm_x", sqrt(expr(
         "aggregate(x_sub_sq, 0D, (a, x) -> a + x)")))
-      .withColumnRenamed("v", "v_n")
   }
 
   /** Query-side LUT build over (`n_id`, `v`) rows: per query,
@@ -1143,7 +1095,7 @@ object Similarity {
     * array (a broadcast-row payload), plus the per-subspace and total
     * query norms the error bound divides by. Returns
     * (q_id, v_q, lut, q_sub, q_norm). */
-  private[graft] def pqQueries(queries: DataFrame, b: PqBooks): DataFrame = {
+  private def pqQueries(queries: DataFrame, b: PqBooks): DataFrame = {
     val (m, sub) = (b.m, b.sub)
     def lutJ(j: Int): Column = {
       val qj = slice(col("v"), j * sub + 1, sub)
@@ -1164,19 +1116,23 @@ object Similarity {
         sqrt(expr("aggregate(q_sub, 0D, (a, x) -> a + x * x)")).as("q_norm"))
   }
 
-  /** ADC estimate + Cauchy–Schwarz bound over (encoded corpus ×
-    * broadcast probed queries): m lookups / m multiplies per candidate.
-    * NaN-safety is CONSERVATIVE (a NaN bound keeps the row: lb → -∞
-    * never raises the bar, ub → +∞ never prunes), and zero-norm corpus
-    * vectors are kept outright — their exact cosine is NaN, which the
-    * final desc rank orders FIRST, identical to ivfTopK's treatment of
-    * the same row. Returns (bar frame, [[pqSurvives]] survivors). */
-  private[graft] def pqBarFrames(corpusEnc: DataFrame, probed: DataFrame,
-                                 b: PqBooks, k: Int,
-                                 probedBytes: Long): (DataFrame, DataFrame) = {
+  /** The IVF-PQ candidate pipeline of an encoded corpus `index` for the
+    * (`n_id`, `v`) `queries`: LUT build ([[pqQueries]]), probe,
+    * [[cellPairs]], then the ADC estimate + Cauchy–Schwarz bound per
+    * candidate — m lookups / m multiplies each. NaN-safety is
+    * CONSERVATIVE (a NaN bound keeps the row: lb → -∞ never raises the
+    * bar, ub → +∞ never prunes), and zero-norm corpus vectors are kept
+    * outright — their exact cosine is NaN, which the final desc rank
+    * orders FIRST, identical to ivfTopK's treatment of the same row.
+    * Returns (bar frame — every bounded candidate with its `ub`/`__bar`
+    * columns, pre-prune — and the [[pqSurvives]] survivors). */
+  private def pqBars(index: DataFrame, quant: CoarseQuantizer, b: PqBooks,
+                     queries: DataFrame, k: Int, nProbe: Int,
+                     eligible: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val (m, ksub) = (b.m, b.ksub)
-    val bounded = corpusEnc.join(probedSide(probed, probedBytes), "cell")
-      .filter(col("q_id") =!= col("n_id"))
+    val bounded = cellPairs(index, eligible,
+        quant.probeCells(pqQueries(queries, b), "v_q", nProbe),
+        probedBytesEstimate(queries, quant, nProbe, pqProbeRowBytes(quant.dims, b)))
       .withColumn("adc_dot", expr(
         s"aggregate(zip_with(codes, sequence(0, ${m - 1}), (c, j) -> element_at(lut, j * $ksub + c + 1)), 0D, (a, x) -> a + x)"))
       .withColumn("adc_err", expr(
@@ -1203,31 +1159,7 @@ object Similarity {
     (withBar, withBar.filter(pqSurvives))
   }
 
-  /** The shared IVF-PQ candidate pipeline: (bar frame — every bounded
-    * candidate with its `ub`/`__bar` columns, pre-prune — and the
-    * [[pqSurvives]]-filtered survivors), or None for an empty corpus. */
-  private def pqFrames(emb: DataFrame, idCol: String, vecCol: String,
-                       queryPred: Column, k: Int, nCentroids: Int,
-                       nProbe: Int, m: Int, ksub: Int,
-                       knownCount: Option[Long]): Option[(DataFrame, DataFrame)] = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-    // only the COARSE quantizer corpus-dimensions: ksub is per-subspace
-    // code granularity (reconstruction quality), not a blocking key —
-    // occupancy arguments do not apply to it
-    val (quant, booksOpt) =
-      buildIndexQuantizers("pqTopK", nCentroids, e, knownCount, m, ksub)
-    if (quant.isEmpty) return None
-    val books = booksOpt.get
-    val corpus = pqEncode(quant.assign(e), books)
-    val qs = e.filter(queryPred)
-    val queries = quant.probeCells(pqQueries(qs, books), "v_q", nProbe)
-    Some(pqBarFrames(corpus, queries, books, k,
-      probedBytesEstimate(qs, quant.probeFanout(nProbe),
-        pqProbeRowBytes(quant.dims, books), 4L * quant.dims)))
-  }
-
-  /** The bound-prune survivor predicate over a [[pqFrames]] bar frame —
+  /** The bound-prune survivor predicate over a [[pqBars]] bar frame —
     * one definition, shared by the prune itself and the stats pass.
     * 2e-6 cushion: cos is compared at 6-dp rounding downstream. */
   private def pqSurvives: Column =
@@ -1254,15 +1186,12 @@ object Similarity {
     */
   def semDedup(emb: DataFrame, idCol: String, vecCol: String,
                nCentroids: Int = 0, threshold: Double = 0.4,
-               knownCount: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-    val quant = buildQuantizer("semDedup", nCentroids, e, knownCount)
-    if (quant.isEmpty) // empty corpus: empty result, same schema
-      return e.limit(0).select(col("n_id").as("vec_id"),
-        lit(null).cast("int").as("cell"), lit(true).as("kept"))
-    semDedupFromCells(quant.assign(e), threshold)
-  }
+               knownCount: Option[Long] = None): DataFrame =
+    cellBlocked("semDedup", emb, idCol, vecCol, nCentroids, knownCount)(
+      _.limit(0).select(col("n_id").as("vec_id"),
+        lit(null).cast("int").as("cell"), lit(true).as("kept"))) {
+      (e, quant, _) => semDedupFromCells(quant.assign(e), threshold)
+    }
 
   /** The verdict tail over an ASSIGNED corpus (`n_id`, `v`, `cell`) —
     * shared by [[semDedup]] and the index-backed
@@ -1309,17 +1238,14 @@ object Similarity {
   def cellBalancedSample(emb: DataFrame, idCol: String, vecCol: String,
                          nCentroids: Int = 0, perCell: Int = 10,
                          salt: String = "cbs",
-                         knownCount: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-    val quant = buildQuantizer("cellBalancedSample", nCentroids, e, knownCount)
-    if (quant.isEmpty) // empty corpus: empty result, same schema
-      return e.limit(0).select(col("n_id").as(idCol),
-        lit(null).cast("int").as("cell"))
-    val cells = quant.assign(e)
-      .select(col("n_id").as(idCol), col("cell"))
-    Sampling.quotaPerGroup(cells, Seq("cell"), idCol, perCell, salt)
-  }
+                         knownCount: Option[Long] = None): DataFrame =
+    cellBlocked("cellBalancedSample", emb, idCol, vecCol, nCentroids, knownCount)(
+      _.limit(0).select(col("n_id").as(idCol),
+        lit(null).cast("int").as("cell"))) { (e, quant, _) =>
+      val cells = quant.assign(e)
+        .select(col("n_id").as(idCol), col("cell"))
+      Sampling.quotaPerGroup(cells, Seq("cell"), idCol, perCell, salt)
+    }
 
   /** Mutual k-nearest-neighbor graph over the embedding corpus — the
     * backbone structure of graph-based curation (NN-descent-style
@@ -1341,15 +1267,10 @@ object Similarity {
     */
   def knnGraph(emb: DataFrame, idCol: String, vecCol: String,
                k: Int, nCentroids: Int = 0,
-               knownCount: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-    val quant = buildQuantizer("knnGraph", nCentroids, e, knownCount)
-    if (quant.isEmpty) // empty corpus: no edges, same schema
-      return e.limit(0).select(col("n_id").as("id_a"), col("n_id").as("id_b"),
-        lit(0.0).as("cos"))
-    knnGraphFromCells(quant.assign(e), k)
-  }
+               knownCount: Option[Long] = None): DataFrame =
+    cellBlocked("knnGraph", emb, idCol, vecCol, nCentroids, knownCount)(
+      _.limit(0).select(col("n_id").as("id_a"), col("n_id").as("id_b"),
+        lit(0.0).as("cos"))) { (e, quant, _) => knnGraphFromCells(quant.assign(e), k) }
 
   /** The mutual-kNN tail over an ASSIGNED corpus (`n_id`, `v`, `cell`)
     * — shared by [[knnGraph]] and the index-backed
@@ -1531,24 +1452,16 @@ object Similarity {
     val corpus = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"))
       .withColumn("bucket", sig)
       .withColumnRenamed("v", "v_n")
-    val flips = (lit(0L) +:
-      (0 until planes).map(p => lit(1L << p))) ++
-      (for { a <- 0 until planes; b <- a + 1 until planes }
-        yield lit((1L << a) | (1L << b)))
     val queries = emb.filter(queryPred)
       .select(col(idCol).as("q_id"), col(vecCol).as("v"))
       .withColumn("__sig", sig)
-      .withColumn("bucket", explode(array(flips.map(col("__sig").bitwiseXOR): _*)))
+      .withColumn("bucket", explode(array(
+        Dedup.flipMasks(planes, 2).map(m => col("__sig").bitwiseXOR(lit(m))): _*)))
       .drop("__sig")
       .withColumnRenamed("v", "v_q")
-    val scored = corpus.join(broadcast(queries), "bucket")
+    topKByCosine(corpus.join(broadcast(queries), "bucket")
       .filter(col("q_id") =!= col("n_id"))
-      .dropDuplicates("q_id", "n_id")
-      .withColumn("cos", round(cosine(col("v_q"), col("v_n")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("q_id", "n_id", "rnk", "cos")
+      .dropDuplicates("q_id", "n_id"), k)
   }
 
   /** Margin-based parallel-corpus (bitext) mining over a shared embedding
@@ -1592,68 +1505,64 @@ object Similarity {
   def bitextMine(emb: DataFrame, idCol: String, vecCol: String,
                  sideA: Column, k: Int = 4, threshold: Double = 1.0,
                  nCentroids: Int = 0,
-                 knownCount: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col(idCol).as("n_id"), col(vecCol).as("v"),
-      sideA.as("is_a"))
-    val quant = buildQuantizer("bitextMine", nCentroids,
-      e.select("n_id", "v"), knownCount)
-    if (quant.isEmpty) // empty corpus: no pairs, same schema
-      return e.limit(0).select(col("n_id").as("id_a"), col("n_id").as("id_b"),
-        lit(0.0).as("cos"), lit(0.0).as("margin"))
-    // persisted: both sides, plus the grid occupancy scan, read it
-    val cells = quant.assign(e)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = cells.filter(col("is_a"))
-      .select(col("n_id").as("src"), col("v").as("v_a"), col("cell"))
-    val b = cells.filter(!col("is_a"))
-      .select(col("n_id").as("dst"), col("v").as("v_b"), col("cell"))
-    // both kNN directions rank the SAME cell-blocked pair set, so the
-    // candidate frame builds once; persisted because the normalizer
-    // aggregates and the final scoring all consume it. Cross-cell pairs
-    // ride the hot-cell salt grid (see semDedup) — identical pairs,
-    // bounded per-reducer product under cell skew.
-    val wA = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
-    val wB = Window.partitionBy("dst").orderBy(col("cos").desc, col("src"))
-    val ranked = SkewJoin.gridSalted(a, b, "cell", col("src"), col("dst"),
-        hotBoundFloor(emb.sparkSession))
-      .withColumn("cos", round(cosine(col("v_a"), col("v_b")), 6))
-      // a zero-norm vector yields NaN cosines: meaningless as a mining
-      // candidate, and the micro-unit cast of NaN is an error under
-      // ANSI — drop the pair before the cast (the oracle filters
-      // identically)
-      .filter(!isnan(col("cos")))
-      .withColumn("c_micro", round(col("cos") * 1000000L).cast("long"))
-      .select("src", "dst", "cos", "c_micro")
-      .withColumn("rnk_a", row_number().over(wA))
-      .withColumn("rnk_b", row_number().over(wB))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sumsA = ranked.filter(col("rnk_a") <= k)
-      .groupBy("src").agg(sum("c_micro").as("sa"), count(lit(1)).as("ca"))
-    val sumsB = ranked.filter(col("rnk_b") <= k)
-      .groupBy("dst").agg(sum("c_micro").as("sb"), count(lit(1)).as("cb"))
-    // margin = cos / (½(sa/ca + sb/cb)) rearranged to a single division
-    // of exact integer products (counts ≤ k, micro-sums ≤ k·10⁶ — all
-    // exactly representable in double)
-    val scored = ranked.filter(col("rnk_a") <= k && col("rnk_b") <= k)
-      .join(sumsA, "src").join(sumsB, "dst")
-      // a zero denominator (all-zero or exactly-canceling neighborhood
-      // mass) makes the margin undefined — such pairs are unminable and
-      // are dropped BEFORE the division (ANSI-safe; oracle matches)
-      .filter(col("sa") * col("cb") + col("sb") * col("ca") =!= 0)
-      .withColumn("margin",
-        round(lit(2.0) * col("c_micro") * col("ca") * col("cb") /
-          (col("sa") * col("cb") + col("sb") * col("ca")), 6))
-    val wFa = Window.partitionBy("src").orderBy(col("margin").desc, col("dst"))
-    val wFb = Window.partitionBy("dst").orderBy(col("margin").desc, col("src"))
-    scored
-      .withColumn("rf", row_number().over(wFa))
-      .withColumn("rb", row_number().over(wFb))
-      .filter(col("rf") === 1 && col("rb") === 1
-        && col("margin") >= threshold)
-      .select(col("src").as("id_a"), col("dst").as("id_b"),
-        col("cos"), col("margin"))
-  }
+                 knownCount: Option[Long] = None): DataFrame =
+    cellBlocked("bitextMine", emb, idCol, vecCol, nCentroids, knownCount,
+      extra = Seq(sideA.as("is_a")))(
+      _.limit(0).select(col("n_id").as("id_a"), col("n_id").as("id_b"),
+        lit(0.0).as("cos"), lit(0.0).as("margin"))) { (e, quant, _) =>
+      // persisted: both sides, plus the grid occupancy scan, read it
+      val cells = quant.assign(e)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val a = cells.filter(col("is_a"))
+        .select(col("n_id").as("src"), col("v").as("v_a"), col("cell"))
+      val b = cells.filter(!col("is_a"))
+        .select(col("n_id").as("dst"), col("v").as("v_b"), col("cell"))
+      // both kNN directions rank the SAME cell-blocked pair set, so the
+      // candidate frame builds once; persisted because the normalizer
+      // aggregates and the final scoring all consume it. Cross-cell pairs
+      // ride the hot-cell salt grid (see semDedup) — identical pairs,
+      // bounded per-reducer product under cell skew.
+      val wA = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
+      val wB = Window.partitionBy("dst").orderBy(col("cos").desc, col("src"))
+      val ranked = SkewJoin.gridSalted(a, b, "cell", col("src"), col("dst"),
+          hotBoundFloor(emb.sparkSession))
+        .withColumn("cos", round(cosine(col("v_a"), col("v_b")), 6))
+        // a zero-norm vector yields NaN cosines: meaningless as a mining
+        // candidate, and the micro-unit cast of NaN is an error under
+        // ANSI — drop the pair before the cast (the oracle filters
+        // identically)
+        .filter(!isnan(col("cos")))
+        .withColumn("c_micro", round(col("cos") * 1000000L).cast("long"))
+        .select("src", "dst", "cos", "c_micro")
+        .withColumn("rnk_a", row_number().over(wA))
+        .withColumn("rnk_b", row_number().over(wB))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sumsA = ranked.filter(col("rnk_a") <= k)
+        .groupBy("src").agg(sum("c_micro").as("sa"), count(lit(1)).as("ca"))
+      val sumsB = ranked.filter(col("rnk_b") <= k)
+        .groupBy("dst").agg(sum("c_micro").as("sb"), count(lit(1)).as("cb"))
+      // margin = cos / (½(sa/ca + sb/cb)) rearranged to a single division
+      // of exact integer products (counts ≤ k, micro-sums ≤ k·10⁶ — all
+      // exactly representable in double)
+      val scored = ranked.filter(col("rnk_a") <= k && col("rnk_b") <= k)
+        .join(sumsA, "src").join(sumsB, "dst")
+        // a zero denominator (all-zero or exactly-canceling neighborhood
+        // mass) makes the margin undefined — such pairs are unminable and
+        // are dropped BEFORE the division (ANSI-safe; oracle matches)
+        .filter(col("sa") * col("cb") + col("sb") * col("ca") =!= 0)
+        .withColumn("margin",
+          round(lit(2.0) * col("c_micro") * col("ca") * col("cb") /
+            (col("sa") * col("cb") + col("sb") * col("ca")), 6))
+      val wFa = Window.partitionBy("src").orderBy(col("margin").desc, col("dst"))
+      val wFb = Window.partitionBy("dst").orderBy(col("margin").desc, col("src"))
+      scored
+        .withColumn("rf", row_number().over(wFa))
+        .withColumn("rb", row_number().over(wFb))
+        .filter(col("rf") === 1 && col("rb") === 1
+          && col("margin") >= threshold)
+        .select(col("src").as("id_a"), col("dst").as("id_b"),
+          col("cos"), col("margin"))
+    }
 
   /** Johnson–Lindenstrauss sign random projection: reduce a `dims`-wide
     * embedding to `k` coordinates p_j = Σ_i s(j,i)·v_i with a dense ±1

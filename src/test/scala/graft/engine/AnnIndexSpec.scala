@@ -767,4 +767,58 @@ class AnnIndexSpec extends SparkSpec {
       .collect().toSet
     assert(sqlRows == ivfF, "TVF corpus predicate must match the Scala path")
   }
+
+  /** Unpacks the zipped test resource `res` into a fresh temp dir. */
+  private def unzipResource(res: String): String = {
+    val root = tmpDir("graft-annfix")
+    scala.util.Using.resource(new java.util.zip.ZipInputStream(
+        getClass.getResourceAsStream(res))) { zin =>
+      Iterator.continually(zin.getNextEntry).takeWhile(_ != null).foreach { z =>
+        val out = java.nio.file.Paths.get(root, z.getName)
+        if (z.isDirectory) java.nio.file.Files.createDirectories(out)
+        else {
+          java.nio.file.Files.createDirectories(out.getParent)
+          java.nio.file.Files.copy(zin, out)
+        }
+      }
+    }
+    root
+  }
+
+  test("an index stored by the previous build path stays live and serves the inline operators' rows") {
+    // fixtures/ann_index_parent.zip is an engine root written by the
+    // engine at commit 96c9802, before the inline and index-served
+    // searches shared one build path: stream `emb` = corpus(60) with a
+    // flat index, `embh` = corpus(120) with a hierarchical one (flat-cell
+    // cap 4). The stored row format is unchanged, so both indexes must
+    // still be live, and serve what today's inline operators return.
+    val e = new Engine(spark, unzipResource("/fixtures/ann_index_parent.zip"))
+    try for ((name, n, kind) <- Seq(("emb", 60, "flat"), ("embh", 120, "hier"))) {
+      if (kind == "hier") spark.conf.set(Similarity.FlatCellCapKey, "4")
+      try {
+        assert(!e.ensureAnnIndex(name, "vec_id", "embedding"),
+          s"$name: the stored index must take the live fast path")
+        assert(e.catalog.get(e.annIndexName(name)).get.properties("ann_kind") == kind)
+        val data = corpus(n)
+        val q = col("vec_id") < 5
+        val inlineIvf = Similarity.ivfTopK(data, "vec_id", "embedding", q, k = 3)
+          .collect().toSet
+        assert(inlineIvf.nonEmpty)
+        assert(e.annTopKIndexed(name, "vec_id", "embedding", q, k = 3)
+          .collect().toSet == inlineIvf, s"$name: indexed IVF")
+        assert(e.annTopKIndexed(name, "vec_id", "embedding", q, k = 3,
+          method = "pq").collect().toSet ==
+          Similarity.pqTopK(data, "vec_id", "embedding", q, k = 3).collect().toSet,
+          s"$name: indexed PQ")
+        assert(e.semDedupIndexed(name, "vec_id", "embedding", threshold = 0.8)
+          .collect().map(_.toSeq).toSet ==
+          Similarity.semDedup(data, "vec_id", "embedding", threshold = 0.8)
+            .collect().map(_.toSeq).toSet, s"$name: indexed semDedup")
+        assert(e.knnGraphIndexed(name, "vec_id", "embedding", k = 3)
+          .collect().map(_.toSeq).toSet ==
+          Similarity.knnGraph(data, "vec_id", "embedding", k = 3)
+            .collect().map(_.toSeq).toSet, s"$name: indexed knnGraph")
+      } finally spark.conf.unset(Similarity.FlatCellCapKey)
+    } finally e.close()
+  }
 }

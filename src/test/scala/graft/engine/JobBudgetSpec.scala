@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Similarity
 import graft.schema.StreamSchema
 import graft.tools.Probe
 
@@ -95,5 +96,22 @@ class JobBudgetSpec extends SparkSpec {
       ("forget_rows, ann-indexed", () => jobsOf(annLive)(_.forgetRows("docs", forgotten)), 13L),
       ("forget_rows_cascade", () => jobsOf(_.createModel("kept", "SELECT vec_id, text FROM docs"))(
         _.forgetRowsCascade("docs", forgotten)), 5L)))
+  }
+
+  test("a full ensureAnnIndex rebuild stays within its job budget, flat and hierarchical") {
+    // a flat-cell cap of 4 under the 30-row stream's √n-ideal of 5 cells
+    // makes the auto layout hierarchical (3 top cells × 2 sub-cells)
+    def rebuild(cap: Option[Int]): () => Long = () =>
+      try {
+        cap.foreach(c => spark.conf.set(Similarity.FlatCellCapKey, c.toString))
+        jobsOf(_ => ()) { e =>
+          assert(e.ensureAnnIndex("docs", "vec_id", "embedding"))
+          assert(e.catalog.get(e.annIndexName("docs")).get.properties("ann_kind") ==
+            (if (cap.isEmpty) "flat" else "hier"))
+        }
+      } finally spark.conf.unset(Similarity.FlatCellCapKey)
+    assertWithin(Seq(
+      ("ensure_ann_index, flat rebuild", rebuild(None), 9L),
+      ("ensure_ann_index, hierarchical rebuild", rebuild(Some(4)), 17L)))
   }
 }

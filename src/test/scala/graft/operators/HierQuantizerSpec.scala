@@ -164,4 +164,45 @@ class HierQuantizerSpec extends SparkSpec {
       assert(out.select(countDistinct("cell")).head().getLong(0) <= 11)
     } finally spark.conf.set(QuantizerCellGuard.ModeKey, "off")
   }
+
+  test("hierarchical PQ books come from the one trainer and equal per-subspace kmeansTrain books") {
+    // the reference is the per-subspace recipe the books are defined by:
+    // the first ksub slices by id as seeds, one Lloyd pass, FLOAT means
+    // (public kmeansTrain with iters = 1), padded to ksub with the last
+    // centroid. A jittered corpus, so every subspace has real structure.
+    val (m, ksub) = (8, 16)
+    val sub = D / m
+    val jittered = spark.range(N).select(col("id").as("vec_id"),
+      expr(s"transform(sequence(0, ${D - 1}), j -> CAST(" +
+        "(CASE WHEN j % 4 = id % 4 THEN 4.0 ELSE 0.2 END) + " +
+        "(pmod(xxhash64(id, j), 100) / 500.0) AS FLOAT))").as("embedding"))
+    val e = jittered.select(col("vec_id").as("n_id"), col("embedding").as("v"))
+    val (quant, books) = withHier(
+      Similarity.buildQuantizer("spec", 0, e, None, Some((m, ksub))))
+    val top = quant match {
+      case h: Similarity.HierQuantizer => h.top
+      case other => fail(s"cap 4 at n=$N must resolve hierarchical, got $other")
+    }
+    def kmeansBook(df: org.apache.spark.sql.DataFrame, k: Int): Seq[Seq[Float]] =
+      Similarity.kmeansTrain(df, "vec_id", "embedding", k = k, iters = 1)
+        .collect().groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map { case (_, rs) => rs.sortBy(_.getLong(1)).map(_.getDouble(2).toFloat).toSeq }
+    val b = books.get
+    assert((b.m, b.ksub, b.sub) == ((m, ksub, sub)))
+    for (j <- 0 until m) {
+      val ref = kmeansBook(jittered.select(col("vec_id"),
+        slice(col("embedding"), j * sub + 1, sub).as("embedding")), ksub)
+      val padded = ref ++ Seq.fill(ksub - ref.size)(ref.last)
+      assert(b.flats(j).toSeq == padded.flatten, s"subspace $j codebook")
+      assert(b.normSqs(j).toSeq ==
+        padded.map(_.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)),
+        s"subspace $j norms")
+    }
+    // the hierarchy's top level trains in the same pass as the books:
+    // the same centroids the book-less resolution trains (in cid order)
+    assert(top.sortBy(_._1).map(_._2) == kmeansBook(jittered, 4))
+    val plain = withHier(Similarity.buildQuantizer("spec", 0, e, None)._1)
+    assert(plain.asInstanceOf[Similarity.HierQuantizer].top.sortBy(_._1) ==
+      top.sortBy(_._1))
+  }
 }

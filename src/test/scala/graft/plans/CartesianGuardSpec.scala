@@ -20,7 +20,7 @@ class CartesianGuardSpec extends SparkSpec {
   // parquet-backed corpora: LocalRelations are bounded by design and
   // would exempt everything
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("cartguard").toString
+    val d = tmpDir("cartguard")
     spark.range(2000).select(col("id"), (col("id") % 97).as("v"))
       .write.mode("overwrite").parquet(d)
     d

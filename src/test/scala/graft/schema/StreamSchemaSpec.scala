@@ -72,12 +72,14 @@ class StreamSchemaSpec extends AnyFunSuite {
         PhysicalField("ktime", FTimestampLtz(3)),
         ComputedField("is_tab", expr)),
       watermarks = Seq(Watermark("ktime", wm))))
-    val cat = new graft.catalog.Catalog(
-      java.nio.file.Files.createTempDirectory("graft-ctl").toString)
-    cat.put(d)
-    val back = cat("ctl")
-    assert(back.schema == d.schema)
-    assert(back.specHash == d.specHash)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ctl").toFile
+    try {
+      val cat = new graft.catalog.Catalog(dir.toString)
+      cat.put(d)
+      val back = cat("ctl")
+      assert(back.schema == d.schema)
+      assert(back.specHash == d.specHash)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
   test("the canonical form of a storable def is unchanged") {

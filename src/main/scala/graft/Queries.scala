@@ -29,6 +29,21 @@ object Queries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** Engine roots gates made in this JVM, deleted when it exits. A gate's
+    * frame reads its root lazily, so the root can only go once every
+    * action on the frame is done; deleting it inside the gate would mean
+    * materializing there, a different plan. */
+  private val gateRoots = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+  sys.addShutdownHook(gateRoots.forEach(r =>
+    scala.util.Try(graft.catalog.Catalog.deleteRecursively(r))))
+
+  /** A fresh engine root for a gate, deleted at JVM exit. */
+  private def gateRoot(prefix: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    gateRoots.add(root)
+    root.toString
+  }
+
   /** Run the same SQL text on Spark (over temp views of the parquet tables)
     * and hand it to DuckDB as the oracle — the engine's core contract is
     * "SQL pipelines over named streams", so same-text queries are the purest
@@ -603,7 +618,7 @@ object Queries {
     """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
       |  CAST(n_regionkey AS BIGINT) AS n_regionkey
       | FROM nation ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-seed").toString
+    val tmp = gateRoot("graft-seed")
     t(s, dir, "nation").coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(s"$tmp/nation_csv")
     val e = new engine.Engine(s, s"$tmp/cat")
@@ -625,7 +640,7 @@ object Queries {
   val tombstoneDelete: Q = q("tombstone_delete",
     """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name
       | FROM nation WHERE n_regionkey <> 0 ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-del").toString
+    val tmp = gateRoot("graft-del")
     val e = new engine.Engine(s, s"$tmp/cat")
     val nat = t(s, dir, "nation").select(
       col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
@@ -646,7 +661,7 @@ object Queries {
     """SELECT o_orderstatus, count(*) AS n,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
       | FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-model").toString
+    val tmp = gateRoot("graft-model")
     val e = new engine.Engine(s, tmp)
     val orders = t(s, dir, "orders")
     e.createStream("orders_stream",
@@ -2109,7 +2124,7 @@ object Queries {
     """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
       |  CASE WHEN n_regionkey = 0 THEN n_name || '_v2' ELSE n_name END AS n_name
       | FROM nation ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-asof").toString
+    val tmp = gateRoot("graft-asof")
     val e = new engine.Engine(s, s"$tmp/cat")
     val nat = t(s, dir, "nation").select(
       col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
@@ -3466,7 +3481,7 @@ object Queries {
     """SELECT CAST(length(text) AS BIGINT) AS len, count(1) AS n
       | FROM documents WHERE doc_id % 10 <> 0
       | GROUP BY 1 ORDER BY len""".stripMargin) { (s, dir) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-forgetc").toString
+    val tmp = gateRoot("graft-forgetc")
     val e = new engine.Engine(s, tmp)
     try {
       val docs = t(s, dir, "documents").select("doc_id", "text")
@@ -3493,8 +3508,7 @@ object Queries {
   private def withAnnEngine(s: SparkSession, dir: String,
                             withLabel: Boolean = false)(
       run: engine.Engine => DataFrame): DataFrame = {
-    val e = new engine.Engine(s,
-      java.nio.file.Files.createTempDirectory("graft-annidx-gate").toString)
+    val e = new engine.Engine(s, gateRoot("graft-annidx-gate"))
     val base = new org.apache.spark.sql.types.StructType()
       .add("vec_id", "long", nullable = false)
       .add("embedding", org.apache.spark.sql.types.ArrayType(
@@ -6507,7 +6521,7 @@ object Queries {
       |  GROUP BY doc_id)
       |SELECT phrase, doc_id, n_matches FROM hits
       |ORDER BY phrase, doc_id""".stripMargin) { (s, dir) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-phraseidx").toString
+    val tmp = gateRoot("graft-phraseidx")
     val e = new engine.Engine(s, tmp)
     val postings = operators.PhraseSearch.buildPostings(
       t(s, dir, "documents").filter(col("text").isNotNull), "doc_id", "text")

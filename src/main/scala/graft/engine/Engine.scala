@@ -373,48 +373,43 @@ final class Engine(
   /** Analysis-only schema inference: `spark.sql(select).schema` runs the
     * analyzer without a job (reference POST /pipelines/outputStream,
     * client.py:292-297). Errors on empty schema like impl.py:496-499. */
-  def inferSchema(sql: String): StreamSchema = {
-    val st = analyzed(SqlDialect.rewrite(sql)).schema
-    if (st.isEmpty)
-      throw new IllegalStateException(
-        s"Could not infer schema for SQL: $sql — analyzer returned no fields")
-    StreamSchema.fromStruct(st)
+  def inferSchema(sql: String): StreamSchema = StreamSchema.fromStruct(inferred(sql).schema)
+
+  /** `sql` analyzed, refused when the analyzer returns no fields. */
+  private def inferred(sql: String): DataFrame = {
+    val df = analyzed(SqlDialect.rewrite(sql))
+    if (df.schema.isEmpty) throw new IllegalStateException(
+      s"Could not infer schema for SQL: $sql — analyzer returned no fields")
+    df
   }
 
   /** L2: would materializing (name, sql, cfg) change the stored resource? */
   def hasChanged(name: String, sql: String, cfg: ModelConfig): Boolean =
-    catalog.get(name) match {
-      case None => true
-      case Some(existing) => candidateDef(name, sql, cfg).specHash != existing.specHash
-    }
+    catalog.get(name).forall(_.specHash != candidateDef(name, sql, cfg)._1.specHash)
 
-  private def candidateDef(name: String, sql: String, cfg: ModelConfig): StreamDef = {
+  /** The def materializing (name, sql, cfg) stores, with the frame its
+    * schema was inferred from (none when the fields are declared). */
+  private def candidateDef(name: String, sql: String,
+                           cfg: ModelConfig): (StreamDef, Option[DataFrame]) = {
     // explicit schema_v2.fields bypass inference entirely (impl.py:490-500);
     // otherwise infer and let per-column data_type hints override by name
     // (impl.py:663-669). Either way [[write]] casts the pipeline output to
     // the declared types, so a DECIMAL declaration over a DOUBLE-inferring
     // SELECT materializes DECIMAL.
-    val schema =
-      if (cfg.declaredFields.nonEmpty)
-        StreamSchema(cfg.declaredFields, cfg.watermarks, cfg.primaryKey)
-      else {
-        val inferred = inferSchema(sql)
-        val fields =
-          if (cfg.columnHints.isEmpty) inferred.fields
-          else inferred.fields.map {
-            case PhysicalField(n, _) if cfg.columnHints.contains(n) =>
-              PhysicalField(n, cfg.columnHints(n))
-            case f => f
-          }
-        StreamSchema(fields, cfg.watermarks, cfg.primaryKey)
-      }
-    StreamDef(
+    val frame = if (cfg.declaredFields.nonEmpty) None else Some(inferred(sql))
+    val fields = frame.fold(cfg.declaredFields)(df =>
+      StreamSchema.fromStruct(df.schema).fields.map {
+        case PhysicalField(n, _) if cfg.columnHints.contains(n) =>
+          PhysicalField(n, cfg.columnHints(n))
+        case f => f
+      })
+    (StreamDef(
       name = catalog.qualify(name),
-      schema = schema,
+      schema = StreamSchema(fields, cfg.watermarks, cfg.primaryKey),
       sql = Some(SqlDialect.rewrite(sql)),
       sources = sourcesOf(sql),
       active = cfg.active,
-      properties = cfg.properties)
+      properties = cfg.properties), frame)
   }
 
   // ------------------------------------------------------------------
@@ -424,6 +419,10 @@ final class Engine(
   /** Materialize a model: infer schema, diff against the stored def, and
     * (re)build only when changed or `fullRefresh` (reference table
     * materialization skip-if-unchanged, table.sql:29-41 + README.md:95-98).
+    * The build writes the frame the schema was inferred from: the SQL is
+    * analyzed once. A frame that resolved a view of the model's own
+    * stream (the old store, or a view left from before a full refresh's
+    * drop) is analyzed again over the new store.
     */
   def createModel(name: String, sql: String, cfg: ModelConfig = ModelConfig(),
                   fullRefresh: Boolean = false): ApplyResult = {
@@ -432,11 +431,14 @@ final class Engine(
     val existed = existing.nonEmpty
     // the diff's candidate is the def a changed model rebuilds with
     val diffed = if (fullRefresh) None else existing.map(_ => candidateDef(name, sql, cfg))
-    if (diffed.exists(c => existing.exists(_.specHash == c.specHash))) return Unchanged
+    if (diffed.exists(c => existing.exists(_.specHash == c._1.specHash))) return Unchanged
     if (existed) dropStream(name, cascade = false, keepConsumers = true)
-    val d = diffed.getOrElse(candidateDef(name, sql, cfg))
+    val (d, frame) = diffed.getOrElse(candidateDef(name, sql, cfg))
     catalog.put(d)
-    if (cfg.active) runPipeline(name) else writeEmpty(d)
+    if (!cfg.active) writeEmpty(d)
+    else frame.filterNot(f => viewReads(f.queryExecution.analyzed)
+        .exists(v => viewAliases(d.name).exists(_.equalsIgnoreCase(v))))
+      .fold(runPipeline(name))(write(d, _, SaveMode.Overwrite))
     if (existed) Updated else Created
   }
 
@@ -1867,38 +1869,36 @@ final class Engine(
     * classes to Flink types (impl.py:150-172): text → STRING, number →
     * DECIMAL(10, 0), boolean → BOOLEAN, datetime → TIMESTAMP_LTZ(3),
     * date → DATE, time → TIME(3). We get the same classification from
-    * Spark's CSV inference, then map the Spark class to the seed type.
+    * Spark's own CSV inference fold over the seed's all-STRING rows (the
+    * options an `inferSchema` read builds), then map the Spark class to
+    * the seed type.
     */
   private val TimeLiteralRe = """\d{2}:\d{2}:\d{2}(\.\d{1,9})?""".r
 
-  def inferSeedTypes(csvPath: String): Seq[(String, FlinkType)] = {
+  private def seedTypes(header: Array[String], rows: Array[Row]): Seq[(String, FlinkType)] = {
+    import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
     import org.apache.spark.sql.types._
-    val sniffed = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(csvPath)
-    // Spark has no TIME type: its CSV sniffer reads a bare 'HH:mm:ss' column
-    // as TIMESTAMP (anchored to the current date) or leaves it STRING —
-    // agate classifies either as time → TIME(3) (impl.py:150-172). Detect
-    // the time shape on the RAW string read (a bounded sample; seeds are
-    // small CSVs by contract) so the detection is independent of what the
-    // sniffer guessed.
-    val raw = spark.read.option("header", "true").csv(csvPath)
-    val sample = raw.limit(1000).collect()
-    val timeCols: Set[String] = raw.columns.zipWithIndex.collect { case (c, i)
-      if sample.nonEmpty && sample.forall(r =>
-        r.isNullAt(i) || TimeLiteralRe.matches(r.getString(i))) &&
-        sample.exists(!_.isNullAt(i)) => c
-    }.toSet
-    sniffed.schema.fields.toSeq.map { f =>
-      val t =
-        if (timeCols(f.name)) FlinkType.FTime(3)
-        else f.dataType match {
+    val conf = spark.sessionState.conf
+    val sniffed = org.apache.spark.sql.internal.SQLConf.withExistingConf(conf) {
+      val csv = new CSVInferSchema(new CSVOptions(Map("header" -> "true", "inferSchema" -> "true"),
+        conf.csvColumnPruning, conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord))
+      csv.toStructFields(rows.foldLeft(Array.fill[DataType](header.length)(NullType))(
+        (soFar, r) => csv.inferRowType(soFar, Array.tabulate(header.length)(r.getString))), header)
+    }
+    header.indices.map { i =>
+      // Spark has no TIME type: its CSV sniffer reads a bare 'HH:mm:ss'
+      // column as TIMESTAMP (anchored to the current date) or leaves it
+      // STRING — agate classifies either as time → TIME(3) (impl.py:150-172)
+      val cells = rows.flatMap(r => Option(r.getString(i)))
+      header(i) -> (
+        if (cells.nonEmpty && cells.forall(TimeLiteralRe.matches)) FlinkType.FTime(3)
+        else sniffed(i).dataType match {
           case _: NumericType => FlinkType.FDecimal(10, 0)
           case BooleanType => FlinkType.FBoolean
           case TimestampType | TimestampNTZType => FlinkType.FTimestampLtz(3)
           case DateType => FlinkType.FDate
           case _ => FlinkType.FString
-        }
-      f.name -> t
+        })
     }
   }
 
@@ -1915,23 +1915,34 @@ final class Engine(
     * stringified-event ingest (impl.py:560-566: `{col: str(row[col])}`,
     * coerced server-side to the stream schema). `columnTypes` overrides
     * inference per column; unknown override strings fall back to inferred
-    * (impl.py:516-531). */
+    * (impl.py:516-531). Seeds are small by contract and the reference
+    * loads them into memory (impl.py:548-574): the CSV is read once, its
+    * rows typed on the driver, and written in one job. A re-seed without
+    * `fullRefresh` keeps the stored columns, and a CSV header that adds
+    * or removes one fails before the store is emptied. */
   def seed(name: String, csvPath: String,
            columnTypes: Map[String, String] = Map.empty,
            fullRefresh: Boolean = false): ApplyResult = {
     requireUserName(name, "seed")
-    val inferred = inferSeedTypes(csvPath)
-    val types = inferred.map { case (n, t) =>
+    val asStrings = spark.read.option("header", "true").csv(csvPath) // all STRING
+    val header = asStrings.columns
+    val types = seedTypes(header, asStrings.collect()).map { case (n, t) =>
       n -> columnTypes.get(n).flatMap(FlinkType.parse).getOrElse(t)
     }
-    val schema = StreamSchema(types.map { case (n, t) => PhysicalField(n, t) })
     val existed = catalog.exists(name)
-    if (existed && !fullRefresh) truncate(name)
-    else if (existed) { dropStream(name, cascade = false, keepConsumers = true) }
-    if (!catalog.exists(name)) {
-      catalog.put(StreamDef(catalog.qualify(name), schema))
+    if (existed && !fullRefresh) {
+      val same = spark.sessionState.conf.resolver
+      val stored = catalog(name).schema.fields.map(_.name)
+      val added = header.filterNot(h => stored.exists(same(_, h)))
+      val removed = stored.filterNot(s => header.exists(same(_, s)))
+      if (added.nonEmpty || removed.nonEmpty) throw new IllegalArgumentException(s"seed '$name': " +
+        s"the CSV header no longer matches the stored stream (added: ${added.mkString(", ")}; " +
+        s"removed: ${removed.mkString(", ")}); re-seed with full refresh to change its columns")
+      truncate(name)
+    } else {
+      if (existed) dropStream(name, cascade = false, keepConsumers = true)
+      catalog.put(StreamDef(catalog.qualify(name), StreamSchema(types.map(PhysicalField.tupled))))
     }
-    val asStrings = spark.read.option("header", "true").csv(csvPath) // all STRING
     // TIME columns need explicit conversion: write()'s cast-to-declared
     // would turn 'HH:mm:ss' into NULL under a plain string→long cast
     def base(t: FlinkType): FlinkType = t match {
@@ -1947,11 +1958,10 @@ final class Engine(
     // seeds ingest through a rest connection resource sharing the seed's
     // name: create + activate, send events, deactivate (impl.py:536-575) —
     // so cleanup can later remove it per resource type (operations.sql:96-98)
-    if (!catalog.connectionExists(name))
-      createConnection(name, "rest", stream = name)
+    if (!catalog.connectionExists(name)) createConnection(name, "rest", stream = name)
     activateConnection(name)
-    appendRows(name, converted) // write() casts to the declared schema
-    deactivateConnection(name)
+    try appendRows(name, converted) // write() casts to the declared schema
+    finally deactivateConnection(name)
     if (existed) Updated else Created
   }
 

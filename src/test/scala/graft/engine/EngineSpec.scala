@@ -76,6 +76,22 @@ class EngineSpec extends SparkSpec {
     assert(e.preview("SELECT * FROM m").size == 1)
   }
 
+  test("a model that reads its own stream rebuilds over its new, empty store") {
+    // a frame analyzed before the drop, or over a view bound before it,
+    // would read store files the drop deleted
+    val e = newEngine()
+    e.seed("src", writeCsv(tmpDir("selfread"), "s.csv", "k,v\na,1\nb,2\n"))
+    val fromSrc = "SELECT k, CAST(v AS BIGINT) AS v FROM src"
+    e.createModel("m", fromSrc)
+    assert(e.preview("SELECT * FROM m").size == 2) // binds a view of m's store
+    assert(e.createModel("m", "SELECT k, v FROM m WHERE v > 0") == Updated)
+    assert(e.preview("SELECT * FROM m").isEmpty)
+    e.createModel("m", fromSrc, fullRefresh = true)
+    assert(e.preview("SELECT * FROM m").size == 2)
+    assert(e.createModel("m", "SELECT k, v FROM m", fullRefresh = true) == Updated)
+    assert(e.preview("SELECT * FROM m").isEmpty)
+  }
+
   test("change-stream reads compact to latest row per PK (handler.py:87-94 batch analog)") {
     val e = newEngine()
     val csv = writeCsv(tmpDir("seed4"), "s.csv", "k,v\na,1\nb,2\n")
@@ -150,6 +166,31 @@ class EngineSpec extends SparkSpec {
     // seeding again into the truncated stream works (seed.sql reset path)
     e.seed("t", csv)
     assert(e.preview("SELECT * FROM t").size == 2)
+  }
+
+  test("a seed whose append fails leaves its rest connection inactive") {
+    val e = newEngine()
+    val csv = writeCsv(tmpDir("seedfail"), "s.csv", "k,v\na,1\nb,x\n")
+    // 'x' does not cast to INT: under ANSI the write job fails mid-ingest
+    intercept[Exception](e.seed("s", csv, columnTypes = Map("v" -> "INT")))
+    assert(e.catalog.getConnection("s").exists(!_.active))
+  }
+
+  test("a re-seed without full refresh refuses a changed header before emptying the store") {
+    val e = newEngine()
+    val dir = tmpDir("seedhdr")
+    e.seed("s", writeCsv(dir, "s.csv", "k,v\na,1\nb,2\n"))
+    val err = intercept[IllegalArgumentException](
+      e.seed("s", writeCsv(dir, "s2.csv", "k,v,w\nc,3,z\n")))
+    assert(err.getMessage.contains("added: w") && err.getMessage.contains("full refresh"))
+    val removed = intercept[IllegalArgumentException](
+      e.seed("s", writeCsv(dir, "s3.csv", "k\nc\n")))
+    assert(removed.getMessage.contains("removed: v"))
+    assert(e.preview("SELECT k FROM s ORDER BY k").map(_.getString(0)) == Seq("a", "b"))
+    // a full refresh takes the new columns
+    e.seed("s", s"$dir/s2.csv", fullRefresh = true)
+    assert(e.preview("SELECT k, w FROM s").map(r => (r.getString(0), r.getString(1))) ==
+      Seq(("c", "z")))
   }
 
   test("namespace prefixing ns__name (adapters.sql:17-28)") {

@@ -98,6 +98,18 @@ class JobBudgetSpec extends SparkSpec {
         _.forgetRowsCascade("docs", forgotten)), 5L)))
   }
 
+  test("a seed and a full-refresh model build stay within their job budgets") {
+    val csv = java.nio.file.Paths.get(tmpDir("graft-jobbudget-seed"), "s.csv")
+    java.nio.file.Files.writeString(csv, (0 until 25)
+      .map(i => f"$i,name $i,${i * 0.5},2024-01-${1 + i % 28}%02d")
+      .mkString("id,name,score,day\n", "\n", "\n"))
+    val model = "SELECT vec_id % 3 AS g, count(*) AS n FROM docs GROUP BY vec_id % 3"
+    assertWithin(Seq(
+      ("seed, 25 rows", () => jobsOf(_ => ())(_.seed("s", csv.toString)), 3L),
+      ("create_model, full refresh", () => jobsOf(_.createModel("m", model))(
+        _.createModel("m", model, fullRefresh = true)), 2L)))
+  }
+
   test("a full ensureAnnIndex rebuild stays within its job budget, flat and hierarchical") {
     // a flat-cell cap of 4 under the 30-row stream's √n-ideal of 5 cells
     // makes the auto layout hierarchical (3 top cells × 2 sub-cells)

@@ -19,6 +19,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // functions so model/test SQL can express dedup/retrieval stages —
     // see [[graft.functions.GraftTableFunctions]]
     functions.GraftTableFunctions.injectAll(ext)
+    // engine stream names: ahead of temp views and tables inside an
+    // engine statement (hint batch), after them for other SQL on a
+    // session bound to an engine — see [[graft.engine.StreamRelations]]
+    ext.injectHintResolutionRule(s => new engine.StreamRelations(s, hintBatch = true))
+    ext.injectResolutionRule(s => new engine.StreamRelations(s, hintBatch = false))
     // optimizer lints for the scale contract (each off unless the session
     // sets its spark.graft.guard.* key to warn|fail) — see
     // [[graft.plans.SinglePartitionWindowGuard]] and

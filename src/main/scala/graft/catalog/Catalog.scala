@@ -7,7 +7,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import graft.schema._
-import graft.types.FlinkType
 
 /** One stream's definition: the engine analog of the reference's
   * stream + pipeline resource pair (a dbt model materializes as both,
@@ -286,28 +285,11 @@ final class Catalog(val root: String, val namespace: Option[String] = None) {
   }
 
   private def fromNode(n: JsonNode): StreamDef = {
-    val schemaNode = n.get("schema")
-    val fields = schemaNode.get("fields").elements().asScala.map { f =>
-      f.get("kind").asText() match {
-        case "physical" =>
-          PhysicalField(f.get("name").asText(), FlinkType.parseOrThrow(f.get("type").asText()))
-        case "metadata" =>
-          MetadataField(f.get("name").asText(), f.get("key").asText(),
-            FlinkType.parseOrThrow(f.get("type").asText()))
-        case "computed" =>
-          ComputedField(f.get("name").asText(), f.get("expression").asText())
-        case k => throw new IllegalArgumentException(s"Unknown field kind: $k")
-      }
-    }.toSeq
-    val watermarks = schemaNode.get("watermarks").elements().asScala
-      .map(w => Watermark(w.get("name").asText(), w.get("expression").asText())).toSeq
-    val pk = schemaNode.get("constraints").get("primary_key").elements().asScala
-      .map(_.asText()).toSeq
     def textSeq(field: String): Seq[String] =
       Option(n.get(field)).map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
     StreamDef(
       name = n.get("name").asText(),
-      schema = StreamSchema(fields, watermarks, pk),
+      schema = StreamSchema.fromNode(n.get("schema")),
       sql = Option(n.get("sql")).map(_.asText()),
       sources = textSeq("sources"),
       active = Option(n.get("active")).forall(_.asBoolean()),

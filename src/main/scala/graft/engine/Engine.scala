@@ -1,8 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, GraftInternal, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTableValuedFunction}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith, View}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,11 +56,11 @@ case object Updated extends ApplyResult
 case object Unchanged extends ApplyResult
 
 object Engine {
-  /** Session conf key naming the engine root whose streams back the
-    * engine-bound SQL table functions (`ann_indexed_topk`): set whenever
-    * the engine binds stream views — before every engine-driven SQL
-    * statement, and by [[Engine.registerViews]] — and read by the TVF
-    * builders at analysis time. */
+  /** Session conf key naming the engine bound to the session: the one
+    * whose streams SQL run outside the engine resolves
+    * ([[StreamRelations]]) and the engine-bound SQL table functions
+    * (`ann_indexed_topk`) serve. Set by [[Engine.registerViews]], which
+    * every engine statement calls, and read at analysis time. */
   val RootConfKey = "spark.graft.engine.root"
 
   /** Live engines by root, for the engine-bound TVFs: the TVF must
@@ -84,7 +82,7 @@ object Engine {
     val root = spark.conf.getOption(RootConfKey).getOrElse(
       throw new IllegalStateException(
         "no engine bound to this session: engine-backed table functions " +
-          "resolve through the engine that registered the stream views " +
+          "resolve through the engine bound by registerViews " +
           s"(run the SQL via the engine, or set ${RootConfKey})"))
     Option(registry.get(root)).getOrElse(
       throw new IllegalStateException(
@@ -236,151 +234,45 @@ final class Engine(
       .drop(SeqCol, EpochCol, DeletedCol)
   }
 
-  /** Serializes temp-view binding + SQL ANALYSIS on the shared
-    * session: a TVF model's micro-batch sink re-runs [[runPipeline]]
-    * from a streaming thread, and its batch view binding must not
-    * interleave with [[graft.streaming.StreamingEngine.continuousPlan]]
-    * registering STREAMING views for another model's activation (the
-    * loser would resolve against the wrong view kind). Held only
-    * through analysis — materialization runs outside it. */
-  private[graft] val viewLock = new Object
+  /** Bind THIS engine to the session ([[Engine.RootConfKey]]) for SQL
+    * run outside the engine: a stream name the session resolves to no
+    * temp view or table reads this engine's stream, and the engine-backed
+    * table functions (`ann_indexed_topk`, …) serve its streams. Engine
+    * statements resolve stream names themselves ([[scoped]]). */
+  def registerViews(): Unit = spark.conf.set(Engine.RootConfKey, root)
 
-  /** Register every catalog stream as a temp view (compacted read) and
-    * bind THIS engine as the session's engine-backed-TVF target
-    * ([[Engine.RootConfKey]]) — for SQL run outside the engine, e.g. an
-    * `ann_indexed_topk(...)` over this engine's persisted index. The
-    * engine's own statements bind only the streams they read
-    * ([[analyzed]]). */
-  def registerViews(): Unit = viewLock.synchronized {
-    bindViews(catalog.names())
+  /** `sql` analyzed with this engine's stream names resolved to fresh
+    * reads of the streams ([[StreamRelations]]), ahead of any same-named
+    * temp view or table, and the qualified streams it read. */
+  private def scoped(sql: String): (DataFrame, Seq[String]) = {
+    registerViews()
+    StreamRelations.within(this, readStream(_))(spark.sql(sql))
   }
 
-  /** A stream's view names: its qualified name and, inside a namespace,
-    * its short name. */
-  private[graft] def viewAliases(stream: String): Seq[String] =
-    (stream +: namespace.map(ns => stream.stripPrefix(s"${ns}__")).toSeq).distinct
-
-  /** Every stream's view names, lower-cased → its qualified name. */
-  private def viewNames(): Map[String, String] =
-    catalog.names().flatMap(n => viewAliases(n).map(_.toLowerCase -> n)).toMap
-
-  /** Fresh compacted views of `streams` (qualified names) under each of
-    * their view names, plus this engine's [[Engine.RootConfKey]]. */
-  private def bindViews(streams: Iterable[String]): Unit = {
-    spark.conf.set(Engine.RootConfKey, root)
-    streams.foreach { n =>
-      val df = readStream(n)
-      viewAliases(n).foreach(df.createOrReplaceTempView)
-    }
-  }
-
-  /** `sql` analyzed over fresh views of the streams it reads. The
-    * parse-level read set ([[tableReads]]) is bound first; if analysis
-    * then resolved a stream view this statement did not bind (a name the
-    * parser cannot see: `IDENTIFIER('x')`, a computed TVF table argument)
-    * that view is rebound and the statement analyzed again, so no
-    * statement reads a view left behind by an earlier one. A statement
-    * that fails to analyze is retried once over every stream. */
-  private def analyzed(sql: String): DataFrame = viewLock.synchronized {
-    val views = viewNames()
-    val bound = scala.collection.mutable.Set.empty[String]
-    def bind(streams: Iterable[String]): Unit = {
-      val fresh = streams.filterNot(bound).toSeq.distinct
-      bindViews(fresh)
-      bound ++= fresh
-    }
-    def analyze(): DataFrame = {
-      val df = spark.sql(sql)
-      val stale = viewReads(df.queryExecution.analyzed)
-        .flatMap(v => views.get(v.toLowerCase)).filterNot(bound)
-      if (stale.isEmpty) df else { bind(stale); analyze() }
-    }
-    bind(readsOf(sql, views))
-    try analyze()
-    catch {
-      case scala.util.control.NonFatal(_) if views.values.exists(!bound(_)) =>
-        bind(views.values)
-        analyze()
-    }
-  }
-
-  /** Streams `sql` reads by name (qualified), per [[tableReads]]:
-    * spellings match stream and short names case-insensitively. */
-  private def readsOf(sql: String, views: Map[String, String]): Seq[String] =
-    tableReads(spark.sessionState.sqlParser.parsePlan(sql))
-      .flatMap(n => views.get(n.toLowerCase)).distinct
-
-  /** A plan's direct sub-plans: children, inner children (a WITH's CTE
-    * definitions) and the plans of subquery expressions (IN, EXISTS,
-    * scalar). `collect` alone sees only the first. */
-  private def subPlans(p: LogicalPlan): Seq[LogicalPlan] =
-    p.children ++ p.innerChildren.collect { case c: LogicalPlan => c } ++ p.subqueries
-
-  /** Table names a parsed plan reads: relations anywhere in it (CTE
-    * bodies and subqueries included) except references to an enclosing
-    * CTE, plus the table-name literals of graft table functions. */
-  private def tableReads(p: LogicalPlan, ctes: Set[String] = Set.empty): Seq[String] =
-    p match {
-      case w: UnresolvedWith =>
-        // a CTE sees the ones before it (and itself, if recursive); the
-        // main query sees them all
-        val scopes = w.cteRelations.scanLeft(ctes)(_ + _._1.toLowerCase)
-        w.cteRelations.zip(scopes.tail).flatMap { case ((name, body, _), scope) =>
-          tableReads(body, if (w.allowRecursion) scope else scope - name.toLowerCase)
-        } ++ tableReads(w.child, scopes.last)
-      case _ =>
-        val own = p match {
-          case r: UnresolvedRelation
-              if !(r.multipartIdentifier.size == 1 &&
-                ctes(r.multipartIdentifier.head.toLowerCase)) =>
-            Seq(r.multipartIdentifier.last)
-          // graft table functions take their source TABLE(s) as
-          // string-literal arguments (position 0, plus extras per
-          // GraftTableFunctions.tableArgPositions — decontaminate reads
-          // two tables) — track them so rename/cascade see through a
-          // TVF-shaped pipeline stage (round 10; round 11 multi-table)
-          case f: UnresolvedTableValuedFunction
-              if graft.functions.GraftTableFunctions.names
-                .contains(f.name.last.toLowerCase) =>
-            graft.functions.GraftTableFunctions.tableArgPositions
-              .getOrElse(f.name.last.toLowerCase, Seq(0))
-              .flatMap(i => f.functionArgs.lift(i).collect {
-                case org.apache.spark.sql.catalyst.expressions.Literal(s, _)
-                    if s != null => s.toString
-              })
-          case _ => Nil
-        }
-        own ++ subPlans(p).flatMap(tableReads(_, ctes))
-    }
-
-  /** Temp views an analyzed plan resolved, by view name. */
-  private def viewReads(p: LogicalPlan): Seq[String] =
-    (p match {
-      case v: View if v.isTempView => Seq(v.desc.identifier.table)
-      case _ => Nil
-    }) ++ subPlans(p).flatMap(viewReads)
+  private def analyzed(sql: String): DataFrame = scoped(sql)._1
 
   // ------------------------------------------------------------------
   // Schema inference (S7) and change detection (L2)
   // ------------------------------------------------------------------
 
-  /** Streams referenced by a SQL statement — via Spark's parser, not string
-    * matching (the reference's crude `FROM old` replace, impl.py:698-701,
-    * done properly as SURVEY §2.6 L4 recommends). Reads inside CTEs and
-    * subqueries count; names match case-insensitively. */
-  def sourcesOf(sql: String): Seq[String] = readsOf(SqlDialect.rewrite(sql), viewNames())
+  /** Streams a SQL statement reads, as the analyzer resolves them (not
+    * string matching — the reference's crude `FROM old` replace,
+    * impl.py:698-701, done properly as SURVEY §2.6 L4 recommends). Reads
+    * inside CTEs and subqueries and the table arguments of graft table
+    * functions count; names match case-insensitively. */
+  def sourcesOf(sql: String): Seq[String] = scoped(SqlDialect.rewrite(sql))._2
 
   /** Analysis-only schema inference: `spark.sql(select).schema` runs the
     * analyzer without a job (reference POST /pipelines/outputStream,
     * client.py:292-297). Errors on empty schema like impl.py:496-499. */
-  def inferSchema(sql: String): StreamSchema = StreamSchema.fromStruct(inferred(sql).schema)
+  def inferSchema(sql: String): StreamSchema =
+    StreamSchema.fromStruct(fieldsOf(analyzed(SqlDialect.rewrite(sql)), sql))
 
-  /** `sql` analyzed, refused when the analyzer returns no fields. */
-  private def inferred(sql: String): DataFrame = {
-    val df = analyzed(SqlDialect.rewrite(sql))
+  /** `df`'s schema, refused when the analyzer returned no fields. */
+  private def fieldsOf(df: DataFrame, sql: String) = {
     if (df.schema.isEmpty) throw new IllegalStateException(
       s"Could not infer schema for SQL: $sql — analyzer returned no fields")
-    df
+    df.schema
   }
 
   /** L2: would materializing (name, sql, cfg) change the stored resource? */
@@ -388,26 +280,27 @@ final class Engine(
     catalog.get(name).forall(_.specHash != candidateDef(name, sql, cfg)._1.specHash)
 
   /** The def materializing (name, sql, cfg) stores, with the frame its
-    * schema was inferred from (none when the fields are declared). */
+    * schema and sources come from. */
   private def candidateDef(name: String, sql: String,
-                           cfg: ModelConfig): (StreamDef, Option[DataFrame]) = {
+                           cfg: ModelConfig): (StreamDef, DataFrame) = {
+    val (frame, sources) = scoped(SqlDialect.rewrite(sql))
     // explicit schema_v2.fields bypass inference entirely (impl.py:490-500);
     // otherwise infer and let per-column data_type hints override by name
     // (impl.py:663-669). Either way [[write]] casts the pipeline output to
     // the declared types, so a DECIMAL declaration over a DOUBLE-inferring
     // SELECT materializes DECIMAL.
-    val frame = if (cfg.declaredFields.nonEmpty) None else Some(inferred(sql))
-    val fields = frame.fold(cfg.declaredFields)(df =>
-      StreamSchema.fromStruct(df.schema).fields.map {
+    val fields =
+      if (cfg.declaredFields.nonEmpty) cfg.declaredFields
+      else StreamSchema.fromStruct(fieldsOf(frame, sql)).fields.map {
         case PhysicalField(n, _) if cfg.columnHints.contains(n) =>
           PhysicalField(n, cfg.columnHints(n))
         case f => f
-      })
+      }
     (StreamDef(
       name = catalog.qualify(name),
       schema = StreamSchema(fields, cfg.watermarks, cfg.primaryKey),
       sql = Some(SqlDialect.rewrite(sql)),
-      sources = sourcesOf(sql),
+      sources = sources,
       active = cfg.active,
       properties = cfg.properties), frame)
   }
@@ -419,27 +312,22 @@ final class Engine(
   /** Materialize a model: infer schema, diff against the stored def, and
     * (re)build only when changed or `fullRefresh` (reference table
     * materialization skip-if-unchanged, table.sql:29-41 + README.md:95-98).
-    * The build writes the frame the schema was inferred from: the SQL is
-    * analyzed once. A frame that resolved a view of the model's own
-    * stream (the old store, or a view left from before a full refresh's
-    * drop) is analyzed again over the new store.
+    * The SQL is analyzed once, before the old store is dropped, and the
+    * build writes that frame — unless it read the model's own stream: the
+    * store it read is gone, so the pipeline runs again over the new one.
     */
   def createModel(name: String, sql: String, cfg: ModelConfig = ModelConfig(),
                   fullRefresh: Boolean = false): ApplyResult = {
     requireUserName(name, "materialize model")
     val existing = catalog.get(name)
-    val existed = existing.nonEmpty
-    // the diff's candidate is the def a changed model rebuilds with
-    val diffed = if (fullRefresh) None else existing.map(_ => candidateDef(name, sql, cfg))
-    if (diffed.exists(c => existing.exists(_.specHash == c._1.specHash))) return Unchanged
-    if (existed) dropStream(name, cascade = false, keepConsumers = true)
-    val (d, frame) = diffed.getOrElse(candidateDef(name, sql, cfg))
+    val (d, frame) = candidateDef(name, sql, cfg)
+    if (!fullRefresh && existing.exists(_.specHash == d.specHash)) return Unchanged
+    if (existing.nonEmpty) dropStream(name, cascade = false, keepConsumers = true)
     catalog.put(d)
     if (!cfg.active) writeEmpty(d)
-    else frame.filterNot(f => viewReads(f.queryExecution.analyzed)
-        .exists(v => viewAliases(d.name).exists(_.equalsIgnoreCase(v))))
-      .fold(runPipeline(name))(write(d, _, SaveMode.Overwrite))
-    if (existed) Updated else Created
+    else if (d.sources.contains(d.name)) runPipeline(name)
+    else write(d, frame, SaveMode.Overwrite)
+    if (existing.nonEmpty) Updated else Created
   }
 
   /** Execute a stream's pipeline SQL and overwrite its contents (batch
@@ -448,8 +336,6 @@ final class Engine(
     val d = catalog(name)
     val sql = d.sql.getOrElse(
       throw new IllegalStateException(s"stream '${d.name}' has no pipeline"))
-    // the analyzed plan holds resolved relations, so the materialization
-    // below is immune to later view replacement
     write(d, analyzed(sql), SaveMode.Overwrite)
   }
 
@@ -1678,8 +1564,8 @@ final class Engine(
         (name + s.suffix) -> home.properties.getOrElse(f.idColKey, ""))
     }.filter { case (s, _) => catalog.exists(s) }
     // the prunes below rewrite sibling STORES — a continuous pipeline
-    // file-source-reading a sibling directly (registerViews exposes
-    // them) is just as corrupted by a swap as one on the main stream
+    // file-source-reading a sibling directly (SQL can name them) is
+    // just as corrupted by a swap as one on the main stream
     sibPlan.foreach { case (s, _) => requireNoContinuousUse(s, "prune index sibling") }
     // victim ids per distinct pinned id column, MATERIALIZED before the
     // main rewrite (the frames are lazy — after the swap they would
@@ -1971,7 +1857,7 @@ final class Engine(
 
   /** Bounded interactive query over current stream contents (reference
     * preview protocol, handler.py:65-100). Change-stream folding is already
-    * applied by the compacted temp views. The timeout mirrors the
+    * applied by the compacted stream reads. The timeout mirrors the
     * accumulated poll budget (default 60 s, connections.py:46). */
   def preview(sql: String, limit: Int = 100): Seq[Row] = {
     val df = analyzed(SqlDialect.rewrite(sql))
@@ -2000,8 +1886,8 @@ final class Engine(
     * job group is cancelled and whatever accumulated is returned; an
     * empty result seeds the dbt-test fake row, both exactly as the
     * reference cursor does. Change-stream folding happens upstream in
-    * the compacted views, so the cursor always runs in append mode here
-    * ([[PreviewCursor.pollChange]] carries the change-fold rule for
+    * the compacted stream reads, so the cursor always runs in append
+    * mode here ([[PreviewCursor.pollChange]] carries the change-fold rule for
     * completeness and is spec-verified against scripted envelopes). */
   def previewPolled(sql: String, limit: Int = 100,
       rng: java.util.Random = new java.util.Random(),

@@ -7,7 +7,7 @@ import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 
-import graft.schema.{ComputedField, MetadataField, PhysicalField, SchemaField, Watermark}
+import graft.schema.StreamSchema
 import graft.types.FlinkType
 
 /** Minimal dbt-style project runner: a directory of `<model>.sql` files,
@@ -72,18 +72,10 @@ final class ProjectRunner(engine: Engine) {
     def at(path: String*): Option[JsonNode] =
       path.foldLeft(Option[JsonNode](node))((n, p) => n.flatMap(x => Option(x.get(p))))
 
-    val watermarks = at("output_stream", "schema_v2", "watermarks")
-      .map(_.elements().asScala.map(w =>
-        Watermark(w.get("name").asText(), w.get("expression").asText())).toSeq)
-      .getOrElse(Nil)
-    // explicit output-stream fields (impl.py:490-500 skips inference when
-    // the model declares them); kind defaults to physical like schema.py
-    val declaredFields = at("output_stream", "schema_v2", "fields")
-      .map(_.elements().asScala.map(parseField).toSeq)
-      .getOrElse(Nil)
-    val pk = at("output_stream", "schema_v2", "constraints", "primary_key")
-      .map(_.elements().asScala.map(_.asText()).toSeq)
-      .getOrElse(Nil)
+    // watermarks, primary key and explicit output-stream fields
+    // (impl.py:490-500 skips inference when the model declares them; kind
+    // defaults to physical like schema.py), in the stored schema's shape
+    val schema = at("output_stream", "schema_v2").fold(StreamSchema(Nil))(StreamSchema.fromNode)
     val active = at("pipeline", "execution", "active").forall(_.asBoolean(true))
     val startPositions = at("pipeline", "execution", "initial_start_positions")
       .map(n => n.properties().asScala.map(e =>
@@ -102,20 +94,10 @@ final class ProjectRunner(engine: Engine) {
       .map(n => n.properties().asScala.map(e =>
         e.getKey -> e.getValue.asText()).toMap)
       .getOrElse(Map.empty[String, String])
-    (ModelConfig(primaryKey = (pk ++ uniqueKey).distinct,
-      watermarks = watermarks, active = active,
+    (ModelConfig(primaryKey = (schema.primaryKey ++ uniqueKey).distinct,
+      watermarks = schema.watermarks, active = active,
       properties = startPositions ++ graftProps,
-      declaredFields = declaredFields), materialized)
-  }
-
-  private def parseField(f: JsonNode): SchemaField = {
-    val name = f.get("name").asText()
-    Option(f.get("kind")).map(_.asText()).getOrElse("physical") match {
-      case "computed" => ComputedField(name, f.get("expression").asText())
-      case "metadata" => MetadataField(name, f.get("key").asText(),
-        FlinkType.parseOrThrow(f.get("type").asText()))
-      case _ => PhysicalField(name, FlinkType.parseOrThrow(f.get("type").asText()))
-    }
+      declaredFields = schema.fields), materialized)
   }
 
   private def splitKwargs(s: String): Seq[(String, String)] = {
@@ -174,7 +156,7 @@ final class ProjectRunner(engine: Engine) {
           select: Seq[String] = Nil): Map[String, ApplyResult] = {
     // schema.yml per-column data_type hints attach to models by name
     // (reference _get_model_schema_hints, impl.py:663-669)
-    val hints = loadColumnHints(dir)
+    val hints = ymlDocs(dir).flatMap(columnHints).toMap
     val models = loadModels(dir).map(m =>
       hints.get(m.name).fold(m)(h =>
         m.copy(config = m.config.copy(columnHints = h))))
@@ -244,7 +226,7 @@ final class ProjectRunner(engine: Engine) {
     val p = Paths.get(dir)
     if (!Files.isDirectory(p)) Map.empty
     else {
-      val overrides = loadSeedColumnTypes(dir)
+      val overrides = ymlDocs(dir).flatMap(seedColumnTypes).toMap
       scala.util.Using.resource(Files.list(p))(
         _.iterator().asScala
           .filter(_.toString.endsWith(".csv"))
@@ -259,11 +241,19 @@ final class ProjectRunner(engine: Engine) {
     }
   }
 
+  private val yaml = new ObjectMapper(new YAMLFactory())
+
+  /** Every `.yml`/`.yaml` file in `dir`, parsed. */
+  private def ymlDocs(dir: String): Seq[JsonNode] =
+    scala.util.Using.resource(Files.list(Paths.get(dir)))(
+      _.iterator().asScala
+        .filter(f => f.toString.endsWith(".yml") || f.toString.endsWith(".yaml"))
+        .map(f => yaml.readTree(new String(Files.readAllBytes(f), "UTF-8")))
+        .toSeq)
+
   /** Parse dbt seed properties: `seeds: [{name, config: {column_types:
     * {col: TYPE}}}]` → per-seed column type strings. */
-  def parseSeedColumnTypes(yamlText: String): Map[String, Map[String, String]] = {
-    val yaml = new ObjectMapper(new YAMLFactory())
-    val root = yaml.readTree(yamlText)
+  private def seedColumnTypes(root: JsonNode): Map[String, Map[String, String]] =
     Option(root.get("seeds")).toSeq
       .flatMap(_.elements().asScala)
       .flatMap { s =>
@@ -273,17 +263,6 @@ final class ProjectRunner(engine: Engine) {
           .getOrElse(Map.empty)
         if (types.isEmpty) None else Some(s.get("name").asText() -> types)
       }.toMap
-  }
-
-  private def loadSeedColumnTypes(dir: String): Map[String, Map[String, String]] = {
-    val p = Paths.get(dir)
-    scala.util.Using.resource(Files.list(p))(
-      _.iterator().asScala
-        .filter(f => f.toString.endsWith(".yml") || f.toString.endsWith(".yaml"))
-        .toSeq)
-      .flatMap(f => parseSeedColumnTypes(new String(Files.readAllBytes(f), "UTF-8")))
-      .toMap
-  }
 
   /** Full dbt-style project build: CSV seeds under `seeds` first (models
     * may select from them), then SQL models under `models` in dependency
@@ -353,9 +332,7 @@ final class ProjectRunner(engine: Engine) {
 
   /** Parse a dbt schema.yml's models[].columns[].data_type declarations
     * into per-model column type hints (impl.py:663-669). */
-  def parseColumnHints(yamlText: String): Map[String, Map[String, FlinkType]] = {
-    val yaml = new ObjectMapper(new YAMLFactory())
-    val root = yaml.readTree(yamlText)
+  private def columnHints(root: JsonNode): Map[String, Map[String, FlinkType]] =
     Option(root.get("models")).toSeq
       .flatMap(_.elements().asScala)
       .map { m =>
@@ -368,26 +345,11 @@ final class ProjectRunner(engine: Engine) {
       }
       .filter(_._2.nonEmpty)
       .toMap
-  }
-
-  /** All column hints declared by yml files in a models directory. */
-  private def loadColumnHints(dir: String): Map[String, Map[String, FlinkType]] = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) Map.empty
-    else scala.util.Using.resource(Files.list(p))(
-      _.iterator().asScala
-        .filter(f => f.toString.endsWith(".yml") || f.toString.endsWith(".yaml"))
-        .toSeq)
-      .flatMap(f => parseColumnHints(new String(Files.readAllBytes(f), "UTF-8")))
-      .toMap
-  }
 
   /** Parse a dbt schema.yml's models[].columns[].tests into generic
     * tests (subset: not_null, unique — the built-ins the reference's
     * fixtures use). */
-  def parseSchemaTests(yamlText: String): Seq[GenericTest] = {
-    val yaml = new ObjectMapper(new YAMLFactory())
-    val root = yaml.readTree(yamlText)
+  private def schemaTests(root: JsonNode): Seq[GenericTest] =
     Option(root.get("models")).toSeq
       .flatMap(_.elements().asScala)
       .flatMap { m =>
@@ -399,16 +361,11 @@ final class ProjectRunner(engine: Engine) {
           }
         }
       }
-  }
 
   /** Run every generic test declared in a directory's yml files.
     * @return test name → judged result */
   def runTests(dir: String): Map[String, Engine#TestResult] =
-    scala.util.Using.resource(Files.list(Paths.get(dir)))(
-      _.iterator().asScala
-        .filter(p => p.toString.endsWith(".yml") || p.toString.endsWith(".yaml"))
-        .flatMap(p => parseSchemaTests(new String(Files.readAllBytes(p), "UTF-8")))
-        .toSeq)
+    ymlDocs(dir).flatMap(schemaTests)
       .map { t =>
         t.name -> engine.runTestJudged(t.name,
           t.copy(model = engine.catalog.qualify(t.model)).sql)

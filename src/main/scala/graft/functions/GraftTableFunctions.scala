@@ -91,10 +91,15 @@ object GraftTableFunctions {
 
   private def bound() = graft.engine.Engine.bound(SparkSession.active)
 
-  private def fn(name: String, usage: String, maxArgs: Int)(
-      builder: Seq[Expression] => LogicalPlan):
-      (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
-    (FunctionIdentifier(name),
+  /** One graft table function: its injectTableFunction entry and the
+    * argument positions that name the tables or streams it reads. */
+  private final case class Tvf(
+      entry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan),
+      tables: Seq[Int])
+
+  private def fn(name: String, usage: String, maxArgs: Int, tables: Seq[Int])(
+      builder: Seq[Expression] => LogicalPlan): Tvf =
+    Tvf((FunctionIdentifier(name),
       // usage strings ride the ExpressionInfo usage field so DESCRIBE
       // FUNCTION documents the signature
       new ExpressionInfo("graft.functions.GraftTableFunctions", null, name,
@@ -104,16 +109,15 @@ object GraftTableFunctions {
           s"$name: too many arguments (${args.size}; at most $maxArgs) — " +
             s"usage: $usage")
         builder(args)
-      })
+      }), tables)
 
-  /** All graft table functions, in injectTableFunction's shape. */
-  val all: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => LogicalPlan)] = Seq(
+  /** All graft table functions. */
+  private val all: Seq[Tvf] = Seq(
     fn("minhash_pairs",
       "minhash_pairs(table, idCol, textCol, threshold, shingleN, " +
         "numHashes, bands) - MinHash-LSH near-duplicate pairs " +
         "(id_a, id_b, jaccard) at J >= threshold; defaults 0.5, 2, 128, 32",
-      maxArgs = 7) { args =>
+      maxArgs = 7, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "minhash_pairs", "table name")
       val id = litString(args, 1, "minhash_pairs", "id column")
       val txt = litString(args, 2, "minhash_pairs", "text column")
@@ -128,7 +132,7 @@ object GraftTableFunctions {
     fn("ann_topk",
       "ann_topk(table, idCol, vecCol, queryPredicateSql, k) - exact " +
         "cosine top-k neighbors (q_id, n_id, rnk, cos) per query row",
-      maxArgs = 5) { args =>
+      maxArgs = 5, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "ann_topk", "table name")
       val id = litString(args, 1, "ann_topk", "id column")
       val vec = litString(args, 2, "ann_topk", "vector column")
@@ -141,7 +145,7 @@ object GraftTableFunctions {
     fn("ann_ivf_topk",
       "ann_ivf_topk(table, idCol, vecCol, queryPredicateSql, k, nProbe) - " +
         "IVF approximate top-k (q_id, n_id, rnk, cos)",
-      maxArgs = 6) { args =>
+      maxArgs = 6, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "ann_ivf_topk", "table name")
       val id = litString(args, 1, "ann_ivf_topk", "id column")
       val vec = litString(args, 2, "ann_ivf_topk", "vector column")
@@ -155,7 +159,7 @@ object GraftTableFunctions {
     fn("semdedup",
       "semdedup(table, idCol, vecCol, threshold) - semantic dedup " +
         "verdicts (vec_id, cell, kept) per corpus vector",
-      maxArgs = 4) { args =>
+      maxArgs = 4, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "semdedup", "table name")
       val id = litString(args, 1, "semdedup", "id column")
       val vec = litString(args, 2, "semdedup", "vector column")
@@ -168,7 +172,7 @@ object GraftTableFunctions {
       "decontaminate(table, idCol, textCol, benchTable, benchTextCol, n) " +
         "- rows of `table` sharing NO distinct word n-gram with any " +
         "benchmark text (the GPT-3-style overlap rule); default n = 4",
-      maxArgs = 6) { args =>
+      maxArgs = 6, tables = Seq(0, 3)) { args =>
       val tbl = litString(args, 0, "decontaminate", "table name")
       val id = litString(args, 1, "decontaminate", "id column")
       val txt = litString(args, 2, "decontaminate", "text column")
@@ -185,7 +189,7 @@ object GraftTableFunctions {
         "importance weight per document (idCol, n_tokens, avg_logratio): " +
         "mean unigram log-ratio of the target-subset LM over the corpus " +
         "LM (Xie 2023), target rows selected by the predicate",
-      maxArgs = 4) { args =>
+      maxArgs = 4, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "dsir_weights", "table name")
       val id = litString(args, 1, "dsir_weights", "id column")
       val txt = litString(args, 2, "dsir_weights", "text column")
@@ -207,7 +211,7 @@ object GraftTableFunctions {
         "stream BEFORE ranking — every query still gets up to k eligible " +
         "rows from its probed cells (widen nProbe for very selective " +
         "filters)",
-      maxArgs = 8) { args =>
+      maxArgs = 8, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "ann_indexed_topk", "stream name")
       val id = litString(args, 1, "ann_indexed_topk", "id column")
       val vec = litString(args, 2, "ann_indexed_topk", "vector column")
@@ -227,7 +231,7 @@ object GraftTableFunctions {
         "force) - (re)build the stream's persisted ANN index; a no-op " +
         "when live unless force. Runs at EXECUTION time (EXPLAIN does " +
         "not build). Returns (stream, rebuilt, ann_n, ann_kind)",
-      maxArgs = 7) { args =>
+      maxArgs = 7, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "ann_index_rebuild", "stream name")
       val id = litString(args, 1, "ann_index_rebuild", "id column")
       val vec = litString(args, 2, "ann_index_rebuild", "vector column")
@@ -257,7 +261,7 @@ object GraftTableFunctions {
         "persisted ANN index on a deterministic query sample (one " +
         "brute-force truth pass + one index-served search). Runs at " +
         "EXECUTION time. Returns (stream, n_probe, k, recall)",
-      maxArgs = 7) { args =>
+      maxArgs = 7, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "ann_recall_measured", "stream name")
       val id = litString(args, 1, "ann_recall_measured", "id column")
       val vec = litString(args, 2, "ann_recall_measured", "vector column")
@@ -293,7 +297,7 @@ object GraftTableFunctions {
         "ann_indexed_topk with nProbe 0 (AUTO) serves at the pinned " +
         "width (rebuilds strip the pin). Runs at EXECUTION time. " +
         "Returns (stream, n_probe, recall)",
-      maxArgs = 8) { args =>
+      maxArgs = 8, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "ann_nprobe_for_recall", "stream name")
       val id = litString(args, 1, "ann_nprobe_for_recall", "id column")
       val vec = litString(args, 2, "ann_nprobe_for_recall", "vector column")
@@ -319,7 +323,7 @@ object GraftTableFunctions {
       "ann_index_drop(stream) - drop the stream's persisted ANN index " +
         "siblings (stream data untouched). Runs at EXECUTION time. " +
         "Returns (stream, dropped)",
-      maxArgs = 1) { args =>
+      maxArgs = 1, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "ann_index_drop", "stream name")
       val eng = bound()
       graft.plans.GraftAction(s"ann_index_drop($tbl)",
@@ -335,7 +339,7 @@ object GraftTableFunctions {
         "re-materializes every transitive downstream model so derived " +
         "tables stop holding rows computed from the forgotten ones. " +
         "Runs at EXECUTION time. Returns (stream, forgotten, refreshed)",
-      maxArgs = 3) { args =>
+      maxArgs = 3, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "forget_rows", "stream name")
       val predSql = litString(args, 1, "forget_rows", "predicate SQL")
       val cascade = litBoolean(args, 2, "forget_rows", "cascade", false)
@@ -358,7 +362,7 @@ object GraftTableFunctions {
         "tables in the family's (q_id, n_id, rnk, ...) shape; rows past " +
         "rank k are ignored, queries missing from approxTable score 0. " +
         "Default k = 10",
-      maxArgs = 3) { args =>
+      maxArgs = 3, tables = Seq(0, 1)) { args =>
       val ap = litString(args, 0, "ann_recall", "approximate table name")
       val ex = litString(args, 1, "ann_recall", "exact table name")
       val k = litInt(args, 2, "ann_recall", "k", 10)
@@ -368,7 +372,7 @@ object GraftTableFunctions {
     fn("text_quality",
       "text_quality(table) - per-document quality metrics " +
         "(doc_id, n_chars_m, n_tokens, avg_token_len)",
-      maxArgs = 1) { args =>
+      maxArgs = 1, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "text_quality", "table name")
       graft.operators.TextAnalysis.quality(table(tbl))
         .queryExecution.analyzed
@@ -376,7 +380,7 @@ object GraftTableFunctions {
     fn("dedup_exact",
       "dedup_exact(table, idCol, keyCol) - exact dedup " +
         "(min id + copy count per distinct key value)",
-      maxArgs = 3) { args =>
+      maxArgs = 3, tables = Seq(0)) { args =>
       val tbl = litString(args, 0, "dedup_exact", "table name")
       val id = litString(args, 1, "dedup_exact", "id column")
       val key = litString(args, 2, "dedup_exact", "key column")
@@ -386,16 +390,13 @@ object GraftTableFunctions {
 
   /** Inject at session build — [[graft.GraftExtensions]] calls this. */
   def injectAll(ext: SparkSessionExtensions): Unit =
-    all.foreach(ext.injectTableFunction)
+    all.foreach(t => ext.injectTableFunction(t.entry))
 
-  /** The registered TVF names — [[graft.engine.Engine.sourcesOf]] uses
-    * this to extract the table-name literal for dependency tracking. */
-  val names: Set[String] = all.map(_._1.funcName).toSet
+  /** The table-argument positions of each function, by name: the
+    * statement's sources ([[graft.engine.StreamRelations]]) include the
+    * streams they name. */
+  val tableArgs: Map[String, Seq[Int]] = all.map(t => t.entry._1.funcName -> t.tables).toMap
 
-  /** Which argument positions carry TABLE names, per function (default
-    * position 0) — `decontaminate` reads two tables, so rename/cascade
-    * tracking must see both (Engine.sourcesOf). */
-  val tableArgPositions: Map[String, Seq[Int]] =
-    names.map(n => n -> Seq(0)).toMap +
-      ("decontaminate" -> Seq(0, 3)) + ("ann_recall" -> Seq(0, 1))
+  /** The registered TVF names. */
+  val names: Set[String] = tableArgs.keySet
 }

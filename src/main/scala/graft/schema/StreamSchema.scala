@@ -1,6 +1,8 @@
 package graft.schema
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
@@ -128,6 +130,28 @@ final case class StreamSchema(
 
 object StreamSchema {
   private val mapper = new ObjectMapper()
+
+  /** The inverse of [[StreamSchema.canonicalNode]]: a field's kind defaults
+    * to physical, and an absent array reads as empty (a model config may
+    * declare only some of them). */
+  def fromNode(n: JsonNode): StreamSchema = {
+    def elements(path: String*): Seq[JsonNode] =
+      path.foldLeft(Option(n))((o, p) => o.flatMap(x => Option(x.get(p))))
+        .toSeq.flatMap(_.elements().asScala)
+    def text(f: JsonNode, key: String) = f.get(key).asText()
+    StreamSchema(
+      elements("fields").map { f =>
+        Option(f.get("kind")).fold("physical")(_.asText()) match {
+          case "physical" => PhysicalField(text(f, "name"), FlinkType.parseOrThrow(text(f, "type")))
+          case "metadata" => MetadataField(text(f, "name"), text(f, "key"),
+            FlinkType.parseOrThrow(text(f, "type")))
+          case "computed" => ComputedField(text(f, "name"), text(f, "expression"))
+          case k => throw new IllegalArgumentException(s"Unknown field kind: $k")
+        }
+      },
+      elements("watermarks").map(w => Watermark(text(w, "name"), text(w, "expression"))),
+      elements("constraints", "primary_key").map(_.asText()))
+  }
 
   /** Infer a StreamSchema from a Spark schema (the S7 schema-from-SQL path:
     * `spark.sql(select).schema` analyzed lazily, then rendered as Flink

@@ -49,13 +49,16 @@ final class StreamingEngine(val engine: Engine) {
   private def checkpointDir(name: String): String =
     s"${engine.root}/_checkpoints/${engine.catalog.qualify(name)}"
 
+  /** The one continuous read of a stream's store: the file source over
+    * its directory, in its stored row shape. */
+  private def storeSource(d: graft.catalog.StreamDef): DataFrame =
+    spark.readStream.schema(engine.storedStruct(d)).parquet(engine.catalog.dataPath(d.name))
+
   /** Streaming read of a source stream: file-source over the stream dir,
     * declared schema, computed columns + watermark applied. */
   def readStreamContinuous(name: String): DataFrame = {
     val d = engine.catalog(name)
-    val raw = spark.readStream.schema(engine.storedStruct(d))
-      .parquet(engine.catalog.dataPath(name))
-    val computed = d.schema.applyComputed(raw)
+    val computed = d.schema.applyComputed(storeSource(d))
       .drop(engine.SeqCol, engine.EpochCol, engine.DeletedCol)
     d.schema.watermarks.headOption.flatMap(w =>
       w.delayThreshold.map(delay => computed.withWatermark(w.name, delay)))
@@ -76,10 +79,10 @@ final class StreamingEngine(val engine: Engine) {
       }).distinct
 
   /** Build the continuous DataFrame for a model by running its pipeline
-    * SQL over streaming views of its sources. */
+    * SQL with its sources resolved to streaming reads. */
   def continuousPlan(name: String): DataFrame = {
     val d = engine.catalog(name)
-    // a graft TVF cannot resolve over streaming temp views (its builder
+    // a graft TVF cannot resolve over streaming reads (its builder
     // returns an analyzed BATCH plan) — activation handles TVF-shaped
     // models via the re-materialization path in queryPlan, never
     // through this plan builder
@@ -98,17 +101,7 @@ final class StreamingEngine(val engine: Engine) {
   private def continuousPlan(d: graft.catalog.StreamDef): DataFrame = {
     val sql = d.sql.getOrElse(
       throw new IllegalStateException(s"stream '${d.name}' has no pipeline"))
-    // register + analyze atomically vs the batch side: a TVF model's
-    // micro-batch re-materialization calls registerViews() on the SAME
-    // session from its sink thread, and an interleaving would resolve
-    // this plan against a batch view (isStreaming = false)
-    engine.viewLock.synchronized {
-      d.sources.foreach { src =>
-        val df = readStreamContinuous(src)
-        engine.viewAliases(src).foreach(df.createOrReplaceTempView)
-      }
-      spark.sql(sql)
-    }
+    graft.engine.StreamRelations.within(engine, readStreamContinuous)(spark.sql(sql))._1
   }
 
   /** Ingest-cadence driver for a TVF-shaped model: a streaming union of
@@ -125,9 +118,7 @@ final class StreamingEngine(val engine: Engine) {
       val sd = engine.catalog.get(src).getOrElse(
         throw new IllegalArgumentException(
           s"source stream '$src' of TVF model '${d.name}' not found"))
-      spark.readStream.schema(engine.storedStruct(sd))
-        .parquet(engine.catalog.dataPath(src))
-        .select(lit(1L).as("tick"))
+      storeSource(sd).select(lit(1L).as("tick"))
     }.reduce(_ unionByName _)
   }
 

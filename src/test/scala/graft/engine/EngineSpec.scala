@@ -923,6 +923,24 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("a model that reads its own stream is rebuilt over its new store: changed, full refresh, IDENTIFIER") {
+    val e = newEngine()
+    import spark.implicits._
+    e.createStream("src", StreamSchema(Seq(PhysicalField("id", FBigInt))))
+    e.appendRows("src", Seq(1L, 2L, 3L).toDF("id"))
+    assert(e.createModel("m", "SELECT id, CAST(7 AS BIGINT) AS prior FROM src") == Created)
+    // the rows runPipeline gives right after the def is put: `m` is empty
+    val rebuilt = Seq((1L, 0L), (2L, 0L), (3L, 0L))
+    def rows = e.readStream("m").as[(Long, Long)].collect().sorted.toSeq
+    val selfRead = "SELECT id, (SELECT count(*) FROM m) AS prior FROM src"
+    val viaIdentifier = "SELECT id, (SELECT count(*) FROM IDENTIFIER('m')) AS prior FROM src"
+    for ((sql, fullRefresh) <- Seq(selfRead -> false, selfRead -> true, viaIdentifier -> false)) {
+      assert(e.createModel("m", sql, fullRefresh = fullRefresh) == Updated, sql)
+      assert(rows == rebuilt, s"$sql, full refresh: $fullRefresh")
+      assert(e.catalog.get("m").get.sources == Seq("src", "m"), sql)
+    }
+  }
+
   test("close() evicts the registry binding; the registry cannot grow across create/close cycles") {
     // round 11 — VERDICT r10 "what's wrong" item 1: Engine.registry had
     // no removal path, so every constructed engine leaked for the

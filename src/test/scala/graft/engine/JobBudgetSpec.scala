@@ -110,6 +110,19 @@ class JobBudgetSpec extends SparkSpec {
         _.createModel("m", model, fullRefresh = true)), 2L)))
   }
 
+  test("a preview, a test, an unchanged model build and a pipeline refresh stay within their job budgets") {
+    val filter = "SELECT vec_id, text FROM docs WHERE vec_id % 2 = 0"
+    assertWithin(Seq(
+      ("preview", () => jobsOf(_ => ())(_.preview(filter, 20)), 2L),
+      ("run_test", () => jobsOf(_ => ())(
+        _.runTest("not_null_docs_text", "SELECT text FROM docs WHERE text IS NULL")), 2L),
+      ("create_model, unchanged", () => jobsOf(_.createModel("m", filter))(e =>
+        assert(e.createModel("m", filter) == Unchanged)), 0L),
+      ("refresh_available, filter model", () => jobsOf(_.createModel("m", filter,
+        ModelConfig(active = false)))(new graft.streaming.StreamingEngine(_).refreshAvailable("m")),
+        1L)))
+  }
+
   test("a full ensureAnnIndex rebuild stays within its job budget, flat and hierarchical") {
     // a flat-cell cap of 4 under the 30-row stream's √n-ideal of 5 cells
     // makes the auto layout hierarchical (3 top cells × 2 sub-cells)

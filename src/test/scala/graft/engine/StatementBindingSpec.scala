@@ -4,11 +4,11 @@ import graft.SparkSpec
 import graft.schema._
 import graft.types.FlinkType._
 
-/** Per-statement view binding: an engine statement binds fresh views of
-  * the streams it reads — found by a parse-level walk that sees CTE
-  * bodies, subqueries and graft table-function table arguments, then
-  * checked against the temp views the analyzed plan resolved — and
-  * never reads a view an earlier statement left behind. */
+/** Stream resolution per statement: an engine statement reads fresh
+  * stream contents wherever its SQL names a stream — CTE bodies,
+  * subqueries, `IDENTIFIER(...)` and graft table-function table
+  * arguments included — ahead of any temp view, and records those
+  * streams as its sources. */
 class StatementBindingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -68,15 +68,19 @@ class StatementBindingSpec extends SparkSpec {
     val names = Seq("bnd__solo_a", "solo_a", "bnd__solo_b", "solo_b")
     names.foreach(spark.catalog.dropTempView)
     assert(e.preview("SELECT id FROM solo_a").map(_.getLong(0)) == Seq(1L))
-    assert(spark.catalog.tableExists("solo_a") && spark.catalog.tableExists("bnd__solo_a"))
-    assert(!spark.catalog.tableExists("solo_b") && !spark.catalog.tableExists("bnd__solo_b"))
     assert(spark.conf.get(Engine.RootConfKey) == e.root)
-    // a read the parser cannot see, of a stream no view exists for:
-    // analysis fails once, then succeeds over every stream
+    // a read the parser cannot see, of a stream no view exists for
     assert(e.preview("SELECT id FROM IDENTIFIER('solo_b')").map(_.getLong(0)) == Seq(2L))
     names.foreach(spark.catalog.dropTempView)
     e.registerViews()
-    assert(names.forall(spark.catalog.tableExists))
+    // SQL outside the engine resolves every stream name, fresh
+    e.appendRows("solo_a", Seq(3L).toDF("id"))
+    e.appendRows("solo_b", Seq(4L).toDF("id"))
+    for (n <- names) {
+      val expected = if (n.endsWith("_a")) Set(1L, 3L) else Set(2L, 4L)
+      assert(spark.table(n).collect().map(_.getLong(0)).toSet == expected, n)
+      assert(spark.sql(s"SELECT id FROM $n").collect().map(_.getLong(0)).toSet == expected, n)
+    }
   }
 
   test("per-statement binding reads fresh data through every read shape and engine entry point") {
@@ -134,6 +138,70 @@ class StatementBindingSpec extends SparkSpec {
         e.compactStorage("src")
         assert(run() == expected(n), s"$shape via $entry after compactStorage")
       }
+    }
+  }
+
+  test("a user temp view named like a stream does not change what a preview or model reads") {
+    val e = newEngine(Some("tv"))
+    idStream(e, "src", Seq(1L, 2L))
+    Seq(99L).toDF("id").createOrReplaceTempView("src")
+    Seq(98L).toDF("id").createOrReplaceTempView("tv__src")
+    try {
+      for (n <- Seq("src", "tv__src", "IDENTIFIER('src')"))
+        assert(e.preview(s"SELECT id FROM $n ORDER BY id").map(_.getLong(0)) == Seq(1L, 2L), n)
+      e.createModel("m", "SELECT id FROM src WHERE id IN (SELECT id FROM tv__src)")
+      assert(e.readStream("m").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+      assert(e.catalog.get("m").get.sources == Seq("tv__src"))
+      // outside the engine the session's own views come first
+      e.registerViews()
+      assert(spark.table("src").collect().map(_.getLong(0)).toSeq == Seq(99L))
+      assert(spark.table("tv__src").collect().map(_.getLong(0)).toSeq == Seq(98L))
+    } finally Seq("src", "tv__src").foreach(spark.catalog.dropTempView)
+  }
+
+  test("a dropped stream, re-created with a different schema, previews with the new schema") {
+    val e = newEngine()
+    idStream(e, "s", Seq(1L))
+    assert(e.preview("SELECT * FROM s").head.schema.fieldNames.toSeq == Seq("id"))
+    e.dropStream("s")
+    e.createStream("s", StreamSchema(Seq(
+      PhysicalField("k", FString), PhysicalField("v", FBigInt))))
+    e.appendRows("s", Seq(("a", 5L)).toDF("k", "v"))
+    // SQL outside the engine, on the session the first preview bound
+    assert(spark.table("s").columns.toSeq == Seq("k", "v"))
+    for (sql <- Seq("SELECT * FROM s", "SELECT * FROM IDENTIFIER('s')")) {
+      val rows = e.preview(sql)
+      assert(rows.map(r => (r.getString(0), r.getLong(1))) == Seq(("a", 5L)), sql)
+      assert(rows.head.schema.fieldNames.toSeq == Seq("k", "v"), sql)
+    }
+  }
+
+  test("sourcesOf counts streams named only as table-function arguments") {
+    val e = newEngine(Some("tf"))
+    val text = StreamSchema(Seq(PhysicalField("doc_id", FBigInt), PhysicalField("text", FString)))
+    e.createStream("docs", text)
+    e.appendRows("docs", Seq((1L, "a b c d e"), (2L, "a b c d e")).toDF("doc_id", "text"))
+    e.createStream("bench", text)
+    e.appendRows("bench", Seq((1L, "x y z w v")).toDF("doc_id", "text"))
+    e.createStream("emb", StreamSchema.fromStruct(
+      new org.apache.spark.sql.types.StructType()
+        .add("vec_id", "long", nullable = false)
+        .add("embedding", org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.FloatType))))
+    e.appendRows("emb", spark.range(40).selectExpr("id AS vec_id",
+      "transform(sequence(0, 7), j -> CAST(pmod(xxhash64(id, j), 100) / 50.0 AS FLOAT)) " +
+        "AS embedding"))
+    assert(e.ensureAnnIndex("emb", "vec_id", "embedding"))
+    val cases = Seq(
+      "SELECT * FROM minhash_pairs('docs', 'doc_id', 'text', 0.5)" -> Seq("tf__docs"),
+      "SELECT * FROM decontaminate('docs', 'doc_id', 'text', 'bench', 'text', 2)" ->
+        Seq("tf__docs", "tf__bench"),
+      "SELECT * FROM ann_indexed_topk('emb', 'vec_id', 'embedding', 'vec_id < 3', 2)" ->
+        Seq("tf__emb"))
+    for (((sql, sources), i) <- cases.zipWithIndex) {
+      assert(e.sourcesOf(sql) == sources, sql)
+      e.createModel(s"m$i", sql)
+      assert(e.catalog.get(s"m$i").get.sources == sources, sql)
     }
   }
 

@@ -97,6 +97,75 @@ class StreamSchemaSpec extends AnyFunSuite {
     assert(d.specHash == "0729c30e83d64fd26564544ca23682955eaa537bb2262e626d219b897720230f")
   }
 
+  test("fromNode inverts canonicalNode; a field's kind defaults to physical") {
+    assert(StreamSchema.fromNode(schema.canonicalNode) == schema)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(StreamSchema.fromNode(mapper.readTree(
+      """{"fields": [{"name": "x", "type": "INT"}], "watermarks": []}""")) ==
+      StreamSchema(Seq(PhysicalField("x", FInt))))
+    assert(intercept[IllegalArgumentException](StreamSchema.fromNode(mapper.readTree(
+      """{"fields": [{"kind": "virtual", "name": "x"}]}"""))).getMessage.contains("virtual"))
+  }
+
+  test("a def file reads back and is rewritten byte for byte") {
+    // written by the catalog before its schema reader moved to fromNode
+    val stored = """{
+  "name" : "ns__fixed",
+  "schema" : {
+    "fields" : [ {
+      "kind" : "physical",
+      "name" : "id",
+      "type" : "BIGINT NOT NULL"
+    }, {
+      "kind" : "physical",
+      "name" : "na\"me",
+      "type" : "STRING"
+    }, {
+      "kind" : "metadata",
+      "name" : "ktime",
+      "key" : "timestamp",
+      "type" : "TIMESTAMP_LTZ(3)"
+    }, {
+      "kind" : "computed",
+      "name" : "c",
+      "expression" : "concat(`na\"me`, '\\', '\n', 'é→')"
+    } ],
+    "watermarks" : [ {
+      "name" : "ktime",
+      "expression" : "`ktime` - INTERVAL '0.001' SECOND"
+    } ],
+    "constraints" : {
+      "primary_key" : [ "id" ]
+    }
+  },
+  "sql" : "SELECT 1",
+  "sources" : [ "ns__src" ],
+  "active" : true,
+  "properties" : {
+    "start_position.ns__src" : "latest"
+  },
+  "write_epoch" : 3
+}"""
+    val dir = java.nio.file.Files.createTempDirectory("graft-defbytes")
+    try {
+      val file = dir.resolve("_catalog").resolve("ns__fixed.json")
+      java.nio.file.Files.createDirectories(file.getParent)
+      java.nio.file.Files.writeString(file, stored)
+      val cat = new graft.catalog.Catalog(dir.toString, Some("ns"))
+      val d = cat("fixed")
+      assert(d.schema == StreamSchema(
+        fields = Seq(PhysicalField("id", FNotNull(FBigInt)),
+          PhysicalField("na\"me", FString),
+          MetadataField("ktime", "timestamp", FTimestampLtz(3)),
+          ComputedField("c", "concat(`na\"me`, '\\', '\n', 'é→')")),
+        watermarks = Seq(Watermark("ktime", "`ktime` - INTERVAL '0.001' SECOND")),
+        primaryKey = Seq("id")))
+      assert(d.sources == Seq("ns__src") && d.writeEpoch == 3L)
+      cat.put(d)
+      assert(java.nio.file.Files.readString(file) == stored)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   test("fromStruct renders nullability as NOT NULL") {
     val st = StructType(Seq(
       StructField("a", IntegerType, nullable = false),
